@@ -51,8 +51,8 @@ from pyspark.sql.datasource import (
 )
 
 from dbimport_spark.txnlog import (
+    Snapshot,
     _data_dir,
-    _fold_log,
     _log_dir,
     current_version,
 )
@@ -84,21 +84,22 @@ def _table_ddl(
     v = current_version(path)
     if v < 0:
         raise ValueError(f"lake_cdc: empty table at {path}")
-    from dbimport_spark.txnlog import _colmap, table_props
+    from dbimport_spark.txnlog import _colmap
 
+    snap = Snapshot.at(path, v)
     # column-mapping reader feature: files carry PHYSICAL names; the
     # stream's schema shows the LOGICAL names AS OF stream start (dropped
     # physicals are projected away). Like Delta, a rename landing
     # MID-STREAM is not picked up until the stream restarts — the
     # DataSource schema is fixed at planning, and the physical names in
     # the files are stable either way.
-    props = table_props(path, v)
+    props = snap.props
     mp, dropped = _colmap(props)
     phys2log = {p: l for l, p in mp.items()}
     import json as _json
 
     widen = _json.loads(props.get("colwiden", "{}") or "{}")
-    live, _ptype = _fold_log(path, v)
+    live = snap.live
     if not live:
         raise ValueError(f"lake_cdc: no added files in any commit at {path}")
     # merge field sets across ALL live files (footer reads only): a
@@ -145,7 +146,7 @@ def _table_ddl(
             seen[fname] = ddl
     cols = [f"{n} {seen[n]}" for n in order]
     if partition_col:
-        _, ptype = _fold_log(path, v)
+        ptype = snap.ptype
         if ptype is None:
             raise ValueError(
                 "lake_cdc: partitionColumn given but the log records no "
@@ -323,7 +324,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
         self._partition_col = options.get("partitionColumn")
         self._ptype = None
         if self._partition_col:
-            _, self._ptype = _fold_log(path, current_version(path))
+            self._ptype = Snapshot.at(path).ptype
         self._start = int(options.get("startingVersion", 0))
         # maxVersionsPerTrigger: admission control — cap how many commits
         # one micro-batch swallows (Delta's maxFilesPerTrigger at this
@@ -431,7 +432,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
         parts: list = []
         if s >= 0:
             try:
-                live, _ = _fold_log(self._path, s)
+                live = dict(Snapshot.at(self._path, s).live)
             except ValueError:
                 # txn_cleanup_log truncated entries at/below s: state
                 # BELOW the retained floor is gone by design. The floor
@@ -496,7 +497,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                                 pval=pval, ptype=self._ptype,
                             )
                         )
-                live, _ = _fold_log(self._path, floor)
+                live = dict(Snapshot.at(self._path, floor).live)
                 s = floor
         for v in range(s + 1, e + 1):
             entry = _read_entry(self._path, v)

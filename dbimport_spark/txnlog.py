@@ -29,8 +29,24 @@ snapshot metadata is the same idea) reduced to its load-bearing core:
   Delta's periodic multi-part parquet checkpoint. Large-table consumers
   read the parts as a DataFrame (``snapshot_state_df``) and checkpoint
   DISTRIBUTED (``write_checkpoint_incremental`` — driver holds O(suffix)
-  state, executors write the parts). Legacy single-JSON
-  ``<version>.checkpoint.json`` checkpoints remain readable.
+  state, executors write the parts).
+
+Two objects carry the protocol through the code:
+
+* ``Snapshot`` — one immutable table state: ``Snapshot.at(path,
+  version)`` LISTs the log once (when no version is given) and folds it
+  once, then every reader (``read_snapshot``, ``snapshot_files``,
+  ``table_props``, ...) and every transaction step (staging, schema
+  enforcement, CHECK/unique validation, the change-data diff,
+  auto-optimize) reads that one fold instead of re-deriving it;
+* ``_transact`` — the single optimistic-concurrency driver behind every
+  ``txn_*`` writer: each attempt pins a Snapshot, asks the operation for
+  its commit actions (``_Commit``) or an early result, claims the next
+  version through ``commit``, reaps the files a losing attempt staged
+  (the log never names them, so vacuum never would), runs the
+  post-commit hooks after a win (change data under ``cdf.enabled``,
+  auto-optimize on the plain appends) and raises ``TxnConflict`` after
+  ``max_retries`` lost races.
 
 Time travel is free: resolve the snapshot at any historical version down
 to the VACUUM horizon; ``vacuum`` reclaims files no retained snapshot
@@ -42,11 +58,17 @@ travel fails loudly up front.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+
+#: The package logger: post-commit work that fails without failing the
+#: commit (change-data files, interval checkpoints) is reported here.
+_log = logging.getLogger("dbimport_spark")
 
 
 class TxnConflict(RuntimeError):
@@ -77,11 +99,6 @@ def current_version(path: str) -> int:
     return max(versions, default=-1)
 
 
-def _checkpoint_path(path: str, version: int) -> str:
-    """Legacy single-file checkpoint name (read compat only)."""
-    return os.path.join(_log_dir(path), f"{version:08d}.checkpoint.json")
-
-
 def _checkpoint_dir(path: str, version: int) -> str:
     """Multi-part checkpoint directory: ``manifest.json`` + N columnar
     ``part-*.parquet`` files, each holding a slice of the live-file set.
@@ -98,29 +115,26 @@ CHECKPOINT_ROWS_PER_PART = 100_000
 
 
 def _latest_checkpoint_at_or_below(path: str, v_max: int) -> int:
-    """Highest checkpointed version ≤ v_max, or -1 if none. Sees BOTH
-    formats: multi-part ``<v>.checkpoint/`` directories and legacy
-    ``<v>.checkpoint.json`` single files."""
+    """Highest checkpointed version ≤ v_max, or -1 if none."""
+    return max((v for v in _checkpoint_versions(path) if v <= v_max), default=-1)
+
+
+def _checkpoint_versions(path: str) -> list[int]:
+    """Versions with a ``<v>.checkpoint/`` directory in the log."""
     d = _log_dir(path)
     if not os.path.isdir(d):
-        return -1
-    legacy, multi = ".checkpoint.json", ".checkpoint"
-    best = -1
-    for f in os.listdir(d):
-        if f.endswith(legacy) and f[: -len(legacy)].isdigit():
-            v = int(f[: -len(legacy)])
-        elif f.endswith(multi) and f[: -len(multi)].isdigit():
-            v = int(f[: -len(multi)])
-        else:
-            continue
-        if v <= v_max:
-            best = max(best, v)
-    return best
+        return []
+    suffix = ".checkpoint"
+    return [
+        int(f[: -len(suffix)])
+        for f in os.listdir(d)
+        if f.endswith(suffix) and f[: -len(suffix)].isdigit()
+    ]
 
 
 def _checkpoint_manifest(path: str, version: int) -> dict | None:
     """Manifest of the multi-part checkpoint at ``version`` (None when
-    only the legacy format, or nothing, exists there)."""
+    none exists there)."""
     mf = os.path.join(_checkpoint_dir(path, version), "manifest.json")
     if not os.path.exists(mf):
         return None
@@ -152,30 +166,10 @@ def _iter_checkpoint_parts(path: str, version: int):
 
 
 def _read_checkpoint(path: str, version: int):
-    """(live, ptype, props) from the checkpoint at ``version`` — either
-    format."""
+    """(live, ptype, props) from the checkpoint at ``version``."""
     man = _checkpoint_manifest(path, version)
-    if man is not None:
-        live = dict(_iter_checkpoint_parts(path, version))
-        return live, man.get("ptype"), dict(man.get("props") or {})
-    with open(_checkpoint_path(path, version)) as fh:
-        ckpt = json.load(fh)
-    live = {
-        e["n"]: {
-            "p": e.get("p"),
-            "stats": e.get("stats") or {},
-            "dv": e.get("dv"),
-            "rid": e.get("rid"),
-        }
-        for e in ckpt["live"]
-    }
-    return live, ckpt.get("ptype"), dict(ckpt.get("props") or {})
-
-
-def _fold_log(path: str, v_max: int):
-    """(live, ptype) view of _fold_log3 — the pre-props callers' shape."""
-    live, ptype, _ = _fold_log3(path, v_max)
-    return live, ptype
+    live = dict(_iter_checkpoint_parts(path, version))
+    return live, man.get("ptype"), dict(man.get("props") or {})
 
 
 def _fold_log3(path: str, v_max: int):
@@ -234,6 +228,64 @@ def _fold_log3(path: str, v_max: int):
     return live, ptype, props
 
 
+@dataclass(frozen=True, eq=False)
+class Snapshot:
+    """One table state, folded ONCE: the version it resolves, the live
+    map (file name → {"p", "stats", "dv", "rid"} as _fold_log3 builds
+    it), the partition column's DDL type (None when unpartitioned) and
+    the latest-wins property dict. Readers and transaction attempts
+    take one of these instead of re-listing and re-folding the log; the
+    views below are pure functions of the fold. Treat ``live`` and
+    ``props`` as read-only."""
+
+    path: str
+    version: int
+    live: dict
+    ptype: str | None
+    props: dict
+
+    @classmethod
+    def at(cls, path: str, version: int | None = None) -> Snapshot:
+        """The snapshot at ``version`` (default: latest — one log LIST);
+        an empty/new table resolves to version -1 with nothing live."""
+        v = current_version(path) if version is None else version
+        if v < 0:
+            return cls(path, v, {}, None, {})
+        return cls(path, v, *_fold_log3(path, v))
+
+    @property
+    def names(self) -> list[str]:
+        return sorted(self.live)
+
+    @property
+    def files(self) -> list[str]:
+        return [os.path.join(_data_dir(self.path), n) for n in self.names]
+
+    @property
+    def dvs(self) -> dict[str, dict]:
+        return {n: d["dv"] for n, d in self.live.items() if d.get("dv")}
+
+    @property
+    def partitions(self) -> dict:
+        return {n: d["p"] for n, d in self.live.items()}
+
+    @property
+    def checks(self) -> dict[str, str]:
+        return {
+            k[len("check."):]: v
+            for k, v in self.props.items()
+            if k.startswith("check.")
+        }
+
+    @property
+    def uniques(self) -> dict[str, str]:
+        return {
+            k[len("unique."):]: v
+            for k, v in self.props.items()
+            if k.startswith("unique.") and k != "unique.autoStats"
+        }
+
+
 def _ckpt_arrow_schema():
     import pyarrow as pa
 
@@ -280,8 +332,7 @@ def write_checkpoint(path: str, version: int | None = None) -> str:
     Delta's multi-part parquet checkpoint design. Subsequent snapshot
     reads replay only entries after it, and large-table consumers read
     the parts as a DataFrame (snapshot_state_df) or stream them one at a
-    time instead of parsing one monolithic JSON. Legacy single-file
-    ``.checkpoint.json`` checkpoints remain readable.
+    time instead of parsing one monolithic JSON.
 
     This form folds on the driver (fine up to ~10⁵ live files and for
     every local writer); write_checkpoint_incremental is the distributed
@@ -333,7 +384,7 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
     orphan sweeps) should consume this instead.
 
     Falls back to parallelizing a driver fold when no multi-part
-    checkpoint exists yet (cold start / legacy-format tables) — one
+    checkpoint exists yet (cold start) — one
     O(live) pass, after which write_checkpoint establishes the scale
     format."""
     from pyspark.sql import functions as F
@@ -480,14 +531,8 @@ def _fold_props_only(path: str, v_max: int):
     ckpt_v = _latest_checkpoint_at_or_below(path, v_max)
     if ckpt_v >= 0:
         man = _checkpoint_manifest(path, ckpt_v)
-        if man is not None:
-            ptype = man.get("ptype")
-            props = dict(man.get("props") or {})
-        else:
-            with open(_checkpoint_path(path, ckpt_v)) as fh:
-                ckpt = json.load(fh)
-            ptype = ckpt.get("ptype")
-            props = dict(ckpt.get("props") or {})
+        ptype = man.get("ptype")
+        props = dict(man.get("props") or {})
         start = ckpt_v + 1
     for sv in range(start, v_max + 1):
         entry = _read_entry_body(path, sv)
@@ -504,11 +549,7 @@ def _fold_props_only(path: str, v_max: int):
 
 def snapshot_files(path: str, version: int | None = None) -> list[str]:
     """Live data files at ``version`` (default: latest) by folding the log."""
-    v_max = current_version(path) if version is None else version
-    if v_max < 0:
-        return []
-    live, _ = _fold_log(path, v_max)
-    return sorted(os.path.join(_data_dir(path), f) for f in live)
+    return Snapshot.at(path, version).files
 
 
 def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
@@ -529,31 +570,42 @@ def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
             f"version {version} of {path} was vacuumed (horizon "
             f"{vacuum_horizon(path)})"
         )
-    v_max = current_version(path) if version is None else version
-    live, ptype, props = _fold_log3(path, v_max)
-    if ptype is not None:
+    return _read_snapshot(spark, Snapshot.at(path, version))
+
+
+def _read_snapshot(spark, snap: Snapshot) -> DataFrame:
+    """read_snapshot over an already-folded snapshot."""
+    if snap.ptype is not None:
         # Partitioned table: the partition VALUE lives in the log, not
         # the files — a raw scan would silently DROP the column. Delegate
         # to the re-attaching read (the column name rides as a property;
         # legacy partitioned tables without it must use the explicit
         # form, loudly).
-        pcol = props.get("partition.column")
+        pcol = snap.props.get("partition.column")
         if pcol is None:
             raise ValueError(
-                f"{path} is partitioned but the log predates the "
+                f"{snap.path} is partitioned but the log predates the "
                 "partition.column property — use read_snapshot_partitioned"
                 "(spark, path, partition_col) explicitly"
             )
-        return read_snapshot_partitioned(spark, path, pcol, version)
-    files = sorted(os.path.join(_data_dir(path), f) for f in live)
-    if not files:
-        raise ValueError(f"no data at version {version!r} of {path}")
-    # column mapping: files carry PHYSICAL names; project to the logical
-    # schema AS OF this version (props fold version-by-version, so time
-    # travel shows each snapshot under the schema it had)
+        return _read_partitioned(spark, snap, pcol)
+    if not snap.live:
+        raise ValueError(f"no data at version {snap.version} of {snap.path}")
+    return _read_live(spark, snap)
+
+
+def _read_live(spark, snap: Snapshot, names=None) -> DataFrame:
+    """DV-aware scan of ``names`` (default: every live file) of an
+    unpartitioned snapshot. Column mapping: files carry PHYSICAL names;
+    the scan projects to the logical schema AS OF the snapshot's version
+    (props fold version-by-version, so time travel shows each snapshot
+    under the schema it had)."""
+    files = snap.files if names is None else [
+        os.path.join(_data_dir(snap.path), n) for n in names
+    ]
     return _apply_colmap(
-        _read_files_dv(spark, path, files, snapshot_dvs(path, v_max), props),
-        props,
+        _read_files_dv(spark, snap.path, files, snap.dvs, snap.props),
+        snap.props,
     )
 
 
@@ -561,7 +613,7 @@ class SchemaEnforcementViolation(ValueError):
     """A write's schema diverges from the table's under schema.enforce."""
 
 
-def _enforce_schema(df: DataFrame, path: str, props: dict) -> None:
+def _enforce_schema(df: DataFrame, snap: Snapshot) -> None:
     """Opt-in write-side schema enforcement (``schema.enforce=true``
     table property — Delta's default stance, offered here as policy
     because this lake's default is evolve-by-union): a staged write may
@@ -569,11 +621,12 @@ def _enforce_schema(df: DataFrame, path: str, props: dict) -> None:
     current logical schema exactly. Missing columns stay allowed (they
     null-fill on read, same as before). Without the property this is a
     no-op — evolution-by-default is unchanged."""
-    if props.get("schema.enforce") != "true":
+    if snap.props.get("schema.enforce") != "true":
         return
-    if not snapshot_files(path):
+    if not snap.live:
         return  # nothing committed yet: the first write defines the schema
-    want = dict(read_snapshot(df.sparkSession, path).dtypes)
+    path = snap.path
+    want = dict(_read_snapshot(df.sparkSession, snap).dtypes)
     got = dict(df.dtypes)
     extra = sorted(set(got) - set(want))
     if extra:
@@ -598,7 +651,7 @@ def _enforce_schema(df: DataFrame, path: str, props: dict) -> None:
         )
 
 
-def _stage(df: DataFrame, path: str) -> list[str]:
+def _stage(df: DataFrame, snap: Snapshot) -> list[str]:
     """Write df's rows as fresh uniquely-named parquet files under data/
     and return their basenames (staged but NOT yet visible — only a log
     commit publishes them).
@@ -607,10 +660,10 @@ def _stage(df: DataFrame, path: str) -> list[str]:
     governance that travels WITH the table — every writer splits oversize
     task outputs, so one misconfigured producer can't land a 50 GB
     file)."""
+    path, props = snap.path, snap.props
     stage_id = uuid.uuid4().hex
     stage_dir = os.path.join(path, f"_staged_{stage_id}")
-    props = table_props(path) if current_version(path) >= 0 else {}
-    _enforce_schema(df, path, props)
+    _enforce_schema(df, snap)
     # column mapping: on-disk files ALWAYS carry physical names, whatever
     # the writer's logical era (physical names are stable, so a rename
     # racing this stage cannot invalidate the written files)
@@ -882,6 +935,7 @@ def commit(
     dv: list[dict] | None = None,
     props: dict | None = None,
     op: str | None = None,
+    snapshot: Snapshot | None = None,
 ) -> int:
     """Atomically claim version ``expect_version + 1``. Raises TxnConflict
     if another writer got there first (optimistic concurrency).
@@ -891,6 +945,9 @@ def commit(
     a row-level delete that moves no data bytes (Delta's DV add-action).
     ``props`` sets table properties latest-wins (value None unsets) —
     Delta's metadata-update action; CHECK constraints live here.
+    ``snapshot`` is the Snapshot at ``expect_version`` the actions were
+    computed against (the transaction driver passes it), so row-id
+    assignment reads its properties instead of folding the log again.
 
     The entry's CONTENT is complete before its NAME exists: the version
     is claimed through the CommitBackend seam's put_if_absent — on POSIX
@@ -916,15 +973,19 @@ def commit(
     # (the materialized-id upgrade Delta needs for rewrite-stable ids is
     # out of scope, documented).
     if added and expect_version >= 0:
-        try:
-            prev_props = table_props(path, expect_version)
-        except (ValueError, FileNotFoundError, json.JSONDecodeError):
-            # log state not readable from THIS process (e.g. the in-memory
-            # commit-backend double, where entries never touch disk): no
-            # rowids property is discoverable, so no assignment happens —
-            # row-id tables require a locally readable log by contract
-            # (every read path folds it anyway).
-            prev_props = {}
+        if snapshot is not None and snapshot.version == expect_version:
+            prev_props = snapshot.props
+        else:
+            try:
+                prev_props = table_props(path, expect_version)
+            except (ValueError, FileNotFoundError, json.JSONDecodeError):
+                # log state not readable from THIS process (e.g. the
+                # in-memory commit-backend double, where entries never
+                # touch disk): no rowids property is discoverable, so no
+                # assignment happens — row-id tables require a locally
+                # readable log by contract (every read path folds it
+                # anyway).
+                prev_props = {}
         nxt = prev_props.get("rowids.next")
         if nxt is not None:
             import pyarrow.parquet as pq
@@ -987,9 +1048,205 @@ def commit(
         # work. The next interval commit retries the checkpoint.
         try:
             write_checkpoint(path, new_v)
-        except OSError:
-            pass
+        except OSError as exc:
+            _log.warning(
+                "checkpoint of %s at version %d not written: %r",
+                path, new_v, exc,
+            )
     return new_v
+
+
+# ---------------------------------------------------- transaction driver
+
+
+@dataclass
+class _Commit:
+    """The actions one transaction attempt asks ``_transact`` to claim.
+
+    ``reap`` says what happens to the files named by ``added``/``dv``
+    (this attempt's staged data files, their bloom sidecars and DV
+    sidecar generations) when the claim does not land: ``"lost"`` —
+    delete them after a lost race (the next attempt re-stages against
+    the new snapshot); ``"give_up"`` — keep them across attempts and
+    delete them only when the driver gives up (the stage-once appends);
+    None — they are not this attempt's output (RESTORE re-adds files
+    the table already owns)."""
+
+    added: list
+    removed: list | tuple = ()
+    dv: list | None = None
+    props: dict | None = None
+    op: str | None = None
+    reap: str | None = "lost"
+    change_data: bool = False
+    touched_keys: tuple | None = None
+    auto_optimize: bool = False
+
+
+def _transact(spark, path: str, attempt, max_retries: int, what: str):
+    """Run one optimistic transaction: each attempt pins a Snapshot and
+    calls ``attempt(snapshot)``, which returns either an early result
+    (returned as is) or a ``_Commit``. The driver claims version
+    ``snapshot.version + 1`` through ``commit``; a lost race reaps the
+    attempt's staged files (see _Commit.reap) and retries against the
+    new snapshot. After a win it runs the post-commit hooks — change
+    data when the attempt asks for it and the table has ``cdf.enabled``,
+    then auto-optimize on the plain appends — and returns the version
+    (the compaction's, when one ran). ``what`` completes the give-up
+    message ("gave up after N retries <what>")."""
+    acts = None
+    for _ in range(max_retries):
+        snap = Snapshot.at(path)
+        acts = attempt(snap)
+        if not isinstance(acts, _Commit):
+            return acts
+        try:
+            v = commit(
+                path, acts.added, acts.removed, snap.version, dv=acts.dv,
+                props=acts.props, op=acts.op, snapshot=snap,
+            )
+        except TxnConflict:
+            if acts.reap == "lost":
+                _reap(path, acts.added, acts.dv)
+            continue
+        if acts.change_data:
+            _maybe_write_change_data(
+                spark, snap, v, acts.removed, acts.added, acts.touched_keys
+            )
+        if acts.auto_optimize:
+            return _maybe_auto_optimize(spark, snap, v)
+        return v
+    if acts is not None and acts.reap == "give_up":
+        _reap(path, acts.added, acts.dv)
+    raise TxnConflict(f"gave up after {max_retries} retries {what}")
+
+
+def _reap(path: str, added, dv=None) -> None:
+    """Delete files a transaction wrote but never committed: staged data
+    files (bare names or entry dicts — a recorded bloom sidecar goes with
+    its file) and the DV sidecar generations ``dv`` actions name. No log
+    entry names them, so vacuum never would."""
+    doomed = []
+    for e in added:
+        if isinstance(e, dict):
+            doomed.append(e["n"])
+            bloom = (e.get("stats") or {}).get("__bloom__") or {}
+            doomed.extend(f"{e['n']}.bloom.{c}" for c in bloom)
+        else:
+            doomed.append(e)
+    doomed.extend(e["d"] for e in dv or () if e.get("d") is not None)
+    for n in doomed:
+        try:
+            os.remove(os.path.join(_data_dir(path), n))
+        except FileNotFoundError:
+            pass
+
+
+def _split_cols(spec: str) -> list[str]:
+    """A comma-separated column-list property value as a list."""
+    return [c.strip() for c in spec.split(",") if c.strip()]
+
+
+def _describe(
+    snap: Snapshot, names, stats_cols=(), bloom_col: str | None = None,
+    fpp: float = 0.01,
+) -> list[dict]:
+    """Commit entries for freshly staged ``names`` carrying per-file
+    metadata: footer zone maps for ``stats_cols`` and a Bloom sidecar for
+    ``bloom_col``. Columns are LOGICAL names, translated here to the
+    physical names the files carry (log stats stay physical-keyed
+    across renames)."""
+    cols = [_phys_col(snap.props, c) for c in stats_cols]
+    bcol = _phys_col(snap.props, bloom_col) if bloom_col is not None else None
+    out = []
+    for n in names:
+        st = (
+            _footer_stats(os.path.join(_data_dir(snap.path), n), cols)
+            if cols
+            else {}
+        )
+        if bcol is not None:
+            st = dict(st)
+            st["__bloom__"] = {bcol: _bloom_build_file(snap.path, n, bcol, fpp)}
+        out.append({"n": n, "p": None, "stats": st})
+    return out
+
+
+def _batch_done(snap: Snapshot, app_id: str, batch_id: int) -> bool:
+    """Whether ``snap`` already records ``batch_id`` for ``app_id``."""
+    return batch_id <= int(snap.props.get(f"txn.{app_id}", -1))
+
+
+def _append(
+    spark, df: DataFrame, path: str, max_retries: int, *,
+    stats_cols=None, bloom_col: str | None = None, fpp: float = 0.01,
+    partition_col: str | None = None, app: tuple | None = None,
+    auto_optimize: bool | None = True,
+) -> int:
+    """The stage-once append transaction behind every txn_append* form.
+
+    The first attempt stages ``df`` once against its pinned snapshot
+    (split by ``partition_col`` when given), validates the staged files
+    against the snapshot's CHECK and unique constraints, and records
+    per-file metadata (``stats_cols`` zone maps / ``bloom_col`` sidecar;
+    with neither, the table's declared ``write.statsColumns``). A lost
+    race keeps the files: the next attempt pins the new snapshot FIRST
+    and then revalidates against it, so a constraint added by the rival
+    that beat us is always seen (the TOCTOU guarantee
+    _revalidate_if_changed documents). ``app=(app_id, batch_id)`` makes
+    the append exactly-once: a batch the pinned snapshot already records
+    is skipped (staged files reaped) and the current version returned.
+    ``auto_optimize=None`` compacts only when the table declares
+    ``write.statsColumns`` — an ad-hoc zone map would not survive the
+    rewrite."""
+    st: dict = {}
+
+    def attempt(snap: Snapshot):
+        if app is not None and _batch_done(snap, *app):
+            _reap(path, st.get("added", ()))
+            return snap.version
+        if not st:
+            if partition_col is not None:
+                added = _stage_partitioned(df, snap, partition_col)
+                cols = None
+            else:
+                added = _stage(df, snap)
+                cols = stats_cols
+                declared = snap.props.get("write.statsColumns")
+                if cols is None and bloom_col is None and declared:
+                    cols = _split_cols(declared)
+            checks = _validate_staged(spark, snap, added, partition_col)
+            _validate_unique(spark, snap, added)
+            if cols is not None or bloom_col is not None:
+                added = _describe(snap, added, cols or (), bloom_col, fpp)
+            st.update(
+                added=added,
+                auto=(
+                    auto_optimize
+                    if auto_optimize is not None
+                    else bool(snap.props.get("write.statsColumns"))
+                ),
+            )
+        else:
+            checks = _revalidate_if_changed(
+                spark, snap, st["added"], st["checks"], partition_col
+            )
+            _validate_unique(spark, snap, st["added"])
+        st["checks"] = checks
+        props = {}
+        if partition_col is not None:
+            # the partition COLUMN NAME rides as a property so generic
+            # readers (read_snapshot) can re-attach it without being told
+            props["partition.column"] = partition_col
+        if app is not None:
+            props[f"txn.{app[0]}"] = str(app[1])
+        return _Commit(
+            st["added"], props=props or None,
+            op="STREAMING_APPEND" if app is not None else "APPEND",
+            reap="give_up", auto_optimize=st["auto"],
+        )
+
+    return _transact(spark, path, attempt, max_retries, f"appending to {path}")
 
 
 def txn_append(spark, df: DataFrame, path: str, max_retries: int = 5) -> int:
@@ -1007,48 +1264,7 @@ def txn_append(spark, df: DataFrame, path: str, max_retries: int = 5) -> int:
     and commit — including a txn_add_check — forces the TxnConflict path
     and therefore _revalidate_if_changed, so a violating row can never
     slip in under a constraint added in that window."""
-    stats_prop = (
-        table_props(path).get("write.statsColumns")
-        if current_version(path) >= 0
-        else None
-    )
-    if stats_prop:
-        return txn_append_stats(
-            spark, df, path,
-            [c.strip() for c in stats_prop.split(",") if c.strip()],
-            max_retries,
-        )
-    added = _stage(df, path)
-    base_v = current_version(path)
-    checks = _validate_staged(spark, path, added)
-    _validate_unique(spark, path, added, base_v)
-    for _ in range(max_retries):
-        try:
-            v = commit(path, added, [], base_v, op="APPEND")
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
-
-
-def _stage_auto(spark, df: DataFrame, path: str) -> list:
-    """_stage honoring ``write.statsColumns``: rewrite commits (upsert /
-    delete / compact / merge) keep recording the table's declared
-    zone-map columns, so data skipping survives every DML — without the
-    property this is exactly _stage."""
-    prop = (
-        table_props(path).get("write.statsColumns")
-        if current_version(path) >= 0
-        else None
-    )
-    if prop:
-        return _stage_with_meta(
-            spark, df, path, [c.strip() for c in prop.split(",") if c.strip()]
-        )
-    return _stage(df, path)
+    return _append(spark, df, path, max_retries)
 
 
 def txn_upsert(
@@ -1066,7 +1282,6 @@ def txn_upsert(
     here so the commit protocol stays readable."""
     from dbimport_spark.operators.merge import upsert
 
-    _refuse_partitioned(path, "txn_upsert")
     # An upsert only changes rows whose key appears in the source, so the
     # CDF diff (when cdf.enabled) can be pre-filtered to those keys —
     # plain string keys only (KeyColumn key functions would change what
@@ -1074,25 +1289,18 @@ def txn_upsert(
     touched_keys = (
         (list(keys), source) if all(isinstance(k, str) for k in keys) else None
     )
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        target = read_snapshot(spark, path, base_v)
-        old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
-        merged = upsert(target, source, keys)
-        added = _stage_auto(spark, merged, path)
-        _validate_staged(spark, path, added)  # merge may introduce new rows
-        try:
-            v = commit(path, added, old_files, base_v, op="UPSERT")
-            _maybe_write_change_data(
-                spark, path, v, old_files, added, base_v,
-                touched_keys=touched_keys,
-            )
-            return v
-        except TxnConflict:
-            # lost the race: the staged files are unreferenced (invisible
-            # to every reader); re-merge against the new snapshot.
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries upserting {path}")
+
+    def attempt(snap: Snapshot):
+        _refuse_partitioned(snap, "txn_upsert")
+        merged = upsert(_read_snapshot(spark, snap), source, keys)
+        added = _stage_with_meta(merged, snap)
+        _validate_staged(spark, snap, added)  # merge may introduce new rows
+        return _Commit(
+            added, snap.names, op="UPSERT", change_data=True,
+            touched_keys=touched_keys,
+        )
+
+    return _transact(spark, path, attempt, max_retries, f"upserting {path}")
 
 
 # ------------------------------------------------------- partitioned form
@@ -1103,15 +1311,11 @@ def _entry_files(entry_list):
     return [e["n"] if isinstance(e, dict) else e for e in entry_list]
 
 
-def _refuse_partitioned(path: str, op_name: str) -> None:
+def _refuse_partitioned(snap: Snapshot, op_name: str) -> None:
     """Loud guard for operations whose staged output would strip the
     log-carried partition values (silent corruption: the table's files
     would stop matching its partition metadata)."""
-    cur = current_version(path)
-    if cur < 0:
-        return
-    _, ptype = _fold_log(path, cur)
-    if ptype is not None:
+    if snap.ptype is not None:
         raise ValueError(
             f"{op_name}: partitioned tables are not supported — the rewrite "
             "would strip the log-carried partition values; use the "
@@ -1122,9 +1326,7 @@ def _refuse_partitioned(path: str, op_name: str) -> None:
 def snapshot_partitions(path: str, version: int | None = None) -> dict[str, str]:
     """{file name → directory-encoded partition value} for live files at
     ``version`` (files from unpartitioned commits map to None)."""
-    v_max = current_version(path) if version is None else version
-    live, _ = _fold_log(path, v_max)
-    return {n: d["p"] for n, d in live.items()}
+    return Snapshot.at(path, version).partitions
 
 
 # Partition directory encoding. Spark/Hive escape a fixed character set in
@@ -1172,7 +1374,7 @@ def _encode_partition_value(v) -> str:
     return _escape_path_name(str(v))
 
 
-def _stage_partitioned(df: DataFrame, path: str, partition_col: str):
+def _stage_partitioned(df: DataFrame, snap: Snapshot, partition_col: str):
     """Stage df split by partition value; returns [{"n": name, "p": value}].
     The partition column is stored in the LOG (not the file), mirroring
     the lakehouse convention (Delta's partitionValues / hive dir layout);
@@ -1180,24 +1382,23 @@ def _stage_partitioned(df: DataFrame, path: str, partition_col: str):
     import shutil
     import tempfile
 
+    path = snap.path
     stage_id = uuid.uuid4().hex
     stage_dir = os.path.join(tempfile.gettempdir(), f"txn_stage_{stage_id}")
     ptype = df.schema[partition_col].dataType.simpleString()
-    if current_version(path) >= 0:
-        _enforce_schema(df, path, table_props(path))
-    if current_version(path) >= 0:
-        # data columns to physical names; the partition column stays
-        # logical (it lives in the log, and its rename is refused)
-        mp, _ = _colmap(table_props(path))
-        if mp:
-            from pyspark.sql import functions as F
+    _enforce_schema(df, snap)
+    # data columns to physical names; the partition column stays
+    # logical (it lives in the log, and its rename is refused)
+    mp, _ = _colmap(snap.props)
+    if mp:
+        from pyspark.sql import functions as F
 
-            df = df.select(
-                *[
-                    F.col(c) if c == partition_col else F.col(c).alias(mp.get(c, c))
-                    for c in df.columns
-                ]
-            )
+        df = df.select(
+            *[
+                F.col(c) if c == partition_col else F.col(c).alias(mp.get(c, c))
+                for c in df.columns
+            ]
+        )
     df.write.mode("overwrite").partitionBy(partition_col).parquet(stage_dir)
     os.makedirs(_data_dir(path), exist_ok=True)
     added = []
@@ -1247,37 +1448,37 @@ def read_snapshot_partitioned(
     re-attached literal is cast back to the partition column's original
     type (recorded in the log at write time) — a date/int partition round
     trips as date/int, and NULL partitions round trip as NULL."""
+    return _read_partitioned(
+        spark, Snapshot.at(path, version), partition_col, partition_values
+    )
+
+
+def _read_partitioned(
+    spark, snap: Snapshot, partition_col: str, partition_values=None
+) -> DataFrame:
+    """read_snapshot_partitioned over an already-folded snapshot."""
     from functools import reduce
 
-    from pyspark.sql import functions as F
-
-    v_max = current_version(path) if version is None else version
-    folded, ptype = _fold_log(path, v_max)
-    live = {n: d["p"] for n, d in folded.items()}
+    live = snap.partitions
     if partition_values is not None:
         wanted = {_encode_partition_value(v) for v in partition_values}
         live = {n: p for n, p in live.items() if p in wanted}
     if not live:
-        raise ValueError(f"no data for snapshot read of {path}")
+        raise ValueError(f"no data for snapshot read of {snap.path}")
     by_value: dict[str, list[str]] = {}
     for n, p in live.items():
-        by_value.setdefault(p, []).append(os.path.join(_data_dir(path), n))
-
-    def _lit(encoded):
-        return _partition_lit(encoded, ptype)
-
-    dvmap = snapshot_dvs(path, v_max)  # merge-on-read per value group
-    props_v = table_props(path, v_max)
+        by_value.setdefault(p, []).append(os.path.join(_data_dir(snap.path), n))
+    # merge-on-read per value group
     parts = [
-        _read_files_dv(spark, path, sorted(files), dvmap, props_v).withColumn(
-            partition_col, _lit(value)
-        )
+        _read_files_dv(
+            spark, snap.path, sorted(files), snap.dvs, snap.props
+        ).withColumn(partition_col, _partition_lit(value, snap.ptype))
         for value, files in sorted(by_value.items(), key=lambda kv: (kv[0] is None, kv[0]))
     ]
     out = reduce(lambda a, b: a.unionByName(b), parts)
     # physical → logical projection (partition column is log-resident and
     # already logical — it passes through)
-    return _apply_colmap(out, props_v, keep=(partition_col,))
+    return _apply_colmap(out, snap.props, keep=(partition_col,))
 
 
 def txn_upsert_partitioned(
@@ -1292,35 +1493,30 @@ def txn_upsert_partitioned(
     mentioned in the commit — an incremental load's commit is O(batch).
     Same correctness requirement as merge_into_partitioned: the partition
     column must be a stable function of the merge keys."""
-    from pyspark.sql import functions as F
-
     from dbimport_spark.operators.merge import upsert
 
     touched_values = [
         r[0] for r in source.select(partition_col).distinct().collect()
     ]
     touched = {_encode_partition_value(v) for v in touched_values}
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        live = snapshot_partitions(path, base_v)
-        old_touched = [n for n, p in live.items() if p in touched]
+
+    def attempt(snap: Snapshot):
+        old_touched = [n for n, p in snap.partitions.items() if p in touched]
         if old_touched:
-            target_slice = read_snapshot_partitioned(
-                spark, path, partition_col, base_v, partition_values=touched_values
+            target_slice = _read_partitioned(
+                spark, snap, partition_col, touched_values
             )
             merged = upsert(target_slice, source, keys)
         else:
             merged = source
-        added = _stage_partitioned(merged, path, partition_col)
-        _validate_staged(spark, path, added, partition_col)
-        try:
-            return commit(
-                path, added, old_touched, base_v, op="UPSERT",
-                props={"partition.column": partition_col},
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries upserting {path}")
+        added = _stage_partitioned(merged, snap, partition_col)
+        _validate_staged(spark, snap, added, partition_col)
+        return _Commit(
+            added, old_touched, props={"partition.column": partition_col},
+            op="UPSERT",
+        )
+
+    return _transact(spark, path, attempt, max_retries, f"upserting {path}")
 
 
 def txn_append_partitioned(
@@ -1330,25 +1526,7 @@ def txn_append_partitioned(
     exactly one value, recorded in the log entry). CHECK constraints are
     enforced like the unpartitioned append — the staged files are
     validated with their partition values re-attached."""
-    added = _stage_partitioned(df, path, partition_col)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added, partition_col)
-    _validate_unique(spark, path, added, base_v)
-    for _ in range(max_retries):
-        try:
-            # the partition COLUMN NAME rides as a property so generic
-            # readers (read_snapshot) can re-attach it without being told
-            v = commit(
-                path, added, [], base_v, op="APPEND",
-                props={"partition.column": partition_col},
-            )
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
+    return _append(spark, df, path, max_retries, partition_col=partition_col)
 
 
 def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
@@ -1365,20 +1543,15 @@ def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
     (which is NULL for NULL inputs and would silently drop those rows)."""
     from pyspark.sql import functions as F
 
-    _refuse_partitioned(path, "txn_delete")
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        target = read_snapshot(spark, path, base_v)
-        old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
-        kept = target.filter(~F.coalesce(source_pred, F.lit(False)))
-        added = _stage_auto(spark, kept, path)
-        try:
-            v = commit(path, added, old_files, base_v, op="DELETE")
-            _maybe_write_change_data(spark, path, v, old_files, added, base_v)
-            return v
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries deleting from {path}")
+    def attempt(snap: Snapshot):
+        _refuse_partitioned(snap, "txn_delete")
+        kept = _read_snapshot(spark, snap).filter(
+            ~F.coalesce(source_pred, F.lit(False))
+        )
+        added = _stage_with_meta(kept, snap)
+        return _Commit(added, snap.names, op="DELETE", change_data=True)
+
+    return _transact(spark, path, attempt, max_retries, f"deleting from {path}")
 
 
 def read_changes(
@@ -1504,50 +1677,47 @@ def txn_compact(
     the old or the new layout, never a mix; the table's CONTENT is
     invariant (asserted by the lake_txn_compact oracle query), and time
     travel to pre-compaction versions still resolves the old files until
-    vacuum. A lost commit race leaves the staged files unreferenced and
-    retries against the new snapshot, like txn_upsert. Returns the new
+    vacuum. A lost commit race reaps the staged files and retries
+    against the new snapshot, like txn_upsert. Returns the new
     version (or the current one if there was nothing to compact)."""
+
+    def attempt(snap: Snapshot):
+        _refuse_partitioned(snap, "txn_compact")
+        return _compact_attempt(spark, snap, target_file_bytes, min_files)
+
+    return _transact(spark, path, attempt, max_retries, f"compacting {path}")
+
+
+def _compact_attempt(spark, snap: Snapshot, target_file_bytes: int, min_files: int):
+    """One txn_compact attempt over an unpartitioned snapshot: the
+    rewrite's commit actions, or the snapshot's version when there is
+    nothing to compact."""
     import math
 
-    _refuse_partitioned(path, "txn_compact")
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        files = snapshot_files(path, base_v)
-        # min_files alone must not short-circuit a DV-carrying table: a
-        # single file with a deletion vector still needs compaction to
-        # MATERIALIZE the DV (snapshot_profile / export_symlink_manifest
-        # send users here for exactly that), matching the guard in
-        # txn_compact_partitioned.
-        if len(files) < min_files and not snapshot_dvs(path, base_v):
-            return base_v
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        if n_out >= len(files) and not snapshot_dvs(path, base_v):
-            return base_v  # already at or below target granularity
-        # DV-aware: compaction MATERIALIZES deletion vectors (deleted rows
-        # drop out of the rewrite; the removed files take their DV refs
-        # with them) — Delta's PURGE semantics ride along with OPTIMIZE.
-        # The logical round-trip (_apply_colmap here, _stage's unapply on
-        # the way out) also PURGES dropped columns' bytes from the
-        # rewritten files — renames keep their stable physical names.
-        df = _apply_colmap(
-            _read_files_dv(
-                spark, path, files, snapshot_dvs(path, base_v),
-                table_props(path, base_v),
-            ),
-            table_props(path, base_v),
-        ).coalesce(n_out)
-        added = _stage_auto(spark, df, path)
-        old = [os.path.basename(f) for f in files]
-        try:
-            return commit(path, added, old, base_v, op="OPTIMIZE")
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries compacting {path}")
+    files = snap.files
+    # min_files alone must not short-circuit a DV-carrying table: a
+    # single file with a deletion vector still needs compaction to
+    # MATERIALIZE the DV (snapshot_profile / export_symlink_manifest
+    # send users here for exactly that), matching the guard in
+    # txn_compact_partitioned.
+    if len(files) < min_files and not snap.dvs:
+        return snap.version
+    total = sum(os.path.getsize(f) for f in files)
+    n_out = max(1, math.ceil(total / target_file_bytes))
+    if n_out >= len(files) and not snap.dvs:
+        return snap.version  # already at or below target granularity
+    # DV-aware: compaction MATERIALIZES deletion vectors (deleted rows
+    # drop out of the rewrite; the removed files take their DV refs
+    # with them) — Delta's PURGE semantics ride along with OPTIMIZE.
+    # The logical round-trip (_read_live's colmap here, _stage's unapply
+    # on the way out) also PURGES dropped columns' bytes from the
+    # rewritten files — renames keep their stable physical names.
+    added = _stage_with_meta(_read_live(spark, snap).coalesce(n_out), snap)
+    return _Commit(added, snap.names, op="OPTIMIZE")
 
 
 def _write_change_data(
-    spark, path: str, new_v: int, removed_names, added_entries, base_v: int,
+    spark, snap: Snapshot, new_v: int, removed_names, added_entries,
     touched_keys=None,
 ) -> None:
     """Writer-side CHANGE FILES for a rewrite commit (Delta's _change_data
@@ -1581,15 +1751,14 @@ def _write_change_data(
     the files carry here.
 
     Runs AFTER the commit won its slot, so it never holds up the
-    optimistic-retry loop and a lost race writes nothing."""
-    from pyspark.sql import functions as F
-
+    optimistic-retry loop and a lost race writes nothing. ``snap`` is
+    the snapshot the commit was computed against."""
+    path = snap.path
     out_dir = os.path.join(path, "_change_data", f"v{new_v:08d}")
     if os.path.isdir(out_dir):
         return  # idempotent (replayed writer)
     delta = _change_delta(
-        spark, path, removed_names, added_entries, base_v,
-        touched_keys=touched_keys,
+        spark, snap, removed_names, added_entries, touched_keys=touched_keys
     )
     if delta is None:
         os.makedirs(out_dir, exist_ok=True)
@@ -1612,15 +1781,15 @@ _CDF_PRUNE_BROADCAST_MAX = 8 << 20
 
 
 def _change_delta(
-    spark, path: str, removed_names, added_entries, base_v: int,
-    touched_keys=None,
+    spark, snap: Snapshot, removed_names, added_entries, touched_keys=None
 ):
-    """The rewrite commit's row-level diff as a DataFrame (None when both
-    file sets are empty) — the plan _write_change_data materializes; kept
-    separate so tools can dump/inspect the plan without writing."""
+    """The rewrite commit's row-level diff against ``snap`` as a
+    DataFrame (None when both file sets are empty) — the plan
+    _write_change_data materializes; kept separate so tools can
+    dump/inspect the plan without writing."""
     from pyspark.sql import functions as F
 
-    live_prev, _, _ = _fold_log3(path, base_v)
+    path, live_prev = snap.path, snap.live
     old_files = [
         os.path.join(_data_dir(path), n) for n in removed_names if n in live_prev
     ]
@@ -1635,7 +1804,7 @@ def _change_delta(
     new_files = [os.path.join(_data_dir(path), n) for n in added_names]
 
     prune = None
-    if touched_keys is not None:
+    if touched_keys is not None and touched_keys[0]:
         key_cols, keys_df = touched_keys
         # Broadcast gate (guide §3.1): the prune only pays when the semi
         # joins are MAP-SIDE — a source key set past the broadcast bound
@@ -1646,10 +1815,8 @@ def _change_delta(
         # join's hash build tolerates duplicate keys, so the raw cached
         # projection broadcasts with no exchange at all.
         n_src = keys_df.count()
-        if n_src * 16 * max(len(key_cols), 1) <= _CDF_PRUNE_BROADCAST_MAX:
-            pkeys = [
-                _phys_col(table_props(path, base_v), k) for k in key_cols
-            ]
+        if n_src * 16 * len(key_cols) <= _CDF_PRUNE_BROADCAST_MAX:
+            pkeys = [_phys_col(snap.props, k) for k in key_cols]
             tk = F.broadcast(
                 keys_df.select(
                     *[
@@ -1662,15 +1829,13 @@ def _change_delta(
             def prune(side):  # noqa: F811
                 cond = None
                 for i, k in enumerate(pkeys):
-                    c = side[k].eqNullSafe(F.col(f"__tk_{i}"))
+                    c = side[k].eqNullSafe(tk[f"__tk_{i}"])
                     cond = c if cond is None else (cond & c)
                 return side.join(tk, cond, "left_semi")
 
     sides = []
     if old_files:
-        old = _read_files_dv(
-            spark, path, old_files, old_dvs, table_props(path, base_v)
-        )
+        old = _read_files_dv(spark, path, old_files, old_dvs, snap.props)
         if prune is not None:
             old = prune(old)
         sides.append(old.withColumn("_sgn", F.lit(-1)))
@@ -1702,19 +1867,24 @@ def _change_delta(
 
 
 def _maybe_write_change_data(
-    spark, path, new_v, removed_names, added_entries, base_v,
+    spark, snap: Snapshot, new_v, removed_names, added_entries,
     touched_keys=None,
 ) -> None:
-    if table_props(path, base_v).get("cdf.enabled") == "true":
-        try:
-            _write_change_data(
-                spark, path, new_v, removed_names, added_entries, base_v,
-                touched_keys=touched_keys,
-            )
-        except Exception:
-            # change files are an accelerator, never a correctness
-            # dependency: the CDC reader falls back to the on-read diff
-            pass
+    if snap.props.get("cdf.enabled") != "true":
+        return
+    try:
+        _write_change_data(
+            spark, snap, new_v, removed_names, added_entries,
+            touched_keys=touched_keys,
+        )
+    except Exception as exc:  # noqa: BLE001 — any failure degrades alike
+        # change files are an accelerator, never a correctness
+        # dependency: the CDC reader falls back to the on-read diff
+        _log.warning(
+            "change data of %s at version %d not written (readers fall "
+            "back to the on-read diff): %r", snap.path, new_v, exc,
+            exc_info=True,
+        )
 
 
 def txn_fsck(path: str, version: int | None = None) -> dict:
@@ -1830,10 +2000,7 @@ def txn_enable_row_ids(path: str, max_retries: int = 5) -> int:
 def snapshot_rowids(path: str, version: int | None = None) -> dict[str, int]:
     """{live file name → base row id} at ``version`` (files committed
     before enablement are absent)."""
-    v_max = current_version(path) if version is None else version
-    if v_max < 0:
-        return {}
-    live, _ = _fold_log(path, v_max)
+    live = Snapshot.at(path, version).live
     return {n: d["rid"] for n, d in live.items() if d.get("rid") is not None}
 
 
@@ -1845,9 +2012,9 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
     Unpartitioned tables; requires every live file to carry a base."""
     from pyspark.sql import functions as F
 
-    v_max = current_version(path) if version is None else version
-    live, ptype, props = _fold_log3(path, v_max)
-    if ptype is not None:
+    snap = Snapshot.at(path, version)
+    live, props = snap.live, snap.props
+    if snap.ptype is not None:
         raise ValueError("read_snapshot_rowids: partitioned tables not supported")
     missing = sorted(n for n, d in live.items() if d.get("rid") is None)
     if missing:
@@ -1855,10 +2022,10 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
             f"read_snapshot_rowids: {len(missing)} live file(s) predate "
             f"row-id enablement (e.g. {missing[0]!r})"
         )
-    files = sorted(os.path.join(_data_dir(path), n) for n in live)
+    files = snap.files
     if not files:
         raise ValueError(f"no data at version {version!r} of {path}")
-    src = _scan_files(spark, path, files, props)
+    src = _scan_files(spark, files, props)
     cols = src.columns
     # (file → base) as a broadcast-joined DataFrame, not a literal map
     # expression: at 100 TB a table has ~10^5 files and a create_map of
@@ -1872,7 +2039,7 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
         F.col("_metadata.row_index").alias("__rp"),
         *cols,
     )
-    dvmap = {n: d["dv"] for n, d in live.items() if d.get("dv")}
+    dvmap = snap.dvs
     if dvmap:
         pos = _dv_positions_df(spark, path, dvmap)
         if sum(m["k"] for m in dvmap.values()) <= _DV_DRIVER_DECODE_MAX:
@@ -2044,30 +2211,11 @@ def vacuum(
     # live) storage. The newest one ≤ horizon stays (it accelerates
     # every still-readable version), as does everything above the
     # horizon.
-    ckpt_vs = sorted(
-        v
-        for v in {
-            int(f[: -len(".checkpoint.json")])
-            if f.endswith(".checkpoint.json")
-            else int(f[: -len(".checkpoint")])
-            for f in os.listdir(_log_dir(path))
-            if (f.endswith(".checkpoint.json") and f[: -len(".checkpoint.json")].isdigit())
-            or (f.endswith(".checkpoint") and f[: -len(".checkpoint")].isdigit())
-        }
-        if v <= cutoff
-    )
+    ckpt_vs = sorted(v for v in _checkpoint_versions(path) if v <= cutoff)
     for v in ckpt_vs[:-1]:  # all but the newest at/below the horizon
-        legacy = _checkpoint_path(path, v)
-        if os.path.exists(legacy):
-            try:
-                os.remove(legacy)
-            except FileNotFoundError:
-                pass
-        d = _checkpoint_dir(path, v)
-        if os.path.isdir(d):
-            import shutil
+        import shutil
 
-            shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(_checkpoint_dir(path, v), ignore_errors=True)
     # Record the horizon as an EMPTY MARKER FILE named after the cutoff
     # (``_vacuum.<cutoff>``), never a rewritten shared file. The r6
     # implementation truncate-then-wrote one ``_vacuum`` file, which the
@@ -2447,42 +2595,21 @@ def txn_append_stats(
     prune FILES from the log alone — the Iceberg/Delta data-skipping
     design (their manifests/add-actions carry exactly these bounds).
     Combine with a range-clustered write (sinks.write_clustered_parquet /
-    zorder) and a selective read touches O(matching files)."""
-    has_props = current_version(path) >= 0
-    if has_props:
-        stats_cols = [_phys_col(table_props(path), c) for c in stats_cols]
-    # autoOptimize composes with statsColumns-driven appends because the
-    # compaction rewrite goes through _stage_auto, which re-records the
-    # table's declared zone-map columns. Explicit ad-hoc stats_cols (no
-    # property) stay exempt — a compaction would discard them.
-    stats_from_prop = has_props and bool(
-        table_props(path).get("write.statsColumns")
+    zorder) and a selective read touches O(matching files).
+
+    autoOptimize composes with statsColumns-driven appends because the
+    compaction rewrite goes through _stage_with_meta, which re-records
+    the table's declared zone-map columns. Explicit ad-hoc stats_cols
+    (no property) stay exempt — a compaction would discard them."""
+    return _append(
+        spark, df, path, max_retries, stats_cols=list(stats_cols),
+        auto_optimize=None,
     )
-    added_names = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added_names)
-    _validate_unique(spark, path, added_names, base_v)
-    added = [
-        {"n": n, "p": None, "stats": _footer_stats(os.path.join(_data_dir(path), n), stats_cols)}
-        for n in added_names
-    ]
-    for _ in range(max_retries):
-        try:
-            v = commit(path, added, [], base_v, op="APPEND")
-            return _maybe_auto_optimize(spark, path, v) if stats_from_prop else v
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added_names, checks)
-            _validate_unique(spark, path, added_names, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
 
 
 def snapshot_stats(path: str, version: int | None = None) -> dict[str, dict]:
     """{file name → stats dict} for live files (missing → {})."""
-    v_max = current_version(path) if version is None else version
-    live, _ = _fold_log(path, v_max)
-    return {n: d["stats"] for n, d in live.items()}
+    return {n: d["stats"] for n, d in Snapshot.at(path, version).live.items()}
 
 
 def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
@@ -2493,7 +2620,8 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
     lacks the needed stats (appended without txn_append_stats, or a
     NULL-only column chunk) — a metadata answer must never silently
     degrade to a guess."""
-    if snapshot_dvs(path, version):
+    snap = Snapshot.at(path, version)
+    if snap.dvs:
         raise ValueError(
             "snapshot_profile: table has live deletion vectors — recorded "
             "footer stats no longer describe the visible rows exactly "
@@ -2501,11 +2629,11 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
             "(txn_compact materializes DVs) before asking for a metadata "
             "answer; a metadata answer must never silently be a guess."
         )
-    stats = snapshot_stats(path, version)
     n_rows = 0
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
-    for name, st in stats.items():
+    for name, d in snap.live.items():
+        st = d["stats"]
         rows = st.get("__rows__")
         if rows is None:
             raise ValueError(
@@ -2542,20 +2670,16 @@ def read_snapshot_skipping(
     applied by the caller — zone maps prune files, not rows."""
     if version is not None and version < vacuum_horizon(path):
         raise ValueError(f"version {version} of {path} was vacuumed")
-    props = table_props(path, version)
-    col = _phys_col(props, col)  # zone specs speak logical; stats physical
-    stats = snapshot_stats(path, version)
+    snap = Snapshot.at(path, version)
+    col = _phys_col(snap.props, col)  # zone specs speak logical; stats physical
     keep = []
-    for name, st in sorted(stats.items()):
-        rng = st.get(col)
+    for name in snap.names:
+        rng = snap.live[name]["stats"].get(col)
         if rng is None or not (rng[1] < lo or rng[0] > hi):
-            keep.append(os.path.join(_data_dir(path), name))
+            keep.append(name)
     if not keep:
-        return read_snapshot(spark, path, version).limit(0)
-    return _apply_colmap(
-        _read_files_dv(spark, path, keep, snapshot_dvs(path, version), props),
-        props,
-    )
+        return _read_snapshot(spark, snap).limit(0)
+    return _read_live(spark, snap, keep)
 
 
 def read_snapshot_skipping_multi(
@@ -2570,11 +2694,11 @@ def read_snapshot_skipping_multi(
     exact row predicate."""
     if version is not None and version < vacuum_horizon(path):
         raise ValueError(f"version {version} of {path} was vacuumed")
-    props = table_props(path, version)
-    bounds = {_phys_col(props, c): b for c, b in bounds.items()}
-    stats = snapshot_stats(path, version)
+    snap = Snapshot.at(path, version)
+    bounds = {_phys_col(snap.props, c): b for c, b in bounds.items()}
     keep = []
-    for name, st in sorted(stats.items()):
+    for name in snap.names:
+        st = snap.live[name]["stats"]
         if st.get("__rows__") == 0:
             continue
         ok = True
@@ -2584,13 +2708,10 @@ def read_snapshot_skipping_multi(
                 ok = False
                 break
         if ok:
-            keep.append(os.path.join(_data_dir(path), name))
+            keep.append(name)
     if not keep:
-        return read_snapshot(spark, path, version).limit(0)
-    return _apply_colmap(
-        _read_files_dv(spark, path, keep, snapshot_dvs(path, version), props),
-        props,
-    )
+        return _read_snapshot(spark, snap).limit(0)
+    return _read_live(spark, snap, keep)
 
 
 def scan_candidates_df(
@@ -2728,6 +2849,24 @@ def read_snapshot_pruned(
     return _apply_colmap(out, props, keep=(partition_col,))
 
 
+def _readd_entry(n: str, d: dict, ptype: str | None):
+    """The add action that re-publishes live file ``n`` (fold state
+    ``d``) with its full per-file metadata — partition value and type,
+    zone-map stats, row-id base (row ids are file-resident: the file
+    keeps them) — or its bare name when it has none (CLONE / RESTORE)."""
+    if d["p"] is None and not d["stats"] and d.get("rid") is None:
+        return n
+    e: dict = {"n": n}
+    if d["p"] is not None:
+        e["p"] = d["p"]
+        e["t"] = ptype
+    if d["stats"]:
+        e["stats"] = d["stats"]
+    if d.get("rid") is not None:
+        e["rid"] = d["rid"]
+    return e
+
+
 def txn_clone(src: str, dst: str, version: int | None = None) -> int:
     """ZERO-COPY table clone at a snapshot (Delta's SHALLOW CLONE, made
     divergence-safe): every live data file of ``src`` at ``version``
@@ -2776,18 +2915,7 @@ def txn_clone(src: str, dst: str, version: int | None = None) -> int:
                 os.path.join(_data_dir(dst), d["dv"]["d"]),
             )
             dv_actions.append({"n": n, "d": d["dv"]["d"], "k": d["dv"]["k"]})
-        if d["p"] is None and not d["stats"] and d.get("rid") is None:
-            added.append(n)
-        else:
-            e: dict = {"n": n}
-            if d["p"] is not None:
-                e["p"] = d["p"]
-                e["t"] = ptype
-            if d["stats"]:
-                e["stats"] = d["stats"]
-            if d.get("rid") is not None:
-                e["rid"] = d["rid"]  # row ids are file-resident: carry them
-            added.append(e)
+        added.append(_readd_entry(n, d, ptype))
     # table properties (incl. CHECK constraints) ride into the clone's v0
     return commit(
         dst, added, [], -1, dv=dv_actions or None, props=src_props or None, op="CLONE"
@@ -2884,25 +3012,10 @@ def txn_append_bloom(
     Here the sidecar build is a column-pruned pass per staged file; in a
     production writer it would fold into the staging task itself (the
     rows stream through it either way)."""
-    if current_version(path) >= 0:
-        bloom_col = _phys_col(table_props(path), bloom_col)
-    added_names = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added_names)
-    _validate_unique(spark, path, added_names, base_v)
-    added = []
-    for n in added_names:
-        meta = _bloom_build_file(path, n, bloom_col, fpp)
-        added.append({"n": n, "p": None, "stats": {"__bloom__": {bloom_col: meta}}})
-    for _ in range(max_retries):
-        try:
-            return commit(path, added, [], base_v, op="APPEND")
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added_names, checks)
-            _validate_unique(spark, path, added_names, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
+    return _append(
+        spark, df, path, max_retries, bloom_col=bloom_col, fpp=fpp,
+        auto_optimize=False,
+    )
 
 
 def bloom_candidate_files(
@@ -2912,20 +3025,27 @@ def bloom_candidate_files(
     without a bloom for the column are kept conservatively; no false
     negatives by construction. ``col`` is logical; sidecars/log metadata
     key the physical name."""
+    return [
+        os.path.join(_data_dir(path), n)
+        for n in _bloom_candidates(Snapshot.at(path, version), col, values)
+    ]
+
+
+def _bloom_candidates(snap: Snapshot, col: str, values) -> list[str]:
+    """bloom_candidate_files over an already-folded snapshot (names)."""
     values = list(values)
-    col = _phys_col(table_props(path, version), col)
-    stats = snapshot_stats(path, version)
+    col = _phys_col(snap.props, col)
     keep = []
-    for name, st in sorted(stats.items()):
-        meta = (st.get("__bloom__") or {}).get(col)
+    for name in snap.names:
+        meta = (snap.live[name]["stats"].get("__bloom__") or {}).get(col)
         if meta is None:
             keep.append(name)  # no bloom for this file: cannot prune
         elif values and _bloom_might_contain(
-            _bloom_sidecar(path, name, col), meta, values
+            _bloom_sidecar(snap.path, name, col), meta, values
         ):
             keep.append(name)
         # bloom present and (no values, or all values refuted): pruned
-    return [os.path.join(_data_dir(path), n) for n in keep]
+    return keep
 
 
 def read_snapshot_bloom(
@@ -2934,16 +3054,11 @@ def read_snapshot_bloom(
     """Snapshot read pruned to the bloom candidates (the point-lookup
     sibling of read_snapshot_skipping). The caller still applies the
     exact row predicate — blooms prune files, not rows."""
-    keep = bloom_candidate_files(path, col, values, version)
+    snap = Snapshot.at(path, version)
+    keep = _bloom_candidates(snap, col, values)
     if not keep:
-        return read_snapshot(spark, path, version).limit(0)
-    return _apply_colmap(
-        _read_files_dv(
-            spark, path, keep, snapshot_dvs(path, version),
-            table_props(path, version),
-        ),
-        table_props(path, version),
-    )
+        return _read_snapshot(spark, snap).limit(0)
+    return _read_live(spark, snap, keep)
 
 
 def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
@@ -3064,11 +3179,7 @@ def _dv_decode(blob: bytes) -> list[int]:
 def snapshot_dvs(path: str, version: int | None = None) -> dict[str, dict]:
     """{file name → {"d": sidecar name, "k": deleted count}} for live
     files carrying a deletion vector at ``version`` (others omitted)."""
-    v_max = current_version(path) if version is None else version
-    if v_max < 0:
-        return {}
-    live, _ = _fold_log(path, v_max)
-    return {n: d["dv"] for n, d in live.items() if d.get("dv")}
+    return Snapshot.at(path, version).dvs
 
 
 #: Above this many total DV'd positions the read path decodes sidecars on
@@ -3226,9 +3337,9 @@ def _widen_read_schema(spark, files: list[str], widen: dict):
     return out
 
 
-def _scan_files(spark, path: str, files: list[str], props: dict | None):
+def _scan_files(spark, files: list[str], props: dict):
     """The snapshot's file scan: plain mergeSchema union normally; when
-    the version's props carry ``colwiden`` (ALTER COLUMN TYPE widening),
+    the version's props (``props``) carry ``colwiden`` (ALTER COLUMN TYPE widening),
     an explicit-schema read that upcasts narrow footers in the scan
     itself — zero data rewritten by the widen, exactly one plan.
 
@@ -3241,8 +3352,6 @@ def _scan_files(spark, path: str, files: list[str], props: dict | None):
     Appends stay zero-read-cost; the conflict price (one failed
     analysis + a distributed footer sweep) is paid per read and only on
     width-mixed tables — declare txn_widen_column to skip it."""
-    if props is None:
-        props = table_props(path) if current_version(path) >= 0 else {}
     widen = json.loads(props.get("colwiden", "{}") or "{}")
     if not widen:
         try:
@@ -3270,8 +3379,7 @@ def _scan_files(spark, path: str, files: list[str], props: dict | None):
 
 
 def _read_files_dv(
-    spark, path: str, files: list[str], dvmap: dict[str, dict],
-    props: dict | None = None,
+    spark, path: str, files: list[str], dvmap: dict[str, dict], props: dict
 ) -> DataFrame:
     """Read parquet ``files`` applying deletion vectors for the files in
     ``dvmap``. DV-less files take the plain scan; DV'd files anti-join
@@ -3279,16 +3387,16 @@ def _read_files_dv(
     for small DVs. The two branches union, so a table where 1% of files
     carry DVs pays the join on 1% of the scan. ``props`` (the resolving
     version's properties) route widened tables through the upcasting
-    explicit-schema scan; None means resolve at latest."""
+    explicit-schema scan."""
     dvmap = {os.path.basename(f): dvmap[os.path.basename(f)]
              for f in files if os.path.basename(f) in dvmap}
     if not dvmap:
-        return _scan_files(spark, path, files, props)
+        return _scan_files(spark, files, props)
     from pyspark.sql import functions as F
 
     plain = [f for f in files if os.path.basename(f) not in dvmap]
     dvd = [f for f in files if os.path.basename(f) in dvmap]
-    src = _scan_files(spark, path, dvd, props)
+    src = _scan_files(spark, dvd, props)
     cols = src.columns
     marked = src.select(
         F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__dv_rf"),
@@ -3306,7 +3414,7 @@ def _read_files_dv(
     ).select(*cols)
     if not plain:
         return filtered
-    rest = _scan_files(spark, path, plain, props)
+    rest = _scan_files(spark, plain, props)
     return rest.unionByName(filtered, allowMissingColumns=True)
 
 
@@ -3325,17 +3433,17 @@ def txn_widen_column(
     with column mapping (the property is keyed by the stable physical
     name, so later renames keep the widen), CDF and row tracking —
     pinned by the interplay tests."""
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"cannot widen columns of empty table {path}")
-        props = table_props(path, base_v)
-        cur_types = dict(read_snapshot(spark, path, base_v).dtypes)
+        props = snap.props
+        cur_types = dict(_read_snapshot(spark, snap).dtypes)
         if col not in cur_types:
             raise ValueError(f"widen: no column {col!r} in {sorted(cur_types)}")
         cur = cur_types[col]
         if new_type == cur:
-            return base_v  # idempotent no-op
+            return snap.version  # idempotent no-op
         if new_type not in WIDENING.get(cur, ()):
             raise ValueError(
                 f"widen: {cur} -> {new_type} is not an exact widening "
@@ -3346,15 +3454,12 @@ def txn_widen_column(
         phys = _phys_col(props, col)
         widen = json.loads(props.get("colwiden", "{}") or "{}")
         widen[phys] = new_type
-        try:
-            return commit(
-                path, [], [], base_v,
-                props={"colwiden": json.dumps(widen, sort_keys=True)},
-                op="WIDEN_COLUMN",
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries widening on {path}")
+        return _Commit(
+            [], props={"colwiden": json.dumps(widen, sort_keys=True)},
+            op="WIDEN_COLUMN",
+        )
+
+    return _transact(spark, path, attempt, max_retries, f"widening on {path}")
 
 
 def txn_delete_dv(
@@ -3380,22 +3485,19 @@ def txn_delete_dv(
 
     Already-deleted positions re-matching the predicate are harmless —
     the new sidecar is the set-union of old and new positions."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"no data to delete at {path}")
-        live, ptype, props = _fold_log3(path, base_v)
+        live, ptype, props = snap.live, snap.ptype, snap.props
         # zone/bloom specs speak logical names; log stats are physical
         zone_p = (_phys_col(props, zone[0]), zone[1], zone[2]) if zone else None
         bloom_p = (_phys_col(props, bloom[0]), bloom[1]) if bloom else None
         cand = _cow_candidates(live, path, zone_p, bloom_p)
         if not cand:
-            return base_v  # log proves no file can match
+            return snap.version  # log proves no file can match
         live = {n: live[n] for n in cand}
-        old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
         if ptype is not None:
             # partitioned table: the predicate may reference the partition
             # column, which lives in the LOG — scan per value group with
@@ -3416,7 +3518,7 @@ def txn_delete_dv(
             for value, gfiles in sorted(
                 by_value.items(), key=lambda kv: (kv[0] is None, kv[0])
             ):
-                g = _scan_files(spark, path, sorted(gfiles), props)
+                g = _scan_files(spark, sorted(gfiles), props)
                 groups.append(
                     g.select(
                         F.substring_index(
@@ -3435,7 +3537,7 @@ def txn_delete_dv(
             )
         else:
             files = sorted(os.path.join(_data_dir(path), n) for n in live)
-            src = _scan_files(spark, path, files, props)
+            src = _scan_files(spark, files, props)
             hits = (
                 _apply_colmap(
                     src.select(
@@ -3451,48 +3553,52 @@ def txn_delete_dv(
                 .filter(F.coalesce(source_pred, F.lit(False)))
                 .select("__f", "__p")
             )
-        gen = uuid.uuid4().hex[:8]
-        data_dir = _data_dir(path)
+        dv = _write_dvs(hits, path, live)
+        if not dv:
+            return snap.version
+        # a lost race reaps this never-committed generation (vacuum only
+        # reaps log-proven generations, so it would leak until the data
+        # file itself dies)
+        return _Commit([], dv=dv, op="DELETE_DV")
 
-        def _write_dv(key, pdf):
-            from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
+    return _transact(
+        spark, path, attempt, max_retries, f"DV-deleting from {path}"
+    )
 
-            n = key[0]
-            positions = set(int(p) for p in pdf["__p"])
-            old = old_dvs.get(n)
-            if old:
-                with open(os.path.join(data_dir, old), "rb") as fh:
-                    positions.update(dec(fh.read()))
-            name = f"{n}.dv.{gen}"
-            tmp = os.path.join(data_dir, f".tmp-{name}")
-            with open(tmp, "wb") as fh:
-                fh.write(enc(positions))
-            os.replace(tmp, os.path.join(data_dir, name))
-            return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
 
-        entries = (
-            hits.groupBy("__f")
-            .applyInPandas(_write_dv, "n string, d string, k long")
-            .collect()  # one row per TOUCHED FILE — metadata, not data rows
-        )
-        if not entries:
-            return base_v
-        dv = [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
-        try:
-            return commit(path, [], [], base_v, dv=dv, op="DELETE_DV")
-        except TxnConflict:
-            # lost the race: this generation was never committed, so it is
-            # INVISIBLE to vacuum (which only reaps log-proven generations)
-            # and would leak until the data file itself dies — the losing
-            # writer knows the names, so it reaps its own sidecars before
-            # recomputing against the new snapshot.
-            for e in dv:
-                try:
-                    os.remove(os.path.join(data_dir, e["d"]))
-                except FileNotFoundError:
-                    pass
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries DV-deleting from {path}")
+def _write_dvs(hits: DataFrame, path: str, live: dict) -> list[dict]:
+    """Fold ``hits`` — (``__f`` file name, ``__p`` row position) pairs of
+    ``live`` files — into one fresh DV sidecar generation per touched
+    file, written on EXECUTORS (one task per file, each unioning in the
+    file's current vector), and return the commit's dv actions."""
+    import pandas as pd
+
+    old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
+    gen = uuid.uuid4().hex[:8]
+    data_dir = _data_dir(path)
+
+    def _write_dv(key, pdf):
+        from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
+
+        n = key[0]
+        positions = set(int(p) for p in pdf["__p"])
+        old = old_dvs.get(n)
+        if old:
+            with open(os.path.join(data_dir, old), "rb") as fh:
+                positions.update(dec(fh.read()))
+        name = f"{n}.dv.{gen}"
+        tmp = os.path.join(data_dir, f".tmp-{name}")
+        with open(tmp, "wb") as fh:
+            fh.write(enc(positions))
+        os.replace(tmp, os.path.join(data_dir, name))
+        return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
+
+    entries = (
+        hits.groupBy("__f")
+        .applyInPandas(_write_dv, "n string, d string, k long")
+        .collect()  # one row per TOUCHED FILE — metadata, not data rows
+    )
+    return [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
 
 
 # --------------------------------------- pruned copy-on-write DML (CoW)
@@ -3536,7 +3642,7 @@ def _cow_candidates(
 
 
 def _stage_with_meta(
-    spark, df: DataFrame, path: str, stats_cols=(), bloom_col: str | None = None,
+    df: DataFrame, snap: Snapshot, stats_cols=(), bloom_col: str | None = None,
     fpp: float = 0.01,
 ) -> list:
     """Stage ``df`` and build the commit entries with the same per-file
@@ -3545,31 +3651,14 @@ def _stage_with_meta(
     across CoW rewrites. Metadata columns are translated to PHYSICAL
     names (the staged files carry them; log stats stay physical-keyed
     across renames). When no stats columns are passed, the table's
-    declared ``write.statsColumns`` apply — pruned rewrites keep the
-    table's data-skipping policy without every caller re-plumbing it."""
-    props = table_props(path) if current_version(path) >= 0 else {}
-    if not stats_cols and props.get("write.statsColumns"):
-        stats_cols = [
-            c.strip()
-            for c in props["write.statsColumns"].split(",")
-            if c.strip()
-        ]
-    stats_cols = [_phys_col(props, c) for c in stats_cols]
-    if bloom_col is not None:
-        bloom_col = _phys_col(props, bloom_col)
-    names = _stage(df, path)
-    added: list = []
-    for n in names:
-        st = (
-            _footer_stats(os.path.join(_data_dir(path), n), stats_cols)
-            if stats_cols
-            else {}
-        )
-        if bloom_col is not None:
-            st = dict(st)
-            st["__bloom__"] = {bloom_col: _bloom_build_file(path, n, bloom_col, fpp)}
-        added.append({"n": n, "p": None, "stats": st} if st else n)
-    return added
+    declared ``write.statsColumns`` apply — every rewrite (upsert /
+    delete / compact / merge) keeps the table's data-skipping policy
+    without every caller re-plumbing it; a file with no metadata is
+    entered by bare name."""
+    if not stats_cols and snap.props.get("write.statsColumns"):
+        stats_cols = _split_cols(snap.props["write.statsColumns"])
+    entries = _describe(snap, _stage(df, snap), stats_cols, bloom_col, fpp)
+    return [e if e["stats"] else e["n"] for e in entries]
 
 
 def txn_delete_cow(
@@ -3597,38 +3686,30 @@ def txn_delete_cow(
     txn_delete."""
     from pyspark.sql import functions as F
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"no data to delete at {path}")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
+        if snap.ptype is not None:
             raise ValueError(
                 "txn_delete_cow: partitioned tables are not supported — "
                 "rewritten files would lose their partition values; use "
                 "the partitioned rewrite forms instead"
             )
+        props = snap.props
         zone_p = (_phys_col(props, zone[0]), zone[1], zone[2]) if zone else None
         bloom_p = (_phys_col(props, bloom[0]), bloom[1]) if bloom else None
-        cand = _cow_candidates(live, path, zone_p, bloom_p)
+        cand = _cow_candidates(snap.live, path, zone_p, bloom_p)
         if not cand:
-            return base_v
-        dvmap = {n: live[n]["dv"] for n in cand if live[n].get("dv")}
-        slice_df = _apply_colmap(
-            _read_files_dv(
-                spark, path,
-                [os.path.join(_data_dir(path), n) for n in cand], dvmap,
-                props,
-            ),
-            props,
+            return snap.version
+        kept = _read_live(spark, snap, cand).filter(
+            ~F.coalesce(source_pred, F.lit(False))
         )
-        kept = slice_df.filter(~F.coalesce(source_pred, F.lit(False)))
-        added = _stage_with_meta(spark, kept, path, stats_cols, bloom_col)
-        try:
-            return commit(path, added, cand, base_v, op="DELETE")
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries CoW-deleting from {path}")
+        added = _stage_with_meta(kept, snap, stats_cols, bloom_col)
+        return _Commit(added, cand, op="DELETE")
+
+    return _transact(
+        spark, path, attempt, max_retries, f"CoW-deleting from {path}"
+    )
 
 
 def txn_merge_cow(
@@ -3654,67 +3735,76 @@ def txn_merge_cow(
     workload this form exists for has a small source by definition; a
     source too large to collect keys from belongs with txn_upsert's
     whole-snapshot rewrite anyway."""
-    import bisect
-
     from dbimport_spark.operators.merge import upsert
 
     keys = list(keys)
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
     if pk is None:
         raise ValueError("txn_merge_cow: pass prune_key for composite merge keys")
-    key_vals = sorted(
-        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
-    )
+    key_vals = _source_keys(source, pk)
 
-    def _range_hits_any(rng) -> bool:
-        lo, hi = rng
-        i = bisect.bisect_left(key_vals, lo)
-        return i < len(key_vals) and key_vals[i] <= hi
-
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"merge target {path} has no committed version")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
+        if snap.ptype is not None:
             raise ValueError(
                 "txn_merge_cow: partitioned tables are not supported — "
                 "use txn_upsert_partitioned (partition-pruned rewrite)"
             )
-        pk_phys = _phys_col(props, pk)  # log stats are physical-keyed
-        cand = []
-        for n in sorted(live):
-            if live[n]["stats"].get("__rows__") == 0:
-                continue  # log-proven empty part: no row to update
-            rng = live[n]["stats"].get(pk_phys)
-            if rng is None or _range_hits_any(rng):
-                cand.append(n)
-        if use_bloom and cand:
-            cand = _cow_candidates(
-                {n: live[n] for n in cand}, path, None, (pk_phys, key_vals)
-            )
-        if cand:
-            dvmap = {n: live[n]["dv"] for n in cand if live[n].get("dv")}
-            target_slice = _apply_colmap(
-                _read_files_dv(
-                    spark, path,
-                    [os.path.join(_data_dir(path), n) for n in cand], dvmap,
-                    props,
-                ),
-                props,
-            )
-        else:
-            target_slice = read_snapshot(spark, path, base_v).limit(0)
-        merged = upsert(target_slice, source, keys)
-        added = _stage_with_meta(spark, merged, path, stats_cols, bloom_col)
-        _validate_staged(
-            spark, path, [e["n"] if isinstance(e, dict) else e for e in added]
-        )
-        try:
-            return commit(path, added, cand, base_v, op="MERGE")
-        except TxnConflict:
+        cand = _key_candidates(snap, pk, key_vals, use_bloom)
+        merged = upsert(_read_slice(spark, snap, cand), source, keys)
+        added = _stage_with_meta(merged, snap, stats_cols, bloom_col)
+        _validate_staged(spark, snap, added)
+        return _Commit(added, cand, op="MERGE")
+
+    return _transact(
+        spark, path, attempt, max_retries, f"CoW-merging into {path}"
+    )
+
+
+def _source_keys(source: DataFrame, pk: str) -> list:
+    """The source's distinct non-NULL ``pk`` values, sorted — the key set
+    the pruned merges test zone maps and blooms against."""
+    return sorted(
+        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
+    )
+
+
+def _key_candidates(snap: Snapshot, pk: str, key_vals, use_bloom: bool) -> list[str]:
+    """Live files that MAY hold one of the sorted ``key_vals`` in column
+    ``pk``: files whose zone map for ``pk`` covers a source key (files
+    without one are kept conservatively), narrowed by the bloom sidecars
+    when ``use_bloom``. Log-proven empty files never qualify — they hold
+    no row to match."""
+    import bisect
+
+    pk_phys = _phys_col(snap.props, pk)  # log stats are physical-keyed
+
+    def _range_hits_any(rng) -> bool:
+        i = bisect.bisect_left(key_vals, rng[0])
+        return i < len(key_vals) and key_vals[i] <= rng[1]
+
+    cand = []
+    for n in snap.names:
+        st = snap.live[n]["stats"]
+        if st.get("__rows__") == 0:
             continue
-    raise TxnConflict(f"gave up after {max_retries} retries CoW-merging into {path}")
+        rng = st.get(pk_phys)
+        if rng is None or _range_hits_any(rng):
+            cand.append(n)
+    if use_bloom and cand:
+        cand = _cow_candidates(
+            {n: snap.live[n] for n in cand}, snap.path, None, (pk_phys, key_vals)
+        )
+    return cand
+
+
+def _read_slice(spark, snap: Snapshot, names) -> DataFrame:
+    """The pruned merges' target slice: the ``names`` files' visible rows,
+    or an empty frame of the table's schema when every file was pruned."""
+    if names:
+        return _read_live(spark, snap, names)
+    return _read_snapshot(spark, snap).limit(0)
 
 
 # -------------------------------------- table properties + CHECK constraints
@@ -3737,11 +3827,7 @@ class CheckViolation(ValueError):
 
 def table_props(path: str, version: int | None = None) -> dict:
     """Latest-wins table-property dict at ``version`` (default latest)."""
-    v_max = current_version(path) if version is None else version
-    if v_max < 0:
-        return {}
-    _, _, props = _fold_log3(path, v_max)
-    return props
+    return Snapshot.at(path, version).props
 
 
 def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 5) -> int:
@@ -3759,41 +3845,28 @@ def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 
     until rewritten (pruning is conservative there). Opt out with table
     property ``unique.autoStats = false`` (stats collection itself is
     the cost being declined: one footer min/max per staged file)."""
-    for _ in range(max_retries):
-        try:
-            props = {key: value}
-            if (
-                key.startswith("unique.")
-                and key != "unique.autoStats"
-                and value is not None
-            ):
-                cur = table_props(path) if current_version(path) >= 0 else {}
-                if cur.get("unique.autoStats", "").lower() != "false":
-                    declared = [
-                        c.strip()
-                        for c in (cur.get("write.statsColumns") or "").split(",")
-                        if c.strip()
-                    ]
-                    if value not in declared:
-                        props["write.statsColumns"] = ",".join(
-                            declared + [value]
-                        )
-            return commit(
-                path, [], [], current_version(path), props=props,
-                op="SET_PROPERTY",
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries setting {key!r} on {path}")
+
+    def attempt(snap: Snapshot):
+        props = {key: value}
+        if (
+            key.startswith("unique.")
+            and key != "unique.autoStats"
+            and value is not None
+            and snap.props.get("unique.autoStats", "").lower() != "false"
+        ):
+            declared = _split_cols(snap.props.get("write.statsColumns") or "")
+            if value not in declared:
+                props["write.statsColumns"] = ",".join(declared + [value])
+        return _Commit([], props=props, op="SET_PROPERTY")
+
+    return _transact(
+        None, path, attempt, max_retries, f"setting {key!r} on {path}"
+    )
 
 
 def table_checks(path: str, version: int | None = None) -> dict[str, str]:
     """{constraint name → SQL boolean expression} live at ``version``."""
-    return {
-        k[len("check."):]: v
-        for k, v in table_props(path, version).items()
-        if k.startswith("check.")
-    }
+    return Snapshot.at(path, version).checks
 
 
 # -------------------- column mapping: rename / drop WITHOUT rewriting data
@@ -3882,13 +3955,12 @@ def txn_rename_column(
     text would silently dangle — rename the constraint first)."""
     import re as _re
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"cannot rename columns of empty table {path}")
-        props = table_props(path, base_v)
+        props = snap.props
         mp, dropped = _colmap(props)
-        logical = read_snapshot(spark, path, base_v).columns
+        logical = _read_snapshot(spark, snap).columns
         if old not in logical:
             raise ValueError(f"rename: no column {old!r} in {sorted(logical)}")
         physical = {mp.get(c, c) for c in logical} | set(dropped)
@@ -3899,7 +3971,7 @@ def txn_rename_column(
             )
         if props.get("partition.column") == old:
             raise ValueError("rename: partition column renames are not supported")
-        for cname, expr in table_checks(path, base_v).items():
+        for cname, expr in snap.checks.items():
             if _re.search(rf"\b{_re.escape(old)}\b", expr):
                 raise ValueError(
                     f"rename: CHECK constraint {cname!r} references {old!r}"
@@ -3914,13 +3986,9 @@ def txn_rename_column(
         for k, v in props.items():
             if k.startswith("unique.") and v == old:
                 new_props[k] = new
-        try:
-            return commit(
-                path, [], [], base_v, props=new_props, op="RENAME_COLUMN"
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries renaming on {path}")
+        return _Commit([], props=new_props, op="RENAME_COLUMN")
+
+    return _transact(spark, path, attempt, max_retries, f"renaming on {path}")
 
 
 def txn_drop_column(spark, path: str, col: str, max_retries: int = 5) -> int:
@@ -3931,20 +3999,19 @@ def txn_drop_column(spark, path: str, col: str, max_retries: int = 5) -> int:
     last remaining column."""
     import re as _re
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"cannot drop columns of empty table {path}")
-        props = table_props(path, base_v)
+        props = snap.props
         mp, dropped = _colmap(props)
-        logical = read_snapshot(spark, path, base_v).columns
+        logical = _read_snapshot(spark, snap).columns
         if col not in logical:
             raise ValueError(f"drop: no column {col!r} in {sorted(logical)}")
         if len(logical) <= 1:
             raise ValueError("drop: refusing to drop the last column")
         if props.get("partition.column") == col:
             raise ValueError("drop: partition column drops are not supported")
-        for cname, expr in table_checks(path, base_v).items():
+        for cname, expr in snap.checks.items():
             if _re.search(rf"\b{_re.escape(col)}\b", expr):
                 raise ValueError(
                     f"drop: CHECK constraint {cname!r} references {col!r} — "
@@ -3962,13 +4029,9 @@ def txn_drop_column(spark, path: str, col: str, max_retries: int = 5) -> int:
             {"map": mp2, "dropped": sorted(set(dropped) | {phys})},
             sort_keys=True,
         )
-        try:
-            return commit(
-                path, [], [], base_v, props={"colmap": body}, op="DROP_COLUMN"
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries dropping on {path}")
+        return _Commit([], props={"colmap": body}, op="DROP_COLUMN")
+
+    return _transact(spark, path, attempt, max_retries, f"dropping on {path}")
 
 
 def _violation_pred(checks: dict[str, str]):
@@ -3991,8 +4054,8 @@ def txn_add_check(
     default) validate the EXISTING snapshot first — adding a constraint
     the current rows already violate would make the table unwritable by
     surprise. Validation reads only the constraint's columns."""
-    if validate and current_version(path) >= 0 and snapshot_files(path):
-        bad = read_snapshot(spark, path).filter(_violation_pred({name: expr})).count()
+    if validate and (snap := Snapshot.at(path)).live:
+        bad = _read_snapshot(spark, snap).filter(_violation_pred({name: expr})).count()
         if bad:
             raise CheckViolation(
                 f"cannot add check {name!r} ({expr}): {bad} existing row(s) violate it"
@@ -4001,10 +4064,10 @@ def txn_add_check(
 
 
 def _validate_staged(
-    spark, path: str, staged: list, partition_col: str | None = None
+    spark, snap: Snapshot, staged: list, partition_col: str | None = None
 ) -> dict[str, str]:
-    """Validate freshly-staged files against the table's live checks;
-    raises CheckViolation (and removes the staged files — they were never
+    """Validate freshly-staged files against ``snap``'s checks; raises
+    CheckViolation (and removes the staged files — they were never
     visible) when any row violates. Returns the check set validated
     against, so retry loops can detect a concurrently-changed set.
 
@@ -4012,13 +4075,13 @@ def _validate_staged(
     dicts; for the latter the log-carried partition column is re-attached
     (typed literal per file group) before evaluation, so constraints may
     reference it."""
-    checks = table_checks(path)
+    checks = snap.checks
     if not checks or not staged:
         return checks
-    names = [e["n"] if isinstance(e, dict) else e for e in staged]
+    path = snap.path
     # the first partitioned commit sets the property IN this commit — the
     # writer passes the column name explicitly for that window
-    pcol = partition_col or table_props(path).get("partition.column")
+    pcol = partition_col or snap.props.get("partition.column")
     plain, by_value = [], {}
     for e in staged:
         if isinstance(e, dict) and e.get("p") is not None and pcol:
@@ -4042,14 +4105,10 @@ def _validate_staged(
 
     df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
     # staged files carry physical names; CHECK expressions speak logical
-    df = _apply_colmap(df, table_props(path), keep=(pcol,) if pcol else ())
+    df = _apply_colmap(df, snap.props, keep=(pcol,) if pcol else ())
     bad = df.filter(_violation_pred(checks)).count()
     if bad:
-        for n in names:
-            try:
-                os.remove(os.path.join(_data_dir(path), n))
-            except FileNotFoundError:
-                pass
+        _reap(path, staged)
         raise CheckViolation(
             f"append to {path} rejected: {bad} row(s) violate "
             f"check constraint(s) {sorted(checks)}"
@@ -4070,11 +4129,9 @@ def txn_add_unique(
     enabling uniqueness over a table that already violates it would make
     the constraint a lie (appends would enforce what reads disprove).
     The validation is one column-pruned aggregation."""
-    if validate and current_version(path) >= 0 and snapshot_files(path):
-        from pyspark.sql import functions as F
-
+    if validate and (snap := Snapshot.at(path)).live:
         dup = (
-            read_snapshot(spark, path)
+            _read_snapshot(spark, snap)
             .groupBy(col)
             .count()
             .filter("count > 1")
@@ -4095,10 +4152,10 @@ def txn_add_unique(
 _UNIQUE_BLOOM_KEYS_MAX = 10_000
 
 
-def _validate_unique(spark, path: str, staged, base_v: int) -> None:
+def _validate_unique(spark, snap: Snapshot, staged) -> None:
     """Enforce ``unique.<name> = <col>`` table properties on an APPEND:
     the staged batch may contain no internal duplicates on the column
-    and no value already live at ``base_v``. Append-only by design —
+    and no value already live in ``snap``. Append-only by design —
     rewrite commits (upsert/merge/compact) replace the files they read,
     so comparing their staged output against the still-live inputs
     would flag every kept row; their key semantics are the merge's own.
@@ -4113,12 +4170,7 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
     Declare write.statsColumns / bloom on the key to make a 100 TB
     existence check O(band). Violations remove the staged files (never
     visible), like CheckViolation."""
-    props = table_props(path, base_v) if base_v >= 0 else {}
-    uniqs = {
-        k[len("unique."):]: v
-        for k, v in props.items()
-        if k.startswith("unique.") and k != "unique.autoStats"
-    }
+    path, props, live, uniqs = snap.path, snap.props, snap.live, snap.uniques
     if not uniqs or not staged:
         return
     from pyspark.sql import functions as F
@@ -4132,14 +4184,9 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
     )
 
     def _reject(msg):
-        for n in names:
-            try:
-                os.remove(os.path.join(_data_dir(path), n))
-            except FileNotFoundError:
-                pass
+        _reap(path, staged)
         raise UniqueViolation(msg)
 
-    live, _, _ = _fold_log3(path, base_v) if base_v >= 0 else ({}, None, {})
     for cname, col in sorted(uniqs.items()):
         # ONE keyed aggregation serves both arms: in-batch duplicate
         # detection (count > 1) and the distinct key set for pruning /
@@ -4186,15 +4233,7 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
             cand = _cow_candidates(live, path, zone, bloom)
             if not cand:
                 continue  # log proves no live file can hold these keys
-            ldf = _apply_colmap(
-                _read_files_dv(
-                    spark, path,
-                    [os.path.join(_data_dir(path), n) for n in cand],
-                    {n: live[n]["dv"] for n in cand if live[n].get("dv")},
-                    props,
-                ),
-                props,
-            )
+            ldf = _read_live(spark, snap, cand)
             clash = (
                 ldf.select(col).join(probe, col, "left_semi").limit(1).count()
             )
@@ -4207,16 +4246,19 @@ def _validate_unique(spark, path: str, staged, base_v: int) -> None:
             kdf.unpersist()
 
 
-def _revalidate_if_changed(spark, path, staged_names, prev_checks):
+def _revalidate_if_changed(
+    spark, snap: Snapshot, staged, prev_checks, partition_col: str | None = None
+):
     """After a lost commit race: a rival commit may have ADDED a check
-    between our validation and our commit — revalidate iff the live
+    between our validation and our commit — revalidate iff ``snap``'s
     check set differs from the one already validated. This closes the
-    check-TOCTOU ONLY because every append pins expect_version BEFORE
-    validating (any interleaved commit, including txn_add_check, then
-    conflicts and lands here); with a freshly-read expect_version the
-    interleaved constraint would slide by without a conflict."""
-    if table_checks(path) != prev_checks:
-        return _validate_staged(spark, path, staged_names)
+    check-TOCTOU ONLY because every append pins its snapshot (the
+    commit's expect_version) BEFORE validating (any interleaved commit,
+    including txn_add_check, then conflicts and lands here); with a
+    freshly-read expect_version the interleaved constraint would slide
+    by without a conflict."""
+    if snap.checks != prev_checks:
+        return _validate_staged(spark, snap, staged, partition_col)
     return prev_checks
 
 
@@ -4242,29 +4284,10 @@ def txn_append_routed(
     Redelivery semantics: AT-LEAST-ONCE on both sides — a replayed
     batch appends again. Streaming sinks that need exactly-once use
     txn_append_routed_idempotent."""
-    from pyspark.sql import functions as F
-
-    checks = table_checks(path)
-    if not checks:
-        return txn_append(spark, df, path, max_retries), -1
-    per_check = [
-        F.when(~F.coalesce(F.expr(e).cast("boolean"), F.lit(True)), F.lit(n))
-        for n, e in sorted(checks.items())
-    ]
-    tagged = df.withColumn(
-        "_violated",
-        F.filter(F.array(*per_check), lambda x: x.isNotNull()),
-    ).persist()
-    try:
-        clean = tagged.filter(F.size("_violated") == 0).drop("_violated")
-        bad = tagged.filter(F.size("_violated") > 0)
-        v_table = txn_append(spark, clean, path, max_retries)
-        v_quar = -1
-        if bad.limit(1).count():
-            v_quar = txn_append(spark, bad, quarantine, max_retries)
-        return v_table, v_quar
-    finally:
-        tagged.unpersist()
+    return _routed(
+        df, path, quarantine,
+        lambda d, p: txn_append(spark, d, p, max_retries),
+    )
 
 
 def txn_append_routed_idempotent(
@@ -4288,14 +4311,24 @@ def txn_append_routed_idempotent(
     drop that batch's quarantine rows.) Returns
     ``(table_version, quarantine_version)``; quarantine version is -1
     when this batch has no violating rows."""
+    return _routed(
+        df, path, quarantine,
+        lambda d, p: txn_append_idempotent(
+            spark, d, p, app_id, batch_id, max_retries
+        ),
+    )
+
+
+def _routed(df: DataFrame, path: str, quarantine: str, append) -> tuple[int, int]:
+    """Split ``df`` by the table's live checks in one persisted pass and
+    ``append(frame, table_path)`` the clean rows to ``path`` and the
+    violating rows (tagged with ``_violated``) to ``quarantine``;
+    returns both versions (-1 for a quarantine left untouched)."""
     from pyspark.sql import functions as F
 
     checks = table_checks(path)
     if not checks:
-        return (
-            txn_append_idempotent(spark, df, path, app_id, batch_id, max_retries),
-            -1,
-        )
+        return append(df, path), -1
     per_check = [
         F.when(~F.coalesce(F.expr(e).cast("boolean"), F.lit(True)), F.lit(n))
         for n, e in sorted(checks.items())
@@ -4307,14 +4340,8 @@ def txn_append_routed_idempotent(
     try:
         clean = tagged.filter(F.size("_violated") == 0).drop("_violated")
         bad = tagged.filter(F.size("_violated") > 0)
-        v_table = txn_append_idempotent(
-            spark, clean, path, app_id, batch_id, max_retries
-        )
-        v_quar = -1
-        if bad.limit(1).count():
-            v_quar = txn_append_idempotent(
-                spark, bad, quarantine, app_id, batch_id, max_retries
-            )
+        v_table = append(clean, path)
+        v_quar = append(bad, quarantine) if bad.limit(1).count() else -1
         return v_table, v_quar
     finally:
         tagged.unpersist()
@@ -4387,27 +4414,16 @@ def txn_restore(path: str, version: int, max_retries: int = 5) -> int:
         raise ValueError(
             f"cannot restore version {version}: below the vacuum horizon {h}"
         )
-    for _ in range(max_retries):
-        cur = current_version(path)
+
+    def attempt(snap: Snapshot):
+        cur, now = snap.version, snap.live
         if version > cur:
             raise ValueError(f"cannot restore to future version {version} (at {cur})")
         target, ptype_t, _ = _fold_log3(path, version)
-        now, _, _ = _fold_log3(path, cur)
-        added = []
-        for n in sorted(set(target) - set(now)):
-            d = target[n]
-            if d["p"] is None and not d["stats"] and d.get("rid") is None:
-                added.append(n)
-            else:
-                e: dict = {"n": n}
-                if d["p"] is not None:
-                    e["p"] = d["p"]
-                    e["t"] = ptype_t
-                if d["stats"]:
-                    e["stats"] = d["stats"]
-                if d.get("rid") is not None:
-                    e["rid"] = d["rid"]  # restored files keep their row ids
-                added.append(e)
+        added = [
+            _readd_entry(n, target[n], ptype_t)
+            for n in sorted(set(target) - set(now))
+        ]
         removed = sorted(set(now) - set(target))
         dv_actions = []
         for n in sorted(target):
@@ -4425,13 +4441,13 @@ def txn_restore(path: str, version: int, max_retries: int = 5) -> int:
                 dv_actions.append({"n": n, "d": want["d"], "k": want["k"]})
         if not added and not removed and not dv_actions:
             return cur  # already at that state
-        try:
-            return commit(
-                path, added, removed, cur, dv=dv_actions or None, op="RESTORE"
-            )
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries restoring {path}")
+        # the re-added files and DV generations are the table's own: a
+        # lost race must not reap them
+        return _Commit(
+            added, removed, dv=dv_actions or None, op="RESTORE", reap=None
+        )
+
+    return _transact(None, path, attempt, max_retries, f"restoring {path}")
 
 
 def txn_zorder(
@@ -4465,21 +4481,12 @@ def txn_zorder(
     stats_cols = list(stats_cols) or cols
     nb = min(16, 62 // len(cols))  # normalized bits per dimension
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"no data to optimize at {path}")
-        live, ptype = _fold_log(path, base_v)
-        if ptype is not None:
+        if snap.ptype is not None:
             raise ValueError("txn_zorder: partitioned tables are not supported")
-        files = sorted(os.path.join(_data_dir(path), n) for n in live)
-        props_v = table_props(path, base_v)
-        df = _apply_colmap(
-            _read_files_dv(
-                spark, path, files, snapshot_dvs(path, base_v), props_v
-            ),
-            props_v,
-        )
+        df = _read_live(spark, snap)
         bounds = df.agg(
             *[f for c in cols for f in (F.min(c), F.max(c))]
         ).first()
@@ -4506,15 +4513,13 @@ def txn_zorder(
             .sortWithinPartitions("__z")
             .drop(*tmp_cols, "__z")
         )
-        added = _stage_with_meta(spark, clustered, path, stats_cols)
-        try:
-            return commit(path, added, sorted(live), base_v, op="OPTIMIZE_ZORDER")
-        except TxnConflict:
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries z-ordering {path}")
+        added = _stage_with_meta(clustered, snap, stats_cols)
+        return _Commit(added, snap.names, op="OPTIMIZE_ZORDER")
+
+    return _transact(spark, path, attempt, max_retries, f"z-ordering {path}")
 
 
-def _maybe_auto_optimize(spark, path: str, new_version: int) -> int:
+def _maybe_auto_optimize(spark, snap: Snapshot, new_version: int) -> int:
     """Auto-compaction (Delta autoOptimize as a table property): when
     ``autoOptimize.every = N`` is set, every Nth version triggers a
     compaction right after the triggering append commits. Hooked into the
@@ -4522,17 +4527,17 @@ def _maybe_auto_optimize(spark, path: str, new_version: int) -> int:
     txn_append_idempotent — where streaming and incremental loads pile up
     small files); the stats/bloom appends are deliberately exempt, since
     a blanket compaction would discard their curated per-file metadata.
-    Returns the latest version (the compaction's, when one ran)."""
-    every = table_props(path).get("autoOptimize.every")
+    Returns the latest version (the compaction's, when one ran).
+    ``snap`` is the snapshot the triggering append committed on top of
+    (an append sets no autoOptimize property of its own)."""
+    every = snap.props.get("autoOptimize.every")
     if not every:
         return new_version
     n = int(every)
     if n <= 0 or new_version <= 0 or new_version % n != 0:
         return new_version
-    _, ptype, _ = _fold_log3(path, current_version(path))
-    if ptype is None:
-        return txn_compact(spark, path)
-    return txn_compact_partitioned(spark, path)
+    # dispatches on the table's partitioning (txn_compact when none)
+    return txn_compact_partitioned(spark, snap.path)
 
 
 # --------------------------------------------- idempotent streaming sink
@@ -4542,8 +4547,7 @@ def last_committed_batch(path: str, app_id: str) -> int:
     """Highest batch id committed for ``app_id`` (-1 if none) — the
     SetTransaction lookup. Rides table properties, so it is latest-wins,
     checkpoint-consolidated and time-travelable for free."""
-    v = table_props(path).get(f"txn.{app_id}")
-    return int(v) if v is not None else -1
+    return int(table_props(path).get(f"txn.{app_id}", -1))
 
 
 def txn_append_partitioned_idempotent(
@@ -4556,37 +4560,10 @@ def txn_append_partitioned_idempotent(
     records the ``(app_id, batch_id)`` watermark, and a redelivered
     batch is SKIPPED with its staged files removed. Completes the
     exactly-once matrix for foreachBatch sinks on partitioned tables."""
-    if batch_id <= last_committed_batch(path, app_id):
-        return current_version(path)
-    added = _stage_partitioned(df, path, partition_col)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added, partition_col)
-    _validate_unique(spark, path, added, base_v)
-    names = [e["n"] for e in added]
-    for _ in range(max_retries):
-        if batch_id <= last_committed_batch(path, app_id):
-            for n in names:
-                try:
-                    os.remove(os.path.join(_data_dir(path), n))
-                except FileNotFoundError:
-                    pass
-            return current_version(path)
-        try:
-            v = commit(
-                path, added, [], base_v,
-                props={
-                    f"txn.{app_id}": str(batch_id),
-                    "partition.column": partition_col,
-                },
-                op="STREAMING_APPEND",
-            )
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
+    return _append(
+        spark, df, path, max_retries, partition_col=partition_col,
+        app=(app_id, batch_id),
+    )
 
 
 def txn_append_idempotent(
@@ -4603,40 +4580,11 @@ def txn_append_idempotent(
     duplicating rows. Batch ids must be monotonically increasing per app,
     which Spark's epoch ids are.
 
-    The skip check runs before staging (cheap) and again inside the
-    commit-retry loop (a racing writer of the SAME app may have landed
-    this batch while we staged — its commit conflicts ours, the re-check
-    sees its recorded batch id, and our staged files are dropped)."""
-    if batch_id <= last_committed_batch(path, app_id):
-        return current_version(path)
-    added = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added)
-    _validate_unique(spark, path, added, base_v)
-    for _ in range(max_retries):
-        if batch_id <= last_committed_batch(path, app_id):
-            for n in added:
-                try:
-                    os.remove(os.path.join(_data_dir(path), n))
-                except FileNotFoundError:
-                    pass
-            return current_version(path)
-        try:
-            v = commit(
-                path,
-                added,
-                [],
-                base_v,
-                props={f"txn.{app_id}": str(batch_id)},
-                op="STREAMING_APPEND",
-            )
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added, checks)
-            _validate_unique(spark, path, added, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
+    The skip check runs before staging (cheap) and again in every retry
+    (a racing writer of the SAME app may have landed this batch while we
+    staged — its commit conflicts ours, the re-check sees its recorded
+    batch id, and our staged files are dropped)."""
+    return _append(spark, df, path, max_retries, app=(app_id, batch_id))
 
 
 def export_symlink_manifest(path: str, version: int | None = None) -> str:
@@ -4649,15 +4597,15 @@ def export_symlink_manifest(path: str, version: int | None = None) -> str:
     deletion vectors are refused loudly: a manifest reader would see the
     deleted rows (compact first). Rewritten atomically (temp + rename);
     returns the manifest file path."""
-    v = current_version(path) if version is None else version
-    _refuse_partitioned(path, "export_symlink_manifest")
-    if snapshot_dvs(path, v):
+    snap = Snapshot.at(path, version)
+    _refuse_partitioned(snap, "export_symlink_manifest")
+    if snap.dvs:
         raise ValueError(
             "export_symlink_manifest: table has live deletion vectors — a "
             "manifest-based reader would resurrect deleted rows; run "
             "txn_compact to materialize them first"
         )
-    mp, dropped = _colmap(table_props(path, v))
+    mp, dropped = _colmap(snap.props)
     if mp or dropped:
         raise ValueError(
             "export_symlink_manifest: table has renamed/dropped columns "
@@ -4666,7 +4614,7 @@ def export_symlink_manifest(path: str, version: int | None = None) -> str:
             "log-aware read, or rewrite the table under its logical "
             "schema into a fresh path"
         )
-    files = snapshot_files(path, v)
+    files = snap.files
     mdir = os.path.join(path, "_symlink_format_manifest")
     os.makedirs(mdir, exist_ok=True)
     target = os.path.join(mdir, "manifest")
@@ -4692,13 +4640,12 @@ def txn_compact_partitioned(
     import math
     from pyspark.sql import functions as _F
 
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
-            return base_v
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is None:
-            return txn_compact(spark, path, target_file_bytes, min_files)
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
+            return snap.version
+        if snap.ptype is None:
+            return _compact_attempt(spark, snap, target_file_bytes, min_files)
+        live, ptype, props = snap.live, snap.ptype, snap.props
         pcol = props.get("partition.column")
         if pcol is None:
             raise ValueError(
@@ -4706,7 +4653,7 @@ def txn_compact_partitioned(
                 "partition.column property — cannot re-attach the column "
                 "for the rewrite"
             )
-        dvmap = {n: d["dv"] for n, d in live.items() if d.get("dv")}
+        dvmap = snap.dvs
         by_value: dict = {}
         for n, d in live.items():
             by_value.setdefault(d["p"], []).append(n)
@@ -4724,14 +4671,13 @@ def txn_compact_partitioned(
             n_out = max(1, math.ceil(total / target_file_bytes))
             if (len(names) < min_files or n_out >= len(names)) and not has_dv:
                 continue
-            df = _read_files_dv(
-                spark, path, files,
-                {n: dvmap[n] for n in names if n in dvmap}, props,
-            ).withColumn(pcol, _partition_lit(value, ptype))
+            df = _read_files_dv(spark, path, files, dvmap, props).withColumn(
+                pcol, _partition_lit(value, ptype)
+            )
             groups.append(df)
             removed.extend(names)
         if not removed:
-            return base_v
+            return snap.version
         from functools import reduce
 
         union = _apply_colmap(
@@ -4741,14 +4687,11 @@ def txn_compact_partitioned(
         # per-value coalesce granularity; finer splitting belongs to the
         # writer's maxRecordsPerFile at real scale)
         added = _stage_partitioned(
-            union.repartition(len(groups), _F.col(pcol)), path, pcol
+            union.repartition(len(groups), _F.col(pcol)), snap, pcol
         )
-        try:
-            return commit(path, added, removed, base_v, op="OPTIMIZE")
-        except TxnConflict:
-            # staged files unreferenced; re-derive from the new snapshot
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries compacting {path}")
+        return _Commit(added, removed, op="OPTIMIZE")
+
+    return _transact(spark, path, attempt, max_retries, f"compacting {path}")
 
 
 def txn_merge_dv(
@@ -4777,57 +4720,31 @@ def txn_merge_dv(
     live file. Files without the metadata are kept conservatively.
 
     Unpartitioned tables only (like the other DV writers' staging)."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
     keys = list(keys)
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    key_vals = (
-        sorted(
-            r[0] for r in source.select(pk).distinct().collect()
-            if r[0] is not None
-        )
-        if pk is not None
-        else None
-    )
-    for _ in range(max_retries):
-        base_v = current_version(path)
-        if base_v < 0:
+    key_vals = _source_keys(source, pk) if pk is not None else None
+
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
             raise ValueError(f"merge target {path} has no committed version")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
+        if snap.ptype is not None:
             raise ValueError(
                 "txn_merge_dv: partitioned tables are not supported — use "
                 "txn_upsert_partitioned"
             )
+        props, live = snap.props, snap.live
         if key_vals is not None:
-            import bisect
-
-            pk_phys = _phys_col(props, pk)  # log stats are physical-keyed
-
-            def _rng_hits(rng):  # any source key inside [lo, hi]?
-                i = bisect.bisect_left(key_vals, rng[0])
-                return i < len(key_vals) and key_vals[i] <= rng[1]
-
-            cand = []
-            for n in sorted(live):
-                if live[n]["stats"].get("__rows__") == 0:
-                    continue  # log-proven empty: no row to match
-                rng = live[n]["stats"].get(pk_phys)
-                if rng is None or _rng_hits(rng):
-                    cand.append(n)
-            if use_bloom and cand:
-                cand = _cow_candidates(
-                    {n: live[n] for n in cand}, path, None, (pk_phys, key_vals)
-                )
-            live = {n: live[n] for n in cand}
-        old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
+            live = {
+                n: live[n] for n in _key_candidates(snap, pk, key_vals, use_bloom)
+            }
         files = sorted(os.path.join(_data_dir(path), n) for n in live)
         # key-column-pruned scan: only the keys + row position leave the
         # parquet reader; matched VISIBLE rows' positions fold into DVs
         # (already-deleted rows re-matching is harmless set-union)
         if files:
-            tgt = _scan_files(spark, path, files, props).select(
+            tgt = _scan_files(spark, files, props).select(
                 F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__f"),
                 F.col("_metadata.row_index").alias("__p"),
                 # files carry physical names; merge keys speak logical
@@ -4838,53 +4755,16 @@ def txn_merge_dv(
             ).select("__f", "__p")
         else:  # every file pruned: pure-insert batch, no positions to scan
             hits = spark.createDataFrame([], "__f: string, __p: bigint")
-        gen = uuid.uuid4().hex[:8]
-        data_dir = _data_dir(path)
+        dv = _write_dvs(hits, path, live)
+        added = _stage(source, snap)
+        _validate_staged(spark, snap, added)
+        # a lost race reaps the never-committed generation AND the staged
+        # data files (vacuum sees neither) before re-merging
+        return _Commit(added, dv=dv or None, op="MERGE_DV")
 
-        def _write_dv(key_row, pdf):
-            from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
-
-            n = key_row[0]
-            positions = set(int(p) for p in pdf["__p"])
-            old = old_dvs.get(n)
-            if old:
-                with open(os.path.join(data_dir, old), "rb") as fh:
-                    positions.update(dec(fh.read()))
-            name = f"{n}.dv.{gen}"
-            tmp = os.path.join(data_dir, f".tmp-{name}")
-            with open(tmp, "wb") as fh:
-                fh.write(enc(positions))
-            os.replace(tmp, os.path.join(data_dir, name))
-            return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
-
-        entries = (
-            hits.groupBy("__f")
-            .applyInPandas(_write_dv, "n string, d string, k long")
-            .collect()
-        )
-        dv = [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
-        added = _stage(source, path)
-        _validate_staged(spark, path, added)
-        try:
-            return commit(
-                path, added, [], base_v, dv=dv or None, op="MERGE_DV"
-            )
-        except TxnConflict:
-            # lost the race: the never-committed generation is invisible
-            # to vacuum — reap our own sidecars AND staged data files
-            # (both known by name) before re-merging the new snapshot.
-            for e in dv:
-                try:
-                    os.remove(os.path.join(data_dir, e["d"]))
-                except FileNotFoundError:
-                    pass
-            for n in added:
-                try:
-                    os.remove(os.path.join(data_dir, n))
-                except FileNotFoundError:
-                    pass
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries DV-merging into {path}")
+    return _transact(
+        spark, path, attempt, max_retries, f"DV-merging into {path}"
+    )
 
 
 def txn_merge_into(
@@ -4913,40 +4793,24 @@ def txn_merge_into(
 
     if (app_id is None) != (batch_id is None):
         raise ValueError("txn_merge_into: pass app_id and batch_id together")
-    _refuse_partitioned(path, "txn_merge_into")
-    for _ in range(max_retries):
-        if app_id is not None and batch_id <= last_committed_batch(path, app_id):
-            return current_version(path)  # redelivered batch: done
-        base_v = current_version(path)
-        if base_v < 0:
+
+    def attempt(snap: Snapshot):
+        _refuse_partitioned(snap, "txn_merge_into")
+        # a retry re-runs the skip check first — the rival that beat us
+        # may have been the SAME app landing this batch
+        if app_id is not None and _batch_done(snap, app_id, batch_id):
+            return snap.version  # redelivered batch: done
+        if snap.version < 0:
             raise ValueError(f"merge target {path} has no committed version")
-        target = read_snapshot(spark, path, base_v)
-        old_files = [os.path.basename(f) for f in snapshot_files(path, base_v)]
-        merged = merge_into(target, source, keys, clauses)
-        added = _stage_auto(spark, merged, path)
-        _validate_staged(spark, path, added)
+        merged = merge_into(_read_snapshot(spark, snap), source, keys, clauses)
+        added = _stage_with_meta(merged, snap)
+        _validate_staged(spark, snap, added)
         props = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
-        try:
-            v = commit(
-                path, added, old_files, base_v, props=props, op="MERGE"
-            )
-            _maybe_write_change_data(spark, path, v, old_files, added, base_v)
-            return v
-        except TxnConflict:
-            # lost the race: drop our invisible staged files and re-merge
-            # against the new snapshot (the skip check re-runs first — the
-            # rival may have been the SAME app landing this batch)
-            for e in added:
-                try:
-                    os.remove(
-                        os.path.join(
-                            _data_dir(path), e["n"] if isinstance(e, dict) else e
-                        )
-                    )
-                except FileNotFoundError:
-                    pass
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries merging into {path}")
+        return _Commit(
+            added, snap.names, props=props, op="MERGE", change_data=True
+        )
+
+    return _transact(spark, path, attempt, max_retries, f"merging into {path}")
 
 
 def txn_merge_into_cow(
@@ -4967,8 +4831,6 @@ def txn_merge_into_cow(
 
     ``app_id``/``batch_id`` give the same exactly-once redelivery
     watermark as txn_merge_into."""
-    import bisect
-
     from dbimport_spark.operators.merge import merge_into
 
     for c in clauses:
@@ -4984,69 +4846,25 @@ def txn_merge_into_cow(
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
     if pk is None:
         raise ValueError("txn_merge_into_cow: pass prune_key for composite keys")
-    key_vals = sorted(
-        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
-    )
+    key_vals = _source_keys(source, pk)
 
-    def _rng_hits(rng):
-        i = bisect.bisect_left(key_vals, rng[0])
-        return i < len(key_vals) and key_vals[i] <= rng[1]
-
-    for _ in range(max_retries):
-        if app_id is not None and batch_id <= last_committed_batch(path, app_id):
-            return current_version(path)  # redelivered batch: done
-        base_v = current_version(path)
-        if base_v < 0:
+    def attempt(snap: Snapshot):
+        if app_id is not None and _batch_done(snap, app_id, batch_id):
+            return snap.version  # redelivered batch: done
+        if snap.version < 0:
             raise ValueError(f"merge target {path} has no committed version")
-        live, ptype, props = _fold_log3(path, base_v)
-        if ptype is not None:
+        if snap.ptype is not None:
             raise ValueError(
                 "txn_merge_into_cow: partitioned tables are not supported"
             )
-        pk_phys = _phys_col(props, pk)
-        cand = []
-        for n in sorted(live):
-            if live[n]["stats"].get("__rows__") == 0:
-                continue
-            rng = live[n]["stats"].get(pk_phys)
-            if rng is None or _rng_hits(rng):
-                cand.append(n)
-        if use_bloom and cand:
-            cand = _cow_candidates(
-                {n: live[n] for n in cand}, path, None, (pk_phys, key_vals)
-            )
-        if cand:
-            dvmap = {n: live[n]["dv"] for n in cand if live[n].get("dv")}
-            target_slice = _apply_colmap(
-                _read_files_dv(
-                    spark, path,
-                    [os.path.join(_data_dir(path), n) for n in cand], dvmap,
-                    props,
-                ),
-                props,
-            )
-        else:
-            target_slice = read_snapshot(spark, path, base_v).limit(0)
-        merged = merge_into(target_slice, source, keys, clauses)
-        added = _stage_with_meta(spark, merged, path, stats_cols, bloom_col)
-        _validate_staged(
-            spark, path, [e["n"] if isinstance(e, dict) else e for e in added]
-        )
+        cand = _key_candidates(snap, pk, key_vals, use_bloom)
+        merged = merge_into(_read_slice(spark, snap, cand), source, keys, clauses)
+        added = _stage_with_meta(merged, snap, stats_cols, bloom_col)
+        _validate_staged(spark, snap, added)
         extra = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
-        try:
-            return commit(path, added, cand, base_v, props=extra, op="MERGE")
-        except TxnConflict:
-            for e in added:
-                try:
-                    os.remove(
-                        os.path.join(
-                            _data_dir(path), e["n"] if isinstance(e, dict) else e
-                        )
-                    )
-                except FileNotFoundError:
-                    pass
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries merging into {path}")
+        return _Commit(added, cand, props=extra, op="MERGE")
+
+    return _transact(spark, path, attempt, max_retries, f"merging into {path}")
 
 
 def txn_append_indexed(
@@ -5057,33 +4875,7 @@ def txn_append_indexed(
     one commit — the fully-indexed ingest form (txn_append_stats and
     txn_append_bloom each record one kind; production writers record
     both, enabling range AND point pruning on the same files)."""
-    if current_version(path) >= 0:
-        props = table_props(path)
-        stats_cols = [_phys_col(props, c) for c in stats_cols]
-        if bloom_col is not None:
-            bloom_col = _phys_col(props, bloom_col)
-    added_names = _stage(df, path)
-    base_v = current_version(path)  # pinned pre-validation (check TOCTOU)
-    checks = _validate_staged(spark, path, added_names)
-    _validate_unique(spark, path, added_names, base_v)
-    added = []
-    for n in added_names:
-        st = (
-            _footer_stats(os.path.join(_data_dir(path), n), stats_cols)
-            if stats_cols
-            else {}
-        )
-        if bloom_col is not None:
-            st = dict(st)
-            st["__bloom__"] = {bloom_col: _bloom_build_file(path, n, bloom_col, fpp)}
-        added.append({"n": n, "p": None, "stats": st})
-    for _ in range(max_retries):
-        try:
-            v = commit(path, added, [], base_v, op="APPEND")
-            return _maybe_auto_optimize(spark, path, v)
-        except TxnConflict:
-            base_v = current_version(path)
-            checks = _revalidate_if_changed(spark, path, added_names, checks)
-            _validate_unique(spark, path, added_names, base_v)
-            continue
-    raise TxnConflict(f"gave up after {max_retries} retries appending to {path}")
+    return _append(
+        spark, df, path, max_retries, stats_cols=list(stats_cols),
+        bloom_col=bloom_col, fpp=fpp,
+    )

@@ -14,6 +14,8 @@ import os
 
 import pytest
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 # Query subset: documents-driven, deterministic, ASCII-contract.
 QUERIES = [
     "text_token_count",

@@ -18,6 +18,8 @@ from dbimport_spark.functions.textdedup import (
     minhash_lsh_neardup_pairs,
 )
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 
 def _high_dup_corpus(spark, n_base=220, dup_every=2):
     """(doc_id, text) with a near-dup twin for every ``dup_every``-th base

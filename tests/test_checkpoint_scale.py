@@ -14,6 +14,8 @@ import pytest
 
 from dbimport_spark import txnlog
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 
 def _synth_table(tmp_path, name, n_live, parts=8, suffix_commits=5):
     """A table whose log holds ``n_live`` live files: 8 bulk appends,

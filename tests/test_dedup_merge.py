@@ -281,6 +281,7 @@ def test_scd2_merge_null_is_current_row_survives(spark):
     assert vals == [("a", True), ("weird", None)]
 
 
+@pytest.mark.slow
 def test_scd2_merge_matches_model_on_random_inputs(spark):
     """Model-based check: scd2_merge equals a pure-Python reference on
     seeded random histories/snapshots — keys with only closed history,

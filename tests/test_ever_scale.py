@@ -20,6 +20,8 @@ import pytest
 from dbimport_spark import txnlog
 from tools.probe_churn import _commit_retry, _touch_batch, run as churn_run
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 
 @pytest.fixture
 def table(tmp_path):

@@ -25,6 +25,8 @@ import pytest
 
 from dbimport_spark.plans.warc_queries import _memoized_export
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 N_FILES = 4
 PAYLOAD = b"deterministic shard bytes\n" * 64
 

@@ -619,6 +619,7 @@ def test_tfidf_prefix_strategy_matches_naive(spark, sf_dir):
     assert naive == prefix and naive
 
 
+@pytest.mark.slow
 def test_tfidf_dense_strategy_matches_naive(spark, sf_dir):
     """The rare-term-free block-tile matmul path is EXACT: float64 dots
     of integer weights are exact below 2^53 and the decimal gate makes
@@ -634,6 +635,7 @@ def test_tfidf_dense_strategy_matches_naive(spark, sf_dir):
     assert naive == dense and naive
 
 
+@pytest.mark.slow
 def test_tfidf_dense_folded_strategy_matches_naive(spark, sf_dir):
     """The mid-vocab hash-folded candidate path is exact end-to-end:
     folded dots upper-bound true dots (non-negative weights) while the
@@ -651,6 +653,7 @@ def test_tfidf_dense_folded_strategy_matches_naive(spark, sf_dir):
     assert naive == folded and naive
 
 
+@pytest.mark.slow
 def test_tfidf_dense_folded_on_midvocab_corpus(spark, tmp_path):
     """A synthetic 8k-term corpus (over the 4096 exact-dense gate) with
     planted near-dups: dense_folded == naive, and the planted pairs are

@@ -735,7 +735,7 @@ def test_stream_resume_below_cleanup_floor_fails_loudly(spark, tmp_path):
     assert {p.version for p in parts} == {7, 8}
 
 
-def test_pruned_change_data_matches_unpruned(spark, tmp_path):
+def test_pruned_change_data_matches_unpruned(spark, tmp_path, monkeypatch):
     """The r11 key-pruned CDF diff (txn_upsert passes its source keys so
     _write_change_data semi-joins both sides before the multiset diff)
     must produce EXACTLY the rows of the unpruned diff — including a
@@ -758,17 +758,11 @@ def test_pruned_change_data_matches_unpruned(spark, tmp_path):
 
     txnlog.txn_upsert(spark, src, pruned_t, ["k"])  # default: pruned diff
 
-    # control: same upsert but the change data written WITHOUT the prune
-    orig = txnlog._maybe_write_change_data
-
-    def unpruned(spark_, path_, new_v, removed, added, base_v, touched_keys=None):
-        return orig(spark_, path_, new_v, removed, added, base_v, touched_keys=None)
-
-    txnlog._maybe_write_change_data = unpruned
-    try:
+    # control: same upsert with the source's key set past the broadcast
+    # gate, so the change data is written WITHOUT the prune
+    with monkeypatch.context() as m:
+        m.setattr(txnlog, "_CDF_PRUNE_BROADCAST_MAX", 0)
         txnlog.txn_upsert(spark, src, unpruned_t, ["k"])
-    finally:
-        txnlog._maybe_write_change_data = orig
 
     def change_rows(t):
         v = txnlog.current_version(t)

@@ -14,6 +14,8 @@ from hypothesis import strategies as st
 
 from dbimport_spark.operators.merge import merge_into
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 # condition pool per branch: (sql over t/s aliases, python evaluator)
 MATCHED_CONDS = [
     (None, lambda t, s: True),

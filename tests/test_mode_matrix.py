@@ -31,6 +31,8 @@ from dbimport_spark.config import (
 from dbimport_spark.pipeline import run_import
 from dbimport_spark.sources.csv import CsvSource
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 F3_CSV = (
     "column integer; column_double; column_varchar; column_clob\n"
     "1; 123.456; aBcDeF123_1; aBcDeF1234\n"

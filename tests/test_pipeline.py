@@ -418,6 +418,7 @@ def test_partitioned_sink_prunes_partitions(spark, sf_dir, tmp_path):
     assert one.count() == want and want > 0
 
 
+@pytest.mark.slow
 def test_compact_parquet_restores_file_sizes(spark, tmp_path):
     """1000 rows scattered over 32 tiny files compact into the planned
     ceil(bytes/target) file count with identical content."""

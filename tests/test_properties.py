@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,6 +14,8 @@ from dbimport_spark.config import parse_mapping_string
 from dbimport_spark.sources.sqlscript import split_sql_script
 from dbimport_spark.sources.vcf import parse_vcf_text
 from dbimport_spark.sources.wildcard import table_name_for_file
+
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
 
 ident = st.text(string.ascii_lowercase + string.digits + "_", min_size=1, max_size=12)
 value_text = st.text(

@@ -7,6 +7,7 @@ token-free documents, PageRank rank-mass conservation."""
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -98,6 +99,7 @@ def test_nb_zero_token_docs_get_prior_argmax(spark):
     assert got[1000]["pred_score"] == got[4]["pred_score"]
 
 
+@pytest.mark.slow
 def test_pagerank_mass_and_positivity(spark, sf_dir):
     from dbimport_spark.plans.learned_queries import _PR_SCALE, graph_pagerank
 
@@ -115,6 +117,7 @@ def test_pagerank_mass_and_positivity(spark, sf_dir):
     assert top["node"] % 2 == 1
 
 
+@pytest.mark.slow
 def test_pca_matches_numpy_and_partitioning_invariant(spark):
     import numpy as np
 
@@ -149,6 +152,7 @@ def test_pca_matches_numpy_and_partitioning_invariant(spark):
     np.testing.assert_allclose(msn, explained.sum(), rtol=1e-9)
 
 
+@pytest.mark.slow
 def test_pagerank_checkpoint_invariance(spark):
     """localCheckpoint lineage truncation must not change results — the
     arithmetic is exact integer, so 12 rounds with and without
@@ -173,6 +177,7 @@ def test_pagerank_checkpoint_invariance(spark):
     assert len(plain) == 20
 
 
+@pytest.mark.slow
 def test_pagerank_directed_sinks_and_sources(spark):
     """r3 advice: on a DIRECTED graph, sink-only nodes must count toward N
     and receive rank, and zero-in-degree nodes must keep their base rank

@@ -3,6 +3,7 @@ decontamination. The value-exact gate is tools/check_oracle.py; these
 pin the structural guarantees the oracles can't see — prefix-filter
 recall, broadcast plan shapes, split membership — at sf0.001."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbimport_spark.plans import QUERIES
@@ -27,6 +28,7 @@ def test_bm25_topk_contract(spark, sf_dir):
         assert key == sorted(key)
 
 
+@pytest.mark.slow
 def test_bm25_deterministic_across_partitioning(spark, sf_dir):
     """Integer-micro scores must not depend on partition/sum order."""
     a = {
@@ -45,6 +47,7 @@ def test_bm25_deterministic_across_partitioning(spark, sf_dir):
     assert a == b
 
 
+@pytest.mark.slow
 def test_containment_planted_pairs_present(spark, sf_dir):
     out = QUERIES["dedup_containment"](spark, sf_dir)
     rows = out.collect()
@@ -110,6 +113,7 @@ def test_decontam_minhash_broadcasts_eval_side(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
+@pytest.mark.slow
 def test_stream_decontam_matches_batch(spark, sf_dir):
     """The stateless streaming probe must emit exactly the batch
     decontam_minhash pair set (same xxhash64 family, same exact

@@ -576,6 +576,7 @@ def test_lake_sink_idempotent_across_checkpoint_loss(spark, tmp_path):
     assert txnlog.read_snapshot(spark, target).count() == 12
 
 
+@pytest.mark.slow
 def test_sessionize_tws_ttl_evicts_idle_users(spark, tmp_path):
     """ListState TTL (judge r7 item 4): with ttl_ms set, an idle user's
     event history is EVICTED between runs — after a checkpoint restart

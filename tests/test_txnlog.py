@@ -2,6 +2,7 @@
 conflict detection (dbimport_spark/txnlog.py)."""
 
 import json
+import logging
 import os
 
 import pytest
@@ -36,7 +37,7 @@ def test_append_upsert_and_time_travel(spark, table):
 def test_staged_files_invisible_until_commit(spark, table):
     txnlog.txn_append(spark, _df(spark, [(1, "a")]), table)
     # stage a second batch but do NOT commit it
-    txnlog._stage(_df(spark, [(99, "zz")]), table)
+    txnlog._stage(_df(spark, [(99, "zz")]), txnlog.Snapshot.at(table))
     got = {r["k"] for r in txnlog.read_snapshot(spark, table).collect()}
     assert got == {1}
     # the physical file exists but no reader resolves it
@@ -169,7 +170,7 @@ def test_vacuum_racing_reader_and_staged_writer(spark, table):
     txnlog.txn_upsert(spark, _df(spark, [(1, "A"), (2, "b")]), table, ["k"])
     txnlog.txn_upsert(spark, _df(spark, [(3, "c")]), table, ["k"])
     # in-flight writer staged, not yet committed
-    staged = txnlog._stage(_df(spark, [(99, "zz")]), table)
+    staged = txnlog._stage(_df(spark, [(99, "zz")]), txnlog.Snapshot.at(table))
     doomed = txnlog.vacuum(table, retain_versions=2)
     assert doomed  # version 0's file really was reclaimed
     for name in staged:
@@ -313,7 +314,7 @@ def test_vacuum_reclaims_only_dead_files(spark, table):
     txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
     txnlog.txn_upsert(spark, _df(spark, [(2, "B")]), table, ["k"])
     # stage an uncommitted batch: vacuum must NOT touch it
-    txnlog._stage(_df(spark, [(99, "z")]), table)
+    txnlog._stage(_df(spark, [(99, "z")]), txnlog.Snapshot.at(table))
     files_before = set(os.listdir(os.path.join(table, "data")))
     deleted = txnlog.vacuum(table, retain_versions=1)
     assert deleted  # version 0's files are dead
@@ -488,7 +489,7 @@ def test_checkpoint_resolution_matches_full_replay(spark, table, monkeypatch):
     ckpts = [
         f
         for f in os.listdir(os.path.join(table, "_txn_log"))
-        if f.endswith(".checkpoint.json") or f.endswith(".checkpoint")
+        if f.endswith(".checkpoint")
     ]
     assert ckpts  # interval 3 over 8 versions wrote at least v3 and v6
     # every historical version resolves identically with and without
@@ -712,7 +713,8 @@ def test_change_feed_across_schema_evolution(spark, table):
     )
     # replace-all commit: v1 snapshot carries the ADDED `extra` column
     old_files = [os.path.basename(f) for f in txnlog.snapshot_files(table, 0)]
-    txnlog.commit(table, txnlog._stage(evolved, table), old_files, 0)  # v1
+    added = txnlog._stage(evolved, txnlog.Snapshot.at(table))
+    txnlog.commit(table, added, old_files, 0)  # v1
     feed = {
         (r["k"], r["_change_type"]): (r["v"], r["extra"])
         for r in txnlog.read_changes(spark, table, ["k"], 0, 1).collect()
@@ -738,7 +740,7 @@ def test_change_feed_dropped_column(spark, table):
     narrow = _df(spark, [(1, "a")])
     # replace-all commit: remove old files, add narrow snapshot
     old_files = [os.path.basename(f) for f in txnlog.snapshot_files(table, 0)]
-    added = txnlog._stage(narrow, table)
+    added = txnlog._stage(narrow, txnlog.Snapshot.at(table))
     txnlog.commit(table, added, old_files, 0)  # v1
     feed = {
         (r["k"], r["_change_type"]): r["extra"]
@@ -748,18 +750,160 @@ def test_change_feed_dropped_column(spark, table):
     assert feed == {(1, "update"): None}
 
 
-def test_commit_survives_checkpoint_failure(spark, table, monkeypatch):
+def _package_warnings(caplog):
+    return [
+        r for r in caplog.records
+        if r.name == "dbimport_spark" and r.levelno == logging.WARNING
+    ]
+
+
+def test_commit_survives_checkpoint_failure(spark, table, monkeypatch, caplog):
     """A checkpoint-write failure after the version link must NOT
-    propagate: the commit is already durable (r4 ADVICE)."""
+    propagate: the commit is already durable (r4 ADVICE). It is logged,
+    naming the table, the version and the error."""
     def boom(path, v):
         raise OSError("transient checkpoint IO failure")
 
     monkeypatch.setattr(txnlog, "write_checkpoint", boom)
     last_v = -1
-    for i in range(txnlog.CHECKPOINT_INTERVAL + 1):
-        last_v = txnlog.txn_append(spark, _df(spark, [(i, "x")]), table)
+    with caplog.at_level(logging.WARNING, logger="dbimport_spark"):
+        for i in range(txnlog.CHECKPOINT_INTERVAL + 1):
+            last_v = txnlog.txn_append(spark, _df(spark, [(i, "x")]), table)
     assert last_v == txnlog.CHECKPOINT_INTERVAL
     assert txnlog.read_snapshot(spark, table).count() == last_v + 1
+    (rec,) = _package_warnings(caplog)
+    msg = rec.getMessage()
+    assert table in msg
+    assert f"version {txnlog.CHECKPOINT_INTERVAL}" in msg
+    assert "transient checkpoint IO failure" in msg
+
+
+def test_change_data_write_failure_is_logged_not_raised(
+    spark, table, monkeypatch, caplog
+):
+    """A change-data write that fails after the commit won its slot
+    leaves the commit standing (readers fall back to the on-read diff)
+    and is logged with the table, the version and the error."""
+    txnlog.txn_set_property(table, "cdf.enabled", "true")
+    txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
+
+    def boom(*a, **k):
+        raise OSError("change-data disk full")
+
+    monkeypatch.setattr(txnlog, "_write_change_data", boom)
+    with caplog.at_level(logging.WARNING, logger="dbimport_spark"):
+        v = txnlog.txn_upsert(spark, _df(spark, [(2, "B")]), table, ["k"])
+    assert v == 2 == txnlog.current_version(table)
+    now = {r["k"]: r["v"] for r in txnlog.read_snapshot(spark, table).collect()}
+    assert now == {1: "a", 2: "B"}
+    (rec,) = _package_warnings(caplog)
+    msg = rec.getMessage()
+    assert table in msg and "version 2" in msg and "change-data disk full" in msg
+
+
+def _unnamed_data_files(table):
+    """Parquet files under data/ that no log entry ever named — staged
+    output of a writer that never committed (vacuum never reaps these)."""
+    named = set()
+    for v in range(txnlog.current_version(table) + 1):
+        entry = txnlog._read_entry_body(table, v)
+        named.update(
+            e["n"] if isinstance(e, dict) else e for e in entry.get("added", [])
+        )
+    data = os.path.join(table, "data")
+    return {f for f in os.listdir(data) if f.endswith(".parquet")} - named
+
+
+@pytest.mark.parametrize(
+    "op", ["txn_upsert", "txn_delete", "txn_compact", "txn_delete_cow", "txn_merge_cow"]
+)
+def test_lost_race_reaps_staged_rewrite(spark, table, monkeypatch, op):
+    """A rewrite whose first claim loses a race must delete the files it
+    staged for that attempt before re-staging against the new snapshot:
+    otherwise every lost race leaves a full copy of the rewritten rows in
+    data/ that no log entry names."""
+    txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
+    txnlog.txn_append(spark, _df(spark, [(3, "c")]), table)
+    real_commit = txnlog.commit
+    raced = {"done": False}
+
+    def racing_commit(path, added, removed, expect_version, **kw):
+        if not raced["done"]:
+            raced["done"] = True
+            # a rival property commit claims the slot first
+            real_commit(path, [], [], expect_version, props={"x": "1"})
+        return real_commit(path, added, removed, expect_version, **kw)
+
+    monkeypatch.setattr(txnlog, "commit", racing_commit)
+    run = {
+        "txn_upsert": lambda: txnlog.txn_upsert(
+            spark, _df(spark, [(2, "B")]), table, ["k"]
+        ),
+        "txn_delete": lambda: txnlog.txn_delete(spark, F.col("k") == 1, table),
+        "txn_compact": lambda: txnlog.txn_compact(spark, table, min_files=1),
+        "txn_delete_cow": lambda: txnlog.txn_delete_cow(
+            spark, F.col("k") == 1, table
+        ),
+        "txn_merge_cow": lambda: txnlog.txn_merge_cow(
+            spark, _df(spark, [(2, "B")]), table, ["k"]
+        ),
+    }[op]
+    assert run() == 3  # v2 is the rival's; the retry landed v3
+    assert raced["done"]
+    assert not _unnamed_data_files(table)
+
+
+def test_one_fold_and_one_list_per_uncontended_op(spark, table, monkeypatch):
+    """Each uncontended write folds the log ONCE and LISTs the version
+    ONCE — the attempt's Snapshot feeds staging, validation, the claim
+    and the change-data diff. Versions stay below the checkpoint
+    interval (an interval commit folds again to write the checkpoint)."""
+    txnlog.txn_set_property(table, "cdf.enabled", "true")
+    txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b"), (3, "c")]), table)
+    counts = {"fold": 0, "list": 0}
+    fold, listv = txnlog._fold_log3, txnlog.current_version
+
+    def counting_fold(*a, **k):
+        counts["fold"] += 1
+        return fold(*a, **k)
+
+    def counting_list(*a, **k):
+        counts["list"] += 1
+        return listv(*a, **k)
+
+    monkeypatch.setattr(txnlog, "_fold_log3", counting_fold)
+    monkeypatch.setattr(txnlog, "current_version", counting_list)
+    ops = [
+        ("txn_append", lambda: txnlog.txn_append(
+            spark, _df(spark, [(4, "d")]), table
+        )),
+        ("txn_upsert", lambda: txnlog.txn_upsert(
+            spark, _df(spark, [(2, "B")]), table, ["k"]
+        )),
+        ("txn_delete_dv", lambda: txnlog.txn_delete_dv(
+            spark, F.col("k") == 1, table
+        )),
+        ("txn_merge_into", lambda: txnlog.txn_merge_into(
+            spark, _df(spark, [(3, "C"), (9, "i")]), table, ["k"],
+            [
+                ("matched_update", None, {"v": "s.v"}),
+                ("not_matched_insert", None, {"k": "s.k", "v": "s.v"}),
+            ],
+        )),
+    ]
+    got = {}
+    for name, run in ops:
+        counts.update(fold=0, list=0)
+        v = run()
+        assert v % txnlog.CHECKPOINT_INTERVAL
+        got[name] = (counts["fold"], counts["list"])
+    assert got == {name: (1, 1) for name, _ in ops}
+    # the rewrites' change data was written off that same fold
+    for v in (3, 5):
+        assert os.path.isdir(os.path.join(table, "_change_data", f"v{v:08d}"))
+    monkeypatch.undo()
+    now = {r["k"]: r["v"] for r in txnlog.read_snapshot(spark, table).collect()}
+    assert now == {2: "B", 3: "C", 4: "d", 9: "i"}
 
 
 def test_clone_zero_copy_and_divergence(spark, table, tmp_path):
@@ -2715,7 +2859,8 @@ class TestRowTracking:
                 fired["n"] = 1
                 # rival append claims the slot (and an id range) first
                 rival = _t._stage(
-                    spark.range(100, 107).selectExpr("id AS k").coalesce(1), path
+                    spark.range(100, 107).selectExpr("id AS k").coalesce(1),
+                    _t.Snapshot.at(path),
                 )
                 real_commit(path, rival, [], expect_version, op="APPEND")
             return real_commit(path, added, removed, expect_version, **kw)
@@ -3126,7 +3271,10 @@ class TestUniqueConstraintAdvice9:
                 fired["n"] = 1
                 real_commit(
                     path,
-                    _t._stage(spark.createDataFrame([(99,)], "k long"), path),
+                    _t._stage(
+                        spark.createDataFrame([(99,)], "k long"),
+                        _t.Snapshot.at(path),
+                    ),
                     [], expect_version, op="APPEND",
                 )
             return real_commit(path, added, removed, expect_version, **kw)
@@ -3170,7 +3318,7 @@ class TestUniqueConstraintAdvice9:
                     path,
                     _t._stage_partitioned(
                         spark.createDataFrame([(99, "a")], "k long, p string"),
-                        path, "p",
+                        _t.Snapshot.at(path), "p",
                     ),
                     [], expect_version, op="APPEND",
                     props={"partition.column": "p"},
@@ -3193,7 +3341,7 @@ class TestUniqueConstraintAdvice9:
         """write.statsColumns + autoOptimize.every on one table: appends
         keep compacting (the delegation to txn_append_stats must not
         silently drop auto-optimize) AND the rewritten files carry the
-        declared zone maps (via _stage_auto)."""
+        declared zone maps (via _stage_with_meta)."""
         txnlog.txn_set_property(table, "write.statsColumns", "k")
         txnlog.txn_set_property(table, "autoOptimize.every", "3")
         for b in range(2):
@@ -3260,25 +3408,6 @@ class TestMultiPartCheckpoint:
         # read path still green (DV applied, stats preserved)
         assert txnlog.read_snapshot(spark, table).count() == 30 - 5
         assert all("k" in st for st in txnlog.snapshot_stats(table).values())
-
-    def test_legacy_single_json_checkpoint_still_readable(self, spark, table):
-        txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
-        txnlog.txn_upsert(spark, _df(spark, [(2, "B")]), table, ["k"])
-        v = txnlog.current_version(table)
-        live, ptype, props = txnlog._fold_log3(table, v)
-        body = {
-            "version": v, "ptype": ptype, "props": props,
-            "live": [
-                {"n": n, "p": d["p"], "stats": d["stats"],
-                 "dv": d.get("dv"), "rid": d.get("rid")}
-                for n, d in sorted(live.items())
-            ],
-        }
-        with open(txnlog._checkpoint_path(table, v), "w") as fh:
-            json.dump(body, fh)
-        assert txnlog._latest_checkpoint_at_or_below(table, v) == v
-        got = {r["k"]: r["v"] for r in txnlog.read_snapshot(spark, table).collect()}
-        assert got == {1: "a", 2: "B"}
 
     def test_snapshot_state_df_matches_fold(self, spark, table, monkeypatch):
         monkeypatch.setattr(txnlog, "CHECKPOINT_ROWS_PER_PART", 2)
@@ -3549,7 +3678,7 @@ def test_vacuum_reaps_superseded_checkpoints(spark, table, monkeypatch):
     def ckpts():
         return sorted(
             int(f.split(".")[0]) for f in os.listdir(d)
-            if f.endswith(".checkpoint") or f.endswith(".checkpoint.json")
+            if f.endswith(".checkpoint")
         )
 
     assert ckpts() == [2, 4, 6, 8]

@@ -17,6 +17,7 @@ states no example-based test enumerates."""
 import json
 import os
 
+import pytest
 from hypothesis import settings
 from hypothesis import strategies as st
 from hypothesis.stateful import (
@@ -28,10 +29,12 @@ from hypothesis.stateful import (
 
 from dbimport_spark import txnlog
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 
 def _visible(table: str, version=None) -> set:
     v = txnlog.current_version(table) if version is None else version
-    live, _ = txnlog._fold_log(table, v)
+    live = txnlog.Snapshot.at(table, v).live
     out: set = set()
     for n, d in live.items():
         with open(os.path.join(table, "data", n)) as fh:
@@ -81,9 +84,9 @@ class LogProtocol(RuleBasedStateMachine):
 
     @rule(data=st.data())
     def dv_delete(self, data):
-        live, _ = txnlog._fold_log(
+        live = txnlog.Snapshot.at(
             self.table, txnlog.current_version(self.table)
-        )
+        ).live
         if not live:
             return
         name = data.draw(st.sampled_from(sorted(live)))
@@ -111,7 +114,7 @@ class LogProtocol(RuleBasedStateMachine):
         cur = txnlog.current_version(self.table)
         if cur < 0:
             return
-        live, _ = txnlog._fold_log(self.table, cur)
+        live = txnlog.Snapshot.at(self.table, cur).live
         if not live:
             return
         merged = self._write_file(_visible(self.table))
@@ -121,9 +124,9 @@ class LogProtocol(RuleBasedStateMachine):
     def cow_delete_one_file(self, data):
         """Rewrite ONE live file without a random subset of its visible
         leaves — the txn_delete_cow shape (candidates = that file)."""
-        live, _ = txnlog._fold_log(
+        live = txnlog.Snapshot.at(
             self.table, txnlog.current_version(self.table)
-        )
+        ).live
         if not live:
             return
         name = data.draw(st.sampled_from(sorted(live)))
@@ -287,7 +290,7 @@ class RowIdProtocol(RuleBasedStateMachine):
         return name
 
     def _live(self):
-        live, _ = txnlog._fold_log(self.table, txnlog.current_version(self.table))
+        live = txnlog.Snapshot.at(self.table, txnlog.current_version(self.table)).live
         return live
 
     @rule(n=st.integers(min_value=1, max_value=5))

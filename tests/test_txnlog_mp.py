@@ -16,6 +16,8 @@ import pytest
 
 from dbimport_spark import txnlog
 
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
+
 
 @pytest.fixture(autouse=True, params=["posix", "objstore"])
 def commit_backend(request):
@@ -259,7 +261,7 @@ def test_mp_vacuum_racing_readers_writers_compactor(tmp_path):
 
 def _dv_read(table: str, name: str):
     sc = None
-    live, _ = txnlog._fold_log(table, txnlog.current_version(table))
+    live = txnlog.Snapshot.at(table, txnlog.current_version(table)).live
     m = live.get(name, {}).get("dv")
     if m:
         with open(os.path.join(table, "data", m["d"])) as fh:
@@ -271,7 +273,7 @@ def _expand_visible(table: str, version=None) -> list:
     """Leaf expansion MINUS each file's deletion-vector leaves — the
     log-level analogue of the DV-aware read."""
     v = txnlog.current_version(table) if version is None else version
-    live, _ = txnlog._fold_log(table, v)
+    live = txnlog.Snapshot.at(table, v).live
     leaves: list = []
     for n in sorted(live):
         with open(os.path.join(table, "data", n)) as fh:
@@ -291,7 +293,7 @@ def _dv_deleter(table, fname, my_leaves, wid, q):
     commit the replacement ref, re-derive on conflict."""
     for attempt in range(500):
         base = txnlog.current_version(table)
-        live, _ = txnlog._fold_log(table, base)
+        live = txnlog.Snapshot.at(table, base).live
         old = live[fname].get("dv")
         dead = set(my_leaves)
         if old:
@@ -353,7 +355,7 @@ def _dv_compactor(table, rounds, q):
             base = txnlog.current_version(table)
             if base < 0:
                 break
-            live, _ = txnlog._fold_log(table, base)
+            live = txnlog.Snapshot.at(table, base).live
             if len(live) < 2 and not any(d.get("dv") for d in live.values()):
                 break
             merged = f"merged_r{r}_{os.getpid()}_{base}.json"
@@ -390,7 +392,7 @@ def test_mp_dv_writers_racing_compactor(tmp_path):
         # owning file each attempt (compactor may have merged it away)
         for attempt in range(500):
             base = txnlog.current_version(table)
-            live, _ = txnlog._fold_log(table, base)
+            live = txnlog.Snapshot.at(table, base).live
             owner = None
             for n in sorted(live):
                 with open(os.path.join(table, "data", n)) as fh:
@@ -472,7 +474,7 @@ def test_mp_vacuum_reaps_only_dead_dv_generations(tmp_path):
     # no generation outside the kept versions' references survives
     kept_gens = set()
     for v in range(horizon, cur + 1):
-        live, _ = txnlog._fold_log(table, v)
+        live = txnlog.Snapshot.at(table, v).live
         kept_gens |= {d["dv"]["d"] for d in live.values() if d.get("dv")}
     ever_gens = set()
     for v in range(cur + 1):
@@ -601,7 +603,7 @@ def test_mp_rowid_allocation_is_disjoint_under_real_races(tmp_path):
         ctx.Process(target=_rid_appender, args=(table, w, 6, q)) for w in range(4)
     ]
     _run(procs, q, 4)
-    live, _ = txnlog._fold_log(table, txnlog.current_version(table))
+    live = txnlog.Snapshot.at(table, txnlog.current_version(table)).live
     nxt = int(txnlog.table_props(table)["rowids.next"])
     spans = []
     total_rows = 0

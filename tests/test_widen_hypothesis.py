@@ -11,6 +11,7 @@ widest appended era, and fsck stays green.
 import json
 import os
 
+import pytest
 from hypothesis import settings
 from hypothesis import strategies as st
 from hypothesis.stateful import (
@@ -22,6 +23,8 @@ from hypothesis.stateful import (
 )
 
 from dbimport_spark import txnlog
+
+pytestmark = pytest.mark.slow  # opt in: SPARK_GRAFT_FULL_TESTS=1
 
 _WIDTH_ORDER = ["int", "bigint"]
 

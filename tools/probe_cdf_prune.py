@@ -60,11 +60,11 @@ def main() -> None:
     # the SAME staged files feed both diff variants
     from dbimport_spark.operators.merge import upsert
 
-    base_v = txnlog.current_version(path)
-    target = txnlog.read_snapshot(spark, path, base_v)
-    old_files = [os.path.basename(f) for f in txnlog.snapshot_files(path, base_v)]
+    snap = txnlog.Snapshot.at(path)
+    target = txnlog.read_snapshot(spark, path, snap.version)
+    old_files = snap.names
     merged = upsert(target, upd, ["doc_id"])
-    added = txnlog._stage_auto(spark, merged, path)
+    added = txnlog._stage_with_meta(merged, snap)
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
     os.makedirs(out_dir, exist_ok=True)
@@ -74,7 +74,7 @@ def main() -> None:
         ("after", (["doc_id"], upd)),
     ):
         delta = txnlog._change_delta(
-            spark, path, old_files, added, base_v, touched_keys=touched
+            spark, snap, old_files, added, touched_keys=touched
         )
         buf = io.StringIO()
         with redirect_stdout(buf):
