@@ -14,11 +14,12 @@ Lifecycle parity (DbImportWorker.work, :330-686): read source →
 create-table-if-needed from the inference lattice (:391) → mapping check
 → coerce/validate split → dedup → mode dispatch → atomic table swap →
 statistics line → erroneous-row re-extraction in the original
-format/compression (:591-593). The import is all-or-nothing at the table
-level: the new table is written to a shadow directory and swapped in
-with two renames, so a crash mid-import leaves the old table intact —
-the lake equivalent of the reference's single-transaction commit
-(:584).
+format/compression (:591-593) → release of the import's caches (the
+imports of a wildcard run share one session). The import is
+all-or-nothing at the table level: the new table is written to a shadow
+directory and swapped in with two renames, so a crash mid-import leaves
+the old table intact — the lake equivalent of the reference's
+single-transaction commit (:584).
 """
 
 from __future__ import annotations
@@ -295,58 +296,67 @@ def _run_one(spark, args, results: list | None) -> int:
 
     from dbimport_spark.pipeline import ImportError_, run_import
 
+    # run_import's persisted temp tables; this run owns their release
+    persisted: list = []
     try:
-        new_target, invalid, stats = run_import(definition, source, target)
-    except ImportError_ as exc:
-        err = {"ok": False, "table": args.table, "error": str(exc)}
-        if results is not None:
-            results.append(err)
-        else:
-            print(json.dumps(err))
-        return 2
-
-    # Atomic swap: write the shadow dir, then two renames. The old table
-    # survives any crash before the final rename (reference: single
-    # transaction committed at DbImportWorker.java:584).
-    shadow = table_dir + ".__import__"
-    backup = table_dir + ".__old__"
-    shutil.rmtree(shadow, ignore_errors=True)
-    new_target.write.mode("overwrite").parquet(shadow)
-    shutil.rmtree(backup, ignore_errors=True)
-    if os.path.isdir(table_dir):
-        os.rename(table_dir, backup)
-    os.rename(shadow, table_dir)
-    shutil.rmtree(backup, ignore_errors=True)
-
-    error_file = None
-    if (
-        not args.noerrorfile
-        and args.importfile
-        and stats.items_invalid > 0
-    ):
-        # erroneous-row re-extraction in the ORIGINAL format/compression
-        # (DbImportWorker.java:591-593)
-        from dbimport_spark.operators.errors import filter_data_items
-        from dbimport_spark.operators.order import SRC_ORDER_COL
-
-        idx = [
-            int(r[0]) + 1
-            for r in invalid.select(SRC_ORDER_COL).collect()
-            if r[0] is not None
-        ]
         try:
-            error_file = filter_data_items(
-                args.importfile,
-                idx,
-                separator=args.sep,
-                quote=args.quote,
-                has_header=not args.noheaders,
-                data_path=args.data_path,
-                null_value=args.null_value,
-                zip_password=args.zippassword,
+            new_target, invalid, stats = run_import(
+                definition, source, target, persisted=persisted
             )
-        except ValueError:
-            error_file = None  # format without a faithful errors writer
+        except ImportError_ as exc:
+            err = {"ok": False, "table": args.table, "error": str(exc)}
+            if results is not None:
+                results.append(err)
+            else:
+                print(json.dumps(err))
+            return 2
+
+        # Atomic swap: write the shadow dir, then two renames. The old table
+        # survives any crash before the final rename (reference: single
+        # transaction committed at DbImportWorker.java:584).
+        shadow = table_dir + ".__import__"
+        backup = table_dir + ".__old__"
+        shutil.rmtree(shadow, ignore_errors=True)
+        new_target.write.mode("overwrite").parquet(shadow)
+        shutil.rmtree(backup, ignore_errors=True)
+        if os.path.isdir(table_dir):
+            os.rename(table_dir, backup)
+        os.rename(shadow, table_dir)
+        shutil.rmtree(backup, ignore_errors=True)
+
+        error_file = None
+        if (
+            not args.noerrorfile
+            and args.importfile
+            and stats.items_invalid > 0
+        ):
+            # erroneous-row re-extraction in the ORIGINAL format/compression
+            # (DbImportWorker.java:591-593), read from the persisted projection
+            from dbimport_spark.operators.errors import filter_data_items
+            from dbimport_spark.operators.order import SRC_ORDER_COL
+
+            bad = sorted(
+                (int(r[0]) + 1, r[1])
+                for r in invalid.select(SRC_ORDER_COL, "error_reason").collect()
+                if r[0] is not None
+            )
+            stats.invalid_reasons = [f"item {i}: {reason}" for i, reason in bad[:10]]
+            try:
+                error_file = filter_data_items(
+                    args.importfile,
+                    [i for i, _ in bad],
+                    separator=args.sep,
+                    quote=args.quote,
+                    has_header=not args.noheaders,
+                    data_path=args.data_path,
+                    null_value=args.null_value,
+                    zip_password=args.zippassword,
+                )
+            except ValueError:
+                error_file = None  # format without a faithful errors writer
+    finally:
+        for df in persisted:
+            df.unpersist()
 
     out = {
         "ok": True,

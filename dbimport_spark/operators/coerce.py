@@ -288,7 +288,10 @@ def build_coercion(
     return coerce_string(src, trim=trim)
 
 
-def apply_mappings(
+ERRORS_COL = "__errors"  # array<string> of per-column errors; empty = valid row
+
+
+def project_mappings(
     df: DataFrame,
     mappings: list[ColumnMapping],
     target_types: dict[str, str],
@@ -297,12 +300,13 @@ def apply_mappings(
     trim: bool = False,
     null_value_string: str = "",
     keep_cols: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Project source → target schema with per-column coercion; split into
-    (valid, invalid_with_reason) DataFrames.
+) -> DataFrame:
+    """Project source → target schema with per-column coercion, one row
+    per source row, carrying the row's coercion errors in ``ERRORS_COL``.
 
-    The invalid side-output mirrors the reference's erroneous-row routing
-    (DbImportWorker.java:1003-1019 + filterDataItems extraction).
+    This is the reference's temp table (DbImportWorker.java:438-469): a
+    caller that reads both sides of the split persists this frame once
+    and takes ``split_valid`` of it.
     """
     values: list[Column] = []
     errors: list[Column] = []
@@ -321,12 +325,44 @@ def apply_mappings(
         )
     err_arr = F.array_compact(F.array(*errors)) if errors else F.array().cast("array<string>")
     keep = [F.col(c) for c in (keep_cols or []) if c in df.columns]
-    projected = df.select(*keep, *values, err_arr.alias("__errors"))
-    valid = projected.filter(F.size("__errors") == 0).drop("__errors")
-    invalid = projected.filter(F.size("__errors") > 0).withColumn(
-        "error_reason", F.array_join("__errors", "; ")
-    ).drop("__errors")
+    return df.select(*keep, *values, err_arr.alias(ERRORS_COL))
+
+
+def is_valid() -> Column:
+    """Row predicate over a ``project_mappings`` frame: no coercion error."""
+    return F.size(ERRORS_COL) == 0
+
+
+def split_valid(projected: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid, invalid_with_reason) filters over a ``project_mappings`` frame.
+
+    The invalid side-output mirrors the reference's erroneous-row routing
+    (DbImportWorker.java:1003-1019 + filterDataItems extraction).
+    """
+    valid = projected.filter(is_valid()).drop(ERRORS_COL)
+    invalid = projected.filter(~is_valid()).withColumn(
+        "error_reason", F.array_join(ERRORS_COL, "; ")
+    ).drop(ERRORS_COL)
     return valid, invalid
+
+
+def apply_mappings(
+    df: DataFrame,
+    mappings: list[ColumnMapping],
+    target_types: dict[str, str],
+    import_tz: str | None = None,
+    db_tz: str | None = None,
+    trim: bool = False,
+    null_value_string: str = "",
+    keep_cols: list[str] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``split_valid(project_mappings(...))``: the (valid, invalid) split
+    for callers that read one side, or accept re-running the projection
+    per action."""
+    return split_valid(project_mappings(
+        df, mappings, target_types, import_tz=import_tz, db_tz=db_tz, trim=trim,
+        null_value_string=null_value_string, keep_cols=keep_cols,
+    ))
 
 
 def _spark_type(t: str) -> str:

@@ -21,7 +21,11 @@ class ImportStatistics:
     items_inserted: int = 0
     items_updated: int = 0
     seconds_elapsed: float = 0.0
-    invalid_reasons: list[str] = field(default_factory=list)  # first 10, like DbImportWorker.java:889-894
+    # First 10 invalid items by source order, "item <n>: <reason>" with
+    # the 1-based data index (DbImportWorker.java:889-894). The CLI fills
+    # it from the rows its error-file extraction already collects;
+    # run_import alone leaves it empty rather than run a job for it.
+    invalid_reasons: list[str] = field(default_factory=list)
 
     @property
     def items_per_second(self) -> float:
@@ -40,4 +44,5 @@ class ImportStatistics:
             "updated": self.items_updated,
             "seconds": round(self.seconds_elapsed, 3),
             "items_per_second": round(self.items_per_second, 1),
+            "invalid_reasons": self.invalid_reasons,
         }

@@ -134,3 +134,80 @@ def test_cli_utility_modes(spark, tmp_path, capsys):
         capsys, wh, "blobs", "-importfile", str(blob), "-blobimport", "id", "id = 2",
     )
     assert rc == 2 and not st["ok"] and "DATATYPE_MISMATCH" in st["error"]
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cli_releases_its_caches(spark, tmp_path, capsys):
+    """Each import releases what run_import persisted: after a 3-file
+    wildcard import on one session, and after a `-c` abort, the session's
+    cache manager is empty again."""
+    from dbimport_spark import release_caches
+
+    release_caches(spark)
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    (tmp_path / "base.csv").write_text("id;v\n1;10\n")
+    rc, _ = _run(capsys, wh, "t", "-importfile", str(tmp_path / "base.csv"))
+    assert rc == 0
+    for i in (2, 3, 4):
+        (tmp_path / f"c_{i}.csv").write_text(f"id;v\n{i};1{i}\n{i};2{i}\n9;bad\n")
+    rc, st = _run(
+        capsys, wh, "t", "-importfile", str(tmp_path / "c_*.csv"),
+        "-import", "UPSERT", "-k", "id",
+    )
+    assert rc == 0 and st["files"] == 3
+    got = [(i["inserted"], i["invalid"], i["duplicate"]) for i in st["imports"]]
+    assert got == [(1, 1, 1)] * 3
+    assert _cache_empty(spark)
+
+    rc, st = _run(
+        capsys, wh, "t", "-importfile", str(tmp_path / "c_2.csv"),
+        "-import", "UPSERT", "-k", "id", "-c",
+    )
+    assert rc == 2 and "rolled back" in st["error"]
+    assert _cache_empty(spark)
+
+
+def test_cli_upsert_job_budget(spark, tmp_path, capsys):
+    """One CLI UPSERT of a keyed CSV with in-file duplicates, invalid rows
+    and existing keys launches a fixed number of Spark jobs (the count
+    repeats exactly for a given input). The coerced source and the
+    target-annotated dedup are each materialized once, so the import runs
+    16 jobs: 3 to read and order the source, 1 to read the target schema,
+    4 for the valid/invalid aggregate (filling the first cache), 5 for the
+    dedup/target-count aggregate (filling the second), 2 for the table
+    write and 1 for the error-file rows."""
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    base = tmp_path / "base.csv"
+    base.write_text("id;name;qty\n" + "".join(f"{i};n{i};{i}\n" for i in range(20)))
+    upd = tmp_path / "upd.csv"
+    rows = [f"{i};m{i};{2 * i}" for i in range(10, 30)]
+    rows += ["12;dup;7", "25;dup2;8", "31;bad;x", "32;bad2;1.2.3"]
+    upd.write_text("id;name;qty\n" + "\n".join(rows) + "\n")
+    rc, _ = _run(capsys, wh, "t", "-importfile", str(base))
+    assert rc == 0
+
+    sc = spark.sparkContext
+    group = "test_cli_upsert_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        rc, st = _run(
+            capsys, wh, "t", "-importfile", str(upd),
+            "-import", "UPSERT", "-k", "id", "-duplicate", "UPDATE_ALL_JOIN",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rc == 0
+    assert jobs <= 16 + 2, f"{jobs} Spark jobs for one CLI UPSERT"
+    assert (st["found"], st["invalid"], st["duplicate"], st["inserted"], st["updated"]) == (
+        24, 2, 2, 10, 10
+    )
+    assert st["invalid_reasons"] == [
+        "item 23: invalid value for qty", "item 24: invalid value for qty"
+    ]

@@ -15,7 +15,9 @@ The golden SQL is assembled per cell from the same orthogonal decisions
 the dispatcher takes: source dedup (none / drop-first / join-last-wins
 ± IGNORE NULLS), target pre-dedup (MAKE_UNIQUE drop/join), then the merge
 mode (CLEARINSERT / INSERT / UPDATE / UPSERT with the reference's
-NO_CHECK & CKECK_SOURCE_ONLY special cases).
+NO_CHECK & CKECK_SOURCE_ONLY special cases). Each cell's statistics
+(found / valid / invalid / duplicate / deleted / inserted / updated) are
+checked against counts over the same golden source and target.
 """
 
 import duckdb
@@ -86,7 +88,8 @@ def _duck():
     return con
 
 
-def _golden_sql(mode: ImportMode, dmode: DuplicateMode, uwn: bool) -> str:
+def _prelude(dmode: DuplicateMode, uwn: bool) -> str:
+    """`WITH ded AS (deduped source), wt AS (working target)`."""
     ign = "" if uwn else " IGNORE NULLS"
     win = (
         "PARTITION BY column_integer ORDER BY {o} "
@@ -128,13 +131,17 @@ def _golden_sql(mode: ImportMode, dmode: DuplicateMode, uwn: bool) -> str:
             )
     else:
         wt = "SELECT * FROM tgt"
+    return f"WITH ded AS ({ded}), wt AS ({wt})"
 
+
+# source rows whose key has no working-target row
+FRESH = "NOT EXISTS (SELECT 1 FROM wt WHERE wt.column_integer = ded.column_integer)"
+
+
+def _golden_sql(mode: ImportMode, dmode: DuplicateMode, uwn: bool) -> str:
     cols = ", ".join(TCOLS)
-    prelude = f"WITH ded AS ({ded}), wt AS ({wt})"
-    anti = (
-        f"SELECT {cols} FROM ded WHERE NOT EXISTS "
-        "(SELECT 1 FROM wt WHERE wt.column_integer = ded.column_integer)"
-    )
+    prelude = _prelude(dmode, uwn)
+    anti = f"SELECT {cols} FROM ded WHERE {FRESH}"
 
     if mode is ImportMode.CLEARINSERT:
         return f"{prelude} SELECT {cols} FROM ded"
@@ -171,6 +178,37 @@ def _golden_sql(mode: ImportMode, dmode: DuplicateMode, uwn: bool) -> str:
     if mode is ImportMode.UPDATE:
         return f"{prelude} {updated}"
     return f"{prelude} SELECT {cols} FROM ({updated}) UNION ALL {anti}"
+
+
+def _golden_stats(con, mode: ImportMode, dmode: DuplicateMode, uwn: bool) -> dict:
+    """The statistics line the reference reports for a cell: found/valid
+    over the F3 source, `duplicate` = rows collapsed by source dedup,
+    `deleted` = the CLEARINSERT pre-delete, `inserted` = rows appended,
+    `updated` = working-target rows whose key matches a source key."""
+    n_ded, n_fresh, n_matched = con.execute(
+        f"{_prelude(dmode, uwn)} SELECT "
+        "(SELECT count(*) FROM ded), "
+        f"(SELECT count(*) FROM ded WHERE {FRESH}), "
+        "(SELECT count(*) FROM wt WHERE EXISTS "
+        "(SELECT 1 FROM ded WHERE ded.column_integer = wt.column_integer))"
+    ).fetchone()
+    checked = not dmode.source_only_check
+    inserted = {
+        ImportMode.CLEARINSERT: n_ded,
+        ImportMode.INSERT: n_fresh if checked else n_ded,
+        ImportMode.UPDATE: 0,
+        ImportMode.UPSERT: n_fresh if checked else n_ded,
+    }[mode]
+    updates = mode in (ImportMode.UPDATE, ImportMode.UPSERT) and checked
+    return {
+        "found": len(SRC_ROWS),
+        "valid": len(SRC_ROWS),
+        "invalid": 0,
+        "duplicate": len(SRC_ROWS) - n_ded,
+        "deleted": len(TARGET_ROWS) if mode is ImportMode.CLEARINSERT else 0,
+        "inserted": inserted,
+        "updated": n_matched if updates else 0,
+    }
 
 
 def _canon(rows):
@@ -215,12 +253,16 @@ def test_full_mode_matrix_against_duckdb(spark, tmp_path):
                     mappings=mappings,
                     update_with_null_values=uwn,
                 )
-                result, _, _ = run_import(d, source, target, target_order_col="id")
+                result, _, stats = run_import(d, source, target, target_order_col="id")
+                cell = f"{mode.value}×{dmode.value}×uwn={uwn}"
                 got = _canon([tuple(r) for r in result.select(*TCOLS).collect()])
                 want = _canon(con.execute(_golden_sql(mode, dmode, uwn)).fetchall())
                 if got != want:
+                    failures.append(f"{cell}:\n  spark={got}\n  duck ={want}")
+                want_stats = _golden_stats(con, mode, dmode, uwn)
+                got_stats = {k: stats.as_dict()[k] for k in want_stats}
+                if got_stats != want_stats:
                     failures.append(
-                        f"{mode.value}×{dmode.value}×uwn={uwn}:\n"
-                        f"  spark={got}\n  duck ={want}"
+                        f"{cell} stats:\n  spark={got_stats}\n  duck ={want_stats}"
                     )
     assert not failures, "\n".join(failures[:5]) + f"\n({len(failures)} cells failed)"
