@@ -31,7 +31,7 @@ snapshot metadata is the same idea) reduced to its load-bearing core:
   DISTRIBUTED (``write_checkpoint_incremental`` — driver holds O(suffix)
   state, executors write the parts).
 
-Two objects carry the protocol through the code:
+Three pieces carry the protocol through the code:
 
 * ``Snapshot`` — one immutable table state: ``Snapshot.at(path,
   version)`` LISTs the log once (when no version is given) and folds it
@@ -39,6 +39,15 @@ Two objects carry the protocol through the code:
   ``table_props``, ...) and every transaction step (staging, schema
   enforcement, CHECK/unique validation, the change-data diff,
   auto-optimize) reads that one fold instead of re-deriving it;
+* one scan — ``_candidates`` is the one driver-side rule for which
+  live files a pruned read or DML may skip (zone maps, key sets, bloom
+  sidecars, partition values; log-proven empty files never qualify),
+  and ``_read_snapshot`` the one reader of a Snapshot's rows (partition
+  values re-attached, deletion vectors applied, column mapping, the
+  (file, row position) marks the DV writers and row ids key on). Every
+  public ``read_snapshot*`` and every ``txn_*`` DML is a thin caller of
+  the two; ``scan_candidates_df`` applies the same rule distributed over
+  the checkpoint parts;
 * ``_transact`` — the single optimistic-concurrency driver behind every
   ``txn_*`` writer: each attempt pins a Snapshot, asks the operation for
   its commit actions (``_Commit``) or an early result, claims the next
@@ -565,22 +574,58 @@ def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
     READ: their DV'd row positions are anti-joined out via the parquet
     ``_metadata.row_index`` column. Tables without DVs (the common case)
     take the plain scan — byte-identical plan to before DVs existed."""
-    if version is not None and version < vacuum_horizon(path):
+    return _read_snapshot(spark, Snapshot.at(path, _pinned_version(path, version)))
+
+
+def _pinned_version(path: str, version: int | None) -> int:
+    """The version a public read resolves: the latest (one log LIST) when
+    ``version`` is None, else ``version`` — refused loudly when it lies
+    below the vacuum horizon, whose files may already be deleted, instead
+    of failing mid-scan on a missing file (or answering with dead paths)."""
+    if version is None:
+        return current_version(path)
+    horizon = vacuum_horizon(path)
+    if version < horizon:
         raise ValueError(
-            f"version {version} of {path} was vacuumed (horizon "
-            f"{vacuum_horizon(path)})"
+            f"version {version} of {path} was vacuumed (horizon {horizon})"
         )
-    return _read_snapshot(spark, Snapshot.at(path, version))
+    return version
 
 
-def _read_snapshot(spark, snap: Snapshot) -> DataFrame:
-    """read_snapshot over an already-folded snapshot."""
-    if snap.ptype is not None:
-        # Partitioned table: the partition VALUE lives in the log, not
-        # the files — a raw scan would silently DROP the column. Delegate
-        # to the re-attaching read (the column name rides as a property;
-        # legacy partitioned tables without it must use the explicit
-        # form, loudly).
+def _read_snapshot(
+    spark, snap: Snapshot, names=None, *, pcol: str | None = None,
+    marked: bool = False, dvs: bool = True,
+) -> DataFrame:
+    """The one reader of a snapshot's rows: the visible rows of ``names``
+    (default: every live file) under the logical schema as of
+    ``snap.version``. Every public read and every transaction step that
+    reads table rows comes through here.
+
+    * Partitioned tables: the partition VALUE lives in the log, not the
+      files, so each value's file group is scanned with the typed literal
+      re-attached as column ``pcol`` (default: the ``partition.column``
+      property; a partitioned log without it is refused loudly).
+    * Deletion vectors apply merge-on-read; ``dvs=False`` skips them (the
+      DV writers' hit scans — re-matching an already-deleted row is
+      harmless there).
+    * ``marked`` keeps each row's file name and row position as
+      ``__f``/``__p`` (see _marked).
+    * Column mapping: files carry PHYSICAL names; props fold
+      version-by-version, so time travel shows each snapshot under the
+      schema it had.
+
+    ``names=[]`` (every file pruned) gives the table's empty frame; a
+    snapshot with no live file is an error."""
+    from functools import reduce
+
+    if names is not None and not names:
+        full = _read_snapshot(spark, snap, pcol=pcol, marked=marked, dvs=dvs)
+        return full.limit(0)
+    if names is None:
+        names = snap.names
+        if not names:
+            raise ValueError(f"no data at version {snap.version} of {snap.path}")
+    if pcol is None and snap.ptype is not None:
         pcol = snap.props.get("partition.column")
         if pcol is None:
             raise ValueError(
@@ -588,25 +633,23 @@ def _read_snapshot(spark, snap: Snapshot) -> DataFrame:
                 "partition.column property — use read_snapshot_partitioned"
                 "(spark, path, partition_col) explicitly"
             )
-        return _read_partitioned(spark, snap, pcol)
-    if not snap.live:
-        raise ValueError(f"no data at version {snap.version} of {snap.path}")
-    return _read_live(spark, snap)
-
-
-def _read_live(spark, snap: Snapshot, names=None) -> DataFrame:
-    """DV-aware scan of ``names`` (default: every live file) of an
-    unpartitioned snapshot. Column mapping: files carry PHYSICAL names;
-    the scan projects to the logical schema AS OF the snapshot's version
-    (props fold version-by-version, so time travel shows each snapshot
-    under the schema it had)."""
-    files = snap.files if names is None else [
-        os.path.join(_data_dir(snap.path), n) for n in names
-    ]
-    return _apply_colmap(
-        _read_files_dv(spark, snap.path, files, snap.dvs, snap.props),
-        snap.props,
-    )
+    groups: dict = {}
+    for n in names:
+        groups.setdefault(snap.live[n]["p"] if pcol else None, []).append(
+            os.path.join(_data_dir(snap.path), n)
+        )
+    dvmap = snap.dvs if dvs else {}
+    parts = []
+    for value in sorted(groups, key=lambda p: (p is None, p or "")):
+        df = _read_files_dv(
+            spark, snap.path, groups[value], dvmap, snap.props, marked
+        )
+        if pcol is not None:
+            df = df.withColumn(pcol, _partition_lit(value, snap.ptype))
+        parts.append(df)
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    keep = (("__f", "__p") if marked else ()) + ((pcol,) if pcol else ())
+    return _apply_colmap(out, snap.props, keep=keep)
 
 
 class SchemaEnforcementViolation(ValueError):
@@ -1447,38 +1490,15 @@ def read_snapshot_partitioned(
     directories were written before comparing against the log, and the
     re-attached literal is cast back to the partition column's original
     type (recorded in the log at write time) — a date/int partition round
-    trips as date/int, and NULL partitions round trip as NULL."""
-    return _read_partitioned(
-        spark, Snapshot.at(path, version), partition_col, partition_values
+    trips as date/int, and NULL partitions round trip as NULL. Values
+    that match no file give the table's empty frame."""
+    snap = Snapshot.at(path, _pinned_version(path, version))
+    names = (
+        None
+        if partition_values is None
+        else _candidates(snap, partitions=partition_values)
     )
-
-
-def _read_partitioned(
-    spark, snap: Snapshot, partition_col: str, partition_values=None
-) -> DataFrame:
-    """read_snapshot_partitioned over an already-folded snapshot."""
-    from functools import reduce
-
-    live = snap.partitions
-    if partition_values is not None:
-        wanted = {_encode_partition_value(v) for v in partition_values}
-        live = {n: p for n, p in live.items() if p in wanted}
-    if not live:
-        raise ValueError(f"no data for snapshot read of {snap.path}")
-    by_value: dict[str, list[str]] = {}
-    for n, p in live.items():
-        by_value.setdefault(p, []).append(os.path.join(_data_dir(snap.path), n))
-    # merge-on-read per value group
-    parts = [
-        _read_files_dv(
-            spark, snap.path, sorted(files), snap.dvs, snap.props
-        ).withColumn(partition_col, _partition_lit(value, snap.ptype))
-        for value, files in sorted(by_value.items(), key=lambda kv: (kv[0] is None, kv[0]))
-    ]
-    out = reduce(lambda a, b: a.unionByName(b), parts)
-    # physical → logical projection (partition column is log-resident and
-    # already logical — it passes through)
-    return _apply_colmap(out, snap.props, keep=(partition_col,))
+    return _read_snapshot(spark, snap, names, pcol=partition_col)
 
 
 def txn_upsert_partitioned(
@@ -1498,13 +1518,12 @@ def txn_upsert_partitioned(
     touched_values = [
         r[0] for r in source.select(partition_col).distinct().collect()
     ]
-    touched = {_encode_partition_value(v) for v in touched_values}
 
     def attempt(snap: Snapshot):
-        old_touched = [n for n, p in snap.partitions.items() if p in touched]
+        old_touched = _candidates(snap, partitions=touched_values)
         if old_touched:
-            target_slice = _read_partitioned(
-                spark, snap, partition_col, touched_values
+            target_slice = _read_snapshot(
+                spark, snap, old_touched, pcol=partition_col
             )
             merged = upsert(target_slice, source, keys)
         else:
@@ -1709,10 +1728,10 @@ def _compact_attempt(spark, snap: Snapshot, target_file_bytes: int, min_files: i
     # DV-aware: compaction MATERIALIZES deletion vectors (deleted rows
     # drop out of the rewrite; the removed files take their DV refs
     # with them) — Delta's PURGE semantics ride along with OPTIMIZE.
-    # The logical round-trip (_read_live's colmap here, _stage's unapply
-    # on the way out) also PURGES dropped columns' bytes from the
+    # The logical round-trip (_read_snapshot's colmap here, _stage's
+    # unapply on the way out) also PURGES dropped columns' bytes from the
     # rewritten files — renames keep their stable physical names.
-    added = _stage_with_meta(_read_live(spark, snap).coalesce(n_out), snap)
+    added = _stage_with_meta(_read_snapshot(spark, snap).coalesce(n_out), snap)
     return _Commit(added, snap.names, op="OPTIMIZE")
 
 
@@ -2012,8 +2031,8 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
     Unpartitioned tables; requires every live file to carry a base."""
     from pyspark.sql import functions as F
 
-    snap = Snapshot.at(path, version)
-    live, props = snap.live, snap.props
+    snap = Snapshot.at(path, _pinned_version(path, version))
+    live = snap.live
     if snap.ptype is not None:
         raise ValueError("read_snapshot_rowids: partitioned tables not supported")
     missing = sorted(n for n, d in live.items() if d.get("rid") is None)
@@ -2022,39 +2041,19 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
             f"read_snapshot_rowids: {len(missing)} live file(s) predate "
             f"row-id enablement (e.g. {missing[0]!r})"
         )
-    files = snap.files
-    if not files:
-        raise ValueError(f"no data at version {version!r} of {path}")
-    src = _scan_files(spark, files, props)
-    cols = src.columns
+    marked = _read_snapshot(spark, snap, marked=True)
     # (file → base) as a broadcast-joined DataFrame, not a literal map
     # expression: at 100 TB a table has ~10^5 files and a create_map of
     # 2×10^5 literals would bloat every task's serialized plan; a
     # broadcast hash join ships the mapping once per executor.
     bases = spark.createDataFrame(
-        [(n, live[n]["rid"]) for n in sorted(live)], "__rf string, __base bigint"
+        [(n, live[n]["rid"]) for n in sorted(live)], "__f string, __base bigint"
     )
-    marked = src.select(
-        F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__rf"),
-        F.col("_metadata.row_index").alias("__rp"),
-        *cols,
+    return (
+        marked.join(F.broadcast(bases), "__f")
+        .withColumn("_row_id", F.col("__base") + F.col("__p"))
+        .drop("__f", "__p", "__base")
     )
-    dvmap = snap.dvs
-    if dvmap:
-        pos = _dv_positions_df(spark, path, dvmap)
-        if sum(m["k"] for m in dvmap.values()) <= _DV_DRIVER_DECODE_MAX:
-            pos = F.broadcast(pos)
-        marked = marked.join(
-            pos,
-            (marked["__rf"] == pos["__dv_f"]) & (marked["__rp"] == pos["__dv_p"]),
-            "left_anti",
-        )
-    out = (
-        marked.join(F.broadcast(bases), "__rf")
-        .withColumn("_row_id", F.col("__base") + F.col("__rp"))
-        .drop("__rf", "__rp", "__base")
-    )
-    return _apply_colmap(out, props, keep=("_row_id",))
 
 
 # ------------------------------------------------------------------ vacuum
@@ -2066,12 +2065,12 @@ def vacuum(
 
     Keeps every file needed by the newest ``retain_versions`` snapshots
     (the retention horizon); files referenced only by older versions are
-    deleted and the horizon is recorded in ``_txn_log/_vacuum`` so a
-    later time-travel read below it fails LOUDLY up front instead of as a
-    missing-file error mid-scan. Files the log has never seen (a
-    concurrent writer's staged-but-uncommitted output) are left alone —
-    vacuum only reclaims what the log proves dead. Returns the deleted
-    file names.
+    deleted and the horizon is recorded as a ``_txn_log/_vacuum.<cutoff>``
+    marker so a later time-travel read below it fails LOUDLY up front
+    instead of as a missing-file error mid-scan. Files the log has never
+    seen (a concurrent writer's staged-but-uncommitted output) are left
+    alone — vacuum only reclaims what the log proves dead. Returns the
+    deleted file names.
 
     ``dry_run=True`` (Delta's VACUUM ... DRY RUN) returns the would-be
     deleted list WITHOUT removing anything and WITHOUT advancing the
@@ -2541,8 +2540,7 @@ def txn_cleanup_log(path: str) -> int:
 def vacuum_horizon(path: str) -> int:
     """Oldest version still readable (0 if never vacuumed): the max
     over the create-only ``_vacuum.<cutoff>`` markers (monotone — see
-    vacuum). A legacy single ``_vacuum`` file from an older layout is
-    honored too, tolerating a half-written one (treated as 0)."""
+    vacuum)."""
     d = _log_dir(path)
     if not os.path.isdir(d):
         return 0
@@ -2550,12 +2548,6 @@ def vacuum_horizon(path: str) -> int:
     for fn in os.listdir(d):
         if fn.startswith("_vacuum.") and fn[8:].isdigit():
             best = max(best, int(fn[8:]))
-    legacy = os.path.join(d, "_vacuum")
-    if os.path.exists(legacy):
-        with open(legacy) as fh:
-            raw = fh.read().strip()
-        if raw.isdigit():
-            best = max(best, int(raw))
     return best
 
 
@@ -2661,6 +2653,68 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
     }
 
 
+def _candidates(
+    snap: Snapshot, *, bounds: dict | None = None, keys: tuple | None = None,
+    bloom: tuple | None = None, partitions=None,
+) -> list[str]:
+    """The one driver-side candidate rule: the names (sorted) of
+    ``snap``'s live files that MAY hold a row the caller's predicate
+    selects, given what the log records about each file.
+
+    * ``bounds={col: (lo, hi)}``: the file's zone map intersects every
+      range;
+    * ``keys=(col, sorted values)``: the file's zone map covers one of
+      the values (the pruned merges' source keys);
+    * ``bloom=(col, values)``: the file's bloom sidecar may contain one
+      of the values (an empty value list refutes every bloomed file);
+    * ``partitions``: PYTHON partition values, hive-encoded exactly as
+      Spark wrote the directories, compared against the log's value.
+
+    A file the log proves empty (``__rows__ == 0``) never qualifies; a
+    file lacking the metadata a spec tests (no zone map, no sidecar) is
+    kept — pruning is sound only when the specs are IMPLIED by the
+    caller's predicate, and the caller still applies that predicate to
+    the rows. Columns are LOGICAL names, translated here to the physical
+    names the log's stats and sidecars are keyed by."""
+    import bisect
+
+    zone = [(_phys_col(snap.props, c), b) for c, b in (bounds or {}).items()]
+    if keys is not None:
+        kcol, kvals = _phys_col(snap.props, keys[0]), keys[1]
+    if bloom is not None:
+        bcol, bvals = _phys_col(snap.props, bloom[0]), list(bloom[1])
+    if partitions is not None:
+        wanted = {_encode_partition_value(v) for v in partitions}
+    out = []
+    for n in snap.names:
+        d = snap.live[n]
+        st = d["stats"]
+        if st.get("__rows__") == 0:
+            continue
+        if partitions is not None and d["p"] not in wanted:
+            continue
+        if any(
+            (rng := st.get(col)) is not None and (rng[1] < lo or rng[0] > hi)
+            for col, (lo, hi) in zone
+        ):
+            continue
+        if keys is not None and (rng := st.get(kcol)) is not None:
+            i = bisect.bisect_left(kvals, rng[0])
+            if not (i < len(kvals) and kvals[i] <= rng[1]):
+                continue
+        if bloom is not None:
+            meta = (st.get("__bloom__") or {}).get(bcol)
+            if meta is not None and not (
+                bvals
+                and _bloom_might_contain(
+                    _bloom_sidecar(snap.path, n, bcol), meta, bvals
+                )
+            ):
+                continue
+        out.append(n)
+    return out
+
+
 def read_snapshot_skipping(
     spark, path: str, col: str, lo, hi, version: int | None = None
 ) -> DataFrame:
@@ -2668,18 +2722,8 @@ def read_snapshot_skipping(
     for ``col`` cannot intersect [lo, hi] are never opened (files without
     stats are conservatively kept). The row-level predicate must still be
     applied by the caller — zone maps prune files, not rows."""
-    if version is not None and version < vacuum_horizon(path):
-        raise ValueError(f"version {version} of {path} was vacuumed")
-    snap = Snapshot.at(path, version)
-    col = _phys_col(snap.props, col)  # zone specs speak logical; stats physical
-    keep = []
-    for name in snap.names:
-        rng = snap.live[name]["stats"].get(col)
-        if rng is None or not (rng[1] < lo or rng[0] > hi):
-            keep.append(name)
-    if not keep:
-        return _read_snapshot(spark, snap).limit(0)
-    return _read_live(spark, snap, keep)
+    snap = Snapshot.at(path, _pinned_version(path, version))
+    return _read_snapshot(spark, snap, _candidates(snap, bounds={col: (lo, hi)}))
 
 
 def read_snapshot_skipping_multi(
@@ -2692,26 +2736,8 @@ def read_snapshot_skipping_multi(
     range predicate prunes on all clustered columns at once. Missing
     stats keep the file (cannot prune); the caller still applies the
     exact row predicate."""
-    if version is not None and version < vacuum_horizon(path):
-        raise ValueError(f"version {version} of {path} was vacuumed")
-    snap = Snapshot.at(path, version)
-    bounds = {_phys_col(snap.props, c): b for c, b in bounds.items()}
-    keep = []
-    for name in snap.names:
-        st = snap.live[name]["stats"]
-        if st.get("__rows__") == 0:
-            continue
-        ok = True
-        for col, (lo, hi) in bounds.items():
-            rng = st.get(col)
-            if rng is not None and (rng[1] < lo or rng[0] > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(name)
-    if not keep:
-        return _read_snapshot(spark, snap).limit(0)
-    return _read_live(spark, snap, keep)
+    snap = Snapshot.at(path, _pinned_version(path, version))
+    return _read_snapshot(spark, snap, _candidates(snap, bounds=bounds))
 
 
 def scan_candidates_df(
@@ -2734,9 +2760,7 @@ def scan_candidates_df(
     column names (zone stats are keyed physical)."""
     from pyspark.sql import functions as F
 
-    if version is not None and version < vacuum_horizon(path):
-        raise ValueError(f"version {version} of {path} was vacuumed")
-    v = current_version(path) if version is None else version
+    v = _pinned_version(path, version)
     # metadata-only fold: table_props would fold the LIVE SET on the
     # driver — the exact O(live) planning cost this path exists to avoid
     _, _, props = _fold_props_only(path, v)
@@ -2795,58 +2819,37 @@ def read_snapshot_pruned(
     files this is the read path Delta serves with its file-index scans;
     ``read_snapshot`` / ``read_snapshot_skipping_multi`` remain the
     driver-fold convenience forms (documented ceiling ~10⁵ files).
-    Results match read_snapshot_skipping_multi (unpartitioned, same
-    bounds) and read_snapshot_partitioned (partitioned, same values) —
-    pinned by tests; the caller still applies the exact row predicate.
+    The survivors form a Snapshot of the candidate files alone, read by
+    the same reader as every other form, so results match
+    read_snapshot_skipping_multi (unpartitioned, same bounds) and
+    read_snapshot_partitioned (partitioned, same values) — pinned by
+    tests; the caller still applies the exact row predicate.
 
     ``candidates`` lets a caller that already ran the distributed
     planning pass (``scan_candidates_df(...).select("n", "p", "dv")``
     collected rows, SAME bounds/partition_values/version) hand the
     survivors over instead of paying a second checkpoint-part scan —
     plan once, read once."""
-    from functools import reduce
-
-    v = current_version(path) if version is None else version
+    v = _pinned_version(path, version)
     _, ptype, props = _fold_props_only(path, v)
     cand = (
         candidates
         if candidates is not None
-        else scan_candidates_df(spark, path, bounds, partition_values, version)
+        else scan_candidates_df(spark, path, bounds, partition_values, v)
         .select("n", "p", "dv")
         .collect()
     )
     if not cand:
-        return read_snapshot(spark, path, version).limit(0)
-    dvmap = {r["n"]: json.loads(r["dv"]) for r in cand if r["dv"]}
-    if ptype is None:
-        files = [os.path.join(_data_dir(path), r["n"]) for r in cand]
-        return _apply_colmap(
-            _read_files_dv(spark, path, files, dvmap, props), props
-        )
-    if partition_col is None:
+        return _read_snapshot(spark, Snapshot.at(path, v), [])
+    if ptype is not None and partition_col is None:
         raise ValueError(
             f"{path} is partitioned (type {ptype}): read_snapshot_pruned "
             "needs partition_col to re-attach the partition column"
         )
-    by_value: dict = {}
-    for r in cand:
-        enc = json.loads(r["p"]) if r["p"] else None
-        by_value.setdefault(enc, []).append(r["n"])
-    parts = []
-    for enc in sorted(by_value, key=lambda e: (e is None, e or "")):
-        names = by_value[enc]
-        sub = _read_files_dv(
-            spark,
-            path,
-            [os.path.join(_data_dir(path), n) for n in names],
-            {n: dvmap[n] for n in names if n in dvmap},
-            props,
-        )
-        parts.append(sub.withColumn(partition_col, _partition_lit(enc, ptype)))
-    out = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    live = {r["n"]: _ckpt_decode({"p": r["p"], "dv": r["dv"]}) for r in cand}
+    return _read_snapshot(
+        spark, Snapshot(path, v, live, ptype, props), pcol=partition_col
     )
-    return _apply_colmap(out, props, keep=(partition_col,))
 
 
 def _readd_entry(n: str, d: dict, ptype: str | None):
@@ -3025,27 +3028,11 @@ def bloom_candidate_files(
     without a bloom for the column are kept conservatively; no false
     negatives by construction. ``col`` is logical; sidecars/log metadata
     key the physical name."""
+    snap = Snapshot.at(path, _pinned_version(path, version))
     return [
         os.path.join(_data_dir(path), n)
-        for n in _bloom_candidates(Snapshot.at(path, version), col, values)
+        for n in _candidates(snap, bloom=(col, values))
     ]
-
-
-def _bloom_candidates(snap: Snapshot, col: str, values) -> list[str]:
-    """bloom_candidate_files over an already-folded snapshot (names)."""
-    values = list(values)
-    col = _phys_col(snap.props, col)
-    keep = []
-    for name in snap.names:
-        meta = (snap.live[name]["stats"].get("__bloom__") or {}).get(col)
-        if meta is None:
-            keep.append(name)  # no bloom for this file: cannot prune
-        elif values and _bloom_might_contain(
-            _bloom_sidecar(snap.path, name, col), meta, values
-        ):
-            keep.append(name)
-        # bloom present and (no values, or all values refuted): pruned
-    return keep
 
 
 def read_snapshot_bloom(
@@ -3054,11 +3041,8 @@ def read_snapshot_bloom(
     """Snapshot read pruned to the bloom candidates (the point-lookup
     sibling of read_snapshot_skipping). The caller still applies the
     exact row predicate — blooms prune files, not rows."""
-    snap = Snapshot.at(path, version)
-    keep = _bloom_candidates(snap, col, values)
-    if not keep:
-        return _read_snapshot(spark, snap).limit(0)
-    return _read_live(spark, snap, keep)
+    snap = Snapshot.at(path, _pinned_version(path, version))
+    return _read_snapshot(spark, snap, _candidates(snap, bloom=(col, values)))
 
 
 def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
@@ -3379,43 +3363,60 @@ def _scan_files(spark, files: list[str], props: dict):
 
 
 def _read_files_dv(
-    spark, path: str, files: list[str], dvmap: dict[str, dict], props: dict
+    spark, path: str, files: list[str], dvmap: dict[str, dict], props: dict,
+    marked: bool = False,
 ) -> DataFrame:
     """Read parquet ``files`` applying deletion vectors for the files in
     ``dvmap``. DV-less files take the plain scan; DV'd files anti-join
     their deleted (file, row_index) pairs — a broadcast hash anti-join
     for small DVs. The two branches union, so a table where 1% of files
-    carry DVs pays the join on 1% of the scan. ``props`` (the resolving
-    version's properties) route widened tables through the upcasting
-    explicit-schema scan."""
+    carry DVs pays the join on 1% of the scan. ``marked`` reads every
+    file through one marked scan and keeps the marks (``__f``/``__p``).
+    ``props`` (the resolving version's properties) route widened tables
+    through the upcasting explicit-schema scan."""
     dvmap = {os.path.basename(f): dvmap[os.path.basename(f)]
              for f in files if os.path.basename(f) in dvmap}
-    if not dvmap:
+    if not dvmap and not marked:
         return _scan_files(spark, files, props)
     from pyspark.sql import functions as F
 
-    plain = [f for f in files if os.path.basename(f) not in dvmap]
-    dvd = [f for f in files if os.path.basename(f) in dvmap]
+    if marked:
+        dvd, plain, f, p = files, [], "__f", "__p"
+    else:
+        # the anti-join's own marks, projected away again below
+        dvd = [x for x in files if os.path.basename(x) in dvmap]
+        plain = [x for x in files if os.path.basename(x) not in dvmap]
+        f, p = "__dv_rf", "__dv_rp"
     src = _scan_files(spark, dvd, props)
     cols = src.columns
-    marked = src.select(
-        F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__dv_rf"),
-        F.col("_metadata.row_index").alias("__dv_rp"),
-        *cols,
-    )
-    pos = _dv_positions_df(spark, path, dvmap)
-    small = sum(m["k"] for m in dvmap.values()) <= _DV_DRIVER_DECODE_MAX
-    if small:
-        pos = F.broadcast(pos)
-    filtered = marked.join(
-        pos,
-        (marked["__dv_rf"] == pos["__dv_f"]) & (marked["__dv_rp"] == pos["__dv_p"]),
-        "left_anti",
-    ).select(*cols)
+    src = _marked(src, f, p)
+    if dvmap:
+        pos = _dv_positions_df(spark, path, dvmap)
+        if sum(m["k"] for m in dvmap.values()) <= _DV_DRIVER_DECODE_MAX:
+            pos = F.broadcast(pos)
+        src = src.join(
+            pos, (src[f] == pos["__dv_f"]) & (src[p] == pos["__dv_p"]), "left_anti"
+        )
+    if marked:
+        return src
+    filtered = src.select(*cols)
     if not plain:
         return filtered
     rest = _scan_files(spark, plain, props)
     return rest.unionByName(filtered, allowMissingColumns=True)
+
+
+def _marked(df: DataFrame, f: str = "__f", p: str = "__p") -> DataFrame:
+    """A parquet file scan with each row's file name (``f``) and row
+    position in that file (``p``) prepended — the (file, position)
+    identity deletion vectors, row ids and the DV writers key on."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        F.substring_index(F.col("_metadata.file_path"), "/", -1).alias(f),
+        F.col("_metadata.row_index").alias(p),
+        *df.columns,
+    )
 
 
 def txn_widen_column(
@@ -3476,12 +3477,14 @@ def txn_delete_dv(
 
     ``zone=(col, lo, hi)`` / ``bloom=(col, values)`` describe the
     predicate's key constraint and route the scan through the SAME
-    zone-map/bloom candidate pruning as the CoW twins (_cow_candidates):
+    candidate rule as every pruned read and the CoW twins (_candidates):
     a one-band delete then opens O(band) files instead of paying a
     footer read on every live file — at 100 TB that is the difference
     between a point DML and a table scan. Specs must be IMPLIED by the
     predicate (a pruned file must contain no matching row); files
-    lacking the metadata are kept conservatively.
+    lacking the metadata are kept conservatively. The predicate is
+    evaluated over the snapshot reader's marked scan of the candidates
+    (partition column re-attached, logical column names).
 
     Already-deleted positions re-matching the predicate are harmless —
     the new sidecar is the set-union of old and new positions."""
@@ -3490,70 +3493,17 @@ def txn_delete_dv(
     def attempt(snap: Snapshot):
         if snap.version < 0:
             raise ValueError(f"no data to delete at {path}")
-        live, ptype, props = snap.live, snap.ptype, snap.props
-        # zone/bloom specs speak logical names; log stats are physical
-        zone_p = (_phys_col(props, zone[0]), zone[1], zone[2]) if zone else None
-        bloom_p = (_phys_col(props, bloom[0]), bloom[1]) if bloom else None
-        cand = _cow_candidates(live, path, zone_p, bloom_p)
+        cand = _candidates(
+            snap, bounds={zone[0]: zone[1:]} if zone else None, bloom=bloom
+        )
         if not cand:
             return snap.version  # log proves no file can match
-        live = {n: live[n] for n in cand}
-        if ptype is not None:
-            # partitioned table: the predicate may reference the partition
-            # column, which lives in the LOG — scan per value group with
-            # the typed literal re-attached, exactly like the read path
-            pcol = props.get("partition.column")
-            if pcol is None:
-                raise ValueError(
-                    "txn_delete_dv: partitioned table predates the "
-                    "partition.column property — cannot re-attach the "
-                    "partition column for predicate evaluation"
-                )
-            by_value: dict = {}
-            for n, d in live.items():
-                by_value.setdefault(d["p"], []).append(
-                    os.path.join(_data_dir(path), n)
-                )
-            groups = []
-            for value, gfiles in sorted(
-                by_value.items(), key=lambda kv: (kv[0] is None, kv[0])
-            ):
-                g = _scan_files(spark, sorted(gfiles), props)
-                groups.append(
-                    g.select(
-                        F.substring_index(
-                            F.col("_metadata.file_path"), "/", -1
-                        ).alias("__f"),
-                        F.col("_metadata.row_index").alias("__p"),
-                        *g.columns,
-                    ).withColumn(pcol, _partition_lit(value, ptype))
-                )
-            from functools import reduce
-
-            src = reduce(lambda a, b: a.unionByName(b), groups)
-            src = _apply_colmap(src, props, keep=("__f", "__p", pcol))
-            hits = src.filter(F.coalesce(source_pred, F.lit(False))).select(
-                "__f", "__p"
-            )
-        else:
-            files = sorted(os.path.join(_data_dir(path), n) for n in live)
-            src = _scan_files(spark, files, props)
-            hits = (
-                _apply_colmap(
-                    src.select(
-                        F.substring_index(
-                            F.col("_metadata.file_path"), "/", -1
-                        ).alias("__f"),
-                        F.col("_metadata.row_index").alias("__p"),
-                        *src.columns,
-                    ),
-                    props,
-                    keep=("__f", "__p"),
-                )
-                .filter(F.coalesce(source_pred, F.lit(False)))
-                .select("__f", "__p")
-            )
-        dv = _write_dvs(hits, path, live)
+        hits = (
+            _read_snapshot(spark, snap, cand, marked=True, dvs=False)
+            .filter(F.coalesce(source_pred, F.lit(False)))
+            .select("__f", "__p")
+        )
+        dv = _write_dvs(hits, path, snap.live)
         if not dv:
             return snap.version
         # a lost race reaps this never-committed generation (vacuum only
@@ -3604,43 +3554,6 @@ def _write_dvs(hits: DataFrame, path: str, live: dict) -> list[dict]:
 # --------------------------------------- pruned copy-on-write DML (CoW)
 
 
-def _cow_candidates(
-    live: dict[str, dict],
-    path: str,
-    zone: tuple | None,
-    bloom: tuple | None,
-) -> list[str]:
-    """Live file names that MAY contain rows matching a predicate whose
-    key constraint is described by ``zone=(col, lo, hi)`` and/or
-    ``bloom=(col, values)``. Files lacking the metadata are kept
-    conservatively — pruning is sound only if the spec is IMPLIED by the
-    caller's predicate (a pruned file must contain no matching row)."""
-    # a file the log PROVES empty (__rows__ == 0 from footer stats) can
-    # contain no matching row — never a candidate, whatever the spec
-    names = sorted(n for n in live if live[n]["stats"].get("__rows__") != 0)
-    if zone is not None:
-        col, lo, hi = zone
-        kept = []
-        for n in names:
-            rng = live[n]["stats"].get(col)
-            if rng is None or not (rng[1] < lo or rng[0] > hi):
-                kept.append(n)
-        names = kept
-    if bloom is not None:
-        col, values = bloom
-        values = list(values)
-        kept = []
-        for n in names:
-            meta = (live[n]["stats"].get("__bloom__") or {}).get(col)
-            if meta is None or (
-                values
-                and _bloom_might_contain(_bloom_sidecar(path, n, col), meta, values)
-            ):
-                kept.append(n)
-        names = kept
-    return names
-
-
 def _stage_with_meta(
     df: DataFrame, snap: Snapshot, stats_cols=(), bloom_col: str | None = None,
     fpp: float = 0.01,
@@ -3680,7 +3593,7 @@ def txn_delete_cow(
     a table rewrite — the difference between txn_delete and this form.
 
     ``zone``/``bloom`` describe the predicate's key constraint and MUST
-    be implied by it (see _cow_candidates); candidate files with
+    be implied by it (see _candidates); candidate files with
     deletion vectors are materialized by the rewrite (their DVs retire
     with the removed files). NULL-predicate rows are kept, as in
     txn_delete."""
@@ -3695,13 +3608,12 @@ def txn_delete_cow(
                 "rewritten files would lose their partition values; use "
                 "the partitioned rewrite forms instead"
             )
-        props = snap.props
-        zone_p = (_phys_col(props, zone[0]), zone[1], zone[2]) if zone else None
-        bloom_p = (_phys_col(props, bloom[0]), bloom[1]) if bloom else None
-        cand = _cow_candidates(snap.live, path, zone_p, bloom_p)
+        cand = _candidates(
+            snap, bounds={zone[0]: zone[1:]} if zone else None, bloom=bloom
+        )
         if not cand:
             return snap.version
-        kept = _read_live(spark, snap, cand).filter(
+        kept = _read_snapshot(spark, snap, cand).filter(
             ~F.coalesce(source_pred, F.lit(False))
         )
         added = _stage_with_meta(kept, snap, stats_cols, bloom_col)
@@ -3751,8 +3663,10 @@ def txn_merge_cow(
                 "txn_merge_cow: partitioned tables are not supported — "
                 "use txn_upsert_partitioned (partition-pruned rewrite)"
             )
-        cand = _key_candidates(snap, pk, key_vals, use_bloom)
-        merged = upsert(_read_slice(spark, snap, cand), source, keys)
+        cand = _candidates(
+            snap, keys=(pk, key_vals), bloom=(pk, key_vals) if use_bloom else None
+        )
+        merged = upsert(_read_snapshot(spark, snap, cand), source, keys)
         added = _stage_with_meta(merged, snap, stats_cols, bloom_col)
         _validate_staged(spark, snap, added)
         return _Commit(added, cand, op="MERGE")
@@ -3768,43 +3682,6 @@ def _source_keys(source: DataFrame, pk: str) -> list:
     return sorted(
         r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
     )
-
-
-def _key_candidates(snap: Snapshot, pk: str, key_vals, use_bloom: bool) -> list[str]:
-    """Live files that MAY hold one of the sorted ``key_vals`` in column
-    ``pk``: files whose zone map for ``pk`` covers a source key (files
-    without one are kept conservatively), narrowed by the bloom sidecars
-    when ``use_bloom``. Log-proven empty files never qualify — they hold
-    no row to match."""
-    import bisect
-
-    pk_phys = _phys_col(snap.props, pk)  # log stats are physical-keyed
-
-    def _range_hits_any(rng) -> bool:
-        i = bisect.bisect_left(key_vals, rng[0])
-        return i < len(key_vals) and key_vals[i] <= rng[1]
-
-    cand = []
-    for n in snap.names:
-        st = snap.live[n]["stats"]
-        if st.get("__rows__") == 0:
-            continue
-        rng = st.get(pk_phys)
-        if rng is None or _range_hits_any(rng):
-            cand.append(n)
-    if use_bloom and cand:
-        cand = _cow_candidates(
-            {n: snap.live[n] for n in cand}, snap.path, None, (pk_phys, key_vals)
-        )
-    return cand
-
-
-def _read_slice(spark, snap: Snapshot, names) -> DataFrame:
-    """The pruned merges' target slice: the ``names`` files' visible rows,
-    or an empty frame of the table's schema when every file was pruned."""
-    if names:
-        return _read_live(spark, snap, names)
-    return _read_snapshot(spark, snap).limit(0)
 
 
 # -------------------------------------- table properties + CHECK constraints
@@ -4079,33 +3956,19 @@ def _validate_staged(
     if not checks or not staged:
         return checks
     path = snap.path
-    # the first partitioned commit sets the property IN this commit — the
-    # writer passes the column name explicitly for that window
-    pcol = partition_col or snap.props.get("partition.column")
-    plain, by_value = [], {}
+    # the staged files as a snapshot of their own, read by the one
+    # reader (staged files carry physical names; CHECK expressions speak
+    # logical). The first partitioned commit sets partition.column IN
+    # this commit — the writer passes the column name for that window.
+    live, ptype = {}, None
     for e in staged:
-        if isinstance(e, dict) and e.get("p") is not None and pcol:
-            by_value.setdefault((e["p"], e.get("t")), []).append(e["n"])
-        else:
-            plain.append(e["n"] if isinstance(e, dict) else e)
-    parts = []
-    if plain:
-        parts.append(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(_data_dir(path), n) for n in plain]
-            )
-        )
-    for (value, ptype), group in sorted(by_value.items()):
-        parts.append(
-            spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(_data_dir(path), n) for n in group])
-            .withColumn(pcol, _partition_lit(value, ptype))
-        )
-    from functools import reduce
-
-    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-    # staged files carry physical names; CHECK expressions speak logical
-    df = _apply_colmap(df, snap.props, keep=(pcol,) if pcol else ())
+        e = e if isinstance(e, dict) else {"n": e}
+        live[e["n"]] = {"p": e.get("p"), "stats": {}, "dv": None, "rid": None}
+        ptype = e.get("t") or ptype
+    df = _read_snapshot(
+        spark, Snapshot(path, snap.version, live, ptype, snap.props),
+        pcol=partition_col,
+    )
     bad = df.filter(_violation_pred(checks)).count()
     if bad:
         _reap(path, staged)
@@ -4220,20 +4083,19 @@ def _validate_unique(spark, snap: Snapshot, staged) -> None:
             # to drive bloom pruning (point ingest); bulk appends prune
             # by zone range alone and clash-check with a distributed
             # semi-join — no O(batch) driver collect on the hot path.
-            col_phys = _phys_col(props, col)
             if top["__n"] <= _UNIQUE_BLOOM_KEYS_MAX:
                 keys = [r[0] for r in kdf.select(col).collect()]
-                zone = (col_phys, min(keys), max(keys))
-                bloom = (col_phys, keys)
+                bounds = {col: (min(keys), max(keys))}
+                bloom = (col, keys)
                 probe = F.broadcast(kdf.select(col))
             else:
-                zone = (col_phys, top["__mn"], top["__mxk"])
+                bounds = {col: (top["__mn"], top["__mxk"])}
                 bloom = None
                 probe = kdf.select(col)
-            cand = _cow_candidates(live, path, zone, bloom)
+            cand = _candidates(snap, bounds=bounds, bloom=bloom)
             if not cand:
                 continue  # log proves no live file can hold these keys
-            ldf = _read_live(spark, snap, cand)
+            ldf = _read_snapshot(spark, snap, cand)
             clash = (
                 ldf.select(col).join(probe, col, "left_semi").limit(1).count()
             )
@@ -4486,7 +4348,7 @@ def txn_zorder(
             raise ValueError(f"no data to optimize at {path}")
         if snap.ptype is not None:
             raise ValueError("txn_zorder: partitioned tables are not supported")
-        df = _read_live(spark, snap)
+        df = _read_snapshot(spark, snap)
         bounds = df.agg(
             *[f for c in cols for f in (F.min(c), F.max(c))]
         ).first()
@@ -4645,49 +4507,34 @@ def txn_compact_partitioned(
             return snap.version
         if snap.ptype is None:
             return _compact_attempt(spark, snap, target_file_bytes, min_files)
-        live, ptype, props = snap.live, snap.ptype, snap.props
-        pcol = props.get("partition.column")
-        if pcol is None:
-            raise ValueError(
-                "txn_compact_partitioned: partitioned table predates the "
-                "partition.column property — cannot re-attach the column "
-                "for the rewrite"
-            )
         dvmap = snap.dvs
         by_value: dict = {}
-        for n, d in live.items():
+        for n, d in snap.live.items():
             by_value.setdefault(d["p"], []).append(n)
         # pick the partitions worth rewriting; ONE staging job covers them
         # all (a per-partition job loop serializes P tiny jobs — the wrong
         # shape when one table has thousands of values)
-        groups: list = []
+        n_groups = 0
         removed: list = []
-        for value, names in sorted(
-            by_value.items(), key=lambda kv: (kv[0] is None, kv[0])
-        ):
+        for names in by_value.values():
             has_dv = any(n in dvmap for n in names)
-            files = [os.path.join(_data_dir(path), n) for n in names]
-            total = sum(os.path.getsize(f) for f in files)
+            total = sum(
+                os.path.getsize(os.path.join(_data_dir(path), n)) for n in names
+            )
             n_out = max(1, math.ceil(total / target_file_bytes))
             if (len(names) < min_files or n_out >= len(names)) and not has_dv:
                 continue
-            df = _read_files_dv(spark, path, files, dvmap, props).withColumn(
-                pcol, _partition_lit(value, ptype)
-            )
-            groups.append(df)
+            n_groups += 1
             removed.extend(names)
         if not removed:
             return snap.version
-        from functools import reduce
-
-        union = _apply_colmap(
-            reduce(lambda a, b: a.unionByName(b), groups), props, keep=(pcol,)
-        )
+        union = _read_snapshot(spark, snap, removed)
+        pcol = snap.props["partition.column"]  # _read_snapshot checked it
         # one task per rewritten value → one output file per value (the
         # per-value coalesce granularity; finer splitting belongs to the
         # writer's maxRecordsPerFile at real scale)
         added = _stage_partitioned(
-            union.repartition(len(groups), _F.col(pcol)), snap, pcol
+            union.repartition(n_groups, _F.col(pcol)), snap, pcol
         )
         return _Commit(added, removed, op="OPTIMIZE")
 
@@ -4713,11 +4560,13 @@ def txn_merge_dv(
 
     ``prune_key`` (default: the single merge key) routes the position
     scan through the log's zone-map — and, with ``use_bloom``, bloom —
-    candidacy (_cow_candidates), like txn_merge_cow: only files that MAY
+    candidacy (_candidates), like txn_merge_cow: only files that MAY
     contain a source key are opened for the key scan. Non-candidates
     provably contain no matched row, so pruning cannot change the
     result; a point-update batch then reads O(band) footers, not every
-    live file. Files without the metadata are kept conservatively.
+    live file. Files without the metadata are kept conservatively. The
+    key scan is the snapshot reader's marked scan of the candidates, so
+    merge keys speak logical column names.
 
     Unpartitioned tables only (like the other DV writers' staging)."""
     from pyspark.sql import functions as F
@@ -4734,28 +4583,19 @@ def txn_merge_dv(
                 "txn_merge_dv: partitioned tables are not supported — use "
                 "txn_upsert_partitioned"
             )
-        props, live = snap.props, snap.live
-        if key_vals is not None:
-            live = {
-                n: live[n] for n in _key_candidates(snap, pk, key_vals, use_bloom)
-            }
-        files = sorted(os.path.join(_data_dir(path), n) for n in live)
-        # key-column-pruned scan: only the keys + row position leave the
-        # parquet reader; matched VISIBLE rows' positions fold into DVs
-        # (already-deleted rows re-matching is harmless set-union)
-        if files:
-            tgt = _scan_files(spark, files, props).select(
-                F.substring_index(F.col("_metadata.file_path"), "/", -1).alias("__f"),
-                F.col("_metadata.row_index").alias("__p"),
-                # files carry physical names; merge keys speak logical
-                *[F.col(_phys_col(props, k)).alias(k) for k in keys],
+        spec = (pk, key_vals) if pk is not None else None
+        cand = _candidates(snap, keys=spec, bloom=spec if use_bloom else None)
+        dv = []
+        if cand:  # else every file pruned: pure-insert batch, no positions
+            # key-column-pruned scan: only the keys + row position leave
+            # the parquet reader; matched rows' positions fold into DVs
+            # (already-deleted rows re-matching is harmless set-union)
+            hits = (
+                _read_snapshot(spark, snap, cand, marked=True, dvs=False)
+                .join(F.broadcast(source.select(*keys).distinct()), keys, "left_semi")
+                .select("__f", "__p")
             )
-            hits = tgt.join(
-                F.broadcast(source.select(*keys).distinct()), keys, "left_semi"
-            ).select("__f", "__p")
-        else:  # every file pruned: pure-insert batch, no positions to scan
-            hits = spark.createDataFrame([], "__f: string, __p: bigint")
-        dv = _write_dvs(hits, path, live)
+            dv = _write_dvs(hits, path, snap.live)
         added = _stage(source, snap)
         _validate_staged(spark, snap, added)
         # a lost race reaps the never-committed generation AND the staged
@@ -4857,8 +4697,10 @@ def txn_merge_into_cow(
             raise ValueError(
                 "txn_merge_into_cow: partitioned tables are not supported"
             )
-        cand = _key_candidates(snap, pk, key_vals, use_bloom)
-        merged = merge_into(_read_slice(spark, snap, cand), source, keys, clauses)
+        cand = _candidates(
+            snap, keys=(pk, key_vals), bloom=(pk, key_vals) if use_bloom else None
+        )
+        merged = merge_into(_read_snapshot(spark, snap, cand), source, keys, clauses)
         added = _stage_with_meta(merged, snap, stats_cols, bloom_col)
         _validate_staged(spark, snap, added)
         extra = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None

@@ -1376,7 +1376,7 @@ class TestCopyOnWriteDML:
             for n, st in txnlog.snapshot_stats(table).items()
             # files intersecting the pruned band; log-proven-empty parts
             # are never candidates, stat-less ones conservatively are —
-            # mirroring _cow_candidates
+            # mirroring _candidates
             if st.get("__rows__") != 0 and (st.get("k") is None or st["k"][0] <= 24)
         }
         txnlog.txn_delete_cow(
