@@ -1794,8 +1794,8 @@ FROM merged""",
 )
 def lake_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symlink-format manifest interop (txnlog.export_symlink_manifest —
-    Delta's symlink_format_manifest): after an upsert, one atomic text
-    file lists the snapshot's live parquet paths, and a LOG-IGNORANT
+    Delta's symlink_format_manifest): after an upsert and the compaction
+    that materializes its deletion vectors, one atomic text file lists the snapshot's live parquet paths, and a LOG-IGNORANT
     reader (here: a plain spark.read.parquet over the listed paths —
     Presto/Trino/Hive external tables and DuckDB read the same way)
     sees exactly the committed snapshot. A post-export append must NOT
@@ -1830,6 +1830,9 @@ def lake_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         ["c_custkey"],
     )
+    # the merge-on-read upsert left deletion vectors a manifest reader
+    # cannot apply: materialize them first
+    txnlog.txn_compact(spark, path)
     manifest = txnlog.export_symlink_manifest(path)
     with open(manifest) as fh:
         files = [line.strip() for line in fh if line.strip()]
@@ -1984,17 +1987,17 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
 FROM merged""",
 )
 def lake_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE-ON-READ UPSERT via deletion vectors (txnlog.txn_merge_dv) —
-    the third merge strategy beside the whole-snapshot rewrite
-    (★merge_upsert's lake form) and the pruned CoW rewrite
-    (★lake_merge_into_pruned), graded against the SAME oracle as the
-    latter: identical semantics, different write amplification. Matched
-    target rows are deleted by DV sidecars built from a KEY-COLUMN-pruned
-    scan and the whole source appends as new files, all in one atomic
-    commit — no pre-existing file is rewritten (pinned by
-    tests/test_txnlog.py::TestMergeOnReadUpsert). At 100 TB this is the
-    cheapest point-update write path: O(source) new bytes + O(matched
-    rows) sidecar bytes; reads pay the anti-join until OPTIMIZE."""
+    """MERGE-ON-READ UPSERT via deletion vectors (txnlog.txn_merge_dv —
+    txn_upsert's merge-on-read core with a zone-map-pruned matched-row
+    scan) beside the pruned CoW rewrite (★lake_merge_into_pruned),
+    graded against the SAME oracle as the latter: identical semantics,
+    different write amplification. Matched target rows are deleted by DV
+    sidecars and their replacement plus the new keys append as new
+    files, all in one atomic commit — no pre-existing file is rewritten
+    (pinned by tests/test_txnlog.py::TestMergeOnReadUpsert). At 100 TB
+    this is the cheapest point-update write path: O(source) new bytes +
+    O(matched rows) sidecar bytes; reads pay the anti-join until
+    OPTIMIZE."""
     import os
     import shutil
     import tempfile
@@ -2184,7 +2187,7 @@ def lake_rename_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical names, and an UPSERT keyed on logical names lands across the
     mapping. The graded flow: two appends → rename bal_cents→bal → drop
     mktsegment → CHECK bal IS NOT NULL → third append (new logical
-    schema) → whole-snapshot UPSERT (+777 on the low key band), then a
+    schema) → merge-on-read UPSERT (+777 on the low key band), then a
     total/sum/max readout over the final logical schema."""
     import os
     import shutil

@@ -1246,12 +1246,13 @@ def stream_lake_cdc_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROW-LEVEL CHANGE DATA FEED through the lake_cdc streaming source
     (readChangeFeed=true — Delta's modern CDF, not the legacy
     ignoreChanges arm): two append commits, a deletion-vector DELETE, a
-    third append, and a whole-snapshot UPSERT stream back as typed change
+    third append, and a merge-on-read UPSERT stream back as typed change
     rows. Appends arrive as `insert` rows (one task per file); the DV
     commit re-reads ONLY the newly-deleted positions of the touched files
     and emits the deleted rows themselves as `delete` preimages; the
-    UPSERT rewrite streams as the keyless multiset diff, so each updated
-    row surfaces as a delete+insert pair and unchanged rows cancel.
+    UPSERT (DVs on the matched rows plus their appended replacement)
+    streams the same way, so each updated row surfaces as a
+    delete+insert pair and untouched rows are never read.
     Value-graded per (version, change_type) on counts, id sums and char
     sums (the upsert shifts n_chars by +1000, pinning pre/post images).
     At 100 TB the planning is still metadata-only and the DV arm reads
@@ -1332,17 +1333,17 @@ FROM documents WHERE doc_id % 7 = 0""",
 )
 def stream_lake_cdc_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stream_lake_cdc_dv's SCALE-PATH twin: the same commit sequence on
-    a ``cdf.enabled=true`` table, so the whole-snapshot UPSERT's row-level
-    diff is MATERIALIZED at commit time into ``_change_data/v<N>``
-    parquet (txnlog._write_change_data — a distributed union + hash-agg
-    multiset diff) and the CDC stream plans ONE TASK PER CHANGE FILE
-    instead of the documented single-task on-read ``_CowDiff`` fallback
-    the un-opted-in twin exercises (sources/lakecdc.py fallback arm,
+    a ``cdf.enabled=true`` table, so the UPSERT's row-level diff (its
+    matched rows against their replacement) is MATERIALIZED at commit
+    time into ``_change_data/v<N>`` parquet (txnlog._write_change_data —
+    a distributed union + hash-agg multiset diff) and the CDC stream plans ONE TASK PER CHANGE FILE
+    instead of the per-file DV-delta and added-file fallback the
+    un-opted-in twin exercises (sources/lakecdc.py fallback arms,
     guarded by test_change_data_write_failure_degrades_to_fallback).
     The fixture ASSERTS the change files exist before streaming — a
     green row here grades the 100 TB arm, not the fallback. Version
     numbering is shifted by the property commit (v0): appends v1/v2,
-    DV delete v3, append v4, upsert rewrite v5."""
+    DV delete v3, append v4, upsert v5."""
     import shutil
 
     from dbimport_spark import txnlog

@@ -10,23 +10,25 @@ checkpoint resumes exactly after the last committed version with no
 rescan of old data — the log IS the write-ahead index.
 
 Scope (documented, loud): in the default mode this is append-only CDC.
-A commit that REMOVES files (upsert/delete whole-snapshot rewrites) or
-attaches deletion vectors is not append data; reading past one raises
-unless `ignoreChanges=true` (its added files still stream) or
-`skipChangeCommits=true` (the commit is dropped) — the same contract
-arms Delta's streaming source exposes. With `readChangeFeed=true` the
+A commit that REMOVES files (whole-snapshot rewrites) or attaches
+deletion vectors (DV deletes, merge-on-read upserts) is not append
+data; reading past one raises unless `ignoreChanges=true` (its added
+files still stream) or `skipChangeCommits=true` (the commit is
+dropped) — the same contract arms Delta's streaming source exposes. With `readChangeFeed=true` the
 source instead emits ROW-LEVEL change data (`_change_type` column):
 appends stream as `insert` rows, deletion-vector commits re-read the
 newly-deleted positions as `delete` rows, OPTIMIZE commits are skipped
 (content-invariant), and CoW rewrite commits emit the keyless multiset
 diff (an update surfaces as a delete+insert pair — this source has no
 merge keys; key-aware update_pre/postimage classification stays with
-the batch-side `read_changes`). On `cdf.enabled=true` tables the
-rewrite diff is read from the WRITER's materialized
-`_change_data/v<N>` files — one task per file, fully distributed —
-with the on-read diff as the silent fallback when they are absent. Partitioned tables stream when the
-`partitionColumn` option names the log-resident partition column (the
-value is re-attached from the log, typed per the recorded DDL).
+the batch-side `read_changes`). On `cdf.enabled=true` tables any
+commit that wrote `_change_data/v<N>` files (upserts, merges, whole
+rewrites) is read from those WRITER-materialized files — one task per
+file, fully distributed, and a no-op update cancels there — with the
+per-file and on-read diffs as the silent fallback when they are
+absent. Partitioned tables stream when the `partitionColumn` option
+names the log-resident partition column (the value is re-attached from
+the log, typed per the recorded DDL).
 Column-mapped tables (txn_rename_column / txn_drop_column) stream under
 their LOGICAL schema as of stream start — files carry stable physical
 names and the conform step translates; a rename landing mid-stream is
@@ -279,6 +281,19 @@ def _partition_array(pval, ptype, n_rows):
     return pa.array([v] * n_rows, arrow_t)
 
 
+def _change_files(path: str, version: int) -> list[str] | None:
+    """The writer-materialized change files of ``version`` (sorted; the
+    list is empty when the commit changed no row), or None when the
+    commit has none (cdf.enabled off, an append or DV-only delete, or a
+    change-data write that failed after the commit)."""
+    import glob
+
+    d = os.path.join(path, "_change_data", f"v{version:08d}")
+    if not os.path.isdir(d):
+        return None
+    return sorted(glob.glob(os.path.join(d, "*.parquet")))
+
+
 class LakeCdcStreamReader(DataSourceStreamReader):
     def __init__(self, path: str, options, schema=None):
         # arrow schema of the DATA columns (everything but the appended
@@ -423,10 +438,12 @@ class LakeCdcStreamReader(DataSourceStreamReader):
     def _partitions_cdf(self, s: int, e: int):
         """Plan change-feed partitions for versions (s, e]. Metadata-only
         on the driver: the log folds to ``s`` once for prior DV refs /
-        partition values, then each entry applies incrementally. Appends
-        fan out one insert task per file, DV-only commits one positions
-        task per touched file; rewrite commits become ONE diff task over
-        the touched files (their visible rows on both sides)."""
+        partition values, then each entry applies incrementally. A commit
+        with materialized change files fans out one task per file;
+        otherwise appends fan out one insert task per file, DV-only
+        commits one positions task per touched file, and rewrite commits
+        become ONE diff task over the touched files (their visible rows
+        on both sides)."""
         data_dir = _data_dir(self._path)
         live: dict[str, dict] = {}
         parts: list = []
@@ -450,30 +467,19 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                 if not (s < floor <= e):
                     raise
                 entry0 = _read_entry(self._path, floor)
-                cdf_dir0 = os.path.join(
-                    self._path, "_change_data", f"v{floor:08d}"
-                )
-                if entry0.get("removed", []):
-                    import glob as _glob
-
-                    files0 = (
-                        sorted(
-                            _glob.glob(os.path.join(cdf_dir0, "*.parquet"))
-                        )
-                        if os.path.isdir(cdf_dir0)
-                        else []
-                    )
-                    if not files0:
-                        raise ValueError(
-                            f"lake_cdc: change data of rewrite version "
-                            f"{floor} of {self._path} needs pre-floor "
-                            "state that log cleanup discarded and no "
-                            "materialized _change_data exists — restart "
-                            "from a fresh checkpoint with "
-                            f"startingVersion > {floor}, or enable "
-                            "cdf.enabled before cleanup"
-                        )
+                files0 = _change_files(self._path, floor)
+                if files0 is not None:
                     parts.extend(_CdfFile(f, floor) for f in files0)
+                elif entry0.get("removed", []):
+                    raise ValueError(
+                        f"lake_cdc: change data of rewrite version "
+                        f"{floor} of {self._path} needs pre-floor "
+                        "state that log cleanup discarded and no "
+                        "materialized _change_data exists — restart "
+                        "from a fresh checkpoint with "
+                        f"startingVersion > {floor}, or enable "
+                        "cdf.enabled before cleanup"
+                    )
                 elif entry0.get("dv", []):
                     raise ValueError(
                         f"lake_cdc: DV delta of version {floor} of "
@@ -539,6 +545,14 @@ class LakeCdcStreamReader(DataSourceStreamReader):
             def _dvp(d):
                 return os.path.join(data_dir, d["d"]) if d else None
 
+            # any row-changing commit: prefer the writer's materialized
+            # change files (cdf.enabled tables) — one task per file, and
+            # a no-op update cancels there, where the per-file paths
+            # below would emit a delete+insert pair
+            cdf_files = _change_files(self._path, v)
+            if cdf_files is not None:
+                parts.extend(_CdfFile(f, v) for f in cdf_files)
+                continue
             if not removed_names:
                 # append and/or DV-only commit (incl. MERGE_DV): both
                 # sides stay per-file — fully distributed
@@ -558,22 +572,8 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                         )
                     )
             else:
-                # rewrite commit: prefer the writer's materialized change
-                # files (cdf.enabled tables) — one task per file, fully
-                # distributed; fall back to the one-task on-read diff
-                import glob as _glob
-
-                cdf_dir = os.path.join(
-                    self._path, "_change_data", f"v{v:08d}"
-                )
-                if os.path.isdir(cdf_dir):
-                    for f in sorted(
-                        _glob.glob(os.path.join(cdf_dir, "*.parquet"))
-                    ):
-                        parts.append(_CdfFile(f, v))
-                    continue
-                # on-read fallback: one diff task over the touched
-                # files' visible rows
+                # rewrite commit without change files: one diff task
+                # over the touched files' visible rows
                 old_side = sorted(removed_names) + dv_changed
                 new_side = sorted(added_names) + dv_changed
                 diff = _CowDiff(

@@ -57,6 +57,16 @@ Three pieces carry the protocol through the code:
   auto-optimize on the plain appends) and raises ``TxnConflict`` after
   ``max_retries`` lost races.
 
+The DML strategy: an UPSERT (``txn_upsert``, and ``txn_merge_dv`` with a
+pruned key scan) is MERGE-ON-READ through one core, ``_merge_on_read``:
+it reads only the rows whose key the source carries, deletes them with
+deletion vectors and appends their replacement in one commit that
+removes no file, and takes its change data from those rows — O(batch)
+bytes per batch, as Delta's MERGE does. The whole-snapshot rewrites
+(``txn_delete``, ``txn_merge_into``, compaction) and the pruned
+copy-on-write forms (``txn_*_cow``) replace the files they read;
+``txn_compact`` materializes accumulated deletion vectors.
+
 Time travel is free: resolve the snapshot at any historical version down
 to the VACUUM horizon; ``vacuum`` reclaims files no retained snapshot
 references (and only files the log proves dead — concurrent writers'
@@ -1113,7 +1123,9 @@ class _Commit:
     the new snapshot); ``"give_up"`` — keep them across attempts and
     delete them only when the driver gives up (the stage-once appends);
     None — they are not this attempt's output (RESTORE re-adds files
-    the table already owns)."""
+    the table already owns). ``change_data`` is the (preimage,
+    postimage) pair of row frames whose multiset diff is the commit's
+    change data (see _write_change_data)."""
 
     added: list
     removed: list | tuple = ()
@@ -1121,8 +1133,7 @@ class _Commit:
     props: dict | None = None
     op: str | None = None
     reap: str | None = "lost"
-    change_data: bool = False
-    touched_keys: tuple | None = None
+    change_data: tuple | None = None
     auto_optimize: bool = False
 
 
@@ -1152,10 +1163,8 @@ def _transact(spark, path: str, attempt, max_retries: int, what: str):
             if acts.reap == "lost":
                 _reap(path, acts.added, acts.dv)
             continue
-        if acts.change_data:
-            _maybe_write_change_data(
-                spark, snap, v, acts.removed, acts.added, acts.touched_keys
-            )
+        if acts.change_data is not None:
+            _maybe_write_change_data(snap, v, *acts.change_data)
         if acts.auto_optimize:
             return _maybe_auto_optimize(spark, snap, v)
         return v
@@ -1313,37 +1322,89 @@ def txn_append(spark, df: DataFrame, path: str, max_retries: int = 5) -> int:
 def txn_upsert(
     spark, source: DataFrame, path: str, keys, max_retries: int = 3
 ) -> int:
-    """Transactional UPSERT: merge source into the current snapshot with
-    the library merge (operators/merge.py upsert semantics), stage the
-    merged result, and commit it as {add: new files, remove: ALL previous
-    live files}. Readers see the old or the new table, never a mix; old
-    versions stay time-travelable.
+    """Transactional UPSERT with the library merge's semantics
+    (operators/merge.py upsert), committed MERGE-ON-READ: the target rows
+    whose key the source carries are deleted by deletion vectors, and
+    their replacement plus the source's new keys append as fresh files,
+    in one commit that removes no file (_merge_on_read). A batch of 1%
+    of the keys writes O(batch) bytes, not a copy of the table. Readers
+    see the old or the new table, never a mix; old versions stay
+    time-travelable.
 
-    This is the whole-snapshot rewrite form; partition-pruned selective
-    rewrite (sinks.merge_into_partitioned) composes with the same log by
-    removing/adding only the touched partitions' files — kept separate
-    here so the commit protocol stays readable."""
-    from dbimport_spark.operators.merge import upsert
-
-    # An upsert only changes rows whose key appears in the source, so the
-    # CDF diff (when cdf.enabled) can be pre-filtered to those keys —
-    # plain string keys only (KeyColumn key functions would change what
-    # "appears in the source" means; none of the txn callers use them).
-    touched_keys = (
-        (list(keys), source) if all(isinstance(k, str) for k in keys) else None
+    Because untouched files stay live: their rows keep their row ids;
+    export_symlink_manifest refuses the table (it carries DVs) until
+    txn_compact materializes them; vacuum has nothing to reclaim from an
+    upsert; an ignoreChanges stream re-emits only the replacement rows.
+    Partitioned tables are refused (txn_upsert_partitioned rewrites the
+    touched partitions)."""
+    return _merge_on_read(
+        spark, source, path, keys, max_retries, "txn_upsert", "UPSERT"
     )
 
-    def attempt(snap: Snapshot):
-        _refuse_partitioned(snap, "txn_upsert")
-        merged = upsert(_read_snapshot(spark, snap), source, keys)
-        added = _stage_with_meta(merged, snap)
-        _validate_staged(spark, snap, added)  # merge may introduce new rows
-        return _Commit(
-            added, snap.names, op="UPSERT", change_data=True,
-            touched_keys=touched_keys,
-        )
 
-    return _transact(spark, path, attempt, max_retries, f"upserting {path}")
+def _merge_on_read(
+    spark, source: DataFrame, path: str, keys, max_retries: int, name: str,
+    op: str, candidates=None,
+) -> int:
+    """The merge-on-read UPSERT behind txn_upsert and txn_merge_dv. Each
+    attempt reads M once — the visible rows of the candidate files
+    (``candidates(snapshot)``, default every file _candidates keeps)
+    whose key matches a source key under the merge's own key equality
+    (_with_keys: NULL keys never match) — and persists it for three uses:
+
+    * the replacement ``upsert(M, source)`` is staged as right-sized
+      files (AQE rebalance) and validated against the table's checks;
+    * M's (file, row position) marks fold into DV sidecars (_write_dvs);
+    * M (preimage) against the replacement (postimage) is the commit's
+      change data under ``cdf.enabled``.
+
+    The commit is {add: replacement files, dv: M's positions}; a lost
+    race reaps both. This is exact, not approximate:
+    update_all_existing is row-local and the insert branch anti-joins
+    the source against keys M already holds, so upsert(T, S) =
+    (T − M) ⊎ upsert(M, S) as multisets, duplicate keys on either side
+    included. When the candidate rule leaves no file, no file is opened
+    and the batch is a pure insert of the source as given (there is no
+    table schema to project it onto)."""
+    from pyspark.sql import functions as F
+
+    from dbimport_spark.operators.dedup import _with_keys
+    from dbimport_spark.operators.merge import upsert
+
+    keys = list(keys)
+    held = []  # frames this op persisted, released when it returns
+    if not source.storageLevel.useMemory and not source.storageLevel.useDisk:
+        held.append(source.persist())  # every attempt joins it 3 times
+
+    def attempt(snap: Snapshot):
+        if snap.version < 0:
+            raise ValueError(f"{name}: {path} has no committed version")
+        _refuse_partitioned(snap, name)
+        names = _candidates(snap) if candidates is None else candidates(snap)
+        hits, rows = None, source.limit(0)
+        if names:
+            marked, kn = _with_keys(
+                _read_snapshot(spark, snap, names, marked=True), keys
+            )
+            probe = F.broadcast(_with_keys(source, keys)[0].select(*kn))
+            m = marked.join(probe, kn, "left_semi").drop(*kn).persist()
+            held.append(m)
+            hits, rows = m.select("__f", "__p"), m.drop("__f", "__p")
+        post = upsert(rows, source, keys, materialize_source=False)
+        cdf = snap.props.get("cdf.enabled") == "true"
+        if cdf:
+            post = post.persist()
+            held.append(post)
+        added = _stage_with_meta(post.hint("rebalance"), snap)
+        _validate_staged(spark, snap, added)
+        dv = _write_dvs(hits, path, snap.live) if hits is not None else []
+        return _Commit(added, dv=dv or None, op=op, change_data=(rows, post))
+
+    try:
+        return _transact(spark, path, attempt, max_retries, f"{name} on {path}")
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 # ------------------------------------------------------- partitioned form
@@ -1564,11 +1625,14 @@ def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
 
     def attempt(snap: Snapshot):
         _refuse_partitioned(snap, "txn_delete")
-        kept = _read_snapshot(spark, snap).filter(
-            ~F.coalesce(source_pred, F.lit(False))
+        rows = _read_snapshot(spark, snap)
+        added = _stage_with_meta(
+            rows.filter(~F.coalesce(source_pred, F.lit(False))), snap
         )
-        added = _stage_with_meta(kept, snap)
-        return _Commit(added, snap.names, op="DELETE", change_data=True)
+        return _Commit(
+            added, snap.names, op="DELETE",
+            change_data=(rows, _staged_rows(spark, snap, added)),
+        )
 
     return _transact(spark, path, attempt, max_retries, f"deleting from {path}")
 
@@ -1697,7 +1761,7 @@ def txn_compact(
     invariant (asserted by the lake_txn_compact oracle query), and time
     travel to pre-compaction versions still resolves the old files until
     vacuum. A lost commit race reaps the staged files and retries
-    against the new snapshot, like txn_upsert. Returns the new
+    against the new snapshot, like every rewrite. Returns the new
     version (or the current one if there was nothing to compact)."""
 
     def attempt(snap: Snapshot):
@@ -1735,55 +1799,33 @@ def _compact_attempt(spark, snap: Snapshot, target_file_bytes: int, min_files: i
     return _Commit(added, snap.names, op="OPTIMIZE")
 
 
-def _write_change_data(
-    spark, snap: Snapshot, new_v: int, removed_names, added_entries,
-    touched_keys=None,
-) -> None:
-    """Writer-side CHANGE FILES for a rewrite commit (Delta's _change_data
-    design, materialized lazily-on-write): when the table property
-    ``cdf.enabled=true`` is set, a whole-snapshot rewrite writes its
-    row-level diff — the multiset difference of the removed files'
-    VISIBLE rows vs the added files' rows, computed DISTRIBUTED as one
-    union + one hash aggregation + an explode of per-row multiplicities
-    — to ``_change_data/v<version>/`` as parquet with PHYSICAL data
-    column names plus ``_change_type`` ('delete' = preimage, 'insert' =
-    postimage; an update is a delete+insert pair, keyless by design).
-    The CDC streaming reader streams these files one task each instead
-    of paying the single-task fallback diff; a crash after the commit
-    but before this write degrades gracefully to that fallback (the
-    directory write is atomic: temp + rename).
-
-    ``touched_keys`` (r10 verdict item 3, guide §2.3/§3.2 — shuffle fewer
-    bytes, semi-join pre-filter): an optional ``(key_cols, keys_df)`` pair
-    from a KEYED rewrite (txn_upsert). An upsert can only change rows
-    whose key appears in its source — every other row is carried over
-    byte-identical and cancels out of the multiset diff — so both sides
-    are pre-filtered with a NULL-SAFE left-semi join against the source's
-    distinct keys BEFORE the union+aggregation. The diff's exchange then
-    carries O(touched rows) instead of O(table): at 100 TB the hash
-    aggregation over two whole snapshots becomes an aggregation over the
-    upserted slice (the old-side scan still reads the removed files; the
-    keys_df is an AQE-sized aggregate, broadcast when small). Null-safe
-    equality is load-bearing: NULL-keyed source rows never match the
-    merge join and are always inserted, so they must survive the prune.
-    ``key_cols`` are LOGICAL names; they are mapped to the physical names
-    the files carry here.
+def _write_change_data(snap: Snapshot, new_v: int, pre, post) -> None:
+    """Writer-side CHANGE FILES (Delta's _change_data design): when the
+    table property ``cdf.enabled=true`` is set, a commit that changes
+    rows writes its row-level diff — the multiset difference of ``pre``
+    (the rows it replaced: the matched rows of a merge-on-read upsert,
+    the removed files' visible rows of a whole rewrite) against ``post``
+    (the rows it added; None when it added none), computed DISTRIBUTED
+    as one union + one hash aggregation + an explode of per-row
+    multiplicities — to ``_change_data/v<version>/`` as parquet with
+    PHYSICAL data column names plus ``_change_type`` ('delete' =
+    preimage, 'insert' = postimage; an update is a delete+insert pair,
+    keyless by design, and a no-op update cancels). The CDC streaming
+    reader streams these files one task each instead of paying its
+    on-read fallback; a crash after the commit but before this write
+    degrades gracefully to that fallback (the directory write is atomic:
+    temp + rename).
 
     Runs AFTER the commit won its slot, so it never holds up the
     optimistic-retry loop and a lost race writes nothing. ``snap`` is
-    the snapshot the commit was computed against."""
+    the snapshot the commit was computed against; both frames speak its
+    logical schema."""
     path = snap.path
     out_dir = os.path.join(path, "_change_data", f"v{new_v:08d}")
     if os.path.isdir(out_dir):
         return  # idempotent (replayed writer)
-    delta = _change_delta(
-        spark, snap, removed_names, added_entries, touched_keys=touched_keys
-    )
-    if delta is None:
-        os.makedirs(out_dir, exist_ok=True)
-        return
     tmp = os.path.join(path, "_change_data", f".tmp-{uuid.uuid4().hex}")
-    delta.write.mode("overwrite").parquet(tmp)
+    _change_delta(snap, pre, post).write.mode("overwrite").parquet(tmp)
     try:
         os.rename(tmp, out_dir)
     except OSError:
@@ -1792,82 +1834,22 @@ def _write_change_data(
         shutil.rmtree(tmp, ignore_errors=True)  # racing writer won
 
 
-# Upper bound (bytes, ~16 B/key/column) on the upsert-source key set the
-# CDF diff will broadcast for its semi-join prune; past it the plain
-# whole-snapshot diff is the better plan (same gate philosophy as
-# functions/graph.triangle_counts' broadcast_edges_max).
-_CDF_PRUNE_BROADCAST_MAX = 8 << 20
+def _change_delta(snap: Snapshot, pre: DataFrame, post):
+    """The multiset diff of ``pre`` against ``post`` (None: no rows) under
+    ``snap``'s physical column names, with ``_change_type`` — the plan
+    _write_change_data materializes."""
+    from functools import reduce
 
-
-def _change_delta(
-    spark, snap: Snapshot, removed_names, added_entries, touched_keys=None
-):
-    """The rewrite commit's row-level diff against ``snap`` as a
-    DataFrame (None when both file sets are empty) — the plan
-    _write_change_data materializes; kept separate so tools can
-    dump/inspect the plan without writing."""
     from pyspark.sql import functions as F
 
-    path, live_prev = snap.path, snap.live
-    old_files = [
-        os.path.join(_data_dir(path), n) for n in removed_names if n in live_prev
-    ]
-    old_dvs = {
-        n: live_prev[n]["dv"]
-        for n in removed_names
-        if n in live_prev and live_prev[n].get("dv")
-    }
-    added_names = [
-        e["n"] if isinstance(e, dict) else e for e in added_entries
-    ]
-    new_files = [os.path.join(_data_dir(path), n) for n in added_names]
-
-    prune = None
-    if touched_keys is not None and touched_keys[0]:
-        key_cols, keys_df = touched_keys
-        # Broadcast gate (guide §3.1): the prune only pays when the semi
-        # joins are MAP-SIDE — a source key set past the broadcast bound
-        # would plan shuffled semi joins of both table-sized sides (worse
-        # than the single unpruned exchange), so fall back to the plain
-        # diff there. The count is one job over the source the upsert
-        # already persisted; no .distinct() on the build side — a semi
-        # join's hash build tolerates duplicate keys, so the raw cached
-        # projection broadcasts with no exchange at all.
-        n_src = keys_df.count()
-        if n_src * 16 * len(key_cols) <= _CDF_PRUNE_BROADCAST_MAX:
-            pkeys = [_phys_col(snap.props, k) for k in key_cols]
-            tk = F.broadcast(
-                keys_df.select(
-                    *[
-                        F.col(k).alias(f"__tk_{i}")
-                        for i, k in enumerate(key_cols)
-                    ]
-                )
-            )
-
-            def prune(side):  # noqa: F811
-                cond = None
-                for i, k in enumerate(pkeys):
-                    c = side[k].eqNullSafe(tk[f"__tk_{i}"])
-                    cond = c if cond is None else (cond & c)
-                return side.join(tk, cond, "left_semi")
-
-    sides = []
-    if old_files:
-        old = _read_files_dv(spark, path, old_files, old_dvs, snap.props)
-        if prune is not None:
-            old = prune(old)
-        sides.append(old.withColumn("_sgn", F.lit(-1)))
-    if new_files:
-        new = spark.read.option("mergeSchema", "true").parquet(*new_files)
-        if prune is not None:
-            new = prune(new)
-        sides.append(new.withColumn("_sgn", F.lit(1)))
-    if not sides:
-        return None
-    both = sides[0]
-    for s in sides[1:]:
-        both = both.unionByName(s, allowMissingColumns=True)
+    both = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            _unapply_colmap(df, snap.props).withColumn("_sgn", F.lit(sgn))
+            for df, sgn in ((pre, -1), (post, 1))
+            if df is not None
+        ],
+    )
     cols = [c for c in both.columns if c != "_sgn"]
     # NULL-safe multiset diff: groupBy groups NULL keys together (unlike
     # a join), so rows with NULLs difference correctly
@@ -1885,17 +1867,11 @@ def _change_delta(
     )
 
 
-def _maybe_write_change_data(
-    spark, snap: Snapshot, new_v, removed_names, added_entries,
-    touched_keys=None,
-) -> None:
+def _maybe_write_change_data(snap: Snapshot, new_v, pre, post) -> None:
     if snap.props.get("cdf.enabled") != "true":
         return
     try:
-        _write_change_data(
-            spark, snap, new_v, removed_names, added_entries,
-            touched_keys=touched_keys,
-        )
+        _write_change_data(snap, new_v, pre, post)
     except Exception as exc:  # noqa: BLE001 — any failure degrades alike
         # change files are an accelerator, never a correctness
         # dependency: the CDC reader falls back to the on-read diff
@@ -3469,11 +3445,10 @@ def txn_delete_dv(
 ) -> int:
     """Row-level DELETE as a deletion-vector commit: no data file is
     rewritten or removed — matching rows' (file, row position) pairs are
-    folded into per-file DV sidecars (written on EXECUTORS, one task per
-    touched file) and one commit replaces the touched files' DV
-    references. Returns the new version, or the current one when nothing
-    matched. Same NULL semantics as txn_delete: only rows where the
-    predicate is TRUE are deleted.
+    folded into per-file DV sidecars (_write_dvs) and one commit
+    replaces the touched files' DV references. Returns the new version,
+    or the current one when nothing matched. Same NULL semantics as
+    txn_delete: only rows where the predicate is TRUE are deleted.
 
     ``zone=(col, lo, hi)`` / ``bloom=(col, values)`` describe the
     predicate's key constraint and route the scan through the SAME
@@ -3519,36 +3494,28 @@ def txn_delete_dv(
 def _write_dvs(hits: DataFrame, path: str, live: dict) -> list[dict]:
     """Fold ``hits`` — (``__f`` file name, ``__p`` row position) pairs of
     ``live`` files — into one fresh DV sidecar generation per touched
-    file, written on EXECUTORS (one task per file, each unioning in the
-    file's current vector), and return the commit's dv actions."""
-    import pandas as pd
-
-    old_dvs = {n: d["dv"]["d"] for n, d in live.items() if d.get("dv")}
+    file, each the union with the file's current vector, and return the
+    commit's dv actions. The positions come to the driver in one job:
+    O(hit rows), the slice a DV commit is sized by (the read path
+    decodes the same vectors driver-side up to _DV_DRIVER_DECODE_MAX)."""
+    by_file: dict[str, set] = {}
+    for n, p in hits.collect():
+        by_file.setdefault(n, set()).add(p)
     gen = uuid.uuid4().hex[:8]
     data_dir = _data_dir(path)
-
-    def _write_dv(key, pdf):
-        from dbimport_spark.txnlog import _dv_decode as dec, _dv_encode as enc
-
-        n = key[0]
-        positions = set(int(p) for p in pdf["__p"])
-        old = old_dvs.get(n)
+    out = []
+    for n, positions in sorted(by_file.items()):
+        old = live[n]["dv"]
         if old:
-            with open(os.path.join(data_dir, old), "rb") as fh:
-                positions.update(dec(fh.read()))
+            with open(os.path.join(data_dir, old["d"]), "rb") as fh:
+                positions.update(_dv_decode(fh.read()))
         name = f"{n}.dv.{gen}"
         tmp = os.path.join(data_dir, f".tmp-{name}")
         with open(tmp, "wb") as fh:
-            fh.write(enc(positions))
+            fh.write(_dv_encode(positions))
         os.replace(tmp, os.path.join(data_dir, name))
-        return pd.DataFrame({"n": [n], "d": [name], "k": [len(positions)]})
-
-    entries = (
-        hits.groupBy("__f")
-        .applyInPandas(_write_dv, "n string, d string, k long")
-        .collect()  # one row per TOUCHED FILE — metadata, not data rows
-    )
-    return [{"n": r["n"], "d": r["d"], "k": int(r["k"])} for r in entries]
+        out.append({"n": n, "d": name, "k": len(positions)})
+    return out
 
 
 # --------------------------------------- pruned copy-on-write DML (CoW)
@@ -3645,8 +3612,8 @@ def txn_merge_cow(
     The source's distinct ``prune_key`` values (default: the single merge
     key) are collected to drive per-file candidacy — the point-update
     workload this form exists for has a small source by definition; a
-    source too large to collect keys from belongs with txn_upsert's
-    whole-snapshot rewrite anyway."""
+    source too large to collect keys from belongs with txn_upsert, which
+    scans every file for matched rows anyway."""
     from dbimport_spark.operators.merge import upsert
 
     keys = list(keys)
@@ -3956,19 +3923,7 @@ def _validate_staged(
     if not checks or not staged:
         return checks
     path = snap.path
-    # the staged files as a snapshot of their own, read by the one
-    # reader (staged files carry physical names; CHECK expressions speak
-    # logical). The first partitioned commit sets partition.column IN
-    # this commit — the writer passes the column name for that window.
-    live, ptype = {}, None
-    for e in staged:
-        e = e if isinstance(e, dict) else {"n": e}
-        live[e["n"]] = {"p": e.get("p"), "stats": {}, "dv": None, "rid": None}
-        ptype = e.get("t") or ptype
-    df = _read_snapshot(
-        spark, Snapshot(path, snap.version, live, ptype, snap.props),
-        pcol=partition_col,
-    )
+    df = _staged_rows(spark, snap, staged, partition_col)
     bad = df.filter(_violation_pred(checks)).count()
     if bad:
         _reap(path, staged)
@@ -3977,6 +3932,26 @@ def _validate_staged(
             f"check constraint(s) {sorted(checks)}"
         )
     return checks
+
+
+def _staged_rows(spark, snap: Snapshot, staged, partition_col=None):
+    """The rows of freshly staged files (None when there are none) under
+    ``snap``'s logical schema: the files as a snapshot of their own,
+    read by the one reader (staged files carry physical names). Entries
+    are bare names or partitioned ``{"n", "p", "t"}`` dicts; the first
+    partitioned commit sets partition.column IN that commit, so the
+    writer passes the column name for that window."""
+    if not staged:
+        return None
+    live, ptype = {}, None
+    for e in staged:
+        e = e if isinstance(e, dict) else {"n": e}
+        live[e["n"]] = {"p": e.get("p"), "stats": {}, "dv": None, "rid": None}
+        ptype = e.get("t") or ptype
+    return _read_snapshot(
+        spark, Snapshot(snap.path, snap.version, live, ptype, snap.props),
+        pcol=partition_col,
+    )
 
 
 class UniqueViolation(ValueError):
@@ -4019,9 +3994,9 @@ def _validate_unique(spark, snap: Snapshot, staged) -> None:
     """Enforce ``unique.<name> = <col>`` table properties on an APPEND:
     the staged batch may contain no internal duplicates on the column
     and no value already live in ``snap``. Append-only by design —
-    rewrite commits (upsert/merge/compact) replace the files they read,
-    so comparing their staged output against the still-live inputs
-    would flag every kept row; their key semantics are the merge's own.
+    rewrite and merge commits (upsert/merge/compact) replace the rows
+    they read, so comparing their staged output against the still-live
+    inputs would flag every kept row; their key semantics are the merge's own.
 
     Cost shape: ONE keyed aggregation of the staged files serves both
     the in-batch duplicate check and the key set; the vs-live check
@@ -4546,64 +4521,29 @@ def txn_merge_dv(
     prune_key: str | None = None, use_bloom: bool = False,
     max_retries: int = 3,
 ) -> int:
-    """MERGE-ON-READ UPSERT via deletion vectors — the third merge
-    strategy beside txn_upsert (whole-snapshot rewrite) and txn_merge_cow
-    (pruned rewrite): matched target rows are deleted by per-file DV
-    sidecars and the ENTIRE source (updates + inserts alike) appends as
-    new files, all in ONE atomic commit {add: source files, dv: matched
-    positions}. No target data file is read beyond the key column and
-    none is rewritten — at 100 TB a point-update batch costs O(source) +
-    O(matched rows) sidecar bytes, the cheapest write amplification of
-    the three. Result is EXACTLY txn_upsert's whole-row-replace semantics
-    for a key-distinct source; reads pay the DV anti-join until
-    compaction materializes.
+    """txn_upsert with a pruned key scan: the same merge-on-read core
+    (_merge_on_read) and therefore exactly txn_upsert's rows and change
+    data, for any source — matched target rows are deleted by DV
+    sidecars and their replacement plus the source's new keys append in
+    ONE commit {add: replacement files, dv: matched positions}.
 
-    ``prune_key`` (default: the single merge key) routes the position
+    ``prune_key`` (default: the single merge key) routes the matched-row
     scan through the log's zone-map — and, with ``use_bloom``, bloom —
     candidacy (_candidates), like txn_merge_cow: only files that MAY
-    contain a source key are opened for the key scan. Non-candidates
-    provably contain no matched row, so pruning cannot change the
-    result; a point-update batch then reads O(band) footers, not every
-    live file. Files without the metadata are kept conservatively. The
-    key scan is the snapshot reader's marked scan of the candidates, so
-    merge keys speak logical column names.
-
-    Unpartitioned tables only (like the other DV writers' staging)."""
-    from pyspark.sql import functions as F
-
+    contain a source key are opened. Non-candidates provably contain no
+    matched row, so pruning cannot change the result; a point-update
+    batch then reads O(band) footers, not every live file. Files without
+    the metadata are kept conservatively. When every file is pruned the
+    batch is a pure insert of the source as given. Unpartitioned tables
+    only."""
     keys = list(keys)
     pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    key_vals = _source_keys(source, pk) if pk is not None else None
-
-    def attempt(snap: Snapshot):
-        if snap.version < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        if snap.ptype is not None:
-            raise ValueError(
-                "txn_merge_dv: partitioned tables are not supported — use "
-                "txn_upsert_partitioned"
-            )
-        spec = (pk, key_vals) if pk is not None else None
-        cand = _candidates(snap, keys=spec, bloom=spec if use_bloom else None)
-        dv = []
-        if cand:  # else every file pruned: pure-insert batch, no positions
-            # key-column-pruned scan: only the keys + row position leave
-            # the parquet reader; matched rows' positions fold into DVs
-            # (already-deleted rows re-matching is harmless set-union)
-            hits = (
-                _read_snapshot(spark, snap, cand, marked=True, dvs=False)
-                .join(F.broadcast(source.select(*keys).distinct()), keys, "left_semi")
-                .select("__f", "__p")
-            )
-            dv = _write_dvs(hits, path, snap.live)
-        added = _stage(source, snap)
-        _validate_staged(spark, snap, added)
-        # a lost race reaps the never-committed generation AND the staged
-        # data files (vacuum sees neither) before re-merging
-        return _Commit(added, dv=dv or None, op="MERGE_DV")
-
-    return _transact(
-        spark, path, attempt, max_retries, f"DV-merging into {path}"
+    spec = (pk, _source_keys(source, pk)) if pk is not None else None
+    return _merge_on_read(
+        spark, source, path, keys, max_retries, "txn_merge_dv", "MERGE_DV",
+        lambda snap: _candidates(
+            snap, keys=spec, bloom=spec if use_bloom else None
+        ),
     )
 
 
@@ -4615,8 +4555,8 @@ def txn_merge_into(
     semantics — matched update/delete, not-matched insert, not-matched-
     by-source update/delete, first-match-wins): apply the clause lattice
     against the current snapshot and commit the result as {add: new
-    files, remove: all previous live files}, like txn_upsert. This is
-    the whole-snapshot form — by-source clauses inspect every target
+    files, remove: all previous live files}. This is the whole-snapshot
+    form — by-source clauses inspect every target
     row by definition, so there is nothing to prune; merges WITHOUT
     by-source clauses that only touch a key band belong with
     txn_merge_cow / txn_merge_dv.
@@ -4642,12 +4582,13 @@ def txn_merge_into(
             return snap.version  # redelivered batch: done
         if snap.version < 0:
             raise ValueError(f"merge target {path} has no committed version")
-        merged = merge_into(_read_snapshot(spark, snap), source, keys, clauses)
-        added = _stage_with_meta(merged, snap)
+        rows = _read_snapshot(spark, snap)
+        added = _stage_with_meta(merge_into(rows, source, keys, clauses), snap)
         _validate_staged(spark, snap, added)
         props = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
         return _Commit(
-            added, snap.names, props=props, op="MERGE", change_data=True
+            added, snap.names, props=props, op="MERGE",
+            change_data=(rows, _staged_rows(spark, snap, added)),
         )
 
     return _transact(spark, path, attempt, max_retries, f"merging into {path}")

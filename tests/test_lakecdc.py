@@ -88,13 +88,21 @@ def test_remove_carrying_commit_rejected_without_ignore_changes(spark, tmp_path)
         q.awaitTermination()
 
 
+_UPSERT_CLAUSES = [
+    ("matched_update", None, {"tag": "s.tag"}),
+    ("not_matched_insert", None, {"k": "s.k", "tag": "s.tag"}),
+]
+
+
 def test_ignore_changes_streams_rewritten_files(spark, tmp_path):
     path = str(tmp_path / "t")
     _append(spark, path, 0)
     src = spark.range(5).select(
         (F.col("id") * 3).alias("k"), F.lit("UP").alias("tag")
     )
-    txnlog.txn_upsert(spark, src, path, ["k"])
+    # a whole-snapshot rewrite (txn_upsert is merge-on-read: its added
+    # files hold only the replacement rows)
+    txnlog.txn_merge_into(spark, src, path, ["k"], _UPSERT_CLAUSES)
     register_lake_cdc(spark)
     s = (
         spark.readStream.format("lake_cdc")
@@ -735,16 +743,49 @@ def test_stream_resume_below_cleanup_floor_fails_loudly(spark, tmp_path):
     assert {p.version for p in parts} == {7, 8}
 
 
-def test_pruned_change_data_matches_unpruned(spark, tmp_path, monkeypatch):
-    """The r11 key-pruned CDF diff (txn_upsert passes its source keys so
-    _write_change_data semi-joins both sides before the multiset diff)
-    must produce EXACTLY the rows of the unpruned diff — including a
+def _change_file_rows(spark, t, v=None):
+    """The materialized change rows of version ``v`` (default: latest)
+    as a sorted list of (k, tag, _change_type)."""
+    v = txnlog.current_version(t) if v is None else v
+    d = os.path.join(t, "_change_data", f"v{v:08d}")
+    assert os.path.isdir(d), "change files must be materialized"
+    return _sorted_changes(spark.read.parquet(d).collect())
+
+
+def _sorted_changes(rows):
+    return sorted(
+        ((r["k"], r["tag"], r["_change_type"]) for r in rows),
+        key=lambda x: (x[0] is None, x),
+    )
+
+
+def _snapshot_diff(spark, t, v0, v1):
+    """The multiset diff of two whole snapshots, as change rows."""
+    from collections import Counter
+
+    old, new = (
+        Counter(
+            tuple(r)
+            for r in txnlog.read_snapshot(spark, t, v).select("k", "tag").collect()
+        )
+        for v in (v0, v1)
+    )
+    rows = [
+        {"k": k, "tag": tag, "_change_type": ct}
+        for diff, ct in ((old - new, "delete"), (new - old, "insert"))
+        for (k, tag), n in diff.items()
+        for _ in range(n)
+    ]
+    return _sorted_changes(rows)
+
+
+def test_pruned_change_data_matches_unpruned(spark, tmp_path):
+    """txn_upsert's change files, computed from its matched rows against
+    their replacement, equal the whole-snapshot multiset diff — including a
     NULL-keyed source row (always an insert: null keys never match the
-    merge join — the prune's null-safe equality must keep it) and a
-    no-op update (identical row on both sides: cancels, appears in
-    NEITHER diff)."""
-    pruned_t = str(tmp_path / "p")
-    unpruned_t = str(tmp_path / "u")
+    merge join) and a no-op update (identical row on both sides:
+    cancels, appears in neither)."""
+    t = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "k int, tag string"
     )
@@ -752,30 +793,12 @@ def test_pruned_change_data_matches_unpruned(spark, tmp_path, monkeypatch):
         # k=2 changed, k=3 no-op (same values), k=9 fresh, k=NULL fresh
         [(2, "B"), (3, "c"), (9, "i"), (None, "n")], "k int, tag string"
     )
-    for t in (pruned_t, unpruned_t):
-        txnlog.txn_set_property(t, "cdf.enabled", "true")
-        txnlog.txn_append(spark, base, t)
+    txnlog.txn_set_property(t, "cdf.enabled", "true")
+    txnlog.txn_append(spark, base, t)
+    v = txnlog.txn_upsert(spark, src, t, ["k"])
 
-    txnlog.txn_upsert(spark, src, pruned_t, ["k"])  # default: pruned diff
-
-    # control: same upsert with the source's key set past the broadcast
-    # gate, so the change data is written WITHOUT the prune
-    with monkeypatch.context() as m:
-        m.setattr(txnlog, "_CDF_PRUNE_BROADCAST_MAX", 0)
-        txnlog.txn_upsert(spark, src, unpruned_t, ["k"])
-
-    def change_rows(t):
-        v = txnlog.current_version(t)
-        d = os.path.join(t, "_change_data", f"v{v:08d}")
-        assert os.path.isdir(d), "change files must be materialized"
-        rows = spark.read.parquet(d).collect()
-        return sorted(
-            ((r["k"], r["tag"], r["_change_type"]) for r in rows),
-            key=lambda x: (x[0] is None, x),
-        )
-
-    got, want = change_rows(pruned_t), change_rows(unpruned_t)
-    assert got == want
+    got = _change_file_rows(spark, t)
+    assert got == _snapshot_diff(spark, t, v - 1, v)
     # and the diff is exactly the touched keys: 2 update pair, 9 + NULL inserts
     assert got == sorted(
         [
@@ -786,3 +809,39 @@ def test_pruned_change_data_matches_unpruned(spark, tmp_path, monkeypatch):
         ],
         key=lambda x: (x[0] is None, x),
     )
+
+
+def test_change_feed_reads_upsert_change_files(spark, tmp_path):
+    """A merge-on-read upsert commit carries DVs and added files but no
+    removes; on a cdf table the change feed must still read the writer's
+    change files, where a no-op update cancels — the per-file DV-delta
+    path would emit a delete+insert pair for it. Duplicate target keys
+    are all replaced."""
+    from dbimport_spark.sources.lakecdc import LakeCdcStreamReader, _CdfFile
+
+    path = str(tmp_path / "t")
+    txnlog.txn_set_property(path, "cdf.enabled", "true")
+    txnlog.txn_append(
+        spark,
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (2, "b2"), (3, "c")], "k long, tag string"
+        ),
+        path,
+    )
+    src = spark.createDataFrame(
+        [(2, "B"), (3, "c"), (7, "g")], "k long, tag string"  # k=3 no-op
+    )
+    v = txnlog.txn_upsert(spark, src, path, ["k"])
+    reader = LakeCdcStreamReader(path, {"path": path, "readChangeFeed": "true"})
+    parts = reader.partitions({"version": v - 1}, {"version": v})
+    assert parts and all(isinstance(p, _CdfFile) for p in parts)
+
+    got = _drain_cdf(spark, path, str(tmp_path / "cp"), str(tmp_path / "sink"))
+    streamed = _sorted_changes(got.filter(F.col("_commit_version") == v).collect())
+    assert streamed == _change_file_rows(spark, path, v)
+    assert streamed == _snapshot_diff(spark, path, v - 1, v)
+    assert streamed == [
+        (2, "B", "insert"), (2, "B", "insert"),
+        (2, "b", "delete"), (2, "b2", "delete"),
+        (7, "g", "insert"),
+    ]

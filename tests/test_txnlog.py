@@ -20,6 +20,15 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
 
 
+def _rewrite_upsert(spark, src, table):
+    """An upsert on ``k`` that removes every live file — txn_merge_into
+    with the upsert clauses (txn_upsert is merge-on-read and leaves the
+    files live), for fixtures that need dead files."""
+    vals = {c: f"s.{c}" for c in src.columns}
+    clauses = [("matched_update", None, vals), ("not_matched_insert", None, vals)]
+    return txnlog.txn_merge_into(spark, src, table, ["k"], clauses)
+
+
 def test_append_upsert_and_time_travel(spark, table):
     v0 = txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
     assert v0 == 0
@@ -70,8 +79,8 @@ def test_upsert_retry_after_conflict_merges_against_new_snapshot(
             raced["done"] = True
             # interleave a rival append THEN let our commit attempt fail
             txnlog.txn_append(spark, _df(spark, [(10, "x")]), table)
-            return real_commit(path, added, removed, expect_version)
-        return real_commit(path, added, removed, expect_version)
+            return real_commit(path, added, removed, expect_version, **kw)
+        return real_commit(path, added, removed, expect_version, **kw)
 
     monkeypatch.setattr(txnlog, "commit", racing_commit)
     txnlog.txn_upsert(spark, _df(spark, [(2, "B")]), table, ["k"])
@@ -97,7 +106,7 @@ def test_concurrent_delete_vs_upsert_conflict(spark, table, monkeypatch):
             raced["done"] = True
             # rival DELETE of k in {2, 3} sneaks in before our attempt
             txnlog.txn_delete(spark, F.col("k").isin(2, 3), table)
-        return real_commit(path, added, removed, expect_version)
+        return real_commit(path, added, removed, expect_version, **kw)
 
     monkeypatch.setattr(txnlog, "commit", racing_commit)
     # upsert touches k=2 (deleted by rival → must be reinserted with OUR
@@ -167,8 +176,8 @@ def test_vacuum_racing_reader_and_staged_writer(spark, table):
     readable; (c) a concurrent writer's staged-but-uncommitted file is
     NOT reclaimed — vacuum only deletes what the log proves dead."""
     txnlog.txn_append(spark, _df(spark, [(1, "a")]), table)
-    txnlog.txn_upsert(spark, _df(spark, [(1, "A"), (2, "b")]), table, ["k"])
-    txnlog.txn_upsert(spark, _df(spark, [(3, "c")]), table, ["k"])
+    _rewrite_upsert(spark, _df(spark, [(1, "A"), (2, "b")]), table)
+    _rewrite_upsert(spark, _df(spark, [(3, "c")]), table)
     # in-flight writer staged, not yet committed
     staged = txnlog._stage(_df(spark, [(99, "zz")]), txnlog.Snapshot.at(table))
     doomed = txnlog.vacuum(table, retain_versions=2)
@@ -312,7 +321,7 @@ def test_partitioned_upsert_into_new_partition(spark, table):
 
 def test_vacuum_reclaims_only_dead_files(spark, table):
     txnlog.txn_append(spark, _df(spark, [(1, "a"), (2, "b")]), table)
-    txnlog.txn_upsert(spark, _df(spark, [(2, "B")]), table, ["k"])
+    _rewrite_upsert(spark, _df(spark, [(2, "B")]), table)
     # stage an uncommitted batch: vacuum must NOT touch it
     txnlog._stage(_df(spark, [(99, "z")]), txnlog.Snapshot.at(table))
     files_before = set(os.listdir(os.path.join(table, "data")))
@@ -462,8 +471,8 @@ def test_partitioned_hive_escaped_and_null_values(spark, table):
 
 def test_vacuum_horizon_is_monotonic(spark, table):
     txnlog.txn_append(spark, _df(spark, [(1, "a")]), table)
-    txnlog.txn_upsert(spark, _df(spark, [(1, "b")]), table, ["k"])
-    txnlog.txn_upsert(spark, _df(spark, [(1, "c")]), table, ["k"])
+    _rewrite_upsert(spark, _df(spark, [(1, "b")]), table)
+    _rewrite_upsert(spark, _df(spark, [(1, "c")]), table)
     deleted = txnlog.vacuum(table, retain_versions=1)
     assert deleted
     h1 = txnlog.vacuum_horizon(table)
@@ -1082,7 +1091,7 @@ class TestBloomSkipping:
         src = spark.range(10).select(
             F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v")
         )
-        txnlog.txn_upsert(spark, src, table, ["k"])
+        _rewrite_upsert(spark, src, table)
         before = set(glob.glob(os.path.join(table, "data", "*.bloom.k")))
         assert before
         txnlog.vacuum(table, retain_versions=1)
@@ -1767,8 +1776,8 @@ def test_change_feed_sees_through_deletion_vectors(spark, table):
 def test_symlink_manifest_roundtrip_and_dv_refusal(spark, table):
     df = spark.range(0, 30).selectExpr("id AS k", "id AS v")
     txnlog.txn_append(spark, df, table)
-    txnlog.txn_upsert(
-        spark, spark.createDataFrame([(5, 500)], "k long, v long"), table, ["k"]
+    _rewrite_upsert(
+        spark, spark.createDataFrame([(5, 500)], "k long, v long"), table
     )
     m = txnlog.export_symlink_manifest(table)
     with open(m) as fh:
@@ -1963,6 +1972,29 @@ class TestMergeOnReadUpsert:
         h = txnlog.table_history(table)[0]
         assert h["op"] == "MERGE_DV" and h["n_added"] >= 1 and h["n_dv"] >= 1
 
+        # duplicate target keys on a cdf table: both replace EVERY matched
+        # row (update_all_existing) and write the same change data
+        dv_t, up_t = str(tmp_path / "dup_dv"), str(tmp_path / "dup_up")
+        for t in (dv_t, up_t):
+            txnlog.txn_set_property(t, "cdf.enabled", "true")
+            txnlog.txn_append(spark, _df(spark, [(2, "b"), (2, "b2"), (3, "c")]), t)
+        src = _df(spark, [(2, "B"), (4, "d")])
+        txnlog.txn_merge_dv(spark, src, dv_t, ["k"])
+        txnlog.txn_upsert(spark, src, up_t, ["k"])
+
+        def rows(t):
+            return sorted(tuple(r) for r in txnlog.read_snapshot(spark, t).collect())
+
+        def changes(t):
+            d = os.path.join(t, "_change_data", f"v{txnlog.current_version(t):08d}")
+            return sorted(tuple(r) for r in spark.read.parquet(d).collect())
+
+        assert rows(dv_t) == rows(up_t) == [(2, "B"), (2, "B"), (3, "c"), (4, "d")]
+        assert changes(dv_t) == changes(up_t) == [
+            (2, "B", "insert"), (2, "B", "insert"),
+            (2, "b", "delete"), (2, "b2", "delete"), (4, "d", "insert"),
+        ]
+
     def test_stacks_on_prior_dvs_and_compacts_away(self, spark, table):
         df = spark.range(0, 30).selectExpr("id AS k", "id AS v")
         txnlog.txn_append(spark, df, table)
@@ -1997,6 +2029,145 @@ class TestMergeOnReadUpsert:
         # the matched row is still visible — the failed merge's DV action
         # never committed (atomicity: dv + add land together or not at all)
         assert txnlog.read_snapshot(spark, table).count() == 1
+
+
+def _dir_bytes(path):
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
+@pytest.fixture(scope="module")
+def upsert_base(spark, tmp_path_factory):
+    """A cdf table with duplicate target keys (2), a NULL key, a DV'd
+    row (k=7) and a renamed column (physical ``w`` read as ``amount``)."""
+    path = str(tmp_path_factory.mktemp("upsert") / "base")
+    schema = "k long, v string, w long"
+    txnlog.txn_set_property(path, "cdf.enabled", "true")
+    txnlog.txn_append(
+        spark,
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20), (2, "b2", 21), (None, "n", 0), (5, "e", 50)],
+            schema,
+        ),
+        path,
+    )
+    txnlog.txn_append(
+        spark,
+        spark.createDataFrame([(6, "f", 60), (7, "g", 70), (8, "h", 80)], schema),
+        path,
+    )
+    txnlog.txn_delete_dv(spark, F.col("k") == 7, path)
+    txnlog.txn_rename_column(spark, path, "w", "amount")
+    return path
+
+
+_UPSERT_CASES = {
+    # duplicate source keys (matched 2, fresh 9), a NULL key, a no-op (5)
+    "dups_nulls_noop": (
+        ["k"],
+        [(2, "B", 200), (2, "B2", 201), (None, "N", 1), (5, "e", 50),
+         (9, "i", 90), (9, "i2", 91)],
+        "k long, v string, amount long",
+    ),
+    # an extra source column; k=7 is DV'd, so it is an insert
+    "extra_column": (
+        ["k"], [(1, "A", 100, "x"), (7, "G", 700, "y")],
+        "k long, v string, amount long, x string",
+    ),
+    # keyed on the renamed column
+    "renamed_key": (["amount"], [(60, "F", 66), (3, "new", 30)], None),
+    # a source missing a table column: the merge refuses it
+    "missing_column": (["k"], [(1, "A")], "k long, v string"),
+}
+
+
+@pytest.mark.parametrize("op", ["txn_upsert", "txn_merge_dv"])
+@pytest.mark.parametrize("case", sorted(_UPSERT_CASES))
+def test_upsert_is_the_merge_of_the_snapshot(spark, upsert_base, tmp_path, op, case):
+    """Merge-on-read is exact: the snapshot after the upsert equals
+    operators.merge.upsert over the snapshot before, and the change
+    files equal the multiset diff of the two snapshots."""
+    import shutil
+    from collections import Counter
+
+    from dbimport_spark.operators.merge import upsert
+
+    path = str(tmp_path / "t")
+    shutil.copytree(upsert_base, path)
+    keys, rows, schema = _UPSERT_CASES[case]
+    src = spark.createDataFrame(rows, schema or "amount long, v string, k long")
+    before = txnlog.read_snapshot(spark, path)
+    cols = before.columns
+    v0 = txnlog.current_version(path)
+    if case == "missing_column":
+        from pyspark.errors import AnalysisException
+
+        with pytest.raises(AnalysisException):
+            upsert(before, src, keys)
+        with pytest.raises(AnalysisException):
+            getattr(txnlog, op)(spark, src, path, keys)
+        assert txnlog.current_version(path) == v0
+        return
+    want = Counter(tuple(r) for r in upsert(before, src, keys).select(*cols).collect())
+    v = getattr(txnlog, op)(spark, src, path, keys)
+    assert v == v0 + 1
+    assert txnlog._read_entry_body(path, v)["removed"] == []
+
+    def snap(version):
+        df = txnlog.read_snapshot(spark, path, version).select(*cols)
+        return Counter(tuple(r) for r in df.collect())
+
+    old, new = snap(v0), snap(v)
+    assert new == want
+    phys = [txnlog._phys_col(txnlog.table_props(path), c) for c in cols]
+    d = os.path.join(path, "_change_data", f"v{v:08d}")
+    got = Counter(
+        tuple(r) for r in spark.read.parquet(d).select(*phys, "_change_type").collect()
+    )
+    diff = Counter({r + ("delete",): n for r, n in (old - new).items()})
+    diff.update({r + ("insert",): n for r, n in (new - old).items()})
+    assert got == diff
+
+
+def test_upsert_write_budget(spark, table):
+    """One txn_upsert of 1% of the keys into a 20k-row, 4-file cdf table
+    removes no file, adds under 10% of the live bytes (data, DVs and
+    change data together) and launches no more Spark jobs than the
+    whole-snapshot rewrite it replaced: 15 (job group, as in
+    test_cli_upsert_job_budget; the same at local[2], [4] and [8])."""
+    txnlog.txn_set_property(table, "cdf.enabled", "true")
+    for i in range(4):
+        txnlog.txn_append(
+            spark,
+            spark.range(i * 5000, (i + 1) * 5000)
+            .selectExpr("id", "CAST(id % 1000 AS INT) AS v", "concat('s', id) AS s")
+            .coalesce(1),
+            table,
+        )
+    live = sum(os.path.getsize(f) for f in txnlog.snapshot_files(table))
+    before = _dir_bytes(table)
+    src = spark.range(0, 20000, 200).selectExpr(
+        "id", "CAST(-1 AS INT) AS v", "'u' AS s"
+    ).unionByName(
+        spark.range(20000, 20100).selectExpr("id", "CAST(-2 AS INT) AS v", "'n' AS s")
+    )
+    sc = spark.sparkContext
+    group = "test_upsert_write_budget"
+    sc.setJobGroup(group, group)
+    try:
+        v = txnlog.txn_upsert(spark, src, table, ["id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert txnlog._read_entry_body(table, v)["removed"] == []
+    added = _dir_bytes(table) - before
+    assert added < 0.1 * live, f"{added} bytes added to {live} live bytes"
+    assert jobs <= 15, f"{jobs} Spark jobs for one txn_upsert"
+    assert txnlog.read_snapshot(spark, table).count() == 20100
 
 
 def test_indexed_append_enables_both_pruning_kinds(spark, table):
@@ -2749,8 +2920,8 @@ def test_vacuum_dry_run_reports_without_deleting(spark, table):
     removed, the horizon does not move, and a later real vacuum deletes
     exactly that list."""
     txnlog.txn_append(spark, spark.range(5).selectExpr("id AS k"), table)
-    txnlog.txn_upsert(
-        spark, spark.createDataFrame([(1,)], "k long"), table, ["k"]
+    _rewrite_upsert(
+        spark, spark.createDataFrame([(1,)], "k long"), table
     )  # v1 rewrite: v0 files become dead beyond retention 1
     before = set(os.listdir(os.path.join(table, "data")))
     would = txnlog.vacuum(table, retain_versions=1, dry_run=True)
@@ -3799,7 +3970,7 @@ class TestLogCleanup:
         txnlog.txn_cleanup_log(table)
         # keep growing, then vacuum again with tighter retention
         for i in range(9, 12):
-            txnlog.txn_upsert(spark, _df(spark, [(i, f"v{i}")]), table, ["k"])
+            _rewrite_upsert(spark, _df(spark, [(i, f"v{i}")]), table)
         doomed = txnlog.vacuum(table, retain_versions=1)
         assert doomed  # old rewritten files (incl. pre-cleanup era) reaped
         assert os.path.exists(foreign)

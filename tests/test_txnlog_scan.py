@@ -165,16 +165,21 @@ def _copy(base, tmp_path) -> str:
     return path
 
 
-def _hit_scans(monkeypatch) -> list:
-    """Record the files each DV writer's hit scan opens."""
+def _hit_scans(monkeypatch, path) -> list:
+    """Record the files each DV writer's marked hit scan of ``path``
+    opens (the merge-on-read core persists its matched rows, and a
+    persisted frame names no input files, so the scan is read where it
+    is built)."""
     seen = []
-    orig = txnlog._write_dvs
+    orig = txnlog._read_snapshot
 
-    def spy(hits, path, live):
-        seen.append(_names(hits.inputFiles()))
-        return orig(hits, path, live)
+    def spy(spark, snap, *a, **k):
+        df = orig(spark, snap, *a, **k)
+        if k.get("marked") and snap.path == path:
+            seen.append(_names(df.inputFiles()))
+        return df
 
-    monkeypatch.setattr(txnlog, "_write_dvs", spy)
+    monkeypatch.setattr(txnlog, "_read_snapshot", spy)
     return seen
 
 
@@ -198,7 +203,7 @@ def test_every_pruned_dml_touches_the_candidates(
     band = F.col("key").between(20, 30)
     src = spark.createDataFrame(_SRC, "key long, v string")
     keys = [k for k, _ in _SRC]
-    hits = _hit_scans(monkeypatch)
+    hits = _hit_scans(monkeypatch, path)
     if op.startswith("delete"):
         want = txnlog._candidates(before, bounds={"key": (20, 30)})
         fn = txnlog.txn_delete_cow if op == "delete_cow" else txnlog.txn_delete_dv
@@ -233,7 +238,7 @@ def test_every_pruned_dml_touches_the_candidates_partitioned(
     spark, parted, tmp_path, monkeypatch
 ):
     path = _copy(parted, tmp_path)
-    hits = _hit_scans(monkeypatch)
+    hits = _hit_scans(monkeypatch, path)
     # a region predicate would let Spark drop the other value's union
     # branch itself; this one needs every candidate scanned
     pred = (F.col("key") < 30) & (F.col("val") != "1")
