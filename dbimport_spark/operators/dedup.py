@@ -110,7 +110,6 @@ def drop_duplicates_cross_table(
     source: DataFrame,
     target: DataFrame,
     keys: Sequence[KeyColumn | str],
-    broadcast_target_keys: bool = False,
 ) -> DataFrame:
     """Remove source rows whose key already exists in target.
 
@@ -118,15 +117,15 @@ def drop_duplicates_cross_table(
     (pre-insert anti-filter; removed rows are counted as duplicates).
 
     Scale: left_anti equi-join on the key; the target side is pruned to the
-    key columns only (column pruning → minimal shuffle). For small targets
-    pass ``broadcast_target_keys=True`` to skip the shuffle entirely.
+    key columns only (column pruning → minimal shuffle) and is not made
+    distinct — an anti join's result does not depend on duplicates on its
+    build side, so a distinct would only add an aggregation.
     """
     src_keyed, knames = _with_keys(source, keys)
     tgt_keyed, _ = _with_keys(target, keys)
-    tgt_keys = tgt_keyed.select(*knames).dropDuplicates(knames)
-    if broadcast_target_keys:
-        tgt_keys = F.broadcast(tgt_keys)
-    return src_keyed.join(tgt_keys, on=knames, how="left_anti").select(*source.columns)
+    return src_keyed.join(
+        tgt_keyed.select(*knames), on=knames, how="left_anti"
+    ).select(*source.columns)
 
 
 def detect_duplicates(df: DataFrame, keys: Sequence[KeyColumn | str]) -> DataFrame:

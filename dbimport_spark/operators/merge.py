@@ -6,8 +6,8 @@ columns (optionally through SQL functions, applied on both sides).
 
 Scale design:
 * insert_not_existing = left_anti join against the target's PRUNED key
-  projection (column pruning keeps the shuffled bytes minimal); broadcast
-  when the key set is small.
+  projection (column pruning keeps the shuffled bytes minimal; no
+  distinct — an anti join ignores duplicates on its build side).
 * update_* = single left join target←updates + per-column conditional
   projection. No row-at-a-time probes (the reference's NoSQL path does
   SELECT-per-row — we explicitly do not reproduce that).
@@ -43,7 +43,6 @@ def insert_not_existing(
     target: DataFrame,
     source: DataFrame,
     keys: Sequence[KeyColumn | str],
-    broadcast_target_keys: bool = False,
 ) -> DataFrame:
     """Insert source rows whose key is absent from the target.
 
@@ -51,10 +50,7 @@ def insert_not_existing(
     DbImportWorker.java:494,513,559,577 — an anti equi-join with key
     functions applied on both sides.
     """
-    fresh = dedup.drop_duplicates_cross_table(
-        source, target, keys, broadcast_target_keys=broadcast_target_keys
-    )
-    return insert_all(target, fresh)
+    return insert_all(target, dedup.drop_duplicates_cross_table(source, target, keys))
 
 
 def _prepare_updates(

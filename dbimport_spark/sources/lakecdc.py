@@ -21,12 +21,14 @@ newly-deleted positions as `delete` rows, OPTIMIZE commits are skipped
 (content-invariant), and CoW rewrite commits emit the keyless multiset
 diff (an update surfaces as a delete+insert pair — this source has no
 merge keys; key-aware update_pre/postimage classification stays with
-the batch-side `read_changes`). On `cdf.enabled=true` tables any
-commit that wrote `_change_data/v<N>` files (upserts, merges, whole
-rewrites) is read from those WRITER-materialized files — one task per
-file, fully distributed, and a no-op update cancels there — with the
-per-file and on-read diffs as the silent fallback when they are
-absent. Partitioned tables stream when the `partitionColumn` option
+the batch-side `read_changes`). On `cdf.enabled=true` tables every
+row-changing rewrite writes `_change_data/v<N>` files — upserts and
+merges, whole and pruned copy-on-write deletes and merges alike (not
+the partitioned upsert) — and a commit that has them is read from
+those WRITER-materialized files — one task per file, fully
+distributed, and a no-op update cancels there — with the per-file and
+on-read diffs as the silent fallback when they are absent.
+Partitioned tables stream when the `partitionColumn` option
 names the log-resident partition column (the value is re-attached from
 the log, typed per the recorded DDL).
 Column-mapped tables (txn_rename_column / txn_drop_column) stream under

@@ -62,10 +62,16 @@ pruned key scan) is MERGE-ON-READ through one core, ``_merge_on_read``:
 it reads only the rows whose key the source carries, deletes them with
 deletion vectors and appends their replacement in one commit that
 removes no file, and takes its change data from those rows — O(batch)
-bytes per batch, as Delta's MERGE does. The whole-snapshot rewrites
-(``txn_delete``, ``txn_merge_into``, compaction) and the pruned
-copy-on-write forms (``txn_*_cow``) replace the files they read;
-``txn_compact`` materializes accumulated deletion vectors.
+bytes per batch, as Delta's MERGE does. The five rewrite DMLs are
+COPY-ON-WRITE through one core, ``_copy_on_write``: it reads the files
+it picks once — every live file for ``txn_delete`` and
+``txn_merge_into``, the ``_candidates`` of a zone/bloom or key spec for
+``txn_delete_cow``, ``txn_merge_cow`` and ``txn_merge_into_cow`` — and
+commits their rewritten rows in place of them. On a ``cdf.enabled``
+table every one of these DMLs writes change files (the rows it replaced
+against the rows it staged); a DV delete's change rows are re-read from
+its vectors, and compaction, z-order and ``txn_upsert_partitioned``
+write none. ``txn_compact`` materializes accumulated deletion vectors.
 
 Time travel is free: resolve the snapshot at any historical version down
 to the VACUUM horizon; ``vacuum`` reclaims files no retained snapshot
@@ -1268,7 +1274,7 @@ def _append(
                 if cols is None and bloom_col is None and declared:
                     cols = _split_cols(declared)
             checks = _validate_staged(spark, snap, added, partition_col)
-            _validate_unique(spark, snap, added)
+            _validate_unique(spark, snap, added, partition_col)
             if cols is not None or bloom_col is not None:
                 added = _describe(snap, added, cols or (), bloom_col, fpp)
             st.update(
@@ -1283,7 +1289,7 @@ def _append(
             checks = _revalidate_if_changed(
                 spark, snap, st["added"], st["checks"], partition_col
             )
-            _validate_unique(spark, snap, st["added"])
+            _validate_unique(spark, snap, st["added"], partition_col)
         st["checks"] = checks
         props = {}
         if partition_col is not None:
@@ -1344,11 +1350,11 @@ def txn_upsert(
 
 def _merge_on_read(
     spark, source: DataFrame, path: str, keys, max_retries: int, name: str,
-    op: str, candidates=None,
+    op: str, prune: dict | None = None,
 ) -> int:
     """The merge-on-read UPSERT behind txn_upsert and txn_merge_dv. Each
     attempt reads M once — the visible rows of the candidate files
-    (``candidates(snapshot)``, default every file _candidates keeps)
+    (``_candidates(snapshot, **prune)``; default every file it keeps)
     whose key matches a source key under the merge's own key equality
     (_with_keys: NULL keys never match) — and persists it for three uses:
 
@@ -1380,7 +1386,7 @@ def _merge_on_read(
         if snap.version < 0:
             raise ValueError(f"{name}: {path} has no committed version")
         _refuse_partitioned(snap, name)
-        names = _candidates(snap) if candidates is None else candidates(snap)
+        names = _candidates(snap, **(prune or {}))
         hits, rows = None, source.limit(0)
         if names:
             marked, kn = _with_keys(
@@ -1613,8 +1619,8 @@ def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
     """Transactional row-level DELETE: rewrite the current snapshot
     without the rows matching ``source_pred`` (a Column predicate) and
     commit {add: kept-row files, remove: all previous files} as one
-    version. Same optimistic-retry shape as txn_upsert; deleted rows stay
-    time-travelable until vacuum. Returns the new version.
+    version (_copy_on_write; change data under cdf.enabled). Deleted
+    rows stay time-travelable until vacuum. Returns the new version.
 
     SQL DELETE (and Delta's) removes only rows where the predicate is
     TRUE; rows where it evaluates to NULL (e.g. ``status == 'spam'`` on a
@@ -1623,18 +1629,11 @@ def txn_delete(spark, source_pred, path: str, max_retries: int = 3) -> int:
     (which is NULL for NULL inputs and would silently drop those rows)."""
     from pyspark.sql import functions as F
 
-    def attempt(snap: Snapshot):
-        _refuse_partitioned(snap, "txn_delete")
-        rows = _read_snapshot(spark, snap)
-        added = _stage_with_meta(
-            rows.filter(~F.coalesce(source_pred, F.lit(False))), snap
-        )
-        return _Commit(
-            added, snap.names, op="DELETE",
-            change_data=(rows, _staged_rows(spark, snap, added)),
-        )
-
-    return _transact(spark, path, attempt, max_retries, f"deleting from {path}")
+    return _copy_on_write(
+        spark, path, max_retries, "txn_delete", "DELETE",
+        lambda rows: rows.filter(~F.coalesce(source_pred, F.lit(False))),
+        inserts=False,
+    )
 
 
 def read_changes(
@@ -1804,10 +1803,10 @@ def _write_change_data(snap: Snapshot, new_v: int, pre, post) -> None:
     table property ``cdf.enabled=true`` is set, a commit that changes
     rows writes its row-level diff — the multiset difference of ``pre``
     (the rows it replaced: the matched rows of a merge-on-read upsert,
-    the removed files' visible rows of a whole rewrite) against ``post``
-    (the rows it added; None when it added none), computed DISTRIBUTED
-    as one union + one hash aggregation + an explode of per-row
-    multiplicities — to ``_change_data/v<version>/`` as parquet with
+    the removed files' visible rows of a copy-on-write rewrite) against
+    ``post`` (the rows it added; None when it added none), computed
+    DISTRIBUTED as one union + one hash aggregation + an explode of
+    per-row multiplicities — to ``_change_data/v<version>/`` as parquet with
     PHYSICAL data column names plus ``_change_type`` ('delete' =
     preimage, 'insert' = postimage; an update is a delete+insert pair,
     keyless by design, and a no-op update cancels). The CDC streaming
@@ -3541,6 +3540,66 @@ def _stage_with_meta(
     return [e if e["stats"] else e["n"] for e in entries]
 
 
+def _copy_on_write(
+    spark, path: str, max_retries: int, name: str, op: str, rewrite, *,
+    prune: dict | None = None, stats_cols=(), bloom_col: str | None = None,
+    app_id: str | None = None, batch_id: int | None = None,
+    inserts: bool = True,
+) -> int:
+    """The copy-on-write transaction behind the five rewrite DMLs. Each
+    attempt picks the files to replace (every live file, or the ones
+    ``_candidates(snapshot, **prune)`` keeps), reads their rows once,
+    stages ``rewrite(rows)`` with per-file metadata, validates it
+    against the table's checks and commits {add: staged, remove:
+    picked}. Under ``cdf.enabled`` the rows read against the staged rows
+    are the change data; without cdf nothing staged is read back.
+    ``app_id``/``batch_id`` add the exactly-once watermark (see
+    txn_merge_into); ``inserts=False`` (a delete) commits nothing when
+    no file is picked."""
+    if (app_id is None) != (batch_id is None):
+        raise ValueError(f"{name}: pass app_id and batch_id together")
+
+    def attempt(snap: Snapshot):
+        # a retry re-runs the skip check first — the rival that beat us
+        # may have been the SAME app landing this batch
+        if app_id is not None and _batch_done(snap, app_id, batch_id):
+            return snap.version  # redelivered batch: done
+        if snap.version < 0:
+            raise ValueError(f"{name}: {path} has no committed version")
+        _refuse_partitioned(snap, name)
+        files = snap.names if prune is None else _candidates(snap, **prune)
+        if not files and not inserts:
+            return snap.version  # the log proves no file can match
+        rows = _read_snapshot(spark, snap, files)
+        added = _stage_with_meta(rewrite(rows), snap, stats_cols, bloom_col)
+        _validate_staged(spark, snap, added)
+        cdf = snap.props.get("cdf.enabled") == "true"
+        return _Commit(
+            added, files,
+            props={f"txn.{app_id}": str(batch_id)} if app_id is not None else None,
+            op=op,
+            change_data=(rows, _staged_rows(spark, snap, added)) if cdf else None,
+        )
+
+    return _transact(spark, path, attempt, max_retries, f"{name} on {path}")
+
+
+def _key_spec(source: DataFrame, keys, prune_key: str | None, use_bloom: bool):
+    """The _candidates spec of a key-pruned merge: the source's distinct
+    non-NULL ``prune_key`` values (default: the single merge key) against
+    zone maps and, with ``use_bloom``, blooms; None (no pruning) for
+    composite keys without one. The values are collected: the point
+    updates the pruned merges exist for are small by definition."""
+    keys = list(keys)
+    pk = prune_key or (keys[0] if len(keys) == 1 else None)
+    if pk is None:
+        return None
+    vals = sorted(
+        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
+    )
+    return {"keys": (pk, vals), "bloom": (pk, vals) if use_bloom else None}
+
+
 def txn_delete_cow(
     spark,
     source_pred,
@@ -3554,10 +3613,11 @@ def txn_delete_cow(
     """PRUNED copy-on-write DELETE: rewrite ONLY the files that may
     contain matching rows (zone-map / bloom candidacy from the log —
     Delta/Iceberg DML file pruning) and commit {add: rewritten files,
-    remove: candidate files}; untouched files are not read, not
-    rewritten, and keep their identity (names, inodes, sidecars). At
-    100 TB a delete constrained to one key band costs O(band files), not
-    a table rewrite — the difference between txn_delete and this form.
+    remove: candidate files} (_copy_on_write; change data under
+    cdf.enabled); untouched files are not read, not rewritten, and keep
+    their identity (names, inodes, sidecars). At 100 TB a delete
+    constrained to one key band costs O(band files), not a table
+    rewrite — the difference between txn_delete and this form.
 
     ``zone``/``bloom`` describe the predicate's key constraint and MUST
     be implied by it (see _candidates); candidate files with
@@ -3566,28 +3626,11 @@ def txn_delete_cow(
     txn_delete."""
     from pyspark.sql import functions as F
 
-    def attempt(snap: Snapshot):
-        if snap.version < 0:
-            raise ValueError(f"no data to delete at {path}")
-        if snap.ptype is not None:
-            raise ValueError(
-                "txn_delete_cow: partitioned tables are not supported — "
-                "rewritten files would lose their partition values; use "
-                "the partitioned rewrite forms instead"
-            )
-        cand = _candidates(
-            snap, bounds={zone[0]: zone[1:]} if zone else None, bloom=bloom
-        )
-        if not cand:
-            return snap.version
-        kept = _read_snapshot(spark, snap, cand).filter(
-            ~F.coalesce(source_pred, F.lit(False))
-        )
-        added = _stage_with_meta(kept, snap, stats_cols, bloom_col)
-        return _Commit(added, cand, op="DELETE")
-
-    return _transact(
-        spark, path, attempt, max_retries, f"CoW-deleting from {path}"
+    return _copy_on_write(
+        spark, path, max_retries, "txn_delete_cow", "DELETE",
+        lambda rows: rows.filter(~F.coalesce(source_pred, F.lit(False))),
+        prune={"bounds": {zone[0]: zone[1:]} if zone else None, "bloom": bloom},
+        stats_cols=stats_cols, bloom_col=bloom_col, inserts=False,
     )
 
 
@@ -3602,52 +3645,23 @@ def txn_merge_cow(
     bloom_col: str | None = None,
     max_retries: int = 3,
 ) -> int:
-    """PRUNED copy-on-write MERGE (UPSERT): only files that may contain a
-    source key are rewritten; every other file is untouched. Inserts
-    (source keys present in no file) land in the rewritten output.
-    Result is EXACTLY txn_upsert's — pruning is a superset of the files
-    containing matches, so non-candidates contribute no updated row and
-    can't hide an "insert" key.
-
-    The source's distinct ``prune_key`` values (default: the single merge
-    key) are collected to drive per-file candidacy — the point-update
-    workload this form exists for has a small source by definition; a
-    source too large to collect keys from belongs with txn_upsert, which
-    scans every file for matched rows anyway."""
+    """PRUNED copy-on-write MERGE (UPSERT; _copy_on_write, change data
+    under cdf.enabled): only files that may contain a source key are
+    rewritten; every other file is untouched. Inserts (source keys
+    present in no file) land in the rewritten output. Result is EXACTLY
+    txn_upsert's — pruning is a superset of the files containing
+    matches, so non-candidates contribute no updated row and can't hide
+    an "insert" key. The source's distinct ``prune_key`` values
+    (default: the single merge key) drive per-file candidacy
+    (_key_spec); composite keys without one rewrite every file."""
     from dbimport_spark.operators.merge import upsert
 
     keys = list(keys)
-    pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    if pk is None:
-        raise ValueError("txn_merge_cow: pass prune_key for composite merge keys")
-    key_vals = _source_keys(source, pk)
-
-    def attempt(snap: Snapshot):
-        if snap.version < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        if snap.ptype is not None:
-            raise ValueError(
-                "txn_merge_cow: partitioned tables are not supported — "
-                "use txn_upsert_partitioned (partition-pruned rewrite)"
-            )
-        cand = _candidates(
-            snap, keys=(pk, key_vals), bloom=(pk, key_vals) if use_bloom else None
-        )
-        merged = upsert(_read_snapshot(spark, snap, cand), source, keys)
-        added = _stage_with_meta(merged, snap, stats_cols, bloom_col)
-        _validate_staged(spark, snap, added)
-        return _Commit(added, cand, op="MERGE")
-
-    return _transact(
-        spark, path, attempt, max_retries, f"CoW-merging into {path}"
-    )
-
-
-def _source_keys(source: DataFrame, pk: str) -> list:
-    """The source's distinct non-NULL ``pk`` values, sorted — the key set
-    the pruned merges test zone maps and blooms against."""
-    return sorted(
-        r[0] for r in source.select(pk).distinct().collect() if r[0] is not None
+    return _copy_on_write(
+        spark, path, max_retries, "txn_merge_cow", "MERGE",
+        lambda rows: upsert(rows, source, keys),
+        prune=_key_spec(source, keys, prune_key, use_bloom),
+        stats_cols=stats_cols, bloom_col=bloom_col,
     )
 
 
@@ -3990,7 +4004,9 @@ def txn_add_unique(
 _UNIQUE_BLOOM_KEYS_MAX = 10_000
 
 
-def _validate_unique(spark, snap: Snapshot, staged) -> None:
+def _validate_unique(
+    spark, snap: Snapshot, staged, partition_col: str | None = None
+) -> None:
     """Enforce ``unique.<name> = <col>`` table properties on an APPEND:
     the staged batch may contain no internal duplicates on the column
     and no value already live in ``snap``. Append-only by design —
@@ -4008,18 +4024,12 @@ def _validate_unique(spark, snap: Snapshot, staged) -> None:
     Declare write.statsColumns / bloom on the key to make a 100 TB
     existence check O(band). Violations remove the staged files (never
     visible), like CheckViolation."""
-    path, props, live, uniqs = snap.path, snap.props, snap.live, snap.uniques
+    path, live, uniqs = snap.path, snap.live, snap.uniques
     if not uniqs or not staged:
         return
     from pyspark.sql import functions as F
 
-    names = [e["n"] if isinstance(e, dict) else e for e in staged]
-    sdf = _apply_colmap(
-        spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(_data_dir(path), n) for n in names]
-        ),
-        props,
-    )
+    sdf = _staged_rows(spark, snap, staged, partition_col)
 
     def _reject(msg):
         _reap(path, staged)
@@ -4321,8 +4331,7 @@ def txn_zorder(
     def attempt(snap: Snapshot):
         if snap.version < 0:
             raise ValueError(f"no data to optimize at {path}")
-        if snap.ptype is not None:
-            raise ValueError("txn_zorder: partitioned tables are not supported")
+        _refuse_partitioned(snap, "txn_zorder")
         df = _read_snapshot(spark, snap)
         bounds = df.agg(
             *[f for c in cols for f in (F.min(c), F.max(c))]
@@ -4529,21 +4538,16 @@ def txn_merge_dv(
 
     ``prune_key`` (default: the single merge key) routes the matched-row
     scan through the log's zone-map — and, with ``use_bloom``, bloom —
-    candidacy (_candidates), like txn_merge_cow: only files that MAY
+    candidacy (_key_spec, as txn_merge_cow): only files that MAY
     contain a source key are opened. Non-candidates provably contain no
     matched row, so pruning cannot change the result; a point-update
     batch then reads O(band) footers, not every live file. Files without
     the metadata are kept conservatively. When every file is pruned the
     batch is a pure insert of the source as given. Unpartitioned tables
     only."""
-    keys = list(keys)
-    pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    spec = (pk, _source_keys(source, pk)) if pk is not None else None
     return _merge_on_read(
         spark, source, path, keys, max_retries, "txn_merge_dv", "MERGE_DV",
-        lambda snap: _candidates(
-            snap, keys=spec, bloom=spec if use_bloom else None
-        ),
+        _key_spec(source, keys, prune_key, use_bloom),
     )
 
 
@@ -4555,11 +4559,11 @@ def txn_merge_into(
     semantics — matched update/delete, not-matched insert, not-matched-
     by-source update/delete, first-match-wins): apply the clause lattice
     against the current snapshot and commit the result as {add: new
-    files, remove: all previous live files}. This is the whole-snapshot
-    form — by-source clauses inspect every target
-    row by definition, so there is nothing to prune; merges WITHOUT
-    by-source clauses that only touch a key band belong with
-    txn_merge_cow / txn_merge_dv.
+    files, remove: all previous live files} (_copy_on_write; change data
+    under cdf.enabled). This is the whole-snapshot form — by-source
+    clauses inspect every target row by definition, so there is nothing
+    to prune; merges WITHOUT by-source clauses that only touch a key
+    band belong with txn_merge_into_cow / txn_merge_dv.
 
     ``app_id``/``batch_id`` make the merge EXACTLY-ONCE for streaming
     CDC apply (foreachBatch): the commit atomically records the
@@ -4571,27 +4575,11 @@ def txn_merge_into(
     only correct redelivery story."""
     from dbimport_spark.operators.merge import merge_into
 
-    if (app_id is None) != (batch_id is None):
-        raise ValueError("txn_merge_into: pass app_id and batch_id together")
-
-    def attempt(snap: Snapshot):
-        _refuse_partitioned(snap, "txn_merge_into")
-        # a retry re-runs the skip check first — the rival that beat us
-        # may have been the SAME app landing this batch
-        if app_id is not None and _batch_done(snap, app_id, batch_id):
-            return snap.version  # redelivered batch: done
-        if snap.version < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        rows = _read_snapshot(spark, snap)
-        added = _stage_with_meta(merge_into(rows, source, keys, clauses), snap)
-        _validate_staged(spark, snap, added)
-        props = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
-        return _Commit(
-            added, snap.names, props=props, op="MERGE",
-            change_data=(rows, _staged_rows(spark, snap, added)),
-        )
-
-    return _transact(spark, path, attempt, max_retries, f"merging into {path}")
+    return _copy_on_write(
+        spark, path, max_retries, "txn_merge_into", "MERGE",
+        lambda rows: merge_into(rows, source, keys, clauses),
+        app_id=app_id, batch_id=batch_id,
+    )
 
 
 def txn_merge_into_cow(
@@ -4600,54 +4588,37 @@ def txn_merge_into_cow(
     stats_cols=(), bloom_col: str | None = None, max_retries: int = 3,
     app_id: str | None = None, batch_id: int | None = None,
 ) -> int:
-    """PRUNED clause MERGE — txn_merge_into's scale path: only files
-    that MAY contain a source key (zone-map / optional bloom candidacy,
-    exactly txn_merge_cow's pruning) are read and rewritten; the clause
+    """PRUNED clause MERGE — txn_merge_into's scale path (_copy_on_write;
+    change data under cdf.enabled): only files that MAY contain a source
+    key (exactly txn_merge_cow's pruning; composite keys without a
+    ``prune_key`` prune nothing) are read and rewritten; the clause
     lattice applies to that slice and non-candidates keep their
     identity. Sound because every clause kind here needs a SOURCE match:
     by-source clauses (not_matched_by_source_*) inspect rows with NO
-    source key and are therefore REFUSED — they belong to the
-    whole-snapshot txn_merge_into by definition. At 100 TB a streaming
-    CDC apply batch costs O(touched band), not a table rewrite.
+    source key and are therefore REFUSED when files are pruned — they
+    belong to the whole-snapshot txn_merge_into by definition. At 100 TB
+    a streaming CDC apply batch costs O(touched band), not a table
+    rewrite.
 
     ``app_id``/``batch_id`` give the same exactly-once redelivery
     watermark as txn_merge_into."""
     from dbimport_spark.operators.merge import merge_into
 
-    for c in clauses:
-        if c[0].startswith("not_matched_by_source"):
-            raise ValueError(
-                "txn_merge_into_cow: by-source clauses inspect every "
-                "target row — there is nothing to prune; use "
-                "txn_merge_into (whole-snapshot)"
-            )
-    if (app_id is None) != (batch_id is None):
-        raise ValueError("txn_merge_into_cow: pass app_id and batch_id together")
-    keys = list(keys)
-    pk = prune_key or (keys[0] if len(keys) == 1 else None)
-    if pk is None:
-        raise ValueError("txn_merge_into_cow: pass prune_key for composite keys")
-    key_vals = _source_keys(source, pk)
-
-    def attempt(snap: Snapshot):
-        if app_id is not None and _batch_done(snap, app_id, batch_id):
-            return snap.version  # redelivered batch: done
-        if snap.version < 0:
-            raise ValueError(f"merge target {path} has no committed version")
-        if snap.ptype is not None:
-            raise ValueError(
-                "txn_merge_into_cow: partitioned tables are not supported"
-            )
-        cand = _candidates(
-            snap, keys=(pk, key_vals), bloom=(pk, key_vals) if use_bloom else None
+    prune = _key_spec(source, keys, prune_key, use_bloom)
+    if prune is not None and any(
+        c[0].startswith("not_matched_by_source") for c in clauses
+    ):
+        raise ValueError(
+            "txn_merge_into_cow: by-source clauses inspect every "
+            "target row — there is nothing to prune; use "
+            "txn_merge_into (whole-snapshot)"
         )
-        merged = merge_into(_read_snapshot(spark, snap, cand), source, keys, clauses)
-        added = _stage_with_meta(merged, snap, stats_cols, bloom_col)
-        _validate_staged(spark, snap, added)
-        extra = {f"txn.{app_id}": str(batch_id)} if app_id is not None else None
-        return _Commit(added, cand, props=extra, op="MERGE")
-
-    return _transact(spark, path, attempt, max_retries, f"merging into {path}")
+    return _copy_on_write(
+        spark, path, max_retries, "txn_merge_into_cow", "MERGE",
+        lambda rows: merge_into(rows, source, keys, clauses), prune=prune,
+        stats_cols=stats_cols, bloom_col=bloom_col, app_id=app_id,
+        batch_id=batch_id,
+    )
 
 
 def txn_append_indexed(

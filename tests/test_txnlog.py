@@ -824,7 +824,11 @@ def _unnamed_data_files(table):
 
 
 @pytest.mark.parametrize(
-    "op", ["txn_upsert", "txn_delete", "txn_compact", "txn_delete_cow", "txn_merge_cow"]
+    "op",
+    [
+        "txn_upsert", "txn_delete", "txn_compact", "txn_delete_cow",
+        "txn_merge_cow", "txn_merge_into", "txn_merge_into_cow",
+    ],
 )
 def test_lost_race_reaps_staged_rewrite(spark, table, monkeypatch, op):
     """A rewrite whose first claim loses a race must delete the files it
@@ -855,6 +859,13 @@ def test_lost_race_reaps_staged_rewrite(spark, table, monkeypatch, op):
         ),
         "txn_merge_cow": lambda: txnlog.txn_merge_cow(
             spark, _df(spark, [(2, "B")]), table, ["k"]
+        ),
+        "txn_merge_into": lambda: _rewrite_upsert(
+            spark, _df(spark, [(2, "B")]), table
+        ),
+        "txn_merge_into_cow": lambda: txnlog.txn_merge_into_cow(
+            spark, _df(spark, [(2, "B")]), table, ["k"],
+            [("matched_update", None, {"v": "s.v"})],
         ),
     }[op]
     assert run() == 3  # v2 is the rival's; the retry landed v3
@@ -1490,11 +1501,32 @@ class TestCopyOnWriteDML:
         assert snap.count() == 91
         assert {r["v"] for r in snap.filter("k IN (0, 500)").collect()} == {"U", "N"}
 
-    def test_cow_merge_composite_keys_need_prune_key(self, spark, table):
-        self._ranged(spark, table)
-        src = spark.createDataFrame([(1, "x", "y")], "k long, v string, w string")
-        with pytest.raises(ValueError, match="prune_key"):
-            txnlog.txn_merge_cow(spark, src, table, ["k", "v"])
+    def test_cow_merge_composite_keys_rewrite_every_file(
+        self, spark, table, tmp_path
+    ):
+        """Composite merge keys without a prune_key prune nothing: the
+        CoW merge rewrites every live file and equals txn_upsert."""
+        df = spark.range(0, 100).selectExpr(
+            "id AS k", "CAST(id % 7 AS STRING) AS v", "'old' AS w"
+        )
+        for b in range(4):
+            txnlog.txn_append_stats(
+                spark, df.filter(F.col("k").between(b * 25, b * 25 + 24)),
+                table, ["k"],
+            )
+        other = str(tmp_path / "upsert")
+        txnlog.txn_append(spark, df, other)
+        src = spark.createDataFrame(
+            [(10, "3", "UPD"), (11, "x", "NEW")], "k long, v string, w string"
+        )
+        live = set(txnlog.Snapshot.at(table).names)
+        v = txnlog.txn_merge_cow(spark, src, table, ["k", "v"])
+        txnlog.txn_upsert(spark, src, other, ["k", "v"])
+        removed = txnlog._read_entry_body(table, v)["removed"]
+        assert set(txnlog._entry_files(removed)) == live
+        a = sorted(tuple(r) for r in txnlog.read_snapshot(spark, table).collect())
+        b = sorted(tuple(r) for r in txnlog.read_snapshot(spark, other).collect())
+        assert a == b and len(a) == 101  # (10, "3") matched, (11, "x") new
 
 
 class TestCheckConstraints:
@@ -2132,13 +2164,8 @@ def test_upsert_is_the_merge_of_the_snapshot(spark, upsert_base, tmp_path, op, c
     assert got == diff
 
 
-def test_upsert_write_budget(spark, table):
-    """One txn_upsert of 1% of the keys into a 20k-row, 4-file cdf table
-    removes no file, adds under 10% of the live bytes (data, DVs and
-    change data together) and launches no more Spark jobs than the
-    whole-snapshot rewrite it replaced: 15 (job group, as in
-    test_cli_upsert_job_budget; the same at local[2], [4] and [8])."""
-    txnlog.txn_set_property(table, "cdf.enabled", "true")
+def _four_files(spark, table):
+    """20k rows (id, v, s) in four 5k-row files."""
     for i in range(4):
         txnlog.txn_append(
             spark,
@@ -2147,27 +2174,179 @@ def test_upsert_write_budget(spark, table):
             .coalesce(1),
             table,
         )
-    live = sum(os.path.getsize(f) for f in txnlog.snapshot_files(table))
-    before = _dir_bytes(table)
-    src = spark.range(0, 20000, 200).selectExpr(
+
+
+def _one_percent(spark):
+    """A 1% batch for _four_files: 100 existing ids and 100 new ones."""
+    return spark.range(0, 20000, 200).selectExpr(
         "id", "CAST(-1 AS INT) AS v", "'u' AS s"
     ).unionByName(
         spark.range(20000, 20100).selectExpr("id", "CAST(-2 AS INT) AS v", "'n' AS s")
     )
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group (as in test_cli_upsert_job_budget);
+    return its result and the number of Spark jobs it launched."""
     sc = spark.sparkContext
-    group = "test_upsert_write_budget"
     sc.setJobGroup(group, group)
     try:
-        v = txnlog.txn_upsert(spark, src, table, ["id"])
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_upsert_write_budget(spark, table):
+    """One txn_upsert of 1% of the keys into a 20k-row, 4-file cdf table
+    removes no file, adds under 10% of the live bytes (data, DVs and
+    change data together) and launches 13 Spark jobs at local[2], [4]
+    and [8] (15 for the whole-snapshot rewrite it replaced; 14 while the
+    insert branch's anti join made its build side distinct)."""
+    txnlog.txn_set_property(table, "cdf.enabled", "true")
+    _four_files(spark, table)
+    live = sum(os.path.getsize(f) for f in txnlog.snapshot_files(table))
+    before = _dir_bytes(table)
+    src = _one_percent(spark)
+    v, jobs = _jobs(
+        spark, "test_upsert_write_budget",
+        lambda: txnlog.txn_upsert(spark, src, table, ["id"]),
+    )
     assert txnlog._read_entry_body(table, v)["removed"] == []
     added = _dir_bytes(table) - before
     assert added < 0.1 * live, f"{added} bytes added to {live} live bytes"
-    assert jobs <= 15, f"{jobs} Spark jobs for one txn_upsert"
+    assert jobs <= 13, f"{jobs} Spark jobs for one txn_upsert"
     assert txnlog.read_snapshot(spark, table).count() == 20100
+
+
+@pytest.mark.parametrize("op, jobs_reading_back", [("delete", 3), ("merge_into", 5)])
+def test_rewrite_without_cdf_reads_nothing_back(spark, table, op, jobs_reading_back):
+    """On a table without cdf the whole-snapshot rewrites do not read
+    their staged files back (that read only fed the change data): one
+    Spark job fewer than when they did, on a 20k-row, 4-file table (the
+    same at local[2], [4] and [8])."""
+    _four_files(spark, table)
+    src = _one_percent(spark)
+    run = {
+        "delete": lambda: txnlog.txn_delete(spark, F.col("id") % 100 == 0, table),
+        "merge_into": lambda: txnlog.txn_merge_into(
+            spark, src, table, ["id"],
+            [("matched_update", None, {"v": "s.v", "s": "s.s"}),
+             ("not_matched_insert", None, {c: f"s.{c}" for c in src.columns})],
+        ),
+    }[op]
+    v, jobs = _jobs(spark, f"test_rewrite_without_cdf_{op}", run)
+    assert v == 4
+    assert jobs == jobs_reading_back - 1
+    assert not os.path.isdir(os.path.join(table, "_change_data"))
+    want = 19800 if op == "delete" else 20100
+    assert txnlog.read_snapshot(spark, table).count() == want
+
+
+@pytest.fixture(scope="module")
+def rewrite_base(spark, tmp_path_factory):
+    """A cdf table for the copy-on-write DMLs: two zone-mapped key bands
+    (k 1-5 with a duplicate key, k 10-14), a stat-less file holding a
+    NULL key, a DV'd row (k=3) and a renamed column (physical ``w`` read
+    as ``amount``)."""
+    path = str(tmp_path_factory.mktemp("rewrite") / "base")
+    schema = "k long, v string, w long"
+    txnlog.txn_set_property(path, "cdf.enabled", "true")
+    for rows in (
+        [(1, "a", 10), (2, "b", 20), (2, "b2", 21), (3, "c", 30), (5, "e", 50)],
+        [(10, "j", 100), (11, "k", 110), (12, "l", 120), (14, "n", 140)],
+    ):
+        txnlog.txn_append_stats(
+            spark, spark.createDataFrame(rows, schema).coalesce(1), path, ["k"]
+        )
+    txnlog.txn_append(
+        spark,
+        spark.createDataFrame([(None, "z", 0), (20, "t", 200)], schema).coalesce(1),
+        path,
+    )
+    txnlog.txn_delete_dv(spark, F.col("k") == 3, path)
+    txnlog.txn_rename_column(spark, path, "w", "amount")
+    return path
+
+
+_REWRITE_SRC = [(11, "K", 1100), (12, "L", -1), (30, "new", 300), (None, "N", 1)]
+_REWRITE_CLAUSES = [
+    ("matched_delete", "s.amount < 0"),
+    ("matched_update", None, {"v": "s.v", "amount": "s.amount"}),
+    ("not_matched_insert", None, {"k": "s.k", "v": "s.v", "amount": "s.amount"}),
+]
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["txn_delete", "txn_delete_cow", "txn_merge_cow", "txn_merge_into",
+     "txn_merge_into_cow"],
+)
+def test_rewrite_dml_is_the_operator_on_the_snapshot(spark, rewrite_base, tmp_path, op):
+    """Every copy-on-write DML: the snapshot after equals its operator
+    applied to the snapshot before, the commit removes exactly the files
+    the form picked (every live file, or _candidates of its spec), and
+    the change files equal the multiset diff of the two snapshots."""
+    import shutil
+    from collections import Counter
+
+    from dbimport_spark.operators.merge import merge_into, upsert
+
+    path = str(tmp_path / "t")
+    shutil.copytree(rewrite_base, path)
+    snap0 = txnlog.Snapshot.at(path)
+    before = txnlog.read_snapshot(spark, path)
+    cols = before.columns
+    src = spark.createDataFrame(_REWRITE_SRC, "k long, v string, amount long")
+    by_source = [("not_matched_by_source_delete", "t.amount >= 140")]
+    src_keys = ("k", sorted(k for k, *_ in _REWRITE_SRC if k is not None))
+    if op == "txn_delete":
+        pred = F.col("k") > 10
+        want = before.filter(~F.coalesce(pred, F.lit(False)))
+        picked = snap0.names
+        v = txnlog.txn_delete(spark, pred, path)
+    elif op == "txn_delete_cow":
+        pred = F.col("k").between(10, 12) & (F.col("amount") != 110)
+        want = before.filter(~F.coalesce(pred, F.lit(False)))
+        picked = txnlog._candidates(snap0, bounds={"k": (10, 12)})
+        v = txnlog.txn_delete_cow(spark, pred, path, zone=("k", 10, 12))
+    elif op == "txn_merge_cow":
+        want = upsert(before, src, ["k"])
+        picked = txnlog._candidates(snap0, keys=src_keys)
+        v = txnlog.txn_merge_cow(spark, src, path, ["k"])
+    elif op == "txn_merge_into":
+        src = src.unionByName(
+            spark.createDataFrame([(2, "B", 200)], "k long, v string, amount long")
+        )
+        clauses = _REWRITE_CLAUSES + by_source
+        want, picked = merge_into(before, src, ["k"], clauses), snap0.names
+        v = txnlog.txn_merge_into(spark, src, path, ["k"], clauses)
+    else:
+        want = merge_into(before, src, ["k"], _REWRITE_CLAUSES)
+        picked = txnlog._candidates(snap0, keys=src_keys)
+        v = txnlog.txn_merge_into_cow(spark, src, path, ["k"], _REWRITE_CLAUSES)
+    if op.endswith("_cow"):
+        assert 0 < len(picked) < len(snap0.names)
+    want = Counter(tuple(r) for r in want.select(*cols).collect())
+    assert v == snap0.version + 1
+    removed = txnlog._read_entry_body(path, v)["removed"]
+    assert sorted(txnlog._entry_files(removed)) == sorted(picked)
+
+    def snap(version):
+        df = txnlog.read_snapshot(spark, path, version).select(*cols)
+        return Counter(tuple(r) for r in df.collect())
+
+    old, new = snap(snap0.version), snap(v)
+    assert new == want and new != old
+    phys = [txnlog._phys_col(txnlog.table_props(path), c) for c in cols]
+    d = os.path.join(path, "_change_data", f"v{v:08d}")
+    got = Counter(
+        tuple(r) for r in spark.read.parquet(d).select(*phys, "_change_type").collect()
+    )
+    diff = Counter({r + ("delete",): n for r, n in (old - new).items()})
+    diff.update({r + ("insert",): n for r, n in (new - old).items()})
+    assert got == diff
 
 
 def test_indexed_append_enables_both_pruning_kinds(spark, table):
@@ -3404,10 +3583,17 @@ class TestUniqueConstraintAdvice9:
         assert txnlog.table_props(table)["unique.pk"] == "id"
         # constraint still enforced under the new logical name — without
         # the rewrite every append here raised AnalysisException
-        with pytest.raises(txnlog.UniqueViolation):
+        with pytest.raises(txnlog.UniqueViolation, match="already live"):
             txnlog.txn_append(
                 spark,
                 spark.createDataFrame([(2, "x")], "id long, v string"),
+                table,
+            )
+        # the staged batch is read under the logical name too
+        with pytest.raises(txnlog.UniqueViolation, match="duplicate"):
+            txnlog.txn_append(
+                spark,
+                spark.createDataFrame([(7, "x"), (7, "y")], "id long, v string"),
                 table,
             )
         txnlog.txn_append(
