@@ -17,6 +17,11 @@ though tests run on local[32]):
   and handle skew. Small target key-sets are explicitly broadcast.
 * All coercions are built-in column expressions (whole-stage codegen), never
   row-at-a-time Python UDFs.
+* Frames the library builds from driver-side values (row-order offsets,
+  file lists, log-suffix ops, deletion-vector positions, an empty created
+  table) are Arrow local relations (``frames.local_frame``): the JVM serves
+  them and no Python worker starts. Source rows are numbered by one
+  aggregate per (file, partition), with no window and no shuffle.
 """
 
 from dbimport_spark.config import ColumnMapping, DuplicateMode, ImportDefinition, ImportMode

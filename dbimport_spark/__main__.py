@@ -267,6 +267,24 @@ def main(argv: list[str] | None = None) -> int:
     return _run_one(spark, args, None)
 
 
+def _created_target(spark, definition, source):
+    """The empty table an import into a missing table merges into:
+    createTableIfNeeded from the inference lattice (DbImportWorker.java:391,
+    DbImportWorker.createTableIfNeeded), as a local relation."""
+    from dbimport_spark.frames import local_frame
+    from dbimport_spark.schema.infer import infer_schema
+
+    fmt_infos = {
+        m.target: m.format_info
+        for m in (definition.mappings or [])
+        if m.format_info
+    }
+    cols = infer_schema(source, format_infos=fmt_infos)
+    return local_frame(
+        spark, [], ", ".join(f"`{c.name}` {c.spark_type}" for c in cols)
+    )
+
+
 def _run_one(spark, args, results: list | None) -> int:
     definition = _build_definition(args)
     source = _read_source(spark, args)
@@ -277,21 +295,7 @@ def _run_one(spark, args, results: list | None) -> int:
         target = spark.read.parquet(table_dir)
         created = False
     else:
-        # createTableIfNeeded from the inference lattice
-        # (DbImportWorker.java:391, DbImportWorker.createTableIfNeeded)
-        from pyspark.sql import functions as F
-
-        from dbimport_spark.schema.infer import infer_schema
-
-        fmt_infos = {
-            m.target: m.format_info
-            for m in (definition.mappings or [])
-            if m.format_info
-        }
-        cols = infer_schema(source, format_infos=fmt_infos)
-        target = spark.createDataFrame(
-            [], ", ".join(f"`{c.name}` {c.spark_type}" for c in cols)
-        )
+        target = _created_target(spark, definition, source)
         created = True
 
     from dbimport_spark.pipeline import ImportError_, run_import

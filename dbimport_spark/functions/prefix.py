@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbimport_spark.frames import local_frame
+
 
 def global_prefix_sum(
     df: DataFrame,
@@ -75,7 +77,7 @@ def global_prefix_sum(
     for b in sorted(totals):
         offsets.append((b, acc))
         acc += totals[b]
-    off_df = df.sparkSession.createDataFrame(offsets, "_pb long, _off long")
+    off_df = local_frame(df.sparkSession, offsets, "_pb long, _off long")
     w = (
         Window.partitionBy("_pb")
         .orderBy(order_col)

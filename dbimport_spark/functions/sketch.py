@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbimport_spark.frames import local_frame
+
 MAX_CANDIDATES = 100_000
 
 
@@ -93,7 +95,7 @@ def heavy_hitters(items: DataFrame, item_col: str, k: int, local_cap: int = 6553
         summary.unpersist()
 
     spark = items.sparkSession
-    cand_df = spark.createDataFrame([(c,) for c in cands], f"{item_col} string")
+    cand_df = local_frame(spark, [(c,) for c in cands], f"{item_col} string")
     exact = (
         items.join(F.broadcast(cand_df), item_col)
         .groupBy(item_col)

@@ -110,12 +110,14 @@ def read_arrow_ipc_dir(
 
     import pandas as pd
 
+    from dbimport_spark.frames import local_frame
+
     paths = sorted(_glob.glob(os.path.join(path, "part-*.arrow")))
     ranges = _batch_ranges(paths, target_bytes)
     if not ranges:
-        return spark.createDataFrame([], schema)
-    files = spark.createDataFrame(
-        ranges, "path string, lo int, hi int"
+        return local_frame(spark, [], schema)
+    files = local_frame(
+        spark, ranges, "path string, lo int, hi int"
     ).repartition(len(ranges))
 
     def kernel(batches):

@@ -185,6 +185,8 @@ def read_sitemaps(spark, index_path: str, min_lastmod: str | None = None):
     the caller — shard pruning is the job-less part."""
     import pandas as pd
 
+    from dbimport_spark.frames import local_frame
+
     with open(index_path, "rb") as fh:
         entries = parse_sitemap_index(fh.read())
     keep = [
@@ -193,9 +195,9 @@ def read_sitemaps(spark, index_path: str, min_lastmod: str | None = None):
         if min_lastmod is None or lastmod is None or lastmod >= min_lastmod
     ]
     if not keep:
-        return spark.createDataFrame([], READ_SCHEMA)
-    files = spark.createDataFrame(
-        [(p,) for p in keep], "path string"
+        return local_frame(spark, [], READ_SCHEMA)
+    files = local_frame(
+        spark, [(p,) for p in keep], "path string"
     ).repartition(len(keep))
 
     def kernel(batches):

@@ -322,13 +322,15 @@ def read_warc(
     1 GB shard with an index fans out instead of pinning one task."""
     import pandas as pd
 
+    from dbimport_spark.frames import local_frame
+
     ranges: list[tuple[str, int, int]] = []
     for p in paths:
         ranges.extend(_split_ranges(p, target_bytes))
     if not ranges:
         raise WarcError("read_warc: no input ranges (empty path list?)")
-    files = spark.createDataFrame(
-        ranges, "path string, off long, len long"
+    files = local_frame(
+        spark, ranges, "path string, off long, len long"
     ).repartition(len(ranges))
     want = tuple(record_types) if record_types else None
 

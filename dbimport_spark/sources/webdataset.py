@@ -83,12 +83,14 @@ def read_webdataset(spark, shard_paths: list[str], exts: list[str]):
     (``seg.png`` → ``seg_png``)."""
     import pandas as pd
 
+    from dbimport_spark.frames import local_frame
+
     cols = [e.replace(".", "_") for e in exts]
     schema = "shard string, key string, " + ", ".join(
         f"{c} binary" for c in cols
     )
-    files = spark.createDataFrame(
-        [(p,) for p in shard_paths], "path string"
+    files = local_frame(
+        spark, [(p,) for p in shard_paths], "path string"
     ).repartition(len(shard_paths))
 
     def kernel(batches):

@@ -20,6 +20,8 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbimport_spark.frames import local_frame
+
 
 def _parse_entries(content: bytes, data_path: str | None, null_value: str):
     root = ET.parse(io.BytesIO(content)).getroot()
@@ -93,7 +95,7 @@ def read_xml(
 
         w_files = sorted(r["__file"] for r in out.select("__file").distinct().collect())
         rank = {f: i for i, f in enumerate(w_files)}
-        rank_df = spark.createDataFrame(list(rank.items()), "__file string, __frank int")
+        rank_df = local_frame(spark, list(rank.items()), "__file string, __frank int")
         out = (
             out.join(F.broadcast(rank_df), "__file")
             .withColumn(

@@ -87,9 +87,12 @@ import logging
 import os
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+
+from dbimport_spark.frames import local_frame
 
 #: The package logger: post-commit work that fails without failing the
 #: commit (change-data files, interval checkpoints) is reported here.
@@ -408,10 +411,11 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
     whole-set consumer (incremental checkpointing, fsck-at-scale,
     orphan sweeps) should consume this instead.
 
-    Falls back to parallelizing a driver fold when no multi-part
+    Falls back to a local relation of a driver fold when no multi-part
     checkpoint exists yet (cold start) — one
     O(live) pass, after which write_checkpoint establishes the scale
-    format."""
+    format. The suffix ops are local relations too (``frames.local_frame``),
+    so neither form starts a Python worker."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         LongType,
@@ -435,7 +439,7 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
     if man is None:
         live, _, _ = _fold_log3(path, v)
         rows = [_ckpt_encode(n, d) for n, d in sorted(live.items())]
-        return spark.createDataFrame(rows, sschema)
+        return local_frame(spark, rows, sschema)
     d = _checkpoint_dir(path, ckpt_v)
     base = spark.read.schema(sschema).parquet(
         *[os.path.join(d, part) for part in man["parts"]]
@@ -471,7 +475,7 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
             # ("remove",): a DV on a removed name cannot occur (fold drops it)
     if not ops:
         return base
-    touched = spark.createDataFrame([(n,) for n in ops], ["n"])
+    touched = local_frame(spark, [(n,) for n in ops], "n string")
     kept = base.join(F.broadcast(touched), "n", "left_anti")
     adds = [
         _ckpt_encode(n, meta)
@@ -481,7 +485,7 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
     ]
     out = kept
     if adds:
-        out = out.unionByName(spark.createDataFrame(adds, sschema))
+        out = out.unionByName(local_frame(spark, adds, sschema))
     dv_ops = {
         n: rest[0] for n, (kind, *rest) in ops.items() if kind == "dv"
     }
@@ -490,7 +494,7 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
             (n, json.dumps(dvv, sort_keys=True) if dvv else None)
             for n, dvv in dv_ops.items()
         ]
-        dv_df = spark.createDataFrame(dv_rows, ["n", "__dv_new"])
+        dv_df = local_frame(spark, dv_rows, "n string, __dv_new string")
         patched = (
             base.join(F.broadcast(dv_df), "n", "inner")
             .withColumn("dv", F.col("__dv_new"))
@@ -1348,6 +1352,21 @@ def txn_upsert(
     )
 
 
+@contextmanager
+def _persisted(source: DataFrame):
+    """``source`` persisted for the duration of one DML call (unless the
+    caller cached it already) and released when the call returns: every
+    attempt joins it more than once, and nothing outlives the call."""
+    own = not source.storageLevel.useMemory and not source.storageLevel.useDisk
+    if own:
+        source.persist()
+    try:
+        yield source
+    finally:
+        if own:
+            source.unpersist()
+
+
 def _merge_on_read(
     spark, source: DataFrame, path: str, keys, max_retries: int, name: str,
     op: str, prune: dict | None = None,
@@ -1378,9 +1397,7 @@ def _merge_on_read(
     from dbimport_spark.operators.merge import upsert
 
     keys = list(keys)
-    held = []  # frames this op persisted, released when it returns
-    if not source.storageLevel.useMemory and not source.storageLevel.useDisk:
-        held.append(source.persist())  # every attempt joins it 3 times
+    held = []  # per-attempt frames this op persisted, released when it returns
 
     def attempt(snap: Snapshot):
         if snap.version < 0:
@@ -1406,11 +1423,12 @@ def _merge_on_read(
         dv = _write_dvs(hits, path, snap.live) if hits is not None else []
         return _Commit(added, dv=dv or None, op=op, change_data=(rows, post))
 
-    try:
-        return _transact(spark, path, attempt, max_retries, f"{name} on {path}")
-    finally:
-        for df in held:
-            df.unpersist()
+    with _persisted(source):  # every attempt joins it 3 times
+        try:
+            return _transact(spark, path, attempt, max_retries, f"{name} on {path}")
+        finally:
+            for df in held:
+                df.unpersist()
 
 
 # ------------------------------------------------------- partitioned form
@@ -1582,17 +1600,13 @@ def txn_upsert_partitioned(
     column must be a stable function of the merge keys."""
     from dbimport_spark.operators.merge import upsert
 
-    touched_values = [
-        r[0] for r in source.select(partition_col).distinct().collect()
-    ]
-
     def attempt(snap: Snapshot):
         old_touched = _candidates(snap, partitions=touched_values)
         if old_touched:
             target_slice = _read_snapshot(
                 spark, snap, old_touched, pcol=partition_col
             )
-            merged = upsert(target_slice, source, keys)
+            merged = upsert(target_slice, source, keys, materialize_source=False)
         else:
             merged = source
         added = _stage_partitioned(merged, snap, partition_col)
@@ -1602,7 +1616,11 @@ def txn_upsert_partitioned(
             op="UPSERT",
         )
 
-    return _transact(spark, path, attempt, max_retries, f"upserting {path}")
+    with _persisted(source):
+        touched_values = [
+            r[0] for r in source.select(partition_col).distinct().collect()
+        ]
+        return _transact(spark, path, attempt, max_retries, f"upserting {path}")
 
 
 def txn_append_partitioned(
@@ -2021,8 +2039,8 @@ def read_snapshot_rowids(spark, path: str, version: int | None = None) -> DataFr
     # expression: at 100 TB a table has ~10^5 files and a create_map of
     # 2×10^5 literals would bloat every task's serialized plan; a
     # broadcast hash join ships the mapping once per executor.
-    bases = spark.createDataFrame(
-        [(n, live[n]["rid"]) for n in sorted(live)], "__f string, __base bigint"
+    bases = local_frame(
+        spark, [(n, live[n]["rid"]) for n in sorted(live)], "__f string, __base bigint"
     )
     return (
         marked.join(F.broadcast(bases), "__f")
@@ -3148,9 +3166,11 @@ _DV_DRIVER_DECODE_MAX = 2_000_000
 
 
 def _dv_positions_df(spark, path: str, dvmap: dict[str, dict]) -> DataFrame:
-    """(file name, deleted row position) DataFrame for ``dvmap``. Small
-    DVs decode driver-side (then the anti-join broadcasts); large ones
-    decode distributed, one task per sidecar."""
+    """(file name, deleted row position) DataFrame for ``dvmap``. Up to
+    ``_DV_DRIVER_DECODE_MAX`` positions decode driver-side into a local
+    relation (``frames.local_frame``: Arrow, no Python worker), which the
+    anti-join broadcasts; more decode distributed, one mapInPandas task
+    per sidecar over a local relation of the sidecar list."""
     total_k = sum(m["k"] for m in dvmap.values())
     data_dir = _data_dir(path)
     if total_k <= _DV_DRIVER_DECODE_MAX:
@@ -3158,8 +3178,9 @@ def _dv_positions_df(spark, path: str, dvmap: dict[str, dict]) -> DataFrame:
         for n, m in sorted(dvmap.items()):
             with open(os.path.join(data_dir, m["d"]), "rb") as fh:
                 pairs.extend((n, p) for p in _dv_decode(fh.read()))
-        return spark.createDataFrame(pairs, "__dv_f: string, __dv_p: bigint")
-    meta = spark.createDataFrame(
+        return local_frame(spark, pairs, "__dv_f string, __dv_p bigint")
+    meta = local_frame(
+        spark,
         [(n, os.path.join(data_dir, m["d"])) for n, m in sorted(dvmap.items())],
         "__dv_f: string, __dv_sc: string",
     ).repartition(len(dvmap))
@@ -3657,12 +3678,13 @@ def txn_merge_cow(
     from dbimport_spark.operators.merge import upsert
 
     keys = list(keys)
-    return _copy_on_write(
-        spark, path, max_retries, "txn_merge_cow", "MERGE",
-        lambda rows: upsert(rows, source, keys),
-        prune=_key_spec(source, keys, prune_key, use_bloom),
-        stats_cols=stats_cols, bloom_col=bloom_col,
-    )
+    with _persisted(source):
+        return _copy_on_write(
+            spark, path, max_retries, "txn_merge_cow", "MERGE",
+            lambda rows: upsert(rows, source, keys, materialize_source=False),
+            prune=_key_spec(source, keys, prune_key, use_bloom),
+            stats_cols=stats_cols, bloom_col=bloom_col,
+        )
 
 
 # -------------------------------------- table properties + CHECK constraints
