@@ -1134,8 +1134,9 @@ def lake_txn_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang), version 1 appends a WIDER frame carrying a new n_chars
     column. Reading version 0 must surface exactly the original two
     columns; reading latest must surface the merged three-column schema
-    with the v0 rows null-filled (txnlog.read_snapshot's mergeSchema
-    read — the log never rewrites committed files to evolve). Graded on
+    with the v0 rows null-filled (txnlog.read_snapshot scans under the
+    schema the log records at each version — the log never rewrites
+    committed files to evolve). Graded on
     both versions' row counts, COLUMN counts, and the null-aware sum
     over the evolved column.
 
@@ -2258,8 +2259,8 @@ def lake_widen_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     (txnlog.txn_widen_column — the lake-evolution form of the
     reference's inference-decay lattice, DataProvider.java:61-148
     int→bigint, restricted to exact promotions): v0 appends ``v`` as
-    INT32 parquet, the widen commit records int→bigint in the
-    ``colwiden`` property (zero files opened at any table size), a
+    INT32 parquet, the widen commit records the table schema with v as
+    bigint (zero files opened at any table size), a
     post-widen append lands values ABOVE the int range, and ONE scan
     reads both widths — old footers upcast natively in the parquet
     reader (SPARK-40876), no per-file cast plan, no rewrite. A DV

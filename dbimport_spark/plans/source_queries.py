@@ -1285,10 +1285,10 @@ def pipeline_reimport_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     own pipeline pieces: day-1 CSV export infers v as INTEGER and lands
     in a lake table as int32 parquet; day-2's export carries values
     beyond the int range, infers BIGINT, and appends WITHOUT any
-    declared widen — the table's footers now mix widths, and the read
-    self-heals through the widening lattice (txnlog._scan_files
-    fallback: one lattice-unified explicit-schema scan, no rewrite, no
-    manual ALTER). Graded on exact bigint aggregates spanning both eras;
+    declared widen — the table's footers now mix widths, and the
+    append's commit widens the log-carried schema through the widening
+    lattice (txnlog._merge_schema: every read is one explicit-schema
+    scan that upcasts the int-era files, no rewrite, no manual ALTER). Graded on exact bigint aggregates spanning both eras;
     v_min pins the int-era values surviving the upcast, v_max the
     beyond-int-range era."""
     import shutil

@@ -1995,7 +1995,8 @@ def stream_lake_cdc_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 — versions already consumed don't re-stream; a FRESH stream
     started after the widen must read the narrow v0 files UNDER THE
     WIDE SCHEMA (the source's per-file conform step upcasts int32 pages
-    to the colwiden-declared bigint, sources/lakecdc.py _conform) plus
+    to the bigint the log-carried schema declares, sources/lakecdc.py
+    _conform) plus
     v2. Both arms must agree exactly — graded as identical per-version
     count/sum blocks, only right if no row is lost, duplicated, or
     truncated to 32 bits anywhere."""
@@ -2042,7 +2043,7 @@ def stream_lake_cdc_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     resumed = _drain_to_parquet(spark, stream_df(), sink, cp, src=path)    # v2 only
 
     fresh_s = spark.readStream.format("lake_cdc").option("path", path).load()
-    assert dict(fresh_s.dtypes)["v"] == "bigint"  # colwiden drives schema
+    assert dict(fresh_s.dtypes)["v"] == "bigint"  # the log's schema drives it
     fresh_agg = fresh_s.groupBy(
         F.col("_commit_version").alias("version")
     ).agg(

@@ -232,27 +232,35 @@ def merge_into_partitioned(
     from pyspark.sql.utils import AnalysisException
 
     from dbimport_spark.operators.merge import upsert
+    from dbimport_spark.txnlog import _persisted
 
-    parts = touched_partitions(source, partition_col)
-    try:
-        target = spark.read.parquet(target_path)
-        exists = True
-    except AnalysisException:
-        exists = False
-    if not exists:
-        source.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-        return parts
+    # the source is persisted for this call only: the partition probe and
+    # both merge branches read it, and it is released once the merged
+    # slice is materialized
+    with _persisted(source):
+        parts = touched_partitions(source, partition_col)
+        try:
+            target = spark.read.parquet(target_path)
+            exists = True
+        except AnalysisException:
+            exists = False
+        if not exists:
+            source.write.mode("overwrite").partitionBy(partition_col).parquet(
+                target_path
+            )
+            return parts
 
-    sliced = target.filter(F.col(partition_col).isin(parts))
-    merged = upsert(
-        sliced, source, keys, update_with_null_values=update_with_null_values
-    )
-    # Cut lineage from target_path: Spark refuses to overwrite a path that
-    # the write plan also reads. localCheckpoint materializes the merged
-    # slice (O(touched partitions), not O(table)) on the executors. On a
-    # multi-tenant cluster prefer a reliable checkpoint dir; the shape of
-    # the plan is identical.
-    merged = merged.localCheckpoint(eager=True)
+        sliced = target.filter(F.col(partition_col).isin(parts))
+        merged = upsert(
+            sliced, source, keys, update_with_null_values=update_with_null_values,
+            materialize_source=False,
+        )
+        # Cut lineage from target_path: Spark refuses to overwrite a path
+        # that the write plan also reads. localCheckpoint materializes the
+        # merged slice (O(touched partitions), not O(table)) on the
+        # executors. On a multi-tenant cluster prefer a reliable
+        # checkpoint dir; the shape of the plan is identical.
+        merged = merged.localCheckpoint(eager=True)
 
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -260,4 +268,7 @@ def merge_into_partitioned(
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the checkpointed slice is written: free its blocks now rather than
+    # whenever the JVM collects the plan that holds them
+    merged._jdf.queryExecution().analyzed().rdd().unpersist(False)
     return parts

@@ -61,94 +61,26 @@ from dbimport_spark.txnlog import (
     current_version,
 )
 
-_ARROW_TO_DDL = {
-    "int64": "bigint",
-    "int32": "int",
-    "int16": "smallint",
-    "int8": "tinyint",
-    "string": "string",
-    "large_string": "string",
-    "double": "double",
-    "float": "float",
-    "bool": "boolean",
-    "binary": "binary",
-    "large_binary": "binary",
-    "date32[day]": "date",
-}
-
-
 def _table_ddl(
     path: str, partition_col: str | None = None, change_feed: bool = False
 ) -> str:
-    """Schema of the table's newest ADDED file (+ the log-resident
-    partition column when named + _commit_version), read from the
-    parquet footer only."""
-    import pyarrow.parquet as pq
+    """The stream's schema: the table's logical columns at the latest
+    version, typed as the log records them (Snapshot.dtypes — column
+    mapping applied, widenings included, no data file opened), then the
+    log-resident partition column when named, ``_commit_version`` and,
+    for a change feed, ``_change_type``.
 
+    Like Delta, the schema is fixed at stream start: a rename or widen
+    landing MID-STREAM is picked up when the stream restarts (the
+    physical names in the files are stable either way)."""
     v = current_version(path)
     if v < 0:
         raise ValueError(f"lake_cdc: empty table at {path}")
-    from dbimport_spark.txnlog import _colmap
-
     snap = Snapshot.at(path, v)
-    # column-mapping reader feature: files carry PHYSICAL names; the
-    # stream's schema shows the LOGICAL names AS OF stream start (dropped
-    # physicals are projected away). Like Delta, a rename landing
-    # MID-STREAM is not picked up until the stream restarts — the
-    # DataSource schema is fixed at planning, and the physical names in
-    # the files are stable either way.
-    props = snap.props
-    mp, dropped = _colmap(props)
-    phys2log = {p: l for l, p in mp.items()}
-    import json as _json
-
-    widen = _json.loads(props.get("colwiden", "{}") or "{}")
-    live = snap.live
-    if not live:
+    if not snap.live:
         raise ValueError(f"lake_cdc: no added files in any commit at {path}")
-    # merge field sets across ALL live files (footer reads only): a
-    # schema-evolved table's widest columns may live in any commit
-    seen: dict[str, str] = {}
-    order: list[str] = []
-    for name in sorted(live):
-        schema = pq.read_schema(os.path.join(_data_dir(path), name))
-        for f in schema:
-            if f.name in dropped:
-                continue
-            fname = phys2log.get(f.name, f.name)
-            t = str(f.type)
-            if t.startswith("timestamp"):
-                ddl = "timestamp"
-            elif t.startswith("decimal"):
-                ddl = t
-            else:
-                ddl = _ARROW_TO_DDL.get(t)
-            if ddl is None:
-                raise ValueError(
-                    f"lake_cdc: unsupported column type {t} ({f.name})"
-                )
-            if fname not in seen:
-                seen[fname] = ddl
-                order.append(fname)
-            elif seen[fname] != ddl:
-                # widened tables legitimately mix footer widths: take
-                # the wider type (the per-file conform step upcasts)
-                from dbimport_spark.txnlog import _widen_join
-
-                j = _widen_join(seen[fname], ddl)
-                if j is None:
-                    raise ValueError(
-                        f"lake_cdc: conflicting types for {fname}: "
-                        f"{seen[fname]} vs {ddl}"
-                    )
-                seen[fname] = j
-    # ALTER COLUMN TYPE widening: the property is authoritative even
-    # when every live footer is still narrow
-    for phys, ddl in widen.items():
-        fname = phys2log.get(phys, phys)
-        if fname in seen:
-            seen[fname] = ddl
-    cols = [f"{n} {seen[n]}" for n in order]
+    table_pcol = snap.props.get("partition.column")
+    cols = [f"{n} {t}" for n, t in snap.dtypes.items() if n != table_pcol]
     if partition_col:
         ptype = snap.ptype
         if ptype is None:
@@ -300,9 +232,9 @@ class LakeCdcStreamReader(DataSourceStreamReader):
     def __init__(self, path: str, options, schema=None):
         # arrow schema of the DATA columns (everything but the appended
         # partition + _commit_version columns): older commits' files may
-        # predate later widening commits, so each file is conformed to
-        # this schema with null-fill — the streaming spelling of the
-        # batch reader's mergeSchema
+        # predate later columns or widenings, so each file is conformed
+        # to this schema with null-fill and upcasts — the streaming
+        # spelling of the batch reader's log-carried schema
         self._data_fields = None
         if schema is not None:
             from pyspark.sql.pandas.types import to_arrow_schema

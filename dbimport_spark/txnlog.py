@@ -31,7 +31,7 @@ snapshot metadata is the same idea) reduced to its load-bearing core:
   DISTRIBUTED (``write_checkpoint_incremental`` — driver holds O(suffix)
   state, executors write the parts).
 
-Three pieces carry the protocol through the code:
+Four pieces carry the protocol through the code:
 
 * ``Snapshot`` — one immutable table state: ``Snapshot.at(path,
   version)`` LISTs the log once (when no version is given) and folds it
@@ -55,7 +55,14 @@ Three pieces carry the protocol through the code:
   (the log never names them, so vacuum never would), runs the
   post-commit hooks after a win (change data under ``cdf.enabled``,
   auto-optimize on the plain appends) and raises ``TxnConflict`` after
-  ``max_retries`` lost races.
+  ``max_retries`` lost races;
+* the table schema — Delta's ``metaData.schemaString``: a commit whose
+  staged files add or widen a column records the merged physical
+  schema (``_merge_schema`` under the WIDENING lattice; an unrelated
+  type conflict is refused before the claim), ``Snapshot.schema`` folds
+  it like any property, and every scan reads with it
+  (``_scan_files``), so planning a read opens no footer and launches no
+  Spark job. ``txn_widen_column`` is a schema-only commit.
 
 The DML strategy: an UPSERT (``txn_upsert``, and ``txn_merge_dv`` with a
 pruned key scan) is MERGE-ON-READ through one core, ``_merge_on_read``:
@@ -91,12 +98,18 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructField, StructType
 
 from dbimport_spark.frames import local_frame
 
 #: The package logger: post-commit work that fails without failing the
 #: commit (change-data files, interval checkpoints) is reported here.
 _log = logging.getLogger("dbimport_spark")
+
+#: Reserved table property holding the table's physical schema
+#: (``StructType`` JSON; see Snapshot.schema). Only commits write it —
+#: txn_set_property refuses the key and table_props hides it.
+_SCHEMA = "schema"
 
 
 class TxnConflict(RuntimeError):
@@ -312,6 +325,32 @@ class Snapshot:
             for k, v in self.props.items()
             if k.startswith("unique.") and k != "unique.autoStats"
         }
+
+    @property
+    def schema(self) -> StructType | None:
+        """The physical schema of the table's files as the log records
+        it: every column any write staged, under its physical name, at
+        the widest type WIDENING joined (see commit). None before the
+        first write."""
+        raw = self.props.get(_SCHEMA)
+        return None if raw is None else StructType.fromJson(json.loads(raw))
+
+    @property
+    def dtypes(self) -> dict[str, str]:
+        """{logical column → DDL type} as a read of this snapshot shows
+        them — column mapping applied, dropped columns gone, the
+        partition column last — without opening a file."""
+        mp, dropped = _colmap(self.props)
+        phys2log = {p: l for l, p in mp.items()}
+        out = {
+            phys2log.get(f.name, f.name): f.dataType.simpleString()
+            for f in (self.schema or StructType()).fields
+            if f.name not in dropped
+        }
+        pcol = self.props.get("partition.column")
+        if self.ptype is not None and pcol is not None:
+            out[pcol] = self.ptype
+        return out
 
 
 def _ckpt_arrow_schema():
@@ -585,15 +624,16 @@ def read_snapshot(spark, path: str, version: int | None = None) -> DataFrame:
     """DataFrame over the snapshot's file list (empty snapshot → error;
     create the table with a first commit before reading).
 
-    Reads with mergeSchema so commits carrying EVOLVED schemas (columns
-    added over the table's lifetime) union into one superset schema with
-    NULL backfill — the read-side half of schema evolution; cost is one
-    footer read per live file, which the snapshot already enumerates.
+    Reads under the schema the log records at that version
+    (Snapshot.schema): columns added over the table's lifetime read as
+    NULL from files that predate them, and narrower footers upcast in the
+    scan. No footer is opened to plan the read, so it launches no Spark
+    job before an action.
 
     Files carrying a deletion vector (txn_delete_dv) are read MERGE-ON-
     READ: their DV'd row positions are anti-joined out via the parquet
     ``_metadata.row_index`` column. Tables without DVs (the common case)
-    take the plain scan — byte-identical plan to before DVs existed."""
+    take the plain scan."""
     return _read_snapshot(spark, Snapshot.at(path, _pinned_version(path, version)))
 
 
@@ -619,7 +659,8 @@ def _read_snapshot(
     """The one reader of a snapshot's rows: the visible rows of ``names``
     (default: every live file) under the logical schema as of
     ``snap.version``. Every public read and every transaction step that
-    reads table rows comes through here.
+    reads table rows comes through here. Every file is scanned under
+    ``snap.schema`` (see _scan_files), so no footer is read.
 
     * Partitioned tables: the partition VALUE lives in the log, not the
       files, so each value's file group is scanned with the typed literal
@@ -667,7 +708,7 @@ def _read_snapshot(
         if pcol is not None:
             df = df.withColumn(pcol, _partition_lit(value, snap.ptype))
         parts.append(df)
-    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    out = reduce(DataFrame.unionByName, parts)
     keep = (("__f", "__p") if marked else ()) + ((pcol,) if pcol else ())
     return _apply_colmap(out, snap.props, keep=keep)
 
@@ -683,13 +724,14 @@ def _enforce_schema(df: DataFrame, snap: Snapshot) -> None:
     not ADD columns and every shared column's type must match the
     current logical schema exactly. Missing columns stay allowed (they
     null-fill on read, same as before). Without the property this is a
-    no-op — evolution-by-default is unchanged."""
+    no-op — evolution-by-default is unchanged. The table's types come
+    from the log (Snapshot.dtypes); no file is read."""
     if snap.props.get("schema.enforce") != "true":
         return
     if not snap.live:
         return  # nothing committed yet: the first write defines the schema
     path = snap.path
-    want = dict(_read_snapshot(df.sparkSession, snap).dtypes)
+    want = snap.dtypes
     got = dict(df.dtypes)
     extra = sorted(set(got) - set(want))
     if extra:
@@ -714,10 +756,77 @@ def _enforce_schema(df: DataFrame, snap: Snapshot) -> None:
         )
 
 
-def _stage(df: DataFrame, snap: Snapshot) -> list[str]:
+def _merge_schema(table: StructType | None, staged: StructType) -> StructType:
+    """``table`` ∪ ``staged`` (physical schemas): new columns append in
+    staged order, a shared column takes the wider of its two types under
+    WIDENING, and an unrelated type conflict raises — the one schema
+    merge rule, applied when a write commits (_with_staged) and when
+    foreign files are converted (txn_convert_parquet_dir)."""
+    fields = list(table.fields) if table is not None else []
+    at = {f.name: i for i, f in enumerate(fields)}
+    for f in staged.fields:
+        i = at.get(f.name)
+        if i is None:
+            at[f.name] = len(fields)
+            fields.append(StructField(f.name, f.dataType, True))
+            continue
+        a, b = fields[i].dataType.simpleString(), f.dataType.simpleString()
+        j = _widen_join(a, b)
+        if j is None:
+            raise ValueError(
+                f"cannot merge column {f.name!r}: {a} vs {b} is not a widening"
+            )
+        if j != a:
+            fields[i] = StructField(f.name, f.dataType, True)
+    return StructType(fields)
+
+
+class _Staged(list):
+    """The names (or commit entries) of freshly staged files, carrying
+    ``schema``: the physical schema (StructType JSON) the writer held
+    when it staged them. The commit that publishes them merges it into
+    the table schema (_with_staged)."""
+
+    def __init__(self, entries, schema: str):
+        super().__init__(entries)
+        self.schema = schema
+
+
+def _staged_schema(snap: Snapshot, df: DataFrame, pcol: str | None = None) -> str:
+    """The physical schema (JSON) of the files staging ``df`` — already
+    under physical names — writes: every field nullable, the partition
+    column ``pcol`` left to the log. A type that does not merge into
+    ``snap``'s schema is refused here, before any file is written."""
+    schema = StructType([
+        StructField(f.name, f.dataType, True)
+        for f in df.schema.fields
+        if f.name != pcol
+    ])
+    _merge_schema(snap.schema, schema)
+    return schema.json()
+
+
+def _with_staged(props: dict, staged) -> dict:
+    """``props`` with the table schema merged (_merge_schema) with the
+    schema of ``staged`` files (a _Staged list; other lists carry none):
+    the properties of the version a commit publishing them creates —
+    what that commit records, and what a read of the staged files before
+    it (CHECK/unique validation, change data) sees."""
+    schema = getattr(staged, "schema", None)
+    if schema is None:
+        return props
+    raw = props.get(_SCHEMA)
+    merged = _merge_schema(
+        None if raw is None else StructType.fromJson(json.loads(raw)),
+        StructType.fromJson(json.loads(schema)),
+    )
+    return {**props, _SCHEMA: merged.json()}
+
+
+def _stage(df: DataFrame, snap: Snapshot) -> _Staged:
     """Write df's rows as fresh uniquely-named parquet files under data/
-    and return their basenames (staged but NOT yet visible — only a log
-    commit publishes them).
+    and return their basenames with the files' schema (staged but NOT
+    yet visible — only a log commit publishes them).
 
     Honors the ``write.maxRecordsPerFile`` table property (file-size
     governance that travels WITH the table — every writer splits oversize
@@ -731,6 +840,7 @@ def _stage(df: DataFrame, snap: Snapshot) -> list[str]:
     # the writer's logical era (physical names are stable, so a rename
     # racing this stage cannot invalidate the written files)
     df = _unapply_colmap(df, props)
+    schema = _staged_schema(snap, df)
     writer = df.write.mode("overwrite")
     max_rec = props.get("write.maxRecordsPerFile")
     if max_rec:
@@ -748,7 +858,7 @@ def _stage(df: DataFrame, snap: Snapshot) -> list[str]:
     for leftover in os.listdir(stage_dir):
         os.remove(os.path.join(stage_dir, leftover))
     os.rmdir(stage_dir)
-    return names
+    return _Staged(names, schema)
 
 
 # --------------------------------------------------- commit claim backend
@@ -1010,7 +1120,15 @@ def commit(
     Delta's metadata-update action; CHECK constraints live here.
     ``snapshot`` is the Snapshot at ``expect_version`` the actions were
     computed against (the transaction driver passes it), so row-id
-    assignment reads its properties instead of folding the log again.
+    assignment and the schema merge read its properties instead of
+    folding the log again.
+
+    The TABLE SCHEMA is decided here: when ``added`` is the list _stage
+    returned (a _Staged), the staged files' schema merges into the
+    schema at ``expect_version`` (_with_staged) and the entry records
+    the result when it changed — an unrelated type conflict raises
+    ValueError before the claim. Readers take every version's schema
+    from the log.
 
     The entry's CONTENT is complete before its NAME exists: the version
     is claimed through the CommitBackend seam's put_if_absent — on POSIX
@@ -1022,6 +1140,7 @@ def commit(
     (``current_version`` ignores the temp names: they don't match the
     ``<digits>.json`` pattern.)"""
     os.makedirs(_log_dir(path), exist_ok=True)
+    staged = added  # sorting below drops a _Staged list's schema
     new_v = expect_version + 1
     fp = os.path.join(_log_dir(path), f"{new_v:08d}.json")
     key = lambda e: e["n"] if isinstance(e, dict) else e
@@ -1035,12 +1154,13 @@ def commit(
     # DV deletes preserve survivors' ids; rewrites retire and re-assign
     # (the materialized-id upgrade Delta needs for rewrite-stable ids is
     # out of scope, documented).
+    prev_props: dict = {}
     if added and expect_version >= 0:
         if snapshot is not None and snapshot.version == expect_version:
             prev_props = snapshot.props
         else:
             try:
-                prev_props = table_props(path, expect_version)
+                prev_props = Snapshot.at(path, expect_version).props
             except (ValueError, FileNotFoundError, json.JSONDecodeError):
                 # log state not readable from THIS process (e.g. the
                 # in-memory commit-backend double, where entries never
@@ -1070,6 +1190,9 @@ def commit(
             added = with_rid
             props = dict(props or {})
             props["rowids.next"] = str(base)
+    schema = _with_staged(prev_props, staged).get(_SCHEMA)
+    if schema != prev_props.get(_SCHEMA):
+        props = {**(props or {}), _SCHEMA: schema}
     body = {
         "version": new_v,
         "added": added,
@@ -1173,6 +1296,10 @@ def _transact(spark, path: str, attempt, max_retries: int, what: str):
             if acts.reap == "lost":
                 _reap(path, acts.added, acts.dv)
             continue
+        except ValueError:  # the staged schema conflicts with the table's
+            if acts.reap is not None:
+                _reap(path, acts.added, acts.dv)
+            raise
         if acts.change_data is not None:
             _maybe_write_change_data(snap, v, *acts.change_data)
         if acts.auto_optimize:
@@ -1280,7 +1407,10 @@ def _append(
             checks = _validate_staged(spark, snap, added, partition_col)
             _validate_unique(spark, snap, added, partition_col)
             if cols is not None or bloom_col is not None:
-                added = _describe(snap, added, cols or (), bloom_col, fpp)
+                added = _Staged(
+                    _describe(snap, added, cols or (), bloom_col, fpp),
+                    added.schema,
+                )
             st.update(
                 added=added,
                 auto=(
@@ -1527,6 +1657,7 @@ def _stage_partitioned(df: DataFrame, snap: Snapshot, partition_col: str):
                 for c in df.columns
             ]
         )
+    schema = _staged_schema(snap, df, partition_col)
     df.write.mode("overwrite").partitionBy(partition_col).parquet(stage_dir)
     os.makedirs(_data_dir(path), exist_ok=True)
     added = []
@@ -1547,7 +1678,7 @@ def _stage_partitioned(df: DataFrame, snap: Snapshot, partition_col: str):
                 # must not come back as string).
                 added.append({"n": name, "p": value, "t": ptype})
     shutil.rmtree(stage_dir, ignore_errors=True)
-    return added
+    return _Staged(added, schema)
 
 
 def _partition_lit(encoded, ptype):
@@ -1688,7 +1819,8 @@ def read_changes(
     # Schema evolution: a column added between from_version and
     # to_version is absent from the OLD snapshot (and a dropped column
     # absent from the NEW) — project NULL for the missing side instead
-    # of selecting a nonexistent column, mirroring mergeSchema reads.
+    # of selecting a nonexistent column, as a read null-fills a column
+    # its file predates.
     old_types = dict(old.dtypes)
     new_types = dict(new.dtypes)
     all_vals = val_cols + [
@@ -2275,22 +2407,16 @@ def _ever_dir(path: str, v: int) -> str:
 
 
 def _ever_versions(path: str) -> list[int]:
-    """Every consolidation version present, either format (legacy
-    ``_ever.<v>.json`` single files or ``_ever.<v>/`` part dirs),
+    """Every consolidation version present (``_ever.<v>/`` part dirs),
     ascending."""
     d = _log_dir(path)
     if not os.path.isdir(d):
         return []
-    out = set()
-    for f in os.listdir(d):
-        if not f.startswith("_ever."):
-            continue
-        mid = f[len("_ever."):]
-        if mid.endswith(".json"):
-            mid = mid[: -len(".json")]
-        if mid.isdigit():
-            out.add(int(mid))
-    return sorted(out)
+    return sorted(
+        int(f[len("_ever."):])
+        for f in os.listdir(d)
+        if f.startswith("_ever.") and f[len("_ever."):].isdigit()
+    )
 
 
 def _ever_best(path: str) -> int:
@@ -2300,8 +2426,8 @@ def _ever_best(path: str) -> int:
 
 
 def _ever_manifest(path: str, v: int) -> dict | None:
-    """Manifest of the sharded consolidation at ``v`` (None when only
-    the legacy single-JSON format, or nothing, exists there)."""
+    """Manifest of the sharded consolidation at ``v`` (None when none
+    exists there)."""
     mf = os.path.join(_ever_dir(path, v), "manifest.json")
     if not os.path.exists(mf):
         return None
@@ -2318,27 +2444,23 @@ def _ever_arrow_schema():
 def _iter_ever_chunks(path: str, v: int):
     """Yield ``(file_names, dv_names)`` list chunks of the consolidation
     at ``v``, ONE PARQUET PART AT A TIME — driver memory is O(part), not
-    O(files-ever). A legacy single-JSON consolidation yields one chunk.
-    Raises FileNotFoundError when a racing vacuum reaps the
-    consolidation mid-iteration — callers re-read ``_ever_best`` and
+    O(files-ever). Raises FileNotFoundError when a racing vacuum reaps
+    the consolidation mid-iteration — callers re-read ``_ever_best`` and
     retry."""
-    man = _ever_manifest(path, v)
-    if man is not None:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        d = _ever_dir(path, v)
-        for part in man["parts"]:
-            tbl = pq.read_table(os.path.join(d, part), columns=["n", "k"])
-            ns = tbl.column("n").to_pylist()
-            ks = tbl.column("k").to_pylist()
-            yield (
-                [n for n, k in zip(ns, ks) if k == "f"],
-                [n for n, k in zip(ns, ks) if k == "d"],
-            )
-        return
-    with open(os.path.join(_log_dir(path), f"_ever.{v:08d}.json")) as fh:
-        body = json.load(fh)
-    yield body["files"], body["dv"]
+    man = _ever_manifest(path, v)
+    if man is None:
+        raise FileNotFoundError(_ever_dir(path, v))
+    d = _ever_dir(path, v)
+    for part in man["parts"]:
+        tbl = pq.read_table(os.path.join(d, part), columns=["n", "k"])
+        ns = tbl.column("n").to_pylist()
+        ks = tbl.column("k").to_pylist()
+        yield (
+            [n for n, k in zip(ns, ks) if k == "f"],
+            [n for n, k in zip(ns, ks) if k == "d"],
+        )
 
 
 def _read_ever(path: str) -> tuple[set, set, int]:
@@ -2409,25 +2531,17 @@ def _write_ever(path: str, through: int, files, dvs, carry=None) -> bool:
 
 
 def _reap_ever_below(path: str, v_keep: int) -> None:
-    """Delete consolidations strictly below ``v_keep`` (both formats).
-    They are superseded: readers only consume ``_ever_best``, and every
+    """Delete consolidations strictly below ``v_keep``. They are
+    superseded: readers only consume ``_ever_best``, and every
     newer consolidation covers at least the same still-on-disk names
     (a name is only ever dropped AFTER its file is physically deleted).
     Racing readers of a reaped consolidation see FileNotFoundError and
     retry from the surviving best."""
-    d = _log_dir(path)
-    for v in _ever_versions(path):
-        if v >= v_keep:
-            continue
-        try:
-            os.remove(os.path.join(d, f"_ever.{v:08d}.json"))
-        except FileNotFoundError:
-            pass
-        ed = _ever_dir(path, v)
-        if os.path.isdir(ed):
-            import shutil
+    import shutil
 
-            shutil.rmtree(ed, ignore_errors=True)
+    for v in _ever_versions(path):
+        if v < v_keep:
+            shutil.rmtree(_ever_dir(path, v), ignore_errors=True)
 
 
 def txn_cleanup_log(path: str) -> int:
@@ -2478,13 +2592,9 @@ def txn_cleanup_log(path: str) -> int:
             carry = None
             if best >= 0:
                 man = _ever_manifest(path, best)
-                if man is not None:
-                    carry = (best, man["parts"])
-                else:
-                    # one-time migration off the legacy single-JSON form
-                    for fs, ds in _iter_ever_chunks(path, best):
-                        files.update(fs)
-                        dvs.update(ds)
+                if man is None:
+                    raise FileNotFoundError(_ever_dir(path, best))
+                carry = (best, man["parts"])
             # Drop names whose file is already gone (vacuumed before this
             # consolidation existed): they can never need reaping again,
             # and keeping them is exactly the O(files-ever) growth this
@@ -3045,9 +3155,16 @@ def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
     divergence-safe choice as txn_clone) and ONE commit publishes them,
     with per-file footer stats when ``stats_cols`` is given so zone-map
     skipping and snapshot_profile work from the first version. The
+    commit records the table schema: the files are foreign, so it is
+    the one schema taken from footers — read once here, with pyarrow on
+    the driver (a Spark writer's own footer schema when it left one),
+    and merged by the same rule as every write (_merge_schema). The
     source directory stays valid for legacy readers; the table owns its
     names from here on."""
     import glob as _glob
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     if current_version(path) >= 0:
         raise ValueError(f"convert target {path!r} already has a log")
@@ -3057,7 +3174,18 @@ def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
     os.makedirs(_data_dir(path), exist_ok=True)
     conv_id = uuid.uuid4().hex
     added = []
+    schema = None
     for i, src in enumerate(files):
+        footer = pq.read_schema(src)
+        spark_json = (footer.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        schema = _merge_schema(
+            schema,
+            StructType.fromJson(json.loads(spark_json))
+            if spark_json
+            else from_arrow_schema(footer, prefer_timestamp_ntz=True),
+        )
         name = f"part-{conv_id}-{i:04d}.parquet"
         os.link(src, os.path.join(_data_dir(path), name))
         st = (
@@ -3066,7 +3194,9 @@ def txn_convert_parquet_dir(src_dir: str, path: str, stats_cols=()) -> int:
             else {}
         )
         added.append({"n": name, "p": None, "stats": st})
-    return commit(path, added, [], -1, op="CONVERT")
+    return commit(
+        path, added, [], -1, props={_SCHEMA: schema.json()}, op="CONVERT"
+    )
 
 
 # ------------------------------------------------- deletion vectors (DV)
@@ -3230,132 +3360,16 @@ def _widen_join(t1: str, t2: str) -> str | None:
     return None
 
 
-#: (hash of file list, widen json) → StructType. Files are immutable and
-#: uniquely named, so a repeated scan of the same snapshot (bench loops,
-#: multi-read queries) reuses the footer sweep instead of re-running it.
-_WIDEN_SCHEMA_MEMO: dict[tuple, object] = {}
-_WIDEN_SCHEMA_MEMO_MAX = 64
-
-
-def _widen_read_schema(spark, files: list[str], widen: dict):
-    """Unified read schema for files whose footers may disagree in WIDTH
-    (a widened table mixes pre-widen int32 files with post-widen int64
-    files — Spark's mergeSchema refuses that union; the explicit-schema
-    read upcasts it natively, SPARK-40876). DISTRIBUTED: executors read
-    footers and emit DISTINCT serialized arrow schemas (a handful per
-    table); the driver merges only those — O(distinct schemas) driver
-    work at any file count. ``widen`` (physical column → DDL type)
-    overrides the merged width. Memoized per (file set, widen) — data
-    files are immutable, so the same snapshot never re-sweeps. The memo
-    key is a sha256 over the sorted names, NOT the builtin 64-bit hash:
-    a truncated-hash collision between two different file sets would
-    silently return the wrong read schema."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for f in sorted(files):
-        h.update(f.encode())
-        h.update(b"\x00")
-    memo_key = (h.hexdigest(), json.dumps(widen, sort_keys=True))
-    cached = _WIDEN_SCHEMA_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructField, StructType
-
-    def _footers(it):
-        import pyarrow.parquet as pq
-
-        seen = set()
-        for f in it:
-            b = pq.read_schema(f).remove_metadata().serialize().to_pybytes()
-            if b not in seen:
-                seen.add(b)
-                yield b
-
-    n_slices = max(1, min(len(files), 64))
-    distinct = set(
-        spark.sparkContext.parallelize(files, n_slices)
-        .mapPartitions(_footers)
-        .collect()
-    )
-    merged: dict[str, object] = {}
-    order: list[str] = []
-    for raw in sorted(distinct):
-        # prefer_timestamp_ntz: map tz-NAIVE footers to timestamp_ntz
-        # (their faithful Spark type — and the only target the parquet
-        # reader will upcast a DATE32 footer to; tz-adjusted footers
-        # still map to timestamp), so the date→timestamp_ntz widening
-        # arm unifies instead of refusing as date-vs-timestamp
-        st = from_arrow_schema(
-            pa.ipc.read_schema(pa.py_buffer(raw)), prefer_timestamp_ntz=True
-        )
-        for f in st.fields:
-            if f.name not in merged:
-                merged[f.name] = f.dataType
-                order.append(f.name)
-                continue
-            a, b = merged[f.name].simpleString(), f.dataType.simpleString()
-            j = _widen_join(a, b)
-            if j is None and a != b:
-                raise ValueError(
-                    f"cannot merge column {f.name!r}: {a} vs {b} is not a "
-                    "widening"
-                )
-            if j is not None and j != a:
-                merged[f.name] = f.dataType
-    from pyspark.sql.types import _parse_datatype_string
-
-    for col, ddl in widen.items():
-        if col in merged:
-            merged[col] = _parse_datatype_string(ddl)
-    out = StructType([StructField(n, merged[n], True) for n in order])
-    if len(_WIDEN_SCHEMA_MEMO) >= _WIDEN_SCHEMA_MEMO_MAX:
-        _WIDEN_SCHEMA_MEMO.clear()  # tiny cache: wholesale reset is fine
-    _WIDEN_SCHEMA_MEMO[memo_key] = out
-    return out
-
-
 def _scan_files(spark, files: list[str], props: dict):
-    """The snapshot's file scan: plain mergeSchema union normally; when
-    the version's props (``props``) carry ``colwiden`` (ALTER COLUMN TYPE widening),
-    an explicit-schema read that upcasts narrow footers in the scan
-    itself — zero data rewritten by the widen, exactly one plan.
-
-    SELF-HEALING width evolution: a writer may append a WIDER batch
-    (int-era table, bigint values — the reference's re-import decay,
-    DataProvider.java:61-148) without declaring the widen first. Plain
-    mergeSchema then refuses the union; instead of bricking every read,
-    the scan falls back to the lattice-unified explicit schema (exact
-    widenings only — unrelated type conflicts still fail loudly).
-    Appends stay zero-read-cost; the conflict price (one failed
-    analysis + a distributed footer sweep) is paid per read and only on
-    width-mixed tables — declare txn_widen_column to skip it."""
-    widen = json.loads(props.get("colwiden", "{}") or "{}")
-    if not widen:
-        try:
-            return spark.read.option("mergeSchema", "true").parquet(*files)
-        except Exception as e:  # noqa: BLE001 — surfaces as SparkException
-            # (distributed footer merge) OR AnalysisException depending
-            # on where resolution happens. Prefer the structured error
-            # class (stable across releases/locales); fall back to the
-            # message substring for exception types that don't carry one
-            # (e.g. a JVM SparkException tunneled through py4j).
-            klass = None
-            get_klass = getattr(e, "getErrorClass", None)
-            if callable(get_klass):
-                try:
-                    klass = get_klass()
-                except Exception:  # noqa: BLE001 — best-effort introspection
-                    klass = None
-            merge_conflict = (
-                klass is not None and "CANNOT_MERGE_SCHEMAS" in klass
-            ) or "CANNOT_MERGE_SCHEMAS" in str(e)
-            if not merge_conflict:
-                raise
-    schema = _widen_read_schema(spark, files, widen)
-    return spark.read.schema(schema).parquet(*files)
+    """The parquet scan of ``files`` under the schema the log records at
+    the resolving version (``props``; see Snapshot.schema): a file that
+    predates a column reads it as NULL, and a narrower footer (an int-era
+    file of a widened column) upcasts in the scan itself (SPARK-40876).
+    Planning opens no footer, so the scan launches no Spark job."""
+    raw = props.get(_SCHEMA)
+    if raw is None:
+        raise ValueError(f"the log records no table schema for {files[0]}")
+    return spark.read.schema(StructType.fromJson(json.loads(raw))).parquet(*files)
 
 
 def _read_files_dv(
@@ -3368,8 +3382,9 @@ def _read_files_dv(
     for small DVs. The two branches union, so a table where 1% of files
     carry DVs pays the join on 1% of the scan. ``marked`` reads every
     file through one marked scan and keeps the marks (``__f``/``__p``).
-    ``props`` (the resolving version's properties) route widened tables
-    through the upcasting explicit-schema scan."""
+    ``props`` are the resolving version's properties; every scan takes
+    the table schema they record (_scan_files), so both branches share
+    one schema and the union needs no footer read."""
     dvmap = {os.path.basename(f): dvmap[os.path.basename(f)]
              for f in files if os.path.basename(f) in dvmap}
     if not dvmap and not marked:
@@ -3399,7 +3414,7 @@ def _read_files_dv(
     if not plain:
         return filtered
     rest = _scan_files(spark, plain, props)
-    return rest.unionByName(filtered, allowMissingColumns=True)
+    return rest.unionByName(filtered)
 
 
 def _marked(df: DataFrame, f: str = "__f", p: str = "__p") -> DataFrame:
@@ -3418,24 +3433,26 @@ def _marked(df: DataFrame, f: str = "__f", p: str = "__p") -> DataFrame:
 def txn_widen_column(
     spark, path: str, col: str, new_type: str, max_retries: int = 5
 ) -> int:
-    """ALTER TABLE ALTER COLUMN TYPE (widening) as a METADATA-ONLY
-    commit: no file is opened or rewritten at any table size — the
-    ``colwiden`` property records {physical column → widened DDL type}
-    and every read upcasts in the scan (Spark's parquet readers promote
-    int32→int64 / float→double natively when handed the wider schema).
-    Appends AFTER the widen may write either width; a later compaction
+    """ALTER TABLE ALTER COLUMN TYPE (widening) as a SCHEMA-ONLY commit:
+    no file is opened or rewritten at any table size — the commit
+    records the table schema with the column's physical field at
+    ``new_type``, and every read upcasts the narrower files in the scan
+    (Spark's parquet readers promote int32→int64 / float→double /
+    date→timestamp_ntz natively when handed the wider schema). Appends
+    AFTER the widen may write either width; a later compaction
     materializes the wide type the same way it purges dropped columns.
     Allowed promotions are the EXACT arms of the reference's inference
     lattice (WIDENING; bigint→double is lossy and refused). Composes
-    with column mapping (the property is keyed by the stable physical
+    with column mapping (the schema is keyed by the stable physical
     name, so later renames keep the widen), CDF and row tracking —
     pinned by the interplay tests."""
+    from pyspark.sql.types import _parse_datatype_string
 
     def attempt(snap: Snapshot):
         if snap.version < 0:
             raise ValueError(f"cannot widen columns of empty table {path}")
         props = snap.props
-        cur_types = dict(_read_snapshot(spark, snap).dtypes)
+        cur_types = snap.dtypes
         if col not in cur_types:
             raise ValueError(f"widen: no column {col!r} in {sorted(cur_types)}")
         cur = cur_types[col]
@@ -3449,12 +3466,12 @@ def txn_widen_column(
         if props.get("partition.column") == col:
             raise ValueError("widen: partition column widening not supported")
         phys = _phys_col(props, col)
-        widen = json.loads(props.get("colwiden", "{}") or "{}")
-        widen[phys] = new_type
-        return _Commit(
-            [], props={"colwiden": json.dumps(widen, sort_keys=True)},
-            op="WIDEN_COLUMN",
-        )
+        wide = _parse_datatype_string(new_type)
+        schema = StructType([
+            StructField(f.name, wide, True) if f.name == phys else f
+            for f in snap.schema.fields
+        ])
+        return _Commit([], props={_SCHEMA: schema.json()}, op="WIDEN_COLUMN")
 
     return _transact(spark, path, attempt, max_retries, f"widening on {path}")
 
@@ -3557,8 +3574,11 @@ def _stage_with_meta(
     entered by bare name."""
     if not stats_cols and snap.props.get("write.statsColumns"):
         stats_cols = _split_cols(snap.props["write.statsColumns"])
-    entries = _describe(snap, _stage(df, snap), stats_cols, bloom_col, fpp)
-    return [e if e["stats"] else e["n"] for e in entries]
+    staged = _stage(df, snap)
+    entries = _describe(snap, staged, stats_cols, bloom_col, fpp)
+    return _Staged(
+        [e if e["stats"] else e["n"] for e in entries], staged.schema
+    )
 
 
 def _copy_on_write(
@@ -3706,8 +3726,10 @@ class CheckViolation(ValueError):
 
 
 def table_props(path: str, version: int | None = None) -> dict:
-    """Latest-wins table-property dict at ``version`` (default latest)."""
-    return Snapshot.at(path, version).props
+    """Latest-wins table-property dict at ``version`` (default latest);
+    the log-carried schema (Snapshot.schema) is not a user property."""
+    props = Snapshot.at(path, version).props
+    return {k: v for k, v in props.items() if k != _SCHEMA}
 
 
 def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 5) -> int:
@@ -3724,7 +3746,15 @@ def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 
     knowingly. Existing files simply carry no stats for the column
     until rewritten (pruning is conservative there). Opt out with table
     property ``unique.autoStats = false`` (stats collection itself is
-    the cost being declined: one footer min/max per staged file)."""
+    the cost being declined: one footer min/max per staged file).
+
+    The key ``schema`` is reserved: the table schema changes only
+    through writes and txn_widen_column."""
+    if key == _SCHEMA:
+        raise ValueError(
+            f"{key!r} is reserved: the table schema changes only through "
+            "writes and txn_widen_column"
+        )
 
     def attempt(snap: Snapshot):
         props = {key: value}
@@ -3840,7 +3870,7 @@ def txn_rename_column(
             raise ValueError(f"cannot rename columns of empty table {path}")
         props = snap.props
         mp, dropped = _colmap(props)
-        logical = _read_snapshot(spark, snap).columns
+        logical = list(snap.dtypes)
         if old not in logical:
             raise ValueError(f"rename: no column {old!r} in {sorted(logical)}")
         physical = {mp.get(c, c) for c in logical} | set(dropped)
@@ -3884,7 +3914,7 @@ def txn_drop_column(spark, path: str, col: str, max_retries: int = 5) -> int:
             raise ValueError(f"cannot drop columns of empty table {path}")
         props = snap.props
         mp, dropped = _colmap(props)
-        logical = _read_snapshot(spark, snap).columns
+        logical = list(snap.dtypes)
         if col not in logical:
             raise ValueError(f"drop: no column {col!r} in {sorted(logical)}")
         if len(logical) <= 1:
@@ -3972,7 +4002,9 @@ def _validate_staged(
 
 def _staged_rows(spark, snap: Snapshot, staged, partition_col=None):
     """The rows of freshly staged files (None when there are none) under
-    ``snap``'s logical schema: the files as a snapshot of their own,
+    ``snap``'s logical schema with the staged files' columns merged in
+    (_with_staged — a column or width the batch adds is visible): the
+    files as a snapshot of their own,
     read by the one reader (staged files carry physical names). Entries
     are bare names or partitioned ``{"n", "p", "t"}`` dicts; the first
     partitioned commit sets partition.column IN that commit, so the
@@ -3984,8 +4016,9 @@ def _staged_rows(spark, snap: Snapshot, staged, partition_col=None):
         e = e if isinstance(e, dict) else {"n": e}
         live[e["n"]] = {"p": e.get("p"), "stats": {}, "dv": None, "rid": None}
         ptype = e.get("t") or ptype
+    props = _with_staged(snap.props, staged)
     return _read_snapshot(
-        spark, Snapshot(snap.path, snap.version, live, ptype, snap.props),
+        spark, Snapshot(snap.path, snap.version, live, ptype, props),
         pcol=partition_col,
     )
 
@@ -4226,18 +4259,15 @@ def _read_entry_body(path: str, v: int) -> dict:
 
 def version_asof(path: str, ts: float) -> int:
     """Newest version committed at or before wall-clock ``ts`` —
-    TIMESTAMP AS OF resolution. Entries written before timestamps existed
-    fall back to the log file's mtime. Raises when the table's first
+    TIMESTAMP AS OF resolution over the ``ts`` every commit records.
+    Raises when the table's first
     commit is later than ``ts``. Ranges over the RETAINED log
     ([log_floor, current]) — versions a cleanup truncated are below the
     vacuum horizon and unreadable anyway."""
     cur = current_version(path)
     best = -1
     for v in range(log_floor(path), cur + 1):
-        entry_ts = _read_entry_body(path, v).get("ts")
-        if entry_ts is None:
-            entry_ts = os.path.getmtime(os.path.join(_log_dir(path), f"{v:08d}.json"))
-        if entry_ts <= ts:
+        if _read_entry_body(path, v)["ts"] <= ts:
             best = v
     if best < 0:
         raise ValueError(f"no version of {path} existed at timestamp {ts}")
@@ -4276,8 +4306,10 @@ def txn_restore(path: str, version: int, max_retries: int = 5) -> int:
     the files live now but not then, and re-points/detaches deletion
     vectors so the restored snapshot's visible ROWS match exactly.
     Restoring below the vacuum horizon is refused loudly (those files are
-    physically gone). Data-only: table properties keep their current
-    values, matching Delta (RESTORE does not roll back ALTERs)."""
+    physically gone). The table schema is the restored version's — its
+    files' columns and widths, so a column added after ``version`` is
+    gone again; every other table property keeps its current value
+    (RESTORE does not roll back renames, drops or constraints)."""
     h = vacuum_horizon(path)
     if version < h:
         raise ValueError(
@@ -4288,7 +4320,7 @@ def txn_restore(path: str, version: int, max_retries: int = 5) -> int:
         cur, now = snap.version, snap.live
         if version > cur:
             raise ValueError(f"cannot restore to future version {version} (at {cur})")
-        target, ptype_t, _ = _fold_log3(path, version)
+        target, ptype_t, props_t = _fold_log3(path, version)
         added = [
             _readd_entry(n, target[n], ptype_t)
             for n in sorted(set(target) - set(now))
@@ -4308,12 +4340,18 @@ def txn_restore(path: str, version: int, max_retries: int = 5) -> int:
                 # re-added file: its DV ref must be re-attached AFTER the
                 # add in the same entry (fold applies added, then dv)
                 dv_actions.append({"n": n, "d": want["d"], "k": want["k"]})
-        if not added and not removed and not dv_actions:
+        schema = (
+            {_SCHEMA: props_t.get(_SCHEMA)}
+            if props_t.get(_SCHEMA) != snap.props.get(_SCHEMA)
+            else {}
+        )
+        if not added and not removed and not dv_actions and not schema:
             return cur  # already at that state
         # the re-added files and DV generations are the table's own: a
         # lost race must not reap them
         return _Commit(
-            added, removed, dv=dv_actions or None, op="RESTORE", reap=None
+            added, removed, dv=dv_actions or None, props=schema or None,
+            op="RESTORE", reap=None,
         )
 
     return _transact(None, path, attempt, max_retries, f"restoring {path}")

@@ -12,7 +12,6 @@ superseded consolidations are reaped. These tests pin the bound and
 the exactness it must not cost; tools/probe_churn.py is the full
 100k-files-ever probe (flat driver memory, flat log dir)."""
 
-import json
 import os
 
 import pytest
@@ -142,39 +141,6 @@ class TestShardedFormat:
         man2 = txnlog._ever_manifest(table, v2)
         assert man2 is not None
         assert len(txnlog._ever_versions(table)) == 1  # v1 reaped
-
-    def test_legacy_json_still_read_and_migrated(self, table, monkeypatch):
-        monkeypatch.setattr(txnlog, "CHECKPOINT_INTERVAL", 3)
-        prev = []
-        for r in range(8):
-            cur = _touch_batch(table, 5)
-            _commit_retry(table, cur, prev)
-            prev = cur
-        txnlog.vacuum(table, retain_versions=2)
-        # fabricate a round-9-era legacy consolidation BELOW the anchor
-        legacy_files = sorted(os.listdir(os.path.join(table, "data")))[:3]
-        with open(
-            os.path.join(table, "_txn_log", "_ever.00000002.json"), "w"
-        ) as fh:
-            fh.write(
-                json.dumps(
-                    {"files": legacy_files, "dv": [], "through": 2}
-                )
-            )
-        files, dvs, through = txnlog._read_ever(table)
-        assert through == 2 and set(legacy_files) == files
-        # cleanup migrates it into the sharded format and reaps it
-        assert txnlog.txn_cleanup_log(table) > 0
-        best = txnlog._ever_best(table)
-        assert txnlog._ever_manifest(table, best) is not None
-        assert not os.path.exists(
-            os.path.join(table, "_txn_log", "_ever.00000002.json")
-        )
-        files2, _, _ = txnlog._read_ever(table)
-        # migrated names present (all still on disk)
-        assert set(legacy_files) <= files2
-        # and the table still reads clean
-        assert txnlog.txn_fsck(table)["ok"]
 
 
 def test_cleanup_reaps_unreachable_change_data(spark, table, monkeypatch):

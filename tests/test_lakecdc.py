@@ -845,3 +845,40 @@ def test_change_feed_reads_upsert_change_files(spark, tmp_path):
         (2, "b", "delete"), (2, "b2", "delete"),
         (7, "g", "insert"),
     ]
+
+
+def test_stream_start_reads_no_data_file_footer(spark, tmp_path, monkeypatch):
+    """Starting a stream plans from the log alone: the schema (evolved,
+    widened, renamed), the reader and the first micro-batch's partitions
+    open no data-file footer — the log carries the table schema."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from dbimport_spark.sources.lakecdc import LakeCdcDataSource
+
+    path = str(tmp_path / "t")
+    txnlog.txn_append(
+        spark, spark.range(3).selectExpr("id AS k", "CAST(id AS int) AS v"), path
+    )
+    txnlog.txn_append(
+        spark,
+        spark.range(3, 5).selectExpr(
+            "id AS k", "CAST(id + 10000000000 AS bigint) AS v", "'x' AS tag"
+        ),
+        path,
+    )
+    txnlog.txn_rename_column(spark, path, "tag", "label")
+    footers = []
+    real = pq.read_schema
+    monkeypatch.setattr(
+        pq, "read_schema", lambda *a, **kw: footers.append(a) or real(*a, **kw)
+    )
+    for opts in ({}, {"readChangeFeed": "true"}):
+        source = LakeCdcDataSource({"path": path, **opts})
+        ddl = source.schema()
+        assert ddl.startswith("k bigint, v bigint, label string, _commit_version")
+        reader = source.streamReader(_parse_datatype_string(ddl))
+        start, end = reader.initialOffset(), reader.latestOffset()
+        assert reader.partitions(start, end)
+    assert footers == []

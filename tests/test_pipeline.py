@@ -605,6 +605,33 @@ def test_merge_into_partitioned_bootstrap(spark, tmp_path):
     assert got == {(1, 0, "a"), (2, 1, "b")}
 
 
+def test_merge_into_partitioned_releases_what_it_persists(spark, tmp_path):
+    """Nothing a selective-rewrite merge persists outlives the call:
+    three merges into a 40-row, 4-partition table leave the count of
+    persisted RDDs where it was (the source stayed cached once per call
+    while upsert materialized it, and the local checkpoint until a GC)."""
+    from dbimport_spark.sinks import merge_into_partitioned
+
+    path = str(tmp_path / "tgt")
+    rows = [(k, k % 4, f"v{k}") for k in range(40)]
+    spark.createDataFrame(rows, "k long, p long, v string").write.partitionBy(
+        "p"
+    ).parquet(path)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    counts = []
+    for i in range(3):
+        src = spark.createDataFrame(
+            [(1, 1, f"u{i}"), (41 + i, 1, "n")], "k long, p long, v string"
+        )
+        merge_into_partitioned(spark, path, src, ["k"], "p")
+        assert not src.storageLevel.useMemory
+        counts.append(jsc.getPersistentRDDs().size())
+    assert counts == [before] * 3
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got[1] == "u2" and {41, 42, 43} <= set(got) and len(got) == 43
+
+
 def test_zorder_write_files_cover_rectangles(spark, sf_dir, tmp_path):
     """Z-order clustering must make every written file a small RECTANGLE
     of the 2-D space so min/max stats prune on either column, where a

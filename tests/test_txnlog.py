@@ -2201,9 +2201,10 @@ def _jobs(spark, group, fn):
 def test_upsert_write_budget(spark, table):
     """One txn_upsert of 1% of the keys into a 20k-row, 4-file cdf table
     removes no file, adds under 10% of the live bytes (data, DVs and
-    change data together) and launches 13 Spark jobs at local[2], [4]
+    change data together) and launches 12 Spark jobs at local[2], [4]
     and [8] (15 for the whole-snapshot rewrite it replaced; 14 while the
-    insert branch's anti join made its build side distinct)."""
+    insert branch's anti join made its build side distinct; 13 while
+    the matched-row scan ran a footer-merge job for its schema)."""
     txnlog.txn_set_property(table, "cdf.enabled", "true")
     _four_files(spark, table)
     live = sum(os.path.getsize(f) for f in txnlog.snapshot_files(table))
@@ -2216,7 +2217,7 @@ def test_upsert_write_budget(spark, table):
     assert txnlog._read_entry_body(table, v)["removed"] == []
     added = _dir_bytes(table) - before
     assert added < 0.1 * live, f"{added} bytes added to {live} live bytes"
-    assert jobs <= 13, f"{jobs} Spark jobs for one txn_upsert"
+    assert jobs <= 12, f"{jobs} Spark jobs for one txn_upsert"
     assert txnlog.read_snapshot(spark, table).count() == 20100
 
 
@@ -2225,7 +2226,9 @@ def test_rewrite_without_cdf_reads_nothing_back(spark, table, op, jobs_reading_b
     """On a table without cdf the whole-snapshot rewrites do not read
     their staged files back (that read only fed the change data): one
     Spark job fewer than when they did, on a 20k-row, 4-file table (the
-    same at local[2], [4] and [8])."""
+    same at local[2], [4] and [8]) — and one fewer again since the
+    snapshot scan plans from the log-carried schema instead of a
+    footer-merge job."""
     _four_files(spark, table)
     src = _one_percent(spark)
     run = {
@@ -2238,7 +2241,7 @@ def test_rewrite_without_cdf_reads_nothing_back(spark, table, op, jobs_reading_b
     }[op]
     v, jobs = _jobs(spark, f"test_rewrite_without_cdf_{op}", run)
     assert v == 4
-    assert jobs == jobs_reading_back - 1
+    assert jobs == jobs_reading_back - 2
     assert not os.path.isdir(os.path.join(table, "_change_data"))
     want = 19800 if op == "delete" else 20100
     assert txnlog.read_snapshot(spark, table).count() == want
@@ -3838,7 +3841,7 @@ class TestMultiPartCheckpoint:
 
 
 class TestWidenColumn:
-    """Round-9: ALTER COLUMN TYPE widening via the colwiden property —
+    """Round-9: ALTER COLUMN TYPE widening as a schema-only commit —
     metadata-only commits, upcasting scans over mixed-width footers,
     lattice refusals, time travel, and interplay with column mapping /
     row tracking / CDF / compaction."""
@@ -4054,9 +4057,10 @@ def test_vacuum_reaps_superseded_checkpoints(spark, table, monkeypatch):
 
 class TestSelfHealingWidthEvolution:
     """A wider batch appended WITHOUT txn_widen_column must not brick
-    the table: the scan falls back to the lattice-unified explicit
-    schema (the reference's re-import decay, where a later export's
-    values outgrow the inferred type)."""
+    the table: its commit widens the log-carried schema under the
+    lattice and every read upcasts the narrower files (the reference's
+    re-import decay, where a later export's values outgrow the inferred
+    type)."""
 
     def test_wider_append_without_declared_widen_reads(self, spark, table):
         txnlog.txn_append(
@@ -4094,17 +4098,141 @@ class TestSelfHealingWidthEvolution:
         assert snap.count() == 5
 
     def test_unrelated_type_conflict_still_fails_loudly(self, spark, table):
+        """The conflict is refused at the write, not when a later read
+        meets it: the string append raises before staging a file, and
+        the table stays readable at its int schema."""
         txnlog.txn_append(
             spark, spark.range(3).selectExpr("id AS k", "CAST(id AS int) AS v"),
             table,
         )
+        before = set(os.listdir(os.path.join(table, "data")))
+        with pytest.raises(ValueError, match="not a widening"):
+            txnlog.txn_append(
+                spark,
+                spark.range(3, 5).selectExpr("id AS k", "CAST(id AS string) AS v"),
+                table,
+            )
+        assert set(os.listdir(os.path.join(table, "data"))) == before
+        assert txnlog.current_version(table) == 0
+        snap = txnlog.read_snapshot(spark, table)
+        assert dict(snap.dtypes)["v"] == "int"
+        assert sorted(r.v for r in snap.collect()) == [0, 1, 2]
+
+
+class TestLogCarriedSchema:
+    """The table schema lives in the log: a commit whose files change it
+    records the merged schema, and every read plans from the snapshot's
+    schema without opening a footer."""
+
+    def _base(self, spark, table):
+        for i in range(4):
+            txnlog.txn_append(
+                spark,
+                spark.range(i * 5, i * 5 + 5).selectExpr(
+                    "id AS k", "CAST(id AS int) AS v"
+                ),
+                table,
+            )
+
+    @pytest.mark.parametrize(
+        "shape, rows, v_type",
+        [
+            ("plain", 20, "int"),
+            ("dv", 13, "int"),
+            ("added_column", 25, "int"),
+            ("width_mixed", 25, "bigint"),
+        ],
+    )
+    def test_read_launches_no_job_before_an_action(
+        self, spark, table, shape, rows, v_type
+    ):
+        self._base(spark, table)
+        if shape == "dv":
+            txnlog.txn_delete_dv(spark, F.col("k") % 3 == 0, table)
+        elif shape == "added_column":
+            txnlog.txn_append(
+                spark,
+                spark.range(20, 25).selectExpr(
+                    "id AS k", "CAST(id AS int) AS v", "'x' AS tag"
+                ),
+                table,
+            )
+        elif shape == "width_mixed":
+            txnlog.txn_append(
+                spark,
+                spark.range(20, 25).selectExpr(
+                    "id AS k", "id + 10000000000 AS v"
+                ),
+                table,
+            )
+        assert len(txnlog.snapshot_files(table)) <= 32
+        df, jobs = _jobs(
+            spark, f"read_no_job_{shape}",
+            lambda: txnlog.read_snapshot(spark, table),
+        )
+        assert jobs == 0, f"{jobs} Spark jobs before an action"
+        assert dict(df.dtypes)["v"] == v_type
+        assert df.count() == rows
+        if shape == "added_column":
+            assert df.filter(F.col("tag").isNull()).count() == 20
+
+    def test_restore_before_added_column_reads_restored_files_schema(
+        self, spark, table
+    ):
+        self._base(spark, table)
         txnlog.txn_append(
             spark,
-            spark.range(3, 5).selectExpr("id AS k", "CAST(id AS string) AS v"),
+            spark.range(20, 22).selectExpr(
+                "id AS k", "CAST(id AS int) AS v", "'x' AS tag"
+            ),
             table,
         )
-        with pytest.raises(Exception, match="not a widening|CANNOT_MERGE"):
-            txnlog.read_snapshot(spark, table).collect()
+        v = txnlog.txn_restore(table, 3)
+        assert "schema" in txnlog._read_entry_body(table, v)["props"]
+        df, jobs = _jobs(
+            spark, "read_after_restore", lambda: txnlog.read_snapshot(spark, table)
+        )
+        assert jobs == 0
+        assert df.columns == ["k", "v"]
+        assert sorted(tuple(r) for r in df.collect()) == sorted(
+            tuple(r) for r in txnlog.read_snapshot(spark, table, 3).collect()
+        )
+        # the evolved version still time-travels with its column
+        assert txnlog.read_snapshot(spark, table, 4).columns == ["k", "v", "tag"]
+
+    def test_schema_recorded_once_and_reserved(self, spark, table):
+        """Only a commit that changes the schema records it; validation
+        of an append that adds a column sees the staged column; the key
+        is neither settable nor shown as a user property."""
+        self._base(spark, table)
+        recorded = [
+            v for v in range(4)
+            if "schema" in txnlog._read_entry_body(table, v).get("props", {})
+        ]
+        assert recorded == [0]
+        txnlog.txn_add_check(spark, table, "tag_set", "tag <> 'bad'", validate=False)
+        with pytest.raises(txnlog.CheckViolation):
+            txnlog.txn_append(
+                spark,
+                spark.range(20, 21).selectExpr(
+                    "id AS k", "CAST(id AS int) AS v", "'bad' AS tag"
+                ),
+                table,
+            )
+        v = txnlog.txn_append(
+            spark,
+            spark.range(20, 21).selectExpr(
+                "id AS k", "CAST(id AS int) AS v", "'ok' AS tag"
+            ),
+            table,
+        )
+        assert "schema" in txnlog._read_entry_body(table, v)["props"]
+        assert txnlog.Snapshot.at(table).dtypes == {
+            "k": "bigint", "v": "int", "tag": "string",
+        }
+        assert "schema" not in txnlog.table_props(table)
+        with pytest.raises(ValueError, match="reserved"):
+            txnlog.txn_set_property(table, "schema", "{}")
 
 
 class TestLogCleanup:
