@@ -746,10 +746,11 @@ FROM v1""",
 def lake_txn_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned TRANSACTIONAL upsert (txnlog.txn_upsert_partitioned
     — merge_into_partitioned composed with the ACID commit log): the
-    source batch touches ONE priority partition, so the commit removes
-    and re-adds only that partition's files; the other four partitions'
-    files carry over by name (asserted in tests/test_txnlog.py) and are
-    never read during the merge. Output aggregates both versions via
+    source batch touches ONE priority partition, so the merge-on-read
+    commit puts deletion vectors on the matched rows of that partition's
+    files and adds their replacement; the other four partitions' files
+    carry over by name (asserted in tests/test_txnlog.py) and are never
+    read during the merge. Output aggregates both versions via
     log-driven snapshot resolution — incremental-load cost O(batch), full
     time travel retained.
 
@@ -1861,12 +1862,12 @@ def lake_partitioned_dv_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned deletion vectors + per-partition OPTIMIZE: two
     partitioned appends fragment each status partition, a DV delete whose
     predicate references the LOG-carried partition column removes rows
-    with zero data bytes moved, then txn_compact_partitioned merges small
-    files WITHIN each value (materializing the vectors) — untouched
-    partitions are not read or mentioned in the commit. The graded read
-    goes through the generic snapshot reader, which re-attaches the
-    partition column by delegation (the column name rides as a log
-    property). At 100 TB: compacting one hot partition of a thousand is
+    with zero data bytes moved, then txn_compact_partitioned (txn_compact)
+    merges small files WITHIN each value (materializing the vectors) —
+    untouched partitions are not read or mentioned in the commit. The
+    graded read goes through the generic snapshot reader, which
+    re-attaches the partition column by delegation (the column name
+    rides as a log property). At 100 TB: compacting one hot partition of a thousand is
     O(that partition), and the delete before it was O(deleted rows)."""
     import os
     import shutil

@@ -23,11 +23,11 @@ diff (an update surfaces as a delete+insert pair — this source has no
 merge keys; key-aware update_pre/postimage classification stays with
 the batch-side `read_changes`). On `cdf.enabled=true` tables every
 row-changing rewrite writes `_change_data/v<N>` files — upserts and
-merges, whole and pruned copy-on-write deletes and merges alike (not
-the partitioned upsert) — and a commit that has them is read from
-those WRITER-materialized files — one task per file, fully
-distributed, and a no-op update cancels there — with the per-file and
-on-read diffs as the silent fallback when they are absent.
+merges, whole and pruned copy-on-write deletes and merges alike — and
+a commit that has them is read from those WRITER-materialized files —
+one task per file, fully distributed, and a no-op update cancels there
+— with the per-file and on-read diffs as the silent fallback when they
+are absent.
 Partitioned tables stream when the `partitionColumn` option
 names the log-resident partition column (the value is re-attached from
 the log, typed per the recorded DDL).
@@ -597,6 +597,11 @@ class LakeCdcStreamReader(DataSourceStreamReader):
         tbl = pq.read_table(p.file_path)
         ct = tbl["_change_type"]
         body = self._conform(tbl)  # data columns only; row order preserved
+        if self._partition_col:  # a change file carries it as data
+            body = body.append_column(
+                self._partition_col,
+                tbl[self._partition_col].cast(_partition_arrow_type(self._ptype)),
+            )
         body = body.append_column(
             "_commit_version", pa.array([p.version] * body.num_rows, pa.int64())
         )

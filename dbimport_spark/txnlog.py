@@ -77,8 +77,12 @@ it picks once — every live file for ``txn_delete`` and
 commits their rewritten rows in place of them. On a ``cdf.enabled``
 table every one of these DMLs writes change files (the rows it replaced
 against the rows it staged); a DV delete's change rows are re-read from
-its vectors, and compaction, z-order and ``txn_upsert_partitioned``
-write none. ``txn_compact`` materializes accumulated deletion vectors.
+its vectors, and compaction and z-order write none. ``txn_compact``
+materializes accumulated deletion vectors. Partitioning is a concern of
+staging and reading only: ``_stage`` splits every write by the log's
+partition column and ``_read_snapshot`` re-attaches it, so every DML
+above takes a partitioned table as it is (``txn_upsert_partitioned`` is
+``_merge_on_read`` pruned to the source's partition values).
 
 Time travel is free: resolve the snapshot at any historical version down
 to the VACUUM horizon; ``vacuum`` reclaims files no retained snapshot
@@ -665,7 +669,7 @@ def _read_snapshot(
     * Partitioned tables: the partition VALUE lives in the log, not the
       files, so each value's file group is scanned with the typed literal
       re-attached as column ``pcol`` (default: the ``partition.column``
-      property; a partitioned log without it is refused loudly).
+      property).
     * Deletion vectors apply merge-on-read; ``dvs=False`` skips them (the
       DV writers' hit scans — re-matching an already-deleted row is
       harmless there).
@@ -675,25 +679,16 @@ def _read_snapshot(
       version-by-version, so time travel shows each snapshot under the
       schema it had.
 
-    ``names=[]`` (every file pruned) gives the table's empty frame; a
-    snapshot with no live file is an error."""
+    ``names=[]`` (every file pruned), like a snapshot whose every file
+    a DML removed, gives the table's empty frame; a table with no schema
+    in its log (nothing ever written) is an error."""
     from functools import reduce
 
-    if names is not None and not names:
-        full = _read_snapshot(spark, snap, pcol=pcol, marked=marked, dvs=dvs)
-        return full.limit(0)
     if names is None:
         names = snap.names
-        if not names:
-            raise ValueError(f"no data at version {snap.version} of {snap.path}")
-    if pcol is None and snap.ptype is not None:
-        pcol = snap.props.get("partition.column")
-        if pcol is None:
-            raise ValueError(
-                f"{snap.path} is partitioned but the log predates the "
-                "partition.column property — use read_snapshot_partitioned"
-                "(spark, path, partition_col) explicitly"
-            )
+    if not names and snap.schema is None:
+        raise ValueError(f"no data at version {snap.version} of {snap.path}")
+    pcol = pcol or snap.props.get("partition.column")
     groups: dict = {}
     for n in names:
         groups.setdefault(snap.live[n]["p"] if pcol else None, []).append(
@@ -701,9 +696,9 @@ def _read_snapshot(
         )
     dvmap = snap.dvs if dvs else {}
     parts = []
-    for value in sorted(groups, key=lambda p: (p is None, p or "")):
+    for value in sorted(groups, key=lambda p: (p is None, p or "")) or [None]:
         df = _read_files_dv(
-            spark, snap.path, groups[value], dvmap, snap.props, marked
+            spark, snap.path, groups.get(value, []), dvmap, snap.props, marked
         )
         if pcol is not None:
             df = df.withColumn(pcol, _partition_lit(value, snap.ptype))
@@ -784,12 +779,15 @@ def _merge_schema(table: StructType | None, staged: StructType) -> StructType:
 class _Staged(list):
     """The names (or commit entries) of freshly staged files, carrying
     ``schema``: the physical schema (StructType JSON) the writer held
-    when it staged them. The commit that publishes them merges it into
-    the table schema (_with_staged)."""
+    when it staged them, and ``pcol``: the partition column they are
+    split by (None when unpartitioned). The commit that publishes them
+    merges the schema into the table schema and records the partition
+    column (_with_staged)."""
 
-    def __init__(self, entries, schema: str):
+    def __init__(self, entries, schema: str, pcol: str | None = None):
         super().__init__(entries)
         self.schema = schema
+        self.pcol = pcol
 
 
 def _staged_schema(snap: Snapshot, df: DataFrame, pcol: str | None = None) -> str:
@@ -808,10 +806,11 @@ def _staged_schema(snap: Snapshot, df: DataFrame, pcol: str | None = None) -> st
 
 def _with_staged(props: dict, staged) -> dict:
     """``props`` with the table schema merged (_merge_schema) with the
-    schema of ``staged`` files (a _Staged list; other lists carry none):
-    the properties of the version a commit publishing them creates —
-    what that commit records, and what a read of the staged files before
-    it (CHECK/unique validation, change data) sees."""
+    schema of ``staged`` files (a _Staged list; other lists carry none)
+    and their partition column recorded: the properties of the version a
+    commit publishing them creates — what that commit records, and what
+    a read of the staged files before it (CHECK/unique validation,
+    change data) sees."""
     schema = getattr(staged, "schema", None)
     if schema is None:
         return props
@@ -820,45 +819,80 @@ def _with_staged(props: dict, staged) -> dict:
         None if raw is None else StructType.fromJson(json.loads(raw)),
         StructType.fromJson(json.loads(schema)),
     )
-    return {**props, _SCHEMA: merged.json()}
+    out = {**props, _SCHEMA: merged.json()}
+    if staged.pcol is not None:
+        out["partition.column"] = staged.pcol
+    return out
 
 
-def _stage(df: DataFrame, snap: Snapshot) -> _Staged:
+def _stage(df: DataFrame, snap: Snapshot, pcol: str | None = None) -> _Staged:
     """Write df's rows as fresh uniquely-named parquet files under data/
-    and return their basenames with the files' schema (staged but NOT
-    yet visible — only a log commit publishes them).
+    and return their basenames (entries, when partitioned) with the
+    files' schema (staged but NOT yet visible — only a log commit
+    publishes them).
+
+    A partitioned table — the snapshot's ``partition.column``, or
+    ``pcol`` on the write that first partitions a table without live
+    files — is written split by value (partitionBy): each file holds one
+    value, which lives in the LOG, not the file (Delta's
+    partitionValues), as the entry ``{"n": name, "p": the directory-
+    encoded value exactly as Spark wrote it, "t": the column's DDL type}``
+    readers re-attach it from. A frame without the partition column is
+    refused before any file is written.
 
     Honors the ``write.maxRecordsPerFile`` table property (file-size
     governance that travels WITH the table — every writer splits oversize
     task outputs, so one misconfigured producer can't land a 50 GB
     file)."""
+    import shutil
+
     path, props = snap.path, snap.props
+    have = props.get("partition.column")
+    if pcol is not None and (have or snap.live) and have != pcol:
+        raise ValueError(
+            f"{path} is partitioned by {have!r}, not {pcol!r}"
+            if have
+            else f"{path} already holds unpartitioned files"
+        )
+    pcol = have or pcol
+    if pcol is not None and pcol not in df.columns:
+        raise ValueError(f"write to {path} lacks the partition column {pcol!r}")
     stage_id = uuid.uuid4().hex
     stage_dir = os.path.join(path, f"_staged_{stage_id}")
     _enforce_schema(df, snap)
     # column mapping: on-disk files ALWAYS carry physical names, whatever
     # the writer's logical era (physical names are stable, so a rename
-    # racing this stage cannot invalidate the written files)
+    # racing this stage cannot invalidate the written files); the
+    # partition column is never mapped (its rename is refused)
     df = _unapply_colmap(df, props)
-    schema = _staged_schema(snap, df)
+    schema = _staged_schema(snap, df, pcol)
     writer = df.write.mode("overwrite")
     max_rec = props.get("write.maxRecordsPerFile")
     if max_rec:
         writer = writer.option("maxRecordsPerFile", int(max_rec))
+    if pcol is not None:
+        ptype = df.schema[pcol].dataType.simpleString()
+        writer = writer.partitionBy(pcol)
     writer.parquet(stage_dir)
+    subs = [""] if pcol is None else sorted(
+        d for d in os.listdir(stage_dir) if d.startswith(f"{pcol}=")
+    )
     os.makedirs(_data_dir(path), exist_ok=True)
-    names = []
-    for f in sorted(os.listdir(stage_dir)):
-        if f.endswith(".parquet"):
-            name = f"part-{stage_id}-{len(names):04d}.parquet"
-            os.replace(
-                os.path.join(stage_dir, f), os.path.join(_data_dir(path), name)
-            )
-            names.append(name)
-    for leftover in os.listdir(stage_dir):
-        os.remove(os.path.join(stage_dir, leftover))
-    os.rmdir(stage_dir)
-    return _Staged(names, schema)
+    added = []
+    for sub in subs:
+        for f in sorted(os.listdir(os.path.join(stage_dir, sub))):
+            if f.endswith(".parquet"):
+                name = f"part-{stage_id}-{len(added):04d}.parquet"
+                os.replace(
+                    os.path.join(stage_dir, sub, f),
+                    os.path.join(_data_dir(path), name),
+                )
+                added.append(
+                    name if pcol is None
+                    else {"n": name, "p": sub.split("=", 1)[1], "t": ptype}
+                )
+    shutil.rmtree(stage_dir)
+    return _Staged(added, schema, pcol)
 
 
 # --------------------------------------------------- commit claim backend
@@ -1127,8 +1161,9 @@ def commit(
     returned (a _Staged), the staged files' schema merges into the
     schema at ``expect_version`` (_with_staged) and the entry records
     the result when it changed — an unrelated type conflict raises
-    ValueError before the claim. Readers take every version's schema
-    from the log.
+    ValueError before the claim — as it records the partition column
+    the first partitioned write names. Readers take every version's
+    schema from the log.
 
     The entry's CONTENT is complete before its NAME exists: the version
     is claimed through the CommitBackend seam's put_if_absent — on POSIX
@@ -1190,9 +1225,13 @@ def commit(
             added = with_rid
             props = dict(props or {})
             props["rowids.next"] = str(base)
-    schema = _with_staged(prev_props, staged).get(_SCHEMA)
-    if schema != prev_props.get(_SCHEMA):
-        props = {**(props or {}), _SCHEMA: schema}
+    props = {
+        **(props or {}),
+        **{
+            k: v for k, v in _with_staged(prev_props, staged).items()
+            if v != prev_props.get(k)
+        },
+    }
     body = {
         "version": new_v,
         "added": added,
@@ -1337,18 +1376,21 @@ def _split_cols(spec: str) -> list[str]:
 
 
 def _describe(
-    snap: Snapshot, names, stats_cols=(), bloom_col: str | None = None,
+    snap: Snapshot, staged: _Staged, stats_cols=(), bloom_col: str | None = None,
     fpp: float = 0.01,
-) -> list[dict]:
-    """Commit entries for freshly staged ``names`` carrying per-file
-    metadata: footer zone maps for ``stats_cols`` and a Bloom sidecar for
-    ``bloom_col``. Columns are LOGICAL names, translated here to the
-    physical names the files carry (log stats stay physical-keyed
-    across renames)."""
+) -> _Staged:
+    """``staged`` with each entry carrying per-file metadata: footer zone
+    maps for ``stats_cols`` and a Bloom sidecar for ``bloom_col``; an
+    entry keeps its partition value and type, and one with neither
+    metadata nor a partition value stays a bare name. Columns are
+    LOGICAL names, translated here to the physical names the files carry
+    (log stats stay physical-keyed across renames)."""
     cols = [_phys_col(snap.props, c) for c in stats_cols]
     bcol = _phys_col(snap.props, bloom_col) if bloom_col is not None else None
     out = []
-    for n in names:
+    for e in staged:
+        e = e if isinstance(e, dict) else {"n": e, "p": None}
+        n = e["n"]
         st = (
             _footer_stats(os.path.join(_data_dir(snap.path), n), cols)
             if cols
@@ -1357,8 +1399,8 @@ def _describe(
         if bcol is not None:
             st = dict(st)
             st["__bloom__"] = {bcol: _bloom_build_file(snap.path, n, bcol, fpp)}
-        out.append({"n": n, "p": None, "stats": st})
-    return out
+        out.append({**e, "stats": st} if st or e["p"] is not None else n)
+    return _Staged(out, staged.schema, staged.pcol)
 
 
 def _batch_done(snap: Snapshot, app_id: str, batch_id: int) -> bool:
@@ -1375,7 +1417,8 @@ def _append(
     """The stage-once append transaction behind every txn_append* form.
 
     The first attempt stages ``df`` once against its pinned snapshot
-    (split by ``partition_col`` when given), validates the staged files
+    (``partition_col`` names the column the first write to a fresh table
+    splits by; see _stage), validates the staged files
     against the snapshot's CHECK and unique constraints, and records
     per-file metadata (``stats_cols`` zone maps / ``bloom_col`` sidecar;
     with neither, the table's declared ``write.statsColumns``). A lost
@@ -1395,22 +1438,15 @@ def _append(
             _reap(path, st.get("added", ()))
             return snap.version
         if not st:
-            if partition_col is not None:
-                added = _stage_partitioned(df, snap, partition_col)
-                cols = None
-            else:
-                added = _stage(df, snap)
-                cols = stats_cols
-                declared = snap.props.get("write.statsColumns")
-                if cols is None and bloom_col is None and declared:
-                    cols = _split_cols(declared)
-            checks = _validate_staged(spark, snap, added, partition_col)
-            _validate_unique(spark, snap, added, partition_col)
+            added = _stage(df, snap, partition_col)
+            cols = stats_cols
+            declared = snap.props.get("write.statsColumns")
+            if cols is None and bloom_col is None and declared:
+                cols = _split_cols(declared)
+            checks = _validate_staged(spark, snap, added)
+            _validate_unique(spark, snap, added)
             if cols is not None or bloom_col is not None:
-                added = _Staged(
-                    _describe(snap, added, cols or (), bloom_col, fpp),
-                    added.schema,
-                )
+                added = _describe(snap, added, cols or (), bloom_col, fpp)
             st.update(
                 added=added,
                 auto=(
@@ -1420,20 +1456,12 @@ def _append(
                 ),
             )
         else:
-            checks = _revalidate_if_changed(
-                spark, snap, st["added"], st["checks"], partition_col
-            )
-            _validate_unique(spark, snap, st["added"], partition_col)
+            checks = _revalidate_if_changed(spark, snap, st["added"], st["checks"])
+            _validate_unique(spark, snap, st["added"])
         st["checks"] = checks
-        props = {}
-        if partition_col is not None:
-            # the partition COLUMN NAME rides as a property so generic
-            # readers (read_snapshot) can re-attach it without being told
-            props["partition.column"] = partition_col
-        if app is not None:
-            props[f"txn.{app[0]}"] = str(app[1])
         return _Commit(
-            st["added"], props=props or None,
+            st["added"],
+            props={f"txn.{app[0]}": str(app[1])} if app is not None else None,
             op="STREAMING_APPEND" if app is not None else "APPEND",
             reap="give_up", auto_optimize=st["auto"],
         )
@@ -1475,8 +1503,9 @@ def txn_upsert(
     export_symlink_manifest refuses the table (it carries DVs) until
     txn_compact materializes them; vacuum has nothing to reclaim from an
     upsert; an ignoreChanges stream re-emits only the replacement rows.
-    Partitioned tables are refused (txn_upsert_partitioned rewrites the
-    touched partitions)."""
+    On a partitioned table the replacement is staged split by value like
+    any write (_stage); txn_upsert_partitioned adds partition pruning of
+    the matched-row scan."""
     return _merge_on_read(
         spark, source, path, keys, max_retries, "txn_upsert", "UPSERT"
     )
@@ -1532,7 +1561,6 @@ def _merge_on_read(
     def attempt(snap: Snapshot):
         if snap.version < 0:
             raise ValueError(f"{name}: {path} has no committed version")
-        _refuse_partitioned(snap, name)
         names = _candidates(snap, **(prune or {}))
         hits, rows = None, source.limit(0)
         if names:
@@ -1570,14 +1598,13 @@ def _entry_files(entry_list):
 
 
 def _refuse_partitioned(snap: Snapshot, op_name: str) -> None:
-    """Loud guard for operations whose staged output would strip the
-    log-carried partition values (silent corruption: the table's files
-    would stop matching its partition metadata)."""
+    """Loud guard for export_symlink_manifest, the one consumer that
+    cannot serve a partitioned table: a manifest reader sees only the
+    listed files, and a partition value lives in the log, not in them."""
     if snap.ptype is not None:
         raise ValueError(
-            f"{op_name}: partitioned tables are not supported — the rewrite "
-            "would strip the log-carried partition values; use the "
-            "partitioned forms (txn_upsert_partitioned) or txn_delete_dv"
+            f"{op_name}: partitioned tables are not supported — a manifest "
+            "reader cannot see the log-carried partition values"
         )
 
 
@@ -1632,55 +1659,6 @@ def _encode_partition_value(v) -> str:
     return _escape_path_name(str(v))
 
 
-def _stage_partitioned(df: DataFrame, snap: Snapshot, partition_col: str):
-    """Stage df split by partition value; returns [{"n": name, "p": value}].
-    The partition column is stored in the LOG (not the file), mirroring
-    the lakehouse convention (Delta's partitionValues / hive dir layout);
-    readers re-attach it as a literal per file group."""
-    import shutil
-    import tempfile
-
-    path = snap.path
-    stage_id = uuid.uuid4().hex
-    stage_dir = os.path.join(tempfile.gettempdir(), f"txn_stage_{stage_id}")
-    ptype = df.schema[partition_col].dataType.simpleString()
-    _enforce_schema(df, snap)
-    # data columns to physical names; the partition column stays
-    # logical (it lives in the log, and its rename is refused)
-    mp, _ = _colmap(snap.props)
-    if mp:
-        from pyspark.sql import functions as F
-
-        df = df.select(
-            *[
-                F.col(c) if c == partition_col else F.col(c).alias(mp.get(c, c))
-                for c in df.columns
-            ]
-        )
-    schema = _staged_schema(snap, df, partition_col)
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(stage_dir)
-    os.makedirs(_data_dir(path), exist_ok=True)
-    added = []
-    for sub in sorted(os.listdir(stage_dir)):
-        if not sub.startswith(f"{partition_col}="):
-            continue
-        value = sub.split("=", 1)[1]
-        for f in sorted(os.listdir(os.path.join(stage_dir, sub))):
-            if f.endswith(".parquet"):
-                name = f"part-{stage_id}-{len(added):04d}.parquet"
-                os.replace(
-                    os.path.join(stage_dir, sub, f),
-                    os.path.join(_data_dir(path), name),
-                )
-                # "p" is the DIRECTORY-ENCODED value exactly as Spark
-                # wrote it; "t" is the column's DDL type so readers can
-                # cast the re-attached literal back (a date/int partition
-                # must not come back as string).
-                added.append({"n": name, "p": value, "t": ptype})
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    return _Staged(added, schema)
-
-
 def _partition_lit(encoded, ptype):
     """Typed literal for a directory-encoded partition value."""
     from pyspark.sql import functions as F
@@ -1721,44 +1699,32 @@ def txn_upsert_partitioned(
     spark, source: DataFrame, path: str, keys, partition_col: str,
     max_retries: int = 3,
 ) -> int:
-    """Partition-pruned TRANSACTIONAL upsert — sinks.merge_into_partitioned
-    composed with the commit log: merge only the partitions the source
-    touches, stage their replacement files, and commit {add: new files of
-    touched partitions, remove: OLD files of touched partitions}.
-    Untouched partitions' files are not read, not rewritten, and not even
-    mentioned in the commit — an incremental load's commit is O(batch).
-    Same correctness requirement as merge_into_partitioned: the partition
-    column must be a stable function of the merge keys."""
-    from dbimport_spark.operators.merge import upsert
-
-    def attempt(snap: Snapshot):
-        old_touched = _candidates(snap, partitions=touched_values)
-        if old_touched:
-            target_slice = _read_snapshot(
-                spark, snap, old_touched, pcol=partition_col
-            )
-            merged = upsert(target_slice, source, keys, materialize_source=False)
-        else:
-            merged = source
-        added = _stage_partitioned(merged, snap, partition_col)
-        _validate_staged(spark, snap, added, partition_col)
-        return _Commit(
-            added, old_touched, props={"partition.column": partition_col},
-            op="UPSERT",
-        )
-
+    """Partition-pruned TRANSACTIONAL upsert: txn_upsert's merge-on-read
+    core (_merge_on_read) with the matched-row scan pruned to the files
+    of the partition values the source carries — untouched partitions'
+    files are not read and not mentioned in the commit, and the touched
+    ones get deletion vectors, not rewrites, so an incremental load's
+    commit is O(batch). Writes change data under cdf.enabled, like
+    txn_upsert. Same correctness requirement as merge_into_partitioned:
+    the partition column must be a stable function of the merge keys."""
+    if table_props(path).get("partition.column") != partition_col:
+        raise ValueError(f"{path} is not partitioned by {partition_col!r}")
     with _persisted(source):
-        touched_values = [
-            r[0] for r in source.select(partition_col).distinct().collect()
-        ]
-        return _transact(spark, path, attempt, max_retries, f"upserting {path}")
+        values = [r[0] for r in source.select(partition_col).distinct().collect()]
+        return _merge_on_read(
+            spark, source, path, keys, max_retries, "txn_upsert_partitioned",
+            "UPSERT", {"partitions": values},
+        )
 
 
 def txn_append_partitioned(
     spark, df: DataFrame, path: str, partition_col: str, max_retries: int = 5
 ) -> int:
     """Append-commit df split by partition value (each staged file covers
-    exactly one value, recorded in the log entry). CHECK constraints are
+    exactly one value, recorded in the log entry). The first write to a
+    table without live files makes ``partition_col`` its partition
+    column; later writes must name the same one (every other write,
+    txn_append included, splits by it unasked). CHECK constraints are
     enforced like the unpartitioned append — the staged files are
     validated with their partition values re-attached."""
     return _append(spark, df, path, max_retries, partition_col=partition_col)
@@ -1903,49 +1869,65 @@ def txn_compact(
     max_retries: int = 3,
 ) -> int:
     """Transactional small-file compaction — Delta/Iceberg OPTIMIZE reduced
-    to its core: read the current snapshot's files, rewrite the same rows
-    as ⌈total_bytes / target_file_bytes⌉ files, and commit
-    {add: new files, remove: all old files} as ONE version. Readers see
-    the old or the new layout, never a mix; the table's CONTENT is
-    invariant (asserted by the lake_txn_compact oracle query), and time
-    travel to pre-compaction versions still resolves the old files until
-    vacuum. A lost commit race reaps the staged files and retries
-    against the new snapshot, like every rewrite. Returns the new
-    version (or the current one if there was nothing to compact)."""
-
-    def attempt(snap: Snapshot):
-        _refuse_partitioned(snap, "txn_compact")
-        return _compact_attempt(spark, snap, target_file_bytes, min_files)
-
-    return _transact(spark, path, attempt, max_retries, f"compacting {path}")
-
-
-def _compact_attempt(spark, snap: Snapshot, target_file_bytes: int, min_files: int):
-    """One txn_compact attempt over an unpartitioned snapshot: the
-    rewrite's commit actions, or the snapshot's version when there is
-    nothing to compact."""
+    to its core, per GROUP of files: the whole table when unpartitioned,
+    each partition value when partitioned (a cross-partition merge is
+    impossible by definition — the value is per-file log metadata). A
+    group is rewritten when it holds ≥ ``min_files`` files that fit in
+    fewer files, or carries a deletion vector: an unpartitioned table as
+    ⌈total_bytes / target_file_bytes⌉ files, a partition value as one
+    file. One commit {add: new files, remove: the rewritten groups'
+    files}; untouched partitions' files are not read and not mentioned,
+    so compacting one hot partition of a thousand is O(that partition).
+    Readers see the old or the new layout, never a mix; the table's
+    CONTENT is invariant (asserted by the lake_txn_compact oracle
+    query), and time travel to pre-compaction versions still resolves
+    the old files until vacuum. A lost commit race reaps the staged
+    files and retries against the new snapshot, like every rewrite.
+    Returns the new version (or the current one if there was nothing to
+    compact)."""
     import math
 
-    files = snap.files
-    # min_files alone must not short-circuit a DV-carrying table: a
-    # single file with a deletion vector still needs compaction to
-    # MATERIALIZE the DV (snapshot_profile / export_symlink_manifest
-    # send users here for exactly that), matching the guard in
-    # txn_compact_partitioned.
-    if len(files) < min_files and not snap.dvs:
-        return snap.version
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    if n_out >= len(files) and not snap.dvs:
-        return snap.version  # already at or below target granularity
-    # DV-aware: compaction MATERIALIZES deletion vectors (deleted rows
-    # drop out of the rewrite; the removed files take their DV refs
-    # with them) — Delta's PURGE semantics ride along with OPTIMIZE.
-    # The logical round-trip (_read_snapshot's colmap here, _stage's
-    # unapply on the way out) also PURGES dropped columns' bytes from the
-    # rewritten files — renames keep their stable physical names.
-    added = _stage_with_meta(_read_snapshot(spark, snap).coalesce(n_out), snap)
-    return _Commit(added, snap.names, op="OPTIMIZE")
+    from pyspark.sql import functions as F
+
+    def attempt(snap: Snapshot):
+        groups: dict = {}
+        for n in snap.names:
+            groups.setdefault(snap.live[n]["p"], []).append(n)
+        n_out: dict = {}  # rewritten group → its output file count
+        for p, names in groups.items():
+            total = sum(
+                os.path.getsize(os.path.join(_data_dir(path), n)) for n in names
+            )
+            k = max(1, math.ceil(total / target_file_bytes))
+            # min_files alone must not skip a DV-carrying group: a single
+            # file with a deletion vector still needs compaction to
+            # MATERIALIZE the DV (snapshot_profile / export_symlink_manifest
+            # send users here for exactly that)
+            if (len(names) < min_files or k >= len(names)) and not any(
+                snap.live[n]["dv"] for n in names
+            ):
+                continue
+            n_out[p] = k
+        if not n_out:
+            return snap.version
+        removed = [n for p in n_out for n in groups[p]]
+        # DV-aware: compaction MATERIALIZES deletion vectors (deleted rows
+        # drop out of the rewrite; the removed files take their DV refs
+        # with them) — Delta's PURGE semantics ride along with OPTIMIZE.
+        # The logical round-trip (_read_snapshot's colmap here, _stage's
+        # unapply on the way out) also PURGES dropped columns' bytes from
+        # the rewritten files — renames keep their stable physical names.
+        rows = _read_snapshot(spark, snap, removed)
+        pcol = snap.props.get("partition.column")
+        # one task per rewritten value → one output file per value (finer
+        # splitting belongs to the writer's maxRecordsPerFile)
+        rows = (
+            rows.repartition(len(n_out), F.col(pcol)) if pcol
+            else rows.coalesce(n_out[None])
+        )
+        return _Commit(_stage_with_meta(rows, snap), removed, op="OPTIMIZE")
+
+    return _transact(spark, path, attempt, max_retries, f"compacting {path}")
 
 
 def _write_change_data(snap: Snapshot, new_v: int, pre, post) -> None:
@@ -3561,7 +3543,7 @@ def _write_dvs(hits: DataFrame, path: str, live: dict) -> list[dict]:
 def _stage_with_meta(
     df: DataFrame, snap: Snapshot, stats_cols=(), bloom_col: str | None = None,
     fpp: float = 0.01,
-) -> list:
+) -> _Staged:
     """Stage ``df`` and build the commit entries with the same per-file
     metadata the append forms record (footer stats / bloom sidecars), so
     zone-map skipping, snapshot_profile and bloom lookups keep working
@@ -3574,11 +3556,7 @@ def _stage_with_meta(
     entered by bare name."""
     if not stats_cols and snap.props.get("write.statsColumns"):
         stats_cols = _split_cols(snap.props["write.statsColumns"])
-    staged = _stage(df, snap)
-    entries = _describe(snap, staged, stats_cols, bloom_col, fpp)
-    return _Staged(
-        [e if e["stats"] else e["n"] for e in entries], staged.schema
-    )
+    return _describe(snap, _stage(df, snap), stats_cols, bloom_col, fpp)
 
 
 def _copy_on_write(
@@ -3607,7 +3585,6 @@ def _copy_on_write(
             return snap.version  # redelivered batch: done
         if snap.version < 0:
             raise ValueError(f"{name}: {path} has no committed version")
-        _refuse_partitioned(snap, name)
         files = snap.names if prune is None else _candidates(snap, **prune)
         if not files and not inserts:
             return snap.version  # the log proves no file can match
@@ -3973,23 +3950,19 @@ def txn_add_check(
     return txn_set_property(path, f"check.{name}", expr, max_retries)
 
 
-def _validate_staged(
-    spark, snap: Snapshot, staged: list, partition_col: str | None = None
-) -> dict[str, str]:
+def _validate_staged(spark, snap: Snapshot, staged: list) -> dict[str, str]:
     """Validate freshly-staged files against ``snap``'s checks; raises
     CheckViolation (and removes the staged files — they were never
     visible) when any row violates. Returns the check set validated
     against, so retry loops can detect a concurrently-changed set.
 
-    ``staged`` entries are bare names or partitioned ``{"n", "p", "t"}``
-    dicts; for the latter the log-carried partition column is re-attached
-    (typed literal per file group) before evaluation, so constraints may
-    reference it."""
+    Partitioned staged files are read with their partition column
+    re-attached (_staged_rows), so constraints may reference it."""
     checks = snap.checks
     if not checks or not staged:
         return checks
     path = snap.path
-    df = _staged_rows(spark, snap, staged, partition_col)
+    df = _staged_rows(spark, snap, staged)
     bad = df.filter(_violation_pred(checks)).count()
     if bad:
         _reap(path, staged)
@@ -4000,15 +3973,14 @@ def _validate_staged(
     return checks
 
 
-def _staged_rows(spark, snap: Snapshot, staged, partition_col=None):
+def _staged_rows(spark, snap: Snapshot, staged):
     """The rows of freshly staged files (None when there are none) under
     ``snap``'s logical schema with the staged files' columns merged in
-    (_with_staged — a column or width the batch adds is visible): the
-    files as a snapshot of their own,
-    read by the one reader (staged files carry physical names). Entries
-    are bare names or partitioned ``{"n", "p", "t"}`` dicts; the first
-    partitioned commit sets partition.column IN that commit, so the
-    writer passes the column name for that window."""
+    (_with_staged — a column or width the batch adds is visible, and the
+    partition column a first partitioned write names is re-attached):
+    the files as a snapshot of their own, read by the one reader (staged
+    files carry physical names). Entries are bare names or partitioned
+    ``{"n", "p", "t"}`` dicts."""
     if not staged:
         return None
     live, ptype = {}, None
@@ -4018,8 +3990,7 @@ def _staged_rows(spark, snap: Snapshot, staged, partition_col=None):
         ptype = e.get("t") or ptype
     props = _with_staged(snap.props, staged)
     return _read_snapshot(
-        spark, Snapshot(snap.path, snap.version, live, ptype, props),
-        pcol=partition_col,
+        spark, Snapshot(snap.path, snap.version, live, ptype, props)
     )
 
 
@@ -4059,9 +4030,7 @@ def txn_add_unique(
 _UNIQUE_BLOOM_KEYS_MAX = 10_000
 
 
-def _validate_unique(
-    spark, snap: Snapshot, staged, partition_col: str | None = None
-) -> None:
+def _validate_unique(spark, snap: Snapshot, staged) -> None:
     """Enforce ``unique.<name> = <col>`` table properties on an APPEND:
     the staged batch may contain no internal duplicates on the column
     and no value already live in ``snap``. Append-only by design —
@@ -4084,7 +4053,7 @@ def _validate_unique(
         return
     from pyspark.sql import functions as F
 
-    sdf = _staged_rows(spark, snap, staged, partition_col)
+    sdf = _staged_rows(spark, snap, staged)
 
     def _reject(msg):
         _reap(path, staged)
@@ -4148,9 +4117,7 @@ def _validate_unique(
             kdf.unpersist()
 
 
-def _revalidate_if_changed(
-    spark, snap: Snapshot, staged, prev_checks, partition_col: str | None = None
-):
+def _revalidate_if_changed(spark, snap: Snapshot, staged, prev_checks):
     """After a lost commit race: a rival commit may have ADDED a check
     between our validation and our commit — revalidate iff ``snap``'s
     check set differs from the one already validated. This closes the
@@ -4160,7 +4127,7 @@ def _revalidate_if_changed(
     freshly-read expect_version the interleaved constraint would slide
     by without a conflict."""
     if snap.checks != prev_checks:
-        return _validate_staged(spark, snap, staged, partition_col)
+        return _validate_staged(spark, snap, staged)
     return prev_checks
 
 
@@ -4391,7 +4358,6 @@ def txn_zorder(
     def attempt(snap: Snapshot):
         if snap.version < 0:
             raise ValueError(f"no data to optimize at {path}")
-        _refuse_partitioned(snap, "txn_zorder")
         df = _read_snapshot(spark, snap)
         bounds = df.agg(
             *[f for c in cols for f in (F.min(c), F.max(c))]
@@ -4442,8 +4408,8 @@ def _maybe_auto_optimize(spark, snap: Snapshot, new_version: int) -> int:
     n = int(every)
     if n <= 0 or new_version <= 0 or new_version % n != 0:
         return new_version
-    # dispatches on the table's partitioning (txn_compact when none)
-    return txn_compact_partitioned(spark, snap.path)
+    # compacts per partition value on a partitioned table
+    return txn_compact(spark, snap.path)
 
 
 # --------------------------------------------- idempotent streaming sink
@@ -4501,7 +4467,9 @@ def export_symlink_manifest(path: str, version: int | None = None) -> str:
     external tables, or a plain DuckDB read_parquet(list)) read a
     consistent snapshot without speaking the log protocol. Files with
     deletion vectors are refused loudly: a manifest reader would see the
-    deleted rows (compact first). Rewritten atomically (temp + rename);
+    deleted rows (compact first). Partitioned tables are refused too: a
+    manifest reader sees only the listed files, and a partition value
+    lives in the log, not in them. Rewritten atomically (temp + rename);
     returns the manifest file path."""
     snap = Snapshot.at(path, version)
     _refuse_partitioned(snap, "export_symlink_manifest")
@@ -4536,53 +4504,10 @@ def txn_compact_partitioned(
     spark, path: str, target_file_bytes: int = 128 << 20, min_files: int = 2,
     max_retries: int = 3,
 ) -> int:
-    """OPTIMIZE for partitioned tables: compact small files WITHIN each
-    partition value (cross-partition merges are impossible by definition
-    — the value is per-file log metadata). Only values whose file count
-    and total size warrant it are rewritten; untouched partitions' files
-    are not read and not mentioned in the commit, so compacting one hot
-    partition of a thousand is O(that partition). Deletion vectors on
-    rewritten files materialize away; content is invariant."""
-    import math
-    from pyspark.sql import functions as _F
-
-    def attempt(snap: Snapshot):
-        if snap.version < 0:
-            return snap.version
-        if snap.ptype is None:
-            return _compact_attempt(spark, snap, target_file_bytes, min_files)
-        dvmap = snap.dvs
-        by_value: dict = {}
-        for n, d in snap.live.items():
-            by_value.setdefault(d["p"], []).append(n)
-        # pick the partitions worth rewriting; ONE staging job covers them
-        # all (a per-partition job loop serializes P tiny jobs — the wrong
-        # shape when one table has thousands of values)
-        n_groups = 0
-        removed: list = []
-        for names in by_value.values():
-            has_dv = any(n in dvmap for n in names)
-            total = sum(
-                os.path.getsize(os.path.join(_data_dir(path), n)) for n in names
-            )
-            n_out = max(1, math.ceil(total / target_file_bytes))
-            if (len(names) < min_files or n_out >= len(names)) and not has_dv:
-                continue
-            n_groups += 1
-            removed.extend(names)
-        if not removed:
-            return snap.version
-        union = _read_snapshot(spark, snap, removed)
-        pcol = snap.props["partition.column"]  # _read_snapshot checked it
-        # one task per rewritten value → one output file per value (the
-        # per-value coalesce granularity; finer splitting belongs to the
-        # writer's maxRecordsPerFile at real scale)
-        added = _stage_partitioned(
-            union.repartition(n_groups, _F.col(pcol)), snap, pcol
-        )
-        return _Commit(added, removed, op="OPTIMIZE")
-
-    return _transact(spark, path, attempt, max_retries, f"compacting {path}")
+    """OPTIMIZE for partitioned tables: txn_compact, which compacts small
+    files WITHIN each partition value (and the whole table when
+    unpartitioned)."""
+    return txn_compact(spark, path, target_file_bytes, min_files, max_retries)
 
 
 def txn_merge_dv(
@@ -4603,8 +4528,8 @@ def txn_merge_dv(
     matched row, so pruning cannot change the result; a point-update
     batch then reads O(band) footers, not every live file. Files without
     the metadata are kept conservatively. When every file is pruned the
-    batch is a pure insert of the source as given. Unpartitioned tables
-    only."""
+    batch is a pure insert of the source as given. On a partitioned
+    table the replacement is staged split by value (_stage)."""
     return _merge_on_read(
         spark, source, path, keys, max_retries, "txn_merge_dv", "MERGE_DV",
         _key_spec(source, keys, prune_key, use_bloom),

@@ -847,6 +847,56 @@ def test_change_feed_reads_upsert_change_files(spark, tmp_path):
     ]
 
 
+def test_change_feed_streams_partitioned_change_files(spark, tmp_path):
+    """A partitioned cdf table: the partitioned upsert and the pruned CoW
+    delete write change files, and the change feed streams each commit's
+    files with the partition column taken from the file — the same
+    multiset of (row, _change_type) as the diff of the two snapshots."""
+    from collections import Counter
+
+    from dbimport_spark.sources.lakecdc import LakeCdcStreamReader, _CdfFile
+
+    path = str(tmp_path / "t")
+    schema = "k long, tag string, p int"
+    txnlog.txn_set_property(path, "cdf.enabled", "true")
+    txnlog.txn_append_partitioned(
+        spark,
+        spark.createDataFrame(
+            [(1, "a", 1), (2, "b", 1), (3, "c", 2), (4, "d", None)], schema
+        ),
+        path, "p",
+    )
+    v_up = txnlog.txn_upsert_partitioned(
+        spark,
+        spark.createDataFrame([(2, "B", 1), (5, "e", None)], schema),
+        path, ["k"], "p",
+    )
+    v_del = txnlog.txn_delete_cow(spark, F.col("k").isin(3, 4), path)
+    opts = {"path": path, "readChangeFeed": "true", "partitionColumn": "p"}
+    reader = LakeCdcStreamReader(path, opts)
+    parts = reader.partitions({"version": v_up - 1}, {"version": v_del})
+    assert parts and all(isinstance(x, _CdfFile) for x in parts)
+
+    got = _drain_cdf(
+        spark, path, str(tmp_path / "cp"), str(tmp_path / "sink"),
+        partitionColumn="p",
+    )
+    for v in (v_up, v_del):
+        snap = txnlog.Snapshot.at(path, v - 1)
+        want = txnlog._change_delta(
+            snap,
+            txnlog.read_snapshot(spark, path, v - 1),
+            txnlog.read_snapshot(spark, path, v),
+        )
+        cols = ["k", "tag", "p", "_change_type"]
+        streamed = got.filter(F.col("_commit_version") == v).select(*cols)
+        assert Counter(map(tuple, streamed.collect())) == Counter(
+            map(tuple, want.select(*cols).collect())
+        )
+    assert dict(got.dtypes)["p"] == "int"
+    assert got.filter("p IS NULL AND _change_type = 'delete'").count() == 1
+
+
 def test_stream_start_reads_no_data_file_footer(spark, tmp_path, monkeypatch):
     """Starting a stream plans from the log alone: the schema (evolved,
     widened, renamed), the reader and the first micro-batch's partitions

@@ -261,18 +261,26 @@ def test_partitioned_upsert_carries_untouched_files(spark, table):
         "p",
     )
     before = txnlog.snapshot_partitions(table)
+    inodes = _inodes(table)
+    (holder,) = [
+        r["__f"]
+        for r in txnlog._read_snapshot(
+            spark, txnlog.Snapshot.at(table), marked=True
+        ).filter("k = 2").collect()
+    ]
     # upsert touches only partition A (update k=2, insert k=5)
     txnlog.txn_upsert_partitioned(
         spark, _pdf(spark, [(2, "A", "A2"), (5, "A", "A5")]), table, ["k"], "p"
     )
     after = txnlog.snapshot_partitions(table)
-    # B and C files carry over BY NAME; every A file was replaced
-    untouched_before = {n for n, p in before.items() if p in ("B", "C")}
-    untouched_after = {n for n, p in after.items() if p in ("B", "C")}
-    assert untouched_before == untouched_after
-    assert not {n for n, p in before.items() if p == "A"} & {
-        n for n, p in after.items() if p == "A"
-    }
+    # merge-on-read: no file is removed; the A file holding k=2 carries a
+    # deletion vector, and the B and C files keep name, inode and no DV
+    assert set(before) <= set(after)
+    assert set(txnlog.snapshot_dvs(table)) == {holder}
+    assert before[holder] == "A"
+    untouched = {n for n, p in before.items() if p in ("B", "C")}
+    assert untouched == {n for n, p in after.items() if p in ("B", "C")}
+    assert all(_inodes(table)[n] == inodes[n] for n in untouched)
     now = {
         r["k"]: (r["p"], r["v"])
         for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
@@ -317,6 +325,79 @@ def test_partitioned_upsert_into_new_partition(spark, table):
         for r in txnlog.read_snapshot_partitioned(spark, table, "p").collect()
     }
     assert now == {1: "A", 9: "Z"}
+
+
+@pytest.mark.parametrize(
+    "append",
+    [
+        lambda spark, df, t: txnlog.txn_append(spark, df, t),
+        lambda spark, df, t: txnlog.txn_append_stats(spark, df, t, ["k"]),
+        lambda spark, df, t: txnlog.txn_append_bloom(spark, df, t, "k"),
+        lambda spark, df, t: txnlog.txn_append_idempotent(spark, df, t, "app", 0),
+    ],
+    ids=["plain", "stats", "bloom", "idempotent"],
+)
+def test_unpartitioned_append_forms_split_a_partitioned_table(
+    spark, table, append
+):
+    """Every append form stages through the table's partition column: a
+    row appended without naming it lands in its own partition value, not
+    in a NULL one, and the column stays out of the file schema."""
+    txnlog.txn_append_partitioned(
+        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), table, "p"
+    )
+    append(spark, _pdf(spark, [(3, "z", "c")]), table)
+    assert set(txnlog.snapshot_partitions(table).values()) == {"A", "B", "z"}
+    assert "p" not in txnlog.Snapshot.at(table).schema.names
+    got = txnlog.read_snapshot(spark, table).filter("k = 3").collect()
+    assert [(r["k"], r["p"], r["v"]) for r in got] == [(3, "z", "c")]
+    z = txnlog.read_snapshot_partitioned(
+        spark, table, "p", partition_values=["z"]
+    )
+    assert [r["k"] for r in z.collect()] == [3]
+
+
+def test_partitioned_writes_refuse_frames_without_the_column(spark, table):
+    """A frame lacking the partition column — or naming another one —
+    is refused before any file is staged."""
+    txnlog.txn_append_partitioned(spark, _pdf(spark, [(1, "A", "a")]), table, "p")
+    before = sorted(os.listdir(table)), sorted(os.listdir(os.path.join(table, "data")))
+    with pytest.raises(ValueError, match="partition column 'p'"):
+        txnlog.txn_append(spark, _df(spark, [(2, "b")]), table)
+    with pytest.raises(ValueError, match="partitioned by 'p'"):
+        txnlog.txn_append_partitioned(
+            spark, _pdf(spark, [(2, "A", "b")]), table, "v"
+        )
+    after = sorted(os.listdir(table)), sorted(os.listdir(os.path.join(table, "data")))
+    assert after == before
+    assert txnlog.current_version(table) == 0
+
+
+def test_partitioned_append_stages_inside_the_table(
+    spark, table, tmp_path, monkeypatch
+):
+    """Partitioned staging writes under the table (a same-filesystem
+    rename into data/), never under the process temp dir."""
+    import tempfile
+
+    tmp = tmp_path / "tmpdir"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    moved, real_replace = [], os.replace
+
+    def spy(src, dst):
+        moved.append(str(src))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(txnlog.os, "replace", spy)
+    txnlog.txn_append_partitioned(
+        spark, _pdf(spark, [(1, "A", "a"), (2, "B", "b")]), table, "p"
+    )
+    monkeypatch.undo()
+    assert moved and all(m.startswith(table + os.sep) for m in moved)
+    assert list(tmp.iterdir()) == []
+    assert not [f for f in os.listdir(table) if f.startswith("_staged_")]
+    assert txnlog.read_snapshot(spark, table).count() == 2
 
 
 def test_vacuum_reclaims_only_dead_files(spark, table):
@@ -1350,20 +1431,96 @@ class TestDeletionVectors:
         )
         assert {r["k"] for r in pr.collect()} == {6, 8}
 
-    def test_whole_rewrite_forms_refuse_partitioned_tables(self, spark, table):
-        """txn_delete / txn_upsert / txn_compact / manifest export would
-        strip the log-carried partition values — they must refuse loudly,
-        never silently convert the table."""
-        df = spark.createDataFrame([(1, "x"), (2, "y")], "k long, p string")
-        txnlog.txn_append_partitioned(spark, df, table, "p")
+    @pytest.mark.parametrize(
+        "ptype,values",
+        [("int", [1, 2, None]), ("string", ["a:b c", "x", None])],
+        ids=["int", "escaped"],
+    )
+    def test_every_dml_keeps_partition_values(
+        self, spark, tmp_path, ptype, values
+    ):
+        """Every DML on a partitioned cdf table (an int partition, an
+        escaped value, a NULL value) gives the rows of the same DML on an
+        unpartitioned twin, keeps every live file's log value — the value
+        its rows read back with, and not in the file — and writes change
+        data equal to the snapshot diff; the manifest export still
+        refuses the table."""
+        from collections import Counter
+
+        import pyarrow.parquet as pq
+
+        schema = f"k long, w long, p {ptype}"
+
+        def rows(ks, bump=0):
+            # the partition value is a stable function of the key
+            return spark.createDataFrame(
+                [(k, k * 10 + bump, values[k % 3]) for k in ks], schema
+            )
+
+        part, twin = str(tmp_path / "part"), str(tmp_path / "twin")
+        for t in (part, twin):
+            txnlog.txn_set_property(t, "cdf.enabled", "true")
+        for ks in (range(6), range(6, 12)):
+            txnlog.txn_append_partitioned(spark, rows(ks), part, "p")
+            txnlog.txn_append(spark, rows(ks), twin)
+        upd = [("matched_update", None, {c: f"s.{c}" for c in "kwp"}),
+               ("not_matched_insert", None, {c: f"s.{c}" for c in "kwp"})]
+        ops = [
+            lambda t: txnlog.txn_delete(spark, F.col("k") == 1, t),
+            lambda t: txnlog.txn_delete_cow(spark, F.col("k").isin(3, 5), t),
+            lambda t: txnlog.txn_merge_cow(spark, rows([2, 20], 1), t, ["k"]),
+            lambda t: txnlog.txn_merge_into(
+                spark, rows([4, 21], 1), t, ["k"], upd
+            ),
+            lambda t: txnlog.txn_upsert(spark, rows([6, 22], 1), t, ["k"]),
+            lambda t: txnlog.txn_merge_dv(spark, rows([8, 23], 1), t, ["k"]),
+            lambda t: txnlog.txn_compact(spark, t, target_file_bytes=1 << 30),
+            lambda t: txnlog.txn_zorder(spark, t, "k", "w", n_files=2),
+        ]
+
+        def table_rows(t, v=None):
+            return Counter(
+                tuple(r) for r in txnlog.read_snapshot(spark, t, v).collect()
+            )
+
+        for op in ops:
+            v = op(part)
+            op(twin)
+            now = table_rows(part)
+            assert now == table_rows(twin)
+            assert any(r[2] is None for r in now)  # the NULL partition
+            live = txnlog.snapshot_partitions(part)
+            snap = txnlog.Snapshot.at(part)
+            for r in txnlog._read_snapshot(spark, snap, marked=True).collect():
+                assert live[r["__f"]] == txnlog._encode_partition_value(r["p"])
+            for n in live:
+                f = os.path.join(part, "data", n)
+                assert "p" not in pq.read_schema(f).names
+            d = os.path.join(part, "_change_data", f"v{v:08d}")
+            op_name = txnlog.table_history(part)[0]["op"]
+            if op_name.startswith("OPTIMIZE"):
+                assert not os.path.isdir(d)
+                assert table_rows(part, v - 1) == now
+                continue
+            got = Counter(
+                (tuple(r[:-1]), r[-1])
+                for r in spark.read.parquet(d)
+                .select("k", "w", "p", "_change_type").collect()
+            )
+            before = table_rows(part, v - 1)
+            want = Counter(
+                {(r, "delete"): n for r, n in (before - now).items()}
+            ) + Counter({(r, "insert"): n for r, n in (now - before).items()})
+            assert got == want, op_name
+        # a DML that removes every row leaves a readable empty table, as
+        # on the twin (which keeps an empty file live)
+        txnlog.txn_delete(spark, F.lit(True), part)
+        assert txnlog.snapshot_files(part) == []
+        empty = txnlog.read_snapshot(spark, part)
+        assert empty.dtypes == txnlog.read_snapshot(spark, twin).dtypes
+        assert empty.count() == 0
         with pytest.raises(ValueError, match="partition"):
-            txnlog.txn_delete(spark, F.col("k") == 1, table)
-        with pytest.raises(ValueError, match="partition"):
-            txnlog.txn_upsert(spark, df, table, ["k"])
-        with pytest.raises(ValueError, match="partition"):
-            txnlog.txn_compact(spark, table)
-        with pytest.raises(ValueError, match="partition"):
-            txnlog.export_symlink_manifest(table)
+            txnlog.export_symlink_manifest(part)
 
     def test_checkpoint_carries_dv_references(self, spark, table):
         self._seed(spark, table)
@@ -3676,12 +3833,11 @@ class TestUniqueConstraintAdvice9:
                 fired["n"] = 1
                 real_commit(
                     path,
-                    _t._stage_partitioned(
+                    _t._stage(
                         spark.createDataFrame([(99, "a")], "k long, p string"),
-                        _t.Snapshot.at(path), "p",
+                        _t.Snapshot.at(path),
                     ),
                     [], expect_version, op="APPEND",
-                    props={"partition.column": "p"},
                 )
             return real_commit(path, added, removed, expect_version, **kw)
 

@@ -300,24 +300,3 @@ def test_every_public_reader_refuses_a_vacuumed_version(spark, tmp_path):
     ]:
         with pytest.raises(ValueError, match="vacuumed"):
             read()
-
-
-def test_partitioned_log_without_partition_column_is_refused(spark, tmp_path):
-    """Partitioned adds committed without the ``partition.column``
-    property: the shared reader cannot re-attach the column, so every
-    path that reads the rows refuses loudly."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, "a", 7), (2, "b", 7)], "k long, v string, p int")
-    for _ in range(2):
-        staged = txnlog._stage_partitioned(
-            df.coalesce(1), txnlog.Snapshot.at(path), "p"
-        )
-        txnlog.commit(path, staged, [], txnlog.current_version(path))
-    assert "partition.column" not in txnlog.table_props(path)
-    for run in [
-        lambda: txnlog.read_snapshot(spark, path),
-        lambda: txnlog.txn_delete_dv(spark, F.col("k") == 1, path),
-        lambda: txnlog.txn_compact_partitioned(spark, path),
-    ]:
-        with pytest.raises(ValueError, match="predates the partition.column"):
-            run()
