@@ -2089,7 +2089,7 @@ def stream_lake_cdc_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (v4) — no re-read, no missing-entry crash. A FRESH stream from
     startingVersion 0 (below the floor) must fail with the ACTIONABLE
     truncation error naming the retained floor
-    (sources/lakecdc.py _read_entry), not a bare FileNotFoundError —
+    (sources/lakecdc.py LakeCdcStreamReader.partitions), not a bare missing-file error —
     graded via the below_floor_raises flag (the query re-raises if the
     error is missing or wrong-shaped). Graded rows: per-version counts
     and id sums across the cleanup boundary, each version exactly once."""

@@ -44,7 +44,6 @@ one task per new file.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
@@ -56,9 +55,12 @@ from pyspark.sql.datasource import (
 
 from dbimport_spark.txnlog import (
     Snapshot,
+    _apply_entry,
     _data_dir,
-    _log_dir,
+    _log,
+    _read_entry_body,
     current_version,
+    log_floor,
 )
 
 def _table_ddl(
@@ -93,27 +95,6 @@ def _table_ddl(
     if change_feed:
         ddl += ", _change_type string"
     return ddl
-
-
-def _read_entry(path: str, version: int) -> dict:
-    try:
-        with open(os.path.join(_log_dir(path), f"{version:08d}.json")) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        from dbimport_spark.txnlog import log_floor
-
-        floor = log_floor(path)
-        if version < floor:
-            # a stream resuming from a checkpoint older than the log's
-            # retained tail (txn_cleanup_log ran underneath it) must fail
-            # LOUDLY with the remedy, not with a bare missing-file error
-            raise ValueError(
-                f"lake_cdc: version {version} of {path} was truncated by "
-                f"log cleanup (retained floor is {floor}) — restart the "
-                "stream from a fresh checkpoint with startingVersion >= "
-                f"{floor}"
-            )
-        raise
 
 
 class _AddedFile(InputPartition):
@@ -287,22 +268,17 @@ class LakeCdcStreamReader(DataSourceStreamReader):
         self._max_versions = mv if mv > 0 else None
         self._cursor: int | None = None  # last version handed to partitions()
 
-    def _trace(self, msg):
-        import os as _os
-
-        tf = _os.environ.get("LAKE_CDC_TRACE")
-        if tf:
-            with open(tf, "a") as fh:
-                fh.write(msg + "\n")
-
     def initialOffset(self) -> dict:
-        self._trace(f"initialOffset cursor={self._cursor}")
+        _log.debug("lake_cdc %s: initialOffset cursor=%s", self._path, self._cursor)
         self._cursor = self._start - 1
         return {"version": self._start - 1}
 
     def latestOffset(self) -> dict:
         cur = current_version(self._path)
-        self._trace(f"latestOffset cur={cur} cursor={self._cursor} max={self._max_versions}")
+        _log.debug(
+            "lake_cdc %s: latestOffset cur=%d cursor=%s max=%s",
+            self._path, cur, self._cursor, self._max_versions,
+        )
         if self._max_versions is None:
             return {"version": cur}
         if self._cursor is None:
@@ -321,26 +297,35 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                            int(end["version"]))
 
     def partitions(self, start: dict, end: dict):
-        self._trace(f"partitions {start} {end}")
-        self._cursor = max(self._cursor if self._cursor is not None else -1,
-                           int(end["version"]))
-        if self._change_feed:
-            return self._partitions_cdf(
-                int(start["version"]), int(end["version"])
+        s, e = int(start["version"]), int(end["version"])
+        _log.debug("lake_cdc %s: partitions (%d, %d]", self._path, s, e)
+        self._cursor = max(self._cursor if self._cursor is not None else -1, e)
+        floor = log_floor(self._path)
+        if s + 1 < floor:
+            # a stream resuming from a checkpoint older than the log's
+            # retained tail (txn_cleanup_log ran underneath it) must fail
+            # LOUDLY with the remedy, not with a bare missing-file error
+            raise ValueError(
+                f"lake_cdc: version {s + 1} of {self._path} was truncated by "
+                f"log cleanup (retained floor is {floor}) — restart the "
+                "stream from a fresh checkpoint with startingVersion >= "
+                f"{floor}"
             )
+        if self._change_feed:
+            return self._partitions_cdf(s, e, floor)
         parts: list[_AddedFile] = []
-        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            entry = _read_entry(self._path, v)
+        for v in range(s + 1, e + 1):
+            entry = _read_entry_body(self._path, v)
             # A deletion-vector commit changes VISIBLE rows of already-
             # streamed files without adding any — it is change data, same
             # contract arm as a remove-carrying rewrite. (Under
             # ignoreChanges its added files — there are none — stream,
             # matching Delta: DV'd deletions are simply not re-emitted.)
-            if entry.get("removed") or entry.get("dv"):
+            if entry["removed"] or entry["dv"]:
                 if self._skip_changes:
                     continue
                 if not self._ignore_changes:
-                    kind = "removes files" if entry.get("removed") else (
+                    kind = "removes files" if entry["removed"] else (
                         "attaches deletion vectors"
                     )
                     raise ValueError(
@@ -349,9 +334,8 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                         "ignoreChanges=true to stream its added files anyway, "
                         "or skipChangeCommits=true to drop such commits."
                     )
-            for e in entry.get("added", []):
-                name = e["n"] if isinstance(e, dict) else e
-                pval = e.get("p") if isinstance(e, dict) else None
+            for a in entry["added"]:
+                pval = a.get("p")
                 if pval is not None and not self._partition_col:
                     raise ValueError(
                         "lake_cdc: table is partitioned (partition values "
@@ -360,19 +344,20 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                     )
                 parts.append(
                     _AddedFile(
-                        os.path.join(_data_dir(self._path), name),
+                        os.path.join(_data_dir(self._path), a["n"]),
                         v,
                         pval=pval,
                         ptype=self._ptype,
                     )
                 )
         # Spark requires ≥1 partition even for an empty range
-        return parts or [_AddedFile("", int(end["version"]))]
+        return parts or [_AddedFile("", e)]
 
-    def _partitions_cdf(self, s: int, e: int):
-        """Plan change-feed partitions for versions (s, e]. Metadata-only
-        on the driver: the log folds to ``s`` once for prior DV refs /
-        partition values, then each entry applies incrementally. A commit
+    def _partitions_cdf(self, s: int, e: int, floor: int):
+        """Plan change-feed partitions for versions (s, e] of a log whose
+        retained floor is ``floor``. Metadata-only on the driver: the log
+        folds to ``s`` once for prior DV refs / partition values, then
+        each entry advances that state (txnlog._apply_entry). A commit
         with materialized change files fans out one task per file;
         otherwise appends fan out one insert task per file, DV-only
         commits one positions task per touched file, and rewrite commits
@@ -395,16 +380,13 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                 # genuinely requires the discarded side (a DV delta, or
                 # a rewrite without cdf.enabled change files) fails with
                 # the actionable error.
-                from dbimport_spark.txnlog import log_floor
-
-                floor = log_floor(self._path)
                 if not (s < floor <= e):
                     raise
-                entry0 = _read_entry(self._path, floor)
+                entry0 = _read_entry_body(self._path, floor)
                 files0 = _change_files(self._path, floor)
                 if files0 is not None:
                     parts.extend(_CdfFile(f, floor) for f in files0)
-                elif entry0.get("removed", []):
+                elif entry0["removed"]:
                     raise ValueError(
                         f"lake_cdc: change data of rewrite version "
                         f"{floor} of {self._path} needs pre-floor "
@@ -414,7 +396,7 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                         f"startingVersion > {floor}, or enable "
                         "cdf.enabled before cleanup"
                     )
-                elif entry0.get("dv", []):
+                elif entry0["dv"]:
                     raise ValueError(
                         f"lake_cdc: DV delta of version {floor} of "
                         f"{self._path} needs the pre-floor deletion "
@@ -423,9 +405,8 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                         f"{floor}"
                     )
                 else:
-                    for x in entry0.get("added", []):
-                        name = x["n"] if isinstance(x, dict) else x
-                        pval = x.get("p") if isinstance(x, dict) else None
+                    for a in entry0["added"]:
+                        pval = a.get("p")
                         if pval is not None and not self._partition_col:
                             raise ValueError(
                                 "lake_cdc: table is partitioned — pass "
@@ -433,33 +414,16 @@ class LakeCdcStreamReader(DataSourceStreamReader):
                             )
                         parts.append(
                             _AddedFile(
-                                os.path.join(data_dir, name), floor,
+                                os.path.join(data_dir, a["n"]), floor,
                                 pval=pval, ptype=self._ptype,
                             )
                         )
                 live = dict(Snapshot.at(self._path, floor).live)
                 s = floor
         for v in range(s + 1, e + 1):
-            entry = _read_entry(self._path, v)
-            prev = {n: d for n, d in live.items()}
-            # apply the entry (same fold rules as txnlog._fold_log3)
-            for x in entry.get("added", []):
-                if isinstance(x, dict):
-                    live[x["n"]] = {
-                        "p": x.get("p"), "stats": x.get("stats") or {}, "dv": None,
-                    }
-                else:
-                    live[x] = {"p": None, "stats": {}, "dv": None}
-            for n in [x["n"] if isinstance(x, dict) else x
-                      for x in entry.get("removed", [])]:
-                live.pop(n, None)
-            for x in entry.get("dv", []):
-                if x["n"] in live:
-                    live[x["n"]] = dict(
-                        live[x["n"]],
-                        dv={"d": x["d"], "k": x["k"]} if x.get("d") is not None
-                        else None,
-                    )
+            entry = _read_entry_body(self._path, v)
+            prev = dict(live)
+            _apply_entry(live, {}, entry)
             if entry.get("op") in ("OPTIMIZE", "OPTIMIZE_ZORDER"):
                 continue  # visible rows invariant: no change data
             added_names = set(live) - set(prev)

@@ -31,8 +31,17 @@ snapshot metadata is the same idea) reduced to its load-bearing core:
   DISTRIBUTED (``write_checkpoint_incremental`` — driver holds O(suffix)
   state, executors write the parts).
 
-Four pieces carry the protocol through the code:
+Five pieces carry the protocol through the code:
 
+* the log codec — ``_read_entry_body`` is the one code that opens and
+  decodes a ``<version>.json`` (every add a ``{"n", ...}`` dict),
+  ``commit`` the one that encodes one, and ``_apply_entry`` the one
+  replay step (adds, removes, DV attach/replace/detach, property
+  set/unset, the partition type). Every fold of the log — ``Snapshot.at``,
+  ``snapshot_state_df``, ``txn_fsck``, the change-feed planner in
+  ``sources/lakecdc`` — is those two over the suffix after the newest
+  checkpoint (``_replay``, which re-resolves when a log cleanup
+  truncates underfoot);
 * ``Snapshot`` — one immutable table state: ``Snapshot.at(path,
   version)`` LISTs the log once (when no version is given) and folds it
   once, then every reader (``read_snapshot``, ``snapshot_files``,
@@ -197,79 +206,130 @@ def _ckpt_decode(rec: dict) -> dict:
     }
 
 
-def _iter_checkpoint_parts(path: str, version: int):
-    """Yield (name, state-dict) pairs streaming ONE PART AT A TIME —
-    driver memory is O(part), not O(live), until the caller accumulates."""
-    import pyarrow.parquet as pq
-
+def _manifest_at(path: str, version: int) -> dict:
+    """The manifest of the checkpoint at ``version``; FileNotFoundError
+    when a vacuum reaped it after the caller chose it (see _replay)."""
     man = _checkpoint_manifest(path, version)
-    d = _checkpoint_dir(path, version)
-    for part in man["parts"]:
-        tbl = pq.read_table(os.path.join(d, part))
-        for rec in tbl.to_pylist():
-            yield rec["n"], _ckpt_decode(rec)
+    if man is None:
+        raise FileNotFoundError(_checkpoint_dir(path, version))
+    return man
 
 
 def _read_checkpoint(path: str, version: int):
-    """(live, ptype, props) from the checkpoint at ``version``."""
-    man = _checkpoint_manifest(path, version)
-    live = dict(_iter_checkpoint_parts(path, version))
+    """(live, ptype, props) from the checkpoint at ``version``, its
+    parquet parts read one at a time."""
+    import pyarrow.parquet as pq
+
+    man = _manifest_at(path, version)
+    live = {}
+    for part in man["parts"]:
+        tbl = pq.read_table(os.path.join(_checkpoint_dir(path, version), part))
+        for rec in tbl.to_pylist():
+            live[rec["n"]] = _ckpt_decode(rec)
     return live, man.get("ptype"), dict(man.get("props") or {})
 
 
+# ------------------------------------------------------------ the log codec
+#
+# Every read of the log goes through two functions: _read_entry_body is
+# the one code that opens a ``<v>.json`` and decodes it, _apply_entry the
+# one code that applies a decoded entry to a fold state. commit() is the
+# matching encoder.
+
+
+def _as_add(a) -> dict:
+    """An add action in its in-memory form ``{"n": name, ...}``; the log
+    writes an add that carries nothing but its name as the bare name."""
+    return {"n": a} if isinstance(a, str) else a
+
+
+def _read_entry_body(path: str, v: int) -> dict:
+    """The log entry of version ``v``, decoded: every add a dict
+    (_as_add), ``removed`` a list of names and ``dv`` a list of
+    ``{"n", "d", "k"}`` actions, empty when the entry has none. A missing
+    entry raises FileNotFoundError."""
+    with open(os.path.join(_log_dir(path), f"{v:08d}.json")) as fh:
+        entry = json.load(fh)
+    entry["added"] = [_as_add(a) for a in entry.get("added", [])]
+    entry.setdefault("removed", [])
+    entry.setdefault("dv", [])
+    return entry
+
+
+def _apply_entry(live: dict, props: dict, entry: dict) -> str | None:
+    """Apply one decoded entry to a fold state in place — ``live`` (file
+    name → {"p": partition value or None, "stats": zone map or {}, "dv":
+    deletion-vector ref or None, "rid": row-id base or None}) and the
+    latest-wins ``props`` — and return the partition column's DDL type
+    its adds record (None when none does; the latest one wins).
+
+    Adds enter without a DV; removes drop; a ``dv`` action REPLACES the
+    file's DV reference (the new sidecar already folds in every
+    previously-deleted position) and ``"d": null`` DETACHES it (RESTORE
+    rolling back past a DV delete) — on a file the state holds, applied
+    after the entry's adds; a property set to None is unset. A file's
+    state is replaced, never mutated, so a shallow copy of ``live`` keeps
+    the state before the entry."""
+    ptype = None
+    for a in entry["added"]:
+        live[a["n"]] = {
+            "p": a.get("p"), "stats": a.get("stats") or {}, "dv": None,
+            "rid": a.get("rid"),
+        }
+        ptype = a.get("t") or ptype
+    for n in entry["removed"]:
+        live.pop(n, None)
+    for d in entry["dv"]:
+        if d["n"] in live:
+            dv = {"d": d["d"], "k": d["k"]} if d.get("d") is not None else None
+            live[d["n"]] = {**live[d["n"]], "dv": dv}
+    for k, val in (entry.get("props") or {}).items():
+        if val is None:
+            props.pop(k, None)
+        else:
+            props[k] = val
+    return ptype
+
+
+def _replay(path: str, v_max: int, load):
+    """The reads behind every fold of the log up to ``v_max``: the newest
+    checkpoint ≤ ``v_max`` (-1 when none), ``load(path, checkpoint)`` of
+    it (None when none) and the decoded entries after it.
+
+    A txn_cleanup_log may truncate those entries, and a vacuum reap that
+    checkpoint, between the choice and the reads; the replay then starts
+    again from the newer checkpoint the cleanup anchored at, as often as
+    vacuum retries. An entry that is gone with no newer checkpoint to
+    start from — a version below the retained floor, or a corrupt log —
+    raises ValueError."""
+    for _attempt in range(5):
+        ckpt_v = v = _latest_checkpoint_at_or_below(path, v_max)
+        try:
+            base = load(path, ckpt_v) if ckpt_v >= 0 else None
+            entries = []
+            for v in range(ckpt_v + 1, v_max + 1):
+                entries.append(_read_entry_body(path, v))
+            return ckpt_v, base, entries
+        except FileNotFoundError:
+            if v > ckpt_v and _latest_checkpoint_at_or_below(path, v_max) == ckpt_v:
+                break
+    raise ValueError(f"missing log entry for version {v} of {path} (corrupt log)")
+
+
 def _fold_log3(path: str, v_max: int):
-    """Fold the log up to ``v_max`` into ``(live, ptype, props)`` where
-    ``live`` maps file name → {"p": partition value or None, "stats":
-    zone map or {}, "dv": deletion-vector ref or None}, ``ptype`` is the
-    partition column's Spark DDL type (None for unpartitioned/legacy
-    commits) and ``props`` is the latest-wins table-property dict
-    (``props`` actions — Delta's metadata/configuration updates).
+    """Fold the log up to ``v_max`` into ``(live, ptype, props)`` (see
+    _apply_entry): ``ptype`` is the partition column's Spark DDL type
+    (None when unpartitioned) and ``props`` the latest-wins table-property
+    dict (``props`` actions — Delta's metadata/configuration updates).
 
     Resolution starts from the newest checkpoint ≤ v_max and replays only
-    the suffix, so a long-lived table's snapshot read is O(checkpoint
-    interval) log files, not O(versions) — the Delta-checkpoint design.
-    """
-    live: dict[str, dict] = {}
-    ptype = None
-    props: dict[str, str] = {}
-    start = 0
-    ckpt_v = _latest_checkpoint_at_or_below(path, v_max)
-    if ckpt_v >= 0:
-        live, ptype, props = _read_checkpoint(path, ckpt_v)
-        start = ckpt_v + 1
-    for v in range(start, v_max + 1):
-        fp = os.path.join(_log_dir(path), f"{v:08d}.json")
-        if not os.path.exists(fp):
-            raise ValueError(f"missing log entry for version {v} (corrupt log)")
-        with open(fp) as fh:
-            entry = json.load(fh)
-        for e in entry.get("added", []):
-            if isinstance(e, dict):
-                live[e["n"]] = {
-                    "p": e.get("p"), "stats": e.get("stats") or {},
-                    "dv": None, "rid": e.get("rid"),
-                }
-                if e.get("t") is not None:
-                    ptype = e["t"]
-            else:
-                live[e] = {"p": None, "stats": {}, "dv": None, "rid": None}
-        for e in _entry_files(entry.get("removed", [])):
-            live.pop(e, None)
-        for e in entry.get("dv", []):
-            # deletion-vector action: REPLACE the file's DV reference (the
-            # new sidecar already folds in every previously-deleted
-            # position, so fold state is just latest-wins per file);
-            # "d": null DETACHES the vector (txn_restore rolling back past
-            # a DV delete)
-            if e["n"] in live:
-                live[e["n"]]["dv"] = (
-                    {"d": e["d"], "k": e["k"]} if e.get("d") is not None else None
-                )
-        for k, val in (entry.get("props") or {}).items():
-            if val is None:
-                props.pop(k, None)  # unset
-            else:
-                props[k] = val
+    the suffix (_replay), so a long-lived table's snapshot read is
+    O(checkpoint interval) log files, not O(versions) — the
+    Delta-checkpoint design."""
+    _, base, entries = _replay(path, v_max, _read_checkpoint)
+    live, ptype, props = base or ({}, None, {})
+    for entry in entries:
+        ptype = _apply_entry(live, props, entry) or ptype
     return live, ptype, props
 
 
@@ -381,10 +441,19 @@ def _ckpt_encode(n: str, d: dict) -> dict:
     }
 
 
-def _publish_checkpoint_dir(path: str, v: int, tmp: str) -> str:
-    """Atomically rename the staged checkpoint dir into place; a racing
-    checkpointer of the same version wins harmlessly (content identical
-    up to part split)."""
+def _publish_checkpoint_dir(
+    path: str, v: int, tmp: str, ptype, props: dict, parts: list, n_live: int
+) -> str:
+    """Write the manifest of the checkpoint staged in ``tmp`` (its
+    ``parts`` holding ``n_live`` live entries) and atomically rename the
+    directory into place; a racing checkpointer of the same version wins
+    harmlessly (content identical up to part split)."""
+    manifest = {
+        "version": v, "ptype": ptype, "props": props, "parts": parts,
+        "n_live": n_live,
+    }
+    with open(os.path.join(tmp, "manifest.json"), "w") as fh:
+        fh.write(json.dumps(manifest))
     out = _checkpoint_dir(path, v)
     try:
         os.rename(tmp, out)
@@ -429,19 +498,11 @@ def write_checkpoint(path: str, version: int | None = None) -> str:
             pa.Table.from_pylist(rows, schema=schema), os.path.join(tmp, part)
         )
         parts.append(part)
-    with open(os.path.join(tmp, "manifest.json"), "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "version": v,
-                    "ptype": ptype,
-                    "props": props,
-                    "parts": parts,
-                    "n_live": len(names),
-                }
-            )
-        )
-    return _publish_checkpoint_dir(path, v, tmp)
+    return _publish_checkpoint_dir(path, v, tmp, ptype, props, parts, len(names))
+
+
+#: The columns of a checkpoint part, as snapshot_state_df serves them.
+_STATE_DDL = "n string, p string, stats string, dv string, rid bigint"
 
 
 def snapshot_state_df(spark, path: str, version: int | None = None):
@@ -457,95 +518,56 @@ def snapshot_state_df(spark, path: str, version: int | None = None):
     Falls back to a local relation of a driver fold when no multi-part
     checkpoint exists yet (cold start) — one
     O(live) pass, after which write_checkpoint establishes the scale
-    format. The suffix ops are local relations too (``frames.local_frame``),
+    format. The suffix rows are local relations too (``frames.local_frame``),
     so neither form starts a Python worker."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     v = current_version(path) if version is None else version
-    sschema = StructType(
-        [
-            StructField("n", StringType()),
-            StructField("p", StringType()),
-            StructField("stats", StringType()),
-            StructField("dv", StringType()),
-            StructField("rid", LongType()),
-        ]
-    )
-    ckpt_v = _latest_checkpoint_at_or_below(path, v)
-    man = _checkpoint_manifest(path, ckpt_v) if ckpt_v >= 0 else None
+    return _state(spark, path, v)[0]
+
+
+def _state(spark, path: str, v: int):
+    """(snapshot_state_df at ``v``, ptype, props). The suffix replays on
+    the driver through the one step (_apply_entry), over stand-ins for
+    the checkpoint rows it re-points a DV on; every name it touches then
+    takes its replayed row in ONE broadcast anti-join + union, and the
+    parts are never materialized. ptype and props replay from the
+    checkpoint manifest the same way."""
+    from pyspark.sql import functions as F
+
+    ckpt_v, man, entries = _replay(path, v, _manifest_at)
+    live, ptype, props = {}, None, {}
+    if man is not None:
+        ptype, props = man.get("ptype"), dict(man.get("props") or {})
+        live = {d["n"]: {"dv": None, "ckpt": True} for e in entries for d in e["dv"]}
+    for entry in entries:
+        ptype = _apply_entry(live, props, entry) or ptype
+    rows = [_ckpt_encode(n, d) for n, d in sorted(live.items()) if "ckpt" not in d]
     if man is None:
-        live, _, _ = _fold_log3(path, v)
-        rows = [_ckpt_encode(n, d) for n, d in sorted(live.items())]
-        return local_frame(spark, rows, sschema)
+        return local_frame(spark, rows, _STATE_DDL), ptype, props
     d = _checkpoint_dir(path, ckpt_v)
-    base = spark.read.schema(sschema).parquet(
+    base = spark.read.schema(_STATE_DDL).parquet(
         *[os.path.join(d, part) for part in man["parts"]]
     )
-    # fold the suffix entries (O(interval), small by construction) into
-    # per-name last-wins ops on the driver, then apply them as ONE
-    # broadcast anti-join + union — never materializing `base`
-    ops: dict[str, tuple] = {}
-    for sv in range(ckpt_v + 1, v + 1):
-        entry = _read_entry_body(path, sv)
-        for e in entry.get("added", []):
-            if isinstance(e, dict):
-                ops[e["n"]] = (
-                    "add",
-                    {
-                        "p": e.get("p"), "stats": e.get("stats") or {},
-                        "dv": None, "rid": e.get("rid"),
-                    },
-                )
-            else:
-                ops[e] = ("add", {"p": None, "stats": {}, "dv": None, "rid": None})
-        for n in _entry_files(entry.get("removed", [])):
-            ops[n] = ("remove",)
-        for e in entry.get("dv", []):
-            dvv = {"d": e["d"], "k": e["k"]} if e.get("d") is not None else None
-            prev = ops.get(e["n"])
-            if prev is None:
-                ops[e["n"]] = ("dv", dvv)
-            elif prev[0] == "add":
-                ops[e["n"]] = ("add", dict(prev[1], dv=dvv))
-            elif prev[0] == "dv":
-                ops[e["n"]] = ("dv", dvv)
-            # ("remove",): a DV on a removed name cannot occur (fold drops it)
-    if not ops:
-        return base
-    touched = local_frame(spark, [(n,) for n in ops], "n string")
-    kept = base.join(F.broadcast(touched), "n", "left_anti")
-    adds = [
-        _ckpt_encode(n, meta)
-        for n, (kind, *rest) in ops.items()
-        if kind == "add"
-        for meta in [rest[0]]
+    touched = set(live).union(*(e["removed"] for e in entries))
+    if not touched:
+        return base, ptype, props
+    out = base.join(
+        F.broadcast(local_frame(spark, [(n,) for n in touched], "n string")),
+        "n", "left_anti",
+    )
+    if rows:
+        out = out.unionByName(local_frame(spark, rows, _STATE_DDL))
+    patches = [
+        (n, json.dumps(d["dv"], sort_keys=True) if d["dv"] else None)
+        for n, d in live.items() if "ckpt" in d
     ]
-    out = kept
-    if adds:
-        out = out.unionByName(local_frame(spark, adds, sschema))
-    dv_ops = {
-        n: rest[0] for n, (kind, *rest) in ops.items() if kind == "dv"
-    }
-    if dv_ops:
-        dv_rows = [
-            (n, json.dumps(dvv, sort_keys=True) if dvv else None)
-            for n, dvv in dv_ops.items()
-        ]
-        dv_df = local_frame(spark, dv_rows, "n string, __dv_new string")
-        patched = (
+    if patches:
+        dv_df = local_frame(spark, patches, "n string, __dv_new string")
+        out = out.unionByName(
             base.join(F.broadcast(dv_df), "n", "inner")
             .withColumn("dv", F.col("__dv_new"))
             .drop("__dv_new")
-            .select(*[f.name for f in sschema.fields])
         )
-        out = out.unionByName(patched)
-    return out
+    return out, ptype, props
 
 
 def write_checkpoint_incremental(spark, path: str, version: int | None = None) -> str:
@@ -559,12 +581,7 @@ def write_checkpoint_incremental(spark, path: str, version: int | None = None) -
     v = current_version(path) if version is None else version
     if _checkpoint_manifest(path, v) is not None:
         return _checkpoint_dir(path, v)
-    _, ptype, props = (
-        # props/ptype fold is O(versions-with-props) driver work on tiny
-        # dicts — scale-safe; the LIVE SET is what must stay off-driver
-        _fold_props_only(path, v)
-    )
-    state = snapshot_state_df(spark, path, v)
+    state, ptype, props = _state(spark, path, v)
     tmp = os.path.join(_log_dir(path), f".tmpck-{uuid.uuid4().hex}")
     # executor-side part write; part count follows the data's partitioning
     state.write.parquet(tmp, mode="overwrite")
@@ -574,49 +591,11 @@ def write_checkpoint_incremental(spark, path: str, version: int | None = None) -
     n_live = sum(
         pq.read_metadata(os.path.join(tmp, part)).num_rows for part in parts
     )
-    with open(os.path.join(tmp, "manifest.json"), "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "version": v,
-                    "ptype": ptype,
-                    "props": props,
-                    "parts": parts,
-                    "n_live": n_live,
-                }
-            )
-        )
     # drop Spark's byproducts so the dir holds exactly manifest + parts
     for f in os.listdir(tmp):
-        if not f.endswith(".parquet") and f != "manifest.json":
+        if not f.endswith(".parquet"):
             os.remove(os.path.join(tmp, f))
-    return _publish_checkpoint_dir(path, v, tmp)
-
-
-def _fold_props_only(path: str, v_max: int):
-    """(None, ptype, props) without touching the live set — same fold
-    rules as _fold_log3 restricted to metadata, starting from the newest
-    checkpoint's manifest."""
-    ptype = None
-    props: dict[str, str] = {}
-    start = 0
-    ckpt_v = _latest_checkpoint_at_or_below(path, v_max)
-    if ckpt_v >= 0:
-        man = _checkpoint_manifest(path, ckpt_v)
-        ptype = man.get("ptype")
-        props = dict(man.get("props") or {})
-        start = ckpt_v + 1
-    for sv in range(start, v_max + 1):
-        entry = _read_entry_body(path, sv)
-        for e in entry.get("added", []):
-            if isinstance(e, dict) and e.get("t") is not None:
-                ptype = e["t"]
-        for k, val in (entry.get("props") or {}).items():
-            if val is None:
-                props.pop(k, None)
-            else:
-                props[k] = val
-    return None, ptype, props
+    return _publish_checkpoint_dir(path, v, tmp, ptype, props, parts, n_live)
 
 
 def snapshot_files(path: str, version: int | None = None) -> list[str]:
@@ -777,7 +756,7 @@ def _merge_schema(table: StructType | None, staged: StructType) -> StructType:
 
 
 class _Staged(list):
-    """The names (or commit entries) of freshly staged files, carrying
+    """The add entries (``{"n", ...}``) of freshly staged files, carrying
     ``schema``: the physical schema (StructType JSON) the writer held
     when it staged them, and ``pcol``: the partition column they are
     split by (None when unpartitioned). The commit that publishes them
@@ -837,8 +816,11 @@ def _stage(df: DataFrame, snap: Snapshot, pcol: str | None = None) -> _Staged:
     value, which lives in the LOG, not the file (Delta's
     partitionValues), as the entry ``{"n": name, "p": the directory-
     encoded value exactly as Spark wrote it, "t": the column's DDL type}``
-    readers re-attach it from. A frame without the partition column is
-    refused before any file is written.
+    readers re-attach it from. ``t`` is the WIDENING join of the table's
+    partition type and the frame's, so a wider write widens the column
+    and a narrower one keeps it. A frame without the partition column,
+    or whose partition type is unrelated to the table's, is refused
+    before any file is written.
 
     Honors the ``write.maxRecordsPerFile`` table property (file-size
     governance that travels WITH the table — every writer splits oversize
@@ -871,7 +853,12 @@ def _stage(df: DataFrame, snap: Snapshot, pcol: str | None = None) -> _Staged:
     if max_rec:
         writer = writer.option("maxRecordsPerFile", int(max_rec))
     if pcol is not None:
-        ptype = df.schema[pcol].dataType.simpleString()
+        t = df.schema[pcol].dataType.simpleString()
+        ptype = t if snap.ptype is None else _widen_join(snap.ptype, t)
+        if ptype is None:
+            raise ValueError(
+                f"cannot merge column {pcol!r}: {snap.ptype} vs {t} is not a widening"
+            )
         writer = writer.partitionBy(pcol)
     writer.parquet(stage_dir)
     subs = [""] if pcol is None else sorted(
@@ -888,7 +875,7 @@ def _stage(df: DataFrame, snap: Snapshot, pcol: str | None = None) -> _Staged:
                     os.path.join(_data_dir(path), name),
                 )
                 added.append(
-                    name if pcol is None
+                    {"n": name} if pcol is None
                     else {"n": name, "p": sub.split("=", 1)[1], "t": ptype}
                 )
     shutil.rmtree(stage_dir)
@@ -1136,7 +1123,7 @@ CHECKPOINT_INTERVAL = 20
 
 def commit(
     path: str,
-    added: list[str],
+    added: list,
     removed: list[str],
     expect_version: int,
     dv: list[dict] | None = None,
@@ -1147,6 +1134,9 @@ def commit(
     """Atomically claim version ``expect_version + 1``. Raises TxnConflict
     if another writer got there first (optimistic concurrency).
 
+    ``added`` holds add entries (``{"n": file name, ...}``, or the bare
+    name); the entry records one that carries nothing but its name as the
+    bare name, so its bytes are the log's one encoding of an add.
     ``dv`` entries (``{"n": file, "d": dv-sidecar name, "k": deleted
     count}``) attach/REPLACE a deletion vector on an already-live file —
     a row-level delete that moves no data bytes (Delta's DV add-action).
@@ -1178,8 +1168,7 @@ def commit(
     staged = added  # sorting below drops a _Staged list's schema
     new_v = expect_version + 1
     fp = os.path.join(_log_dir(path), f"{new_v:08d}.json")
-    key = lambda e: e["n"] if isinstance(e, dict) else e
-    added = sorted(added, key=key)
+    added = sorted((_as_add(a) for a in added), key=lambda a: a["n"])
     # ROW TRACKING (Delta row ids): when the table has a rowids.next
     # high-water mark, every added file is assigned a contiguous base id
     # range here — IN the commit, atomically with the next-pointer bump —
@@ -1210,18 +1199,14 @@ def commit(
 
             base = int(nxt)
             with_rid = []
-            for e in added:
-                name = e["n"] if isinstance(e, dict) else e
-                if isinstance(e, dict) and e.get("rid") is not None:
-                    with_rid.append(e)  # CLONE/RESTORE carry ids verbatim
+            for a in added:
+                if a.get("rid") is not None:
+                    with_rid.append(a)  # CLONE/RESTORE carry ids verbatim
                     continue
-                n_rows = pq.read_metadata(
-                    os.path.join(_data_dir(path), name)
+                with_rid.append({**a, "rid": base})
+                base += pq.read_metadata(
+                    os.path.join(_data_dir(path), a["n"])
                 ).num_rows
-                e2 = dict(e) if isinstance(e, dict) else {"n": name}
-                e2["rid"] = base
-                base += n_rows
-                with_rid.append(e2)
             added = with_rid
             props = dict(props or {})
             props["rowids.next"] = str(base)
@@ -1234,11 +1219,11 @@ def commit(
     }
     body = {
         "version": new_v,
-        "added": added,
-        "removed": sorted(removed, key=key),
+        "added": [a["n"] if a.keys() == {"n"} else a for a in added],
+        "removed": sorted(removed),
     }
     if dv:
-        body["dv"] = sorted(dv, key=key)
+        body["dv"] = sorted(dv, key=lambda d: d["n"])
     if props:
         body["props"] = props
     if op:
@@ -1255,10 +1240,7 @@ def commit(
     ts = time.time()
     if expect_version >= 0:
         try:
-            with open(
-                os.path.join(_log_dir(path), f"{expect_version:08d}.json")
-            ) as fh:
-                ts = max(ts, json.load(fh).get("ts", 0.0))
+            ts = max(ts, _read_entry_body(path, expect_version).get("ts", 0.0))
         except (FileNotFoundError, json.JSONDecodeError):
             pass  # pre-timestamp era or truncated log: no clamp available
     body["ts"] = ts
@@ -1351,17 +1333,14 @@ def _transact(spark, path: str, attempt, max_retries: int, what: str):
 
 def _reap(path: str, added, dv=None) -> None:
     """Delete files a transaction wrote but never committed: staged data
-    files (bare names or entry dicts — a recorded bloom sidecar goes with
-    its file) and the DV sidecar generations ``dv`` actions name. No log
-    entry names them, so vacuum never would."""
+    files (add entries — a recorded bloom sidecar goes with its file) and
+    the DV sidecar generations ``dv`` actions name. No log entry names
+    them, so vacuum never would."""
     doomed = []
-    for e in added:
-        if isinstance(e, dict):
-            doomed.append(e["n"])
-            bloom = (e.get("stats") or {}).get("__bloom__") or {}
-            doomed.extend(f"{e['n']}.bloom.{c}" for c in bloom)
-        else:
-            doomed.append(e)
+    for a in added:
+        doomed.append(a["n"])
+        bloom = (a.get("stats") or {}).get("__bloom__") or {}
+        doomed.extend(f"{a['n']}.bloom.{c}" for c in bloom)
     doomed.extend(e["d"] for e in dv or () if e.get("d") is not None)
     for n in doomed:
         try:
@@ -1382,14 +1361,14 @@ def _describe(
     """``staged`` with each entry carrying per-file metadata: footer zone
     maps for ``stats_cols`` and a Bloom sidecar for ``bloom_col``; an
     entry keeps its partition value and type, and one with neither
-    metadata nor a partition value stays a bare name. Columns are
+    metadata nor a partition value stays ``{"n": name}``. Columns are
     LOGICAL names, translated here to the physical names the files carry
     (log stats stay physical-keyed across renames)."""
     cols = [_phys_col(snap.props, c) for c in stats_cols]
     bcol = _phys_col(snap.props, bloom_col) if bloom_col is not None else None
     out = []
     for e in staged:
-        e = e if isinstance(e, dict) else {"n": e, "p": None}
+        e = {"n": e["n"], "p": None, **e}  # the key order the log records
         n = e["n"]
         st = (
             _footer_stats(os.path.join(_data_dir(snap.path), n), cols)
@@ -1399,7 +1378,7 @@ def _describe(
         if bcol is not None:
             st = dict(st)
             st["__bloom__"] = {bcol: _bloom_build_file(snap.path, n, bcol, fpp)}
-        out.append({**e, "stats": st} if st or e["p"] is not None else n)
+        out.append({**e, "stats": st} if st or e["p"] is not None else {"n": n})
     return _Staged(out, staged.schema, staged.pcol)
 
 
@@ -1590,12 +1569,6 @@ def _merge_on_read(
 
 
 # ------------------------------------------------------- partitioned form
-
-def _entry_files(entry_list):
-    """Log entries are either bare file names (unpartitioned commits) or
-    {"n": name, "p": partition-value} dicts (partitioned commits)."""
-    return [e["n"] if isinstance(e, dict) else e for e in entry_list]
-
 
 def _refuse_partitioned(snap: Snapshot, op_name: str) -> None:
     """Loud guard for export_symlink_manifest, the one consumer that
@@ -2046,8 +2019,11 @@ def txn_fsck(path: str, version: int | None = None) -> dict:
             ).num_rows
         return rows_cache[name]
 
+    # one state, advanced an entry at a time through the versions
+    live, _, props = _fold_log3(path, versions[0])
     for v in versions:
-        live, _, props = _fold_log3(path, v)
+        if v > versions[0]:
+            _apply_entry(live, props, _read_entry_body(path, v))
         spans = []
         for n, d in sorted(live.items()):
             f = os.path.join(data_dir, n)
@@ -2203,10 +2179,8 @@ def vacuum(
     }
     for v in range(cutoff + 1, cur + 1):
         entry = _read_entry_body(path, v)
-        keep.update(_entry_files(entry.get("added", [])))
-        keep_dv.update(
-            e["d"] for e in entry.get("dv", []) if e.get("d") is not None
-        )
+        keep.update(a["n"] for a in entry["added"])
+        keep_dv.update(d["d"] for d in entry["dv"] if d.get("d") is not None)
     # every file/DV the log has EVER named and that may still be on
     # disk: the newest _ever consolidation (see txn_cleanup_log) covers
     # entries the log no longer holds; remaining entries replay on top.
@@ -2226,27 +2200,24 @@ def vacuum(
             top = max(cur, best)
             for v in range(cur + 1, top + 1):
                 entry = _read_entry_body(path, v)
-                keep.update(_entry_files(entry.get("added", [])))
+                keep.update(a["n"] for a in entry["added"])
                 keep_dv.update(
-                    e["d"] for e in entry.get("dv", []) if e.get("d") is not None
+                    d["d"] for d in entry["dv"] if d.get("d") is not None
                 )
             doomed_set: set[str] = set()
             doomed_dv: set[str] = set()
             for v in range(best + 1, top + 1):
-                fp = os.path.join(_log_dir(path), f"{v:08d}.json")
-                with open(fp) as fh:
-                    entry = json.load(fh)
+                entry = _read_entry_body(path, v)
                 doomed_set.update(
-                    n for n in _entry_files(entry.get("added", []))
-                    if n not in keep
+                    a["n"] for a in entry["added"] if a["n"] not in keep
                 )
                 # a restore's DETACH action carries "d": null — it names
                 # no generation (found by the hypothesis protocol
                 # machine: sorted() over a None crashed every vacuum
                 # after a DV-rollback restore)
                 doomed_dv.update(
-                    e["d"] for e in entry.get("dv", [])
-                    if e.get("d") is not None and e["d"] not in keep_dv
+                    d["d"] for d in entry["dv"]
+                    if d.get("d") is not None and d["d"] not in keep_dv
                 )
             if best >= 0:
                 for fs, ds in _iter_ever_chunks(path, best):
@@ -2566,11 +2537,9 @@ def txn_cleanup_log(path: str) -> int:
             dvs: set[str] = set()
             start = best + 1 if best >= 0 else 0
             for v in range(start, anchor + 1):
-                e = _read_entry_body(path, v)
-                files.update(_entry_files(e.get("added", [])))
-                dvs.update(
-                    x["d"] for x in e.get("dv", []) if x.get("d") is not None
-                )
+                entry = _read_entry_body(path, v)
+                files.update(a["n"] for a in entry["added"])
+                dvs.update(d["d"] for d in entry["dv"] if d.get("d") is not None)
             carry = None
             if best >= 0:
                 man = _ever_manifest(path, best)
@@ -2843,13 +2812,15 @@ def scan_candidates_df(
     usable stats (or whose stats don't parse as the bound's type) is
     KEPT; files recorded with zero rows drop; bounds speak LOGICAL
     column names (zone stats are keyed physical)."""
+    state, _, props = _state(spark, path, _pinned_version(path, version))
+    return _prune_state(state, props, bounds, partition_values)
+
+
+def _prune_state(state, props: dict, bounds, partition_values):
+    """The rows of ``state`` (a snapshot_state_df) scan_candidates_df
+    keeps for ``bounds`` and ``partition_values`` under ``props``."""
     from pyspark.sql import functions as F
 
-    v = _pinned_version(path, version)
-    # metadata-only fold: table_props would fold the LIVE SET on the
-    # driver — the exact O(live) planning cost this path exists to avoid
-    _, _, props = _fold_props_only(path, v)
-    state = snapshot_state_df(spark, path, v)
     rows0 = F.get_json_object("stats", "$.__rows__")
     cond = rows0.isNull() | (rows0.cast("bigint") != 0)
     for col, (lo, hi) in (bounds or {}).items():
@@ -2916,11 +2887,11 @@ def read_snapshot_pruned(
     survivors over instead of paying a second checkpoint-part scan —
     plan once, read once."""
     v = _pinned_version(path, version)
-    _, ptype, props = _fold_props_only(path, v)
+    state, ptype, props = _state(spark, path, v)
     cand = (
         candidates
         if candidates is not None
-        else scan_candidates_df(spark, path, bounds, partition_values, v)
+        else _prune_state(state, props, bounds, partition_values)
         .select("n", "p", "dv")
         .collect()
     )
@@ -2937,13 +2908,11 @@ def read_snapshot_pruned(
     )
 
 
-def _readd_entry(n: str, d: dict, ptype: str | None):
+def _readd_entry(n: str, d: dict, ptype: str | None) -> dict:
     """The add action that re-publishes live file ``n`` (fold state
     ``d``) with its full per-file metadata — partition value and type,
     zone-map stats, row-id base (row ids are file-resident: the file
-    keeps them) — or its bare name when it has none (CLONE / RESTORE)."""
-    if d["p"] is None and not d["stats"] and d.get("rid") is None:
-        return n
+    keeps them) — for CLONE / RESTORE."""
     e: dict = {"n": n}
     if d["p"] is not None:
         e["p"] = d["p"]
@@ -3979,15 +3948,11 @@ def _staged_rows(spark, snap: Snapshot, staged):
     (_with_staged — a column or width the batch adds is visible, and the
     partition column a first partitioned write names is re-attached):
     the files as a snapshot of their own, read by the one reader (staged
-    files carry physical names). Entries are bare names or partitioned
-    ``{"n", "p", "t"}`` dicts."""
+    files carry physical names)."""
     if not staged:
         return None
-    live, ptype = {}, None
-    for e in staged:
-        e = e if isinstance(e, dict) else {"n": e}
-        live[e["n"]] = {"p": e.get("p"), "stats": {}, "dv": None, "rid": None}
-        ptype = e.get("t") or ptype
+    live: dict = {}
+    ptype = _apply_entry(live, {}, {"added": staged, "removed": [], "dv": []})
     props = _with_staged(snap.props, staged)
     return _read_snapshot(
         spark, Snapshot(snap.path, snap.version, live, ptype, props)
@@ -4217,11 +4182,6 @@ def _routed(df: DataFrame, path: str, quarantine: str, append) -> tuple[int, int
 
 
 # ------------------------------------ history, time travel by time, RESTORE
-
-
-def _read_entry_body(path: str, v: int) -> dict:
-    with open(os.path.join(_log_dir(path), f"{v:08d}.json")) as fh:
-        return json.load(fh)
 
 
 def version_asof(path: str, ts: float) -> int:

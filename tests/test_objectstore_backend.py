@@ -64,7 +64,7 @@ def test_single_writer_converges_through_stale_lists(table):
     assert txnlog.current_version(table) == 4
     for v in range(5):
         entry = txnlog._read_entry_body(table, v)
-        assert entry["added"] == [f"f{v}.parquet"]
+        assert entry["added"] == [{"n": f"f{v}.parquet"}]
 
 
 def test_racing_writers_linearize_under_stale_lists(table):

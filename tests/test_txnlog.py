@@ -182,8 +182,8 @@ def test_vacuum_racing_reader_and_staged_writer(spark, table):
     staged = txnlog._stage(_df(spark, [(99, "zz")]), txnlog.Snapshot.at(table))
     doomed = txnlog.vacuum(table, retain_versions=2)
     assert doomed  # version 0's file really was reclaimed
-    for name in staged:
-        assert os.path.exists(os.path.join(table, "data", name))
+    for e in staged:
+        assert os.path.exists(os.path.join(table, "data", e["n"]))
     horizon = txnlog.vacuum_horizon(table)
     assert horizon == 1
     # horizon version readable end-to-end
@@ -1680,7 +1680,7 @@ class TestCopyOnWriteDML:
         v = txnlog.txn_merge_cow(spark, src, table, ["k", "v"])
         txnlog.txn_upsert(spark, src, other, ["k", "v"])
         removed = txnlog._read_entry_body(table, v)["removed"]
-        assert set(txnlog._entry_files(removed)) == live
+        assert set(removed) == live
         a = sorted(tuple(r) for r in txnlog.read_snapshot(spark, table).collect())
         b = sorted(tuple(r) for r in txnlog.read_snapshot(spark, other).collect())
         assert a == b and len(a) == 101  # (10, "3") matched, (11, "x") new
@@ -2491,7 +2491,7 @@ def test_rewrite_dml_is_the_operator_on_the_snapshot(spark, rewrite_base, tmp_pa
     want = Counter(tuple(r) for r in want.select(*cols).collect())
     assert v == snap0.version + 1
     removed = txnlog._read_entry_body(path, v)["removed"]
-    assert sorted(txnlog._entry_files(removed)) == sorted(picked)
+    assert sorted(removed) == sorted(picked)
 
     def snap(version):
         df = txnlog.read_snapshot(spark, path, version).select(*cols)

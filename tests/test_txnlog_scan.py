@@ -227,7 +227,7 @@ def test_every_pruned_dml_touches_the_candidates(
         assert hits == [set(want)]
     else:
         entry = txnlog._read_entry_body(path, txnlog.current_version(path))
-        assert set(txnlog._entry_files(entry["removed"])) == set(want)
+        assert set(entry["removed"]) == set(want)
     cols = ["key", "v"]
     assert _rows(txnlog.read_snapshot(spark, path).select(*cols)) == _rows(
         txnlog.read_snapshot(spark, ref).select(*cols)
