@@ -18,7 +18,8 @@ format/compression (:591-593) → release of the import's caches (the
 imports of a wildcard run share one session). The import is
 all-or-nothing at the table level: the new table is written to a shadow
 directory and swapped in with two renames, so a crash mid-import leaves
-the old table intact — the lake equivalent of the reference's
+the old table intact, and the next import puts it back in place if the
+crash fell between the renames — the lake equivalent of the reference's
 single-transaction commit (:584).
 """
 
@@ -203,20 +204,14 @@ def main(argv: list[str] | None = None) -> int:
 
         column, where = args.blobimport
         table_dir = os.path.join(args.warehouse, args.table)
+        _restore_stranded(table_dir)
         target = spark.read.parquet(table_dir)
-        shadow = table_dir + ".__import__"
-        shutil.rmtree(shadow, ignore_errors=True)
         try:
             updated = import_blob(spark, target, args.importfile, column, where)
-            updated.write.mode("overwrite").parquet(shadow)
+            _swap_in(table_dir, updated.write.mode("overwrite").parquet)
         except Exception as exc:  # noqa: BLE001 — CLI boundary: JSON error line
             print(json.dumps({"ok": False, "error": str(exc).splitlines()[0]}))
             return 2
-        backup = table_dir + ".__old__"
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(table_dir, backup)
-        os.rename(shadow, table_dir)
-        shutil.rmtree(backup, ignore_errors=True)
         print(json.dumps({"ok": True, "table": args.table, "column": column}))
         return 0
 
@@ -267,6 +262,33 @@ def main(argv: list[str] | None = None) -> int:
     return _run_one(spark, args, None)
 
 
+def _restore_stranded(table_dir: str) -> None:
+    """Put back the old table a crash left between _swap_in's two
+    renames (``<table>`` gone, ``<table>.__old__`` holding it), before
+    an import reads the target."""
+    backup = table_dir + ".__old__"
+    if not os.path.isdir(table_dir) and os.path.isdir(backup):
+        os.rename(backup, table_dir)
+
+
+def _swap_in(table_dir: str, write) -> None:
+    """Replace the table all-or-nothing: ``write(shadow)`` writes the new
+    table to a shadow directory, then two renames put it in place. The
+    old table survives any crash before the second rename, at
+    ``table_dir`` or at ``<table>.__old__`` (see _restore_stranded) —
+    the lake equivalent of the reference's single transaction committed
+    at DbImportWorker.java:584."""
+    shadow = table_dir + ".__import__"
+    backup = table_dir + ".__old__"
+    shutil.rmtree(shadow, ignore_errors=True)
+    write(shadow)
+    shutil.rmtree(backup, ignore_errors=True)
+    if os.path.isdir(table_dir):
+        os.rename(table_dir, backup)
+    os.rename(shadow, table_dir)
+    shutil.rmtree(backup, ignore_errors=True)
+
+
 def _created_target(spark, definition, source):
     """The empty table an import into a missing table merges into:
     createTableIfNeeded from the inference lattice (DbImportWorker.java:391,
@@ -290,6 +312,7 @@ def _run_one(spark, args, results: list | None) -> int:
     source = _read_source(spark, args)
 
     table_dir = os.path.join(args.warehouse, args.table)
+    _restore_stranded(table_dir)
     t0 = time.time()
     if os.path.isdir(table_dir):
         target = spark.read.parquet(table_dir)
@@ -315,18 +338,7 @@ def _run_one(spark, args, results: list | None) -> int:
                 print(json.dumps(err))
             return 2
 
-        # Atomic swap: write the shadow dir, then two renames. The old table
-        # survives any crash before the final rename (reference: single
-        # transaction committed at DbImportWorker.java:584).
-        shadow = table_dir + ".__import__"
-        backup = table_dir + ".__old__"
-        shutil.rmtree(shadow, ignore_errors=True)
-        new_target.write.mode("overwrite").parquet(shadow)
-        shutil.rmtree(backup, ignore_errors=True)
-        if os.path.isdir(table_dir):
-            os.rename(table_dir, backup)
-        os.rename(shadow, table_dir)
-        shutil.rmtree(backup, ignore_errors=True)
+        _swap_in(table_dir, new_target.write.mode("overwrite").parquet)
 
         error_file = None
         if (

@@ -26,10 +26,12 @@ snapshot metadata is the same idea) reduced to its load-bearing core:
   MULTI-PART checkpoint (``<version>.checkpoint/`` — parquet parts of
   ≤ CHECKPOINT_ROWS_PER_PART live entries + a tiny manifest) so snapshot
   resolution reads O(interval) suffix files instead of O(versions) —
-  Delta's periodic multi-part parquet checkpoint. Large-table consumers
-  read the parts as a DataFrame (``snapshot_state_df``) and checkpoint
-  DISTRIBUTED (``write_checkpoint_incremental`` — driver holds O(suffix)
-  state, executors write the parts).
+  Delta's periodic multi-part parquet checkpoint. A checkpoint is a file
+  of actions a reader STREAMS: the state at a version is the newest
+  checkpoint's parts, a record batch at a time, with the JSON suffix
+  replayed over them (``_stream_state``), so the checkpoint writer and
+  the pruned planners hold O(suffix + batch) on the driver, never the
+  live set.
 
 Five pieces carry the protocol through the code:
 
@@ -37,11 +39,13 @@ Five pieces carry the protocol through the code:
   decodes a ``<version>.json`` (every add a ``{"n", ...}`` dict),
   ``commit`` the one that encodes one, and ``_apply_entry`` the one
   replay step (adds, removes, DV attach/replace/detach, property
-  set/unset, the partition type). Every fold of the log — ``Snapshot.at``,
-  ``snapshot_state_df``, ``txn_fsck``, the change-feed planner in
-  ``sources/lakecdc`` — is those two over the suffix after the newest
+  set/unset, the partition type). The one fold of the log,
+  ``_stream_state``, is those two over the suffix after the newest
   checkpoint (``_replay``, which re-resolves when a log cleanup
-  truncates underfoot);
+  truncates underfoot) streamed over that checkpoint's parts; the
+  folds that step through versions (``txn_fsck``, the change-feed
+  planner in ``sources/lakecdc``) advance a Snapshot's state one
+  ``_apply_entry`` at a time;
 * ``Snapshot`` — one immutable table state: ``Snapshot.at(path,
   version)`` LISTs the log once (when no version is given) and folds it
   once, then every reader (``read_snapshot``, ``snapshot_files``,
@@ -55,8 +59,8 @@ Five pieces carry the protocol through the code:
   values re-attached, deletion vectors applied, column mapping, the
   (file, row position) marks the DV writers and row ids key on). Every
   public ``read_snapshot*`` and every ``txn_*`` DML is a thin caller of
-  the two; ``scan_candidates_df`` applies the same rule distributed over
-  the checkpoint parts;
+  the two; ``scan_candidates_df`` and ``read_snapshot_pruned`` apply the
+  same rule to the streamed state a batch at a time;
 * ``_transact`` — the single optimistic-concurrency driver behind every
   ``txn_*`` writer: each attempt pins a Snapshot, asks the operation for
   its commit actions (``_Commit``) or an early result, claims the next
@@ -108,7 +112,7 @@ import os
 import time
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructField, StructType
@@ -163,9 +167,12 @@ def _checkpoint_dir(path: str, version: int) -> str:
 
 #: Live entries per checkpoint parquet part. At 100 TB (10⁶–10⁷ live
 #: files) this yields tens of parts, each independently readable — the
-#: Delta multi-part checkpoint design. Driver-side consumers stream one
-#: part at a time; Spark-side consumers read them as a DataFrame.
+#: Delta multi-part checkpoint design.
 CHECKPOINT_ROWS_PER_PART = 100_000
+
+#: Checkpoint rows per record batch of the streamed state (_stream_state):
+#: what a whole-state consumer holds of the checkpoint at a time.
+_STATE_BATCH_ROWS = 1024
 
 
 def _latest_checkpoint_at_or_below(path: str, v_max: int) -> int:
@@ -213,20 +220,6 @@ def _manifest_at(path: str, version: int) -> dict:
     if man is None:
         raise FileNotFoundError(_checkpoint_dir(path, version))
     return man
-
-
-def _read_checkpoint(path: str, version: int):
-    """(live, ptype, props) from the checkpoint at ``version``, its
-    parquet parts read one at a time."""
-    import pyarrow.parquet as pq
-
-    man = _manifest_at(path, version)
-    live = {}
-    for part in man["parts"]:
-        tbl = pq.read_table(os.path.join(_checkpoint_dir(path, version), part))
-        for rec in tbl.to_pylist():
-            live[rec["n"]] = _ckpt_decode(rec)
-    return live, man.get("ptype"), dict(man.get("props") or {})
 
 
 # ------------------------------------------------------------ the log codec
@@ -291,10 +284,10 @@ def _apply_entry(live: dict, props: dict, entry: dict) -> str | None:
     return ptype
 
 
-def _replay(path: str, v_max: int, load):
+def _replay(path: str, v_max: int):
     """The reads behind every fold of the log up to ``v_max``: the newest
-    checkpoint ≤ ``v_max`` (-1 when none), ``load(path, checkpoint)`` of
-    it (None when none) and the decoded entries after it.
+    checkpoint ≤ ``v_max`` (-1 when none), its manifest (None when none)
+    and the decoded entries after it.
 
     A txn_cleanup_log may truncate those entries, and a vacuum reap that
     checkpoint, between the choice and the reads; the replay then starts
@@ -305,32 +298,95 @@ def _replay(path: str, v_max: int, load):
     for _attempt in range(5):
         ckpt_v = v = _latest_checkpoint_at_or_below(path, v_max)
         try:
-            base = load(path, ckpt_v) if ckpt_v >= 0 else None
+            man = _manifest_at(path, ckpt_v) if ckpt_v >= 0 else None
             entries = []
             for v in range(ckpt_v + 1, v_max + 1):
                 entries.append(_read_entry_body(path, v))
-            return ckpt_v, base, entries
+            return ckpt_v, man, entries
         except FileNotFoundError:
             if v > ckpt_v and _latest_checkpoint_at_or_below(path, v_max) == ckpt_v:
                 break
     raise ValueError(f"missing log entry for version {v} of {path} (corrupt log)")
 
 
+def _stream_state(path: str, v: int, consume):
+    """``consume(head, batches)`` over the table state at version ``v``,
+    STREAMED — the one fold of the log behind Snapshot.at, the checkpoint
+    writer and the pruned planners. ``head`` is the Snapshot of ``v``
+    with nothing live (its partition type and properties); ``batches``
+    yields the live map (name → state, see _apply_entry) in dicts: the
+    newest checkpoint ≤ ``v`` read part by part as parquet record
+    batches of ≤ _STATE_BATCH_ROWS rows — the names the suffix re-adds
+    or removes dropped, the DVs it re-points patched — then the files
+    the suffix adds. The suffix replays first through the one step
+    (_apply_entry), over stand-ins for the checkpointed files its DV
+    actions name, so the driver holds O(suffix + batch), never the live
+    set (with no checkpoint the replay is the whole log).
+
+    A vacuum may reap the checkpoint while its parts stream; ``consume``
+    then runs again from the newer checkpoint ≤ ``v``, up to 5 times as
+    _replay restarts, so each call must start from nothing."""
+    for attempt in range(5):
+        ckpt_v, man, entries = _replay(path, v)
+        live, ptype, props = {}, None, {}
+        if man is not None:
+            ptype, props = man.get("ptype"), dict(man.get("props") or {})
+            live = {
+                d["n"]: {"dv": None, "ckpt": True} for e in entries for d in e["dv"]
+            }
+        gone: set = set()
+        for entry in entries:
+            ptype = _apply_entry(live, props, entry) or ptype
+            gone.update(entry["removed"])
+        try:
+            return consume(
+                Snapshot(path, v, {}, ptype, props),
+                _state_batches(path, ckpt_v, man, live, gone),
+            )
+        except FileNotFoundError:
+            if attempt == 4 or _latest_checkpoint_at_or_below(path, v) == ckpt_v:
+                raise
+
+
+def _state_batches(path: str, ckpt_v: int, man, live: dict, gone: set):
+    """The batches of _stream_state: the checkpoint's rows under the
+    replayed suffix ``live`` (stand-ins marked ``"ckpt"``) and the names
+    it removed (``gone``), then the suffix's own adds in name order."""
+    import pyarrow.parquet as pq
+
+    for part in man["parts"] if man is not None else ():
+        with pq.ParquetFile(os.path.join(_checkpoint_dir(path, ckpt_v), part)) as pf:
+            for rb in pf.iter_batches(batch_size=_STATE_BATCH_ROWS):
+                batch = {}
+                for rec in rb.to_pylist():
+                    s = live.get(rec["n"])
+                    if s is None and rec["n"] not in gone:
+                        batch[rec["n"]] = _ckpt_decode(rec)
+                    elif s is not None and "ckpt" in s:
+                        batch[rec["n"]] = {**_ckpt_decode(rec), "dv": s["dv"]}
+                yield batch
+    added = sorted(n for n, s in live.items() if "ckpt" not in s)
+    for i in range(0, len(added), _STATE_BATCH_ROWS):
+        yield {n: live[n] for n in added[i : i + _STATE_BATCH_ROWS]}
+
+
 def _fold_log3(path: str, v_max: int):
-    """Fold the log up to ``v_max`` into ``(live, ptype, props)`` (see
-    _apply_entry): ``ptype`` is the partition column's Spark DDL type
-    (None when unpartitioned) and ``props`` the latest-wins table-property
+    """The state at ``v_max`` held whole: ``(live, ptype, props)`` (see
+    _apply_entry) — ``ptype`` the partition column's Spark DDL type
+    (None when unpartitioned), ``props`` the latest-wins table-property
     dict (``props`` actions — Delta's metadata/configuration updates).
 
-    Resolution starts from the newest checkpoint ≤ v_max and replays only
-    the suffix (_replay), so a long-lived table's snapshot read is
-    O(checkpoint interval) log files, not O(versions) — the
+    It is _stream_state collected, so a long-lived table's snapshot read
+    is O(checkpoint interval) log files, not O(versions) — the
     Delta-checkpoint design."""
-    _, base, entries = _replay(path, v_max, _read_checkpoint)
-    live, ptype, props = base or ({}, None, {})
-    for entry in entries:
-        ptype = _apply_entry(live, props, entry) or ptype
-    return live, ptype, props
+
+    def collect(head, batches):
+        live: dict = {}
+        for batch in batches:
+            live.update(batch)
+        return live, head.ptype, head.props
+
+    return _stream_state(path, v_max, collect)
 
 
 @dataclass(frozen=True, eq=False)
@@ -387,7 +443,7 @@ class Snapshot:
         return {
             k[len("unique."):]: v
             for k, v in self.props.items()
-            if k.startswith("unique.") and k != "unique.autoStats"
+            if k.startswith("unique.")
         }
 
     @property
@@ -441,161 +497,73 @@ def _ckpt_encode(n: str, d: dict) -> dict:
     }
 
 
-def _publish_checkpoint_dir(
-    path: str, v: int, tmp: str, ptype, props: dict, parts: list, n_live: int
-) -> str:
-    """Write the manifest of the checkpoint staged in ``tmp`` (its
-    ``parts`` holding ``n_live`` live entries) and atomically rename the
-    directory into place; a racing checkpointer of the same version wins
-    harmlessly (content identical up to part split)."""
-    manifest = {
-        "version": v, "ptype": ptype, "props": props, "parts": parts,
-        "n_live": n_live,
-    }
-    with open(os.path.join(tmp, "manifest.json"), "w") as fh:
-        fh.write(json.dumps(manifest))
-    out = _checkpoint_dir(path, v)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
 def write_checkpoint(path: str, version: int | None = None) -> str:
     """Consolidate the log at ``version`` (default: latest) into a
     MULTI-PART columnar checkpoint — a ``<v>.checkpoint/`` directory of
     parquet parts (≤ CHECKPOINT_ROWS_PER_PART live entries each) plus a
     tiny ``manifest.json`` carrying version/ptype/props/part list —
     Delta's multi-part parquet checkpoint design. Subsequent snapshot
-    reads replay only entries after it, and large-table consumers read
-    the parts as a DataFrame (snapshot_state_df) or stream them one at a
-    time instead of parsing one monolithic JSON.
+    reads replay only entries after it.
 
-    This form folds on the driver (fine up to ~10⁵ live files and for
-    every local writer); write_checkpoint_incremental is the distributed
-    form that never materializes the live set on the driver."""
+    The state streams in (_stream_state: the previous checkpoint's parts
+    a record batch at a time plus the suffix; on a table with no
+    checkpoint, the replayed entries) and out through a parquet writer
+    that rolls to a new part every CHECKPOINT_ROWS_PER_PART rows, so the
+    driver holds O(suffix + batch) however many files are live. The
+    directory is renamed into place whole; a racing checkpointer of the
+    same version wins harmlessly (same content)."""
+    import shutil
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     v = current_version(path) if version is None else version
+    out = _checkpoint_dir(path, v)
     if _checkpoint_manifest(path, v) is not None:
-        return _checkpoint_dir(path, v)  # racing checkpointer already won
-    live, ptype, props = _fold_log3(path, v)
+        return out  # racing checkpointer already won
     schema = _ckpt_arrow_schema()
-    tmp = os.path.join(_log_dir(path), f".tmpck-{uuid.uuid4().hex}")
-    os.makedirs(tmp)
-    names = sorted(live)
-    parts = []
     step = CHECKPOINT_ROWS_PER_PART
-    for i in range(0, max(len(names), 1), step):
-        chunk = names[i : i + step]
-        rows = [_ckpt_encode(n, live[n]) for n in chunk]
-        part = f"part-{i // step:05d}.parquet"
-        pq.write_table(
-            pa.Table.from_pylist(rows, schema=schema), os.path.join(tmp, part)
-        )
-        parts.append(part)
-    return _publish_checkpoint_dir(path, v, tmp, ptype, props, parts, len(names))
 
+    def write(head, batches):
+        tmp = os.path.join(_log_dir(path), f".tmpck-{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        parts, n_live, writer = [], 0, None
+        try:
+            for batch in batches:
+                rows = [_ckpt_encode(n, d) for n, d in batch.items()]
+                while rows:
+                    if n_live % step == 0:  # the part is full: roll over
+                        if writer is not None:
+                            writer.close()
+                        parts.append(f"part-{len(parts):05d}.parquet")
+                        writer = pq.ParquetWriter(os.path.join(tmp, parts[-1]), schema)
+                    room = step - n_live % step
+                    take, rows = rows[:room], rows[room:]
+                    writer.write_batch(pa.RecordBatch.from_pylist(take, schema=schema))
+                    n_live += len(take)
+            if writer is not None:
+                writer.close()
+            if not parts:
+                parts.append("part-00000.parquet")
+                pq.write_table(schema.empty_table(), os.path.join(tmp, parts[0]))
+            manifest = {
+                "version": v, "ptype": head.ptype, "props": head.props,
+                "parts": parts, "n_live": n_live,
+            }
+            with open(os.path.join(tmp, "manifest.json"), "w") as fh:
+                fh.write(json.dumps(manifest))
+        except BaseException:
+            if writer is not None:
+                writer.close()
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return out
 
-#: The columns of a checkpoint part, as snapshot_state_df serves them.
-_STATE_DDL = "n string, p string, stats string, dv string, rid bigint"
-
-
-def snapshot_state_df(spark, path: str, version: int | None = None):
-    """The live-file set at ``version`` as a DATAFRAME (columns
-    ``n, p, stats, dv, rid`` — p/stats/dv JSON-encoded), built from the
-    newest multi-part checkpoint's parquet parts plus the small JSON
-    suffix — the driver holds O(suffix) state, never the live set.
-    This is Delta's snapshot state-reconstruction: at 10⁶–10⁷ live files
-    the driver-side dict fold (_fold_log3) is the ceiling; every
-    whole-set consumer (incremental checkpointing, fsck-at-scale,
-    orphan sweeps) should consume this instead.
-
-    Falls back to a local relation of a driver fold when no multi-part
-    checkpoint exists yet (cold start) — one
-    O(live) pass, after which write_checkpoint establishes the scale
-    format. The suffix rows are local relations too (``frames.local_frame``),
-    so neither form starts a Python worker."""
-    v = current_version(path) if version is None else version
-    return _state(spark, path, v)[0]
-
-
-def _state(spark, path: str, v: int):
-    """(snapshot_state_df at ``v``, ptype, props). The suffix replays on
-    the driver through the one step (_apply_entry), over stand-ins for
-    the checkpoint rows it re-points a DV on; every name it touches then
-    takes its replayed row in ONE broadcast anti-join + union, and the
-    parts are never materialized. ptype and props replay from the
-    checkpoint manifest the same way."""
-    from pyspark.sql import functions as F
-
-    ckpt_v, man, entries = _replay(path, v, _manifest_at)
-    live, ptype, props = {}, None, {}
-    if man is not None:
-        ptype, props = man.get("ptype"), dict(man.get("props") or {})
-        live = {d["n"]: {"dv": None, "ckpt": True} for e in entries for d in e["dv"]}
-    for entry in entries:
-        ptype = _apply_entry(live, props, entry) or ptype
-    rows = [_ckpt_encode(n, d) for n, d in sorted(live.items()) if "ckpt" not in d]
-    if man is None:
-        return local_frame(spark, rows, _STATE_DDL), ptype, props
-    d = _checkpoint_dir(path, ckpt_v)
-    base = spark.read.schema(_STATE_DDL).parquet(
-        *[os.path.join(d, part) for part in man["parts"]]
-    )
-    touched = set(live).union(*(e["removed"] for e in entries))
-    if not touched:
-        return base, ptype, props
-    out = base.join(
-        F.broadcast(local_frame(spark, [(n,) for n in touched], "n string")),
-        "n", "left_anti",
-    )
-    if rows:
-        out = out.unionByName(local_frame(spark, rows, _STATE_DDL))
-    patches = [
-        (n, json.dumps(d["dv"], sort_keys=True) if d["dv"] else None)
-        for n, d in live.items() if "ckpt" in d
-    ]
-    if patches:
-        dv_df = local_frame(spark, patches, "n string, __dv_new string")
-        out = out.unionByName(
-            base.join(F.broadcast(dv_df), "n", "inner")
-            .withColumn("dv", F.col("__dv_new"))
-            .drop("__dv_new")
-        )
-    return out, ptype, props
-
-
-def write_checkpoint_incremental(spark, path: str, version: int | None = None) -> str:
-    """DISTRIBUTED checkpoint: build the live set as a DataFrame from the
-    previous multi-part checkpoint + the JSON suffix (snapshot_state_df)
-    and have the EXECUTORS write the new parquet parts — the driver holds
-    O(suffix) state throughout, so checkpointing a 10⁷-live-file table
-    needs no driver memory headroom. This is the writer a 1000-executor
-    deployment schedules at the checkpoint cadence; the in-commit
-    write_checkpoint stays the single-node convenience form."""
-    v = current_version(path) if version is None else version
-    if _checkpoint_manifest(path, v) is not None:
-        return _checkpoint_dir(path, v)
-    state, ptype, props = _state(spark, path, v)
-    tmp = os.path.join(_log_dir(path), f".tmpck-{uuid.uuid4().hex}")
-    # executor-side part write; part count follows the data's partitioning
-    state.write.parquet(tmp, mode="overwrite")
-    parts = sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    import pyarrow.parquet as pq
-
-    n_live = sum(
-        pq.read_metadata(os.path.join(tmp, part)).num_rows for part in parts
-    )
-    # drop Spark's byproducts so the dir holds exactly manifest + parts
-    for f in os.listdir(tmp):
-        if not f.endswith(".parquet"):
-            os.remove(os.path.join(tmp, f))
-    return _publish_checkpoint_dir(path, v, tmp, ptype, props, parts, n_live)
+    return _stream_state(path, v, write)
 
 
 def snapshot_files(path: str, version: int | None = None) -> list[str]:
@@ -1249,16 +1217,18 @@ def commit(
         raise TxnConflict(f"version {new_v} already committed")
     if new_v > 0 and new_v % CHECKPOINT_INTERVAL == 0:
         # The commit is already durable (version file linked); the
-        # checkpoint is a pure read-path optimization. A transient IO
-        # failure here must not propagate as a commit failure — callers
-        # in optimistic-retry loops would re-apply already-committed
-        # work. The next interval commit retries the checkpoint.
+        # checkpoint is a pure read-path optimization. No failure here
+        # may propagate as a commit failure: callers in optimistic-retry
+        # loops would re-apply already-committed work, and _transact
+        # would reap the files the committed version names on a
+        # ValueError (pyarrow's ArrowInvalid is one). The next interval
+        # commit retries the checkpoint.
         try:
             write_checkpoint(path, new_v)
-        except OSError as exc:
+        except Exception as exc:
             _log.warning(
                 "checkpoint of %s at version %d not written: %r",
-                path, new_v, exc,
+                path, new_v, exc, exc_info=True,
             )
     return new_v
 
@@ -2610,7 +2580,10 @@ def vacuum_horizon(path: str) -> int:
 def _footer_stats(file_path: str, cols) -> dict:
     """Per-file [min, max] for ``cols`` straight from the parquet footer
     (row-group statistics — no data pages read). Columns without usable
-    stats are omitted (reader treats missing as 'cannot prune')."""
+    stats are omitted (reader treats missing as 'cannot prune'), and so
+    are bounds the log's JSON cannot carry: only int, float, str and
+    bool are recorded (a date, timestamp, decimal or binary column has
+    no zone map)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(file_path).metadata
@@ -2619,17 +2592,19 @@ def _footer_stats(file_path: str, cols) -> dict:
     for col in cols:
         if col not in idx:
             continue
-        lo = hi = None
-        ok = True
+        rng = None
         for rg in range(md.num_row_groups):
             st = md.row_group(rg).column(idx[col]).statistics
-            if st is None or not st.has_min_max:
-                ok = False
+            try:
+                b = (st.min, st.max) if st is not None and st.has_min_max else None
+            except NotImplementedError:  # pyarrow decodes no bounds of this type
+                b = None
+            if b is None or not all(isinstance(x, (int, float, str)) for x in b):
                 break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if ok and lo is not None:
-            out[col] = [lo, hi]
+            rng = [min(rng[0], b[0]), max(rng[1], b[1])] if rng else list(b)
+        else:
+            if rng is not None:
+                out[col] = rng
     return out
 
 
@@ -2709,11 +2684,13 @@ def snapshot_profile(path: str, cols, version: int | None = None) -> dict:
 
 def _candidates(
     snap: Snapshot, *, bounds: dict | None = None, keys: tuple | None = None,
-    bloom: tuple | None = None, partitions=None,
+    bloom: tuple | None = None, partitions=None, live: dict | None = None,
 ) -> list[str]:
-    """The one driver-side candidate rule: the names (sorted) of
-    ``snap``'s live files that MAY hold a row the caller's predicate
-    selects, given what the log records about each file.
+    """The one driver-side candidate rule: the names (sorted) of the live
+    files — ``snap.live``, or ``live`` (name → state), a batch of the
+    streamed state at ``snap`` (_stream_state) — that MAY hold a row the
+    caller's predicate selects, given what the log records about each
+    file.
 
     * ``bounds={col: (lo, hi)}``: the file's zone map intersects every
       range;
@@ -2725,12 +2702,27 @@ def _candidates(
       Spark wrote the directories, compared against the log's value.
 
     A file the log proves empty (``__rows__ == 0``) never qualifies; a
-    file lacking the metadata a spec tests (no zone map, no sidecar) is
-    kept — pruning is sound only when the specs are IMPLIED by the
-    caller's predicate, and the caller still applies that predicate to
-    the rows. Columns are LOGICAL names, translated here to the physical
-    names the log's stats and sidecars are keyed by."""
+    file lacking the metadata a spec tests (no zone map, no sidecar), or
+    whose recorded bounds do not compare with the caller's values (a
+    string zone map against int bounds), is kept — pruning is sound only
+    when the specs are IMPLIED by the caller's predicate, and the caller
+    still applies that predicate to the rows. Columns are LOGICAL names,
+    translated here to the physical names the log's stats and sidecars
+    are keyed by."""
     import bisect
+
+    def outside(rng, lo, hi) -> bool:
+        try:
+            return rng[1] < lo or rng[0] > hi
+        except TypeError:
+            return False
+
+    def misses(rng) -> bool:
+        try:
+            i = bisect.bisect_left(kvals, rng[0])
+            return not (i < len(kvals) and kvals[i] <= rng[1])
+        except TypeError:
+            return False
 
     zone = [(_phys_col(snap.props, c), b) for c, b in (bounds or {}).items()]
     if keys is not None:
@@ -2739,23 +2731,22 @@ def _candidates(
         bcol, bvals = _phys_col(snap.props, bloom[0]), list(bloom[1])
     if partitions is not None:
         wanted = {_encode_partition_value(v) for v in partitions}
+    live = snap.live if live is None else live
     out = []
-    for n in snap.names:
-        d = snap.live[n]
+    for n in sorted(live):
+        d = live[n]
         st = d["stats"]
         if st.get("__rows__") == 0:
             continue
         if partitions is not None and d["p"] not in wanted:
             continue
         if any(
-            (rng := st.get(col)) is not None and (rng[1] < lo or rng[0] > hi)
+            (rng := st.get(col)) is not None and outside(rng, lo, hi)
             for col, (lo, hi) in zone
         ):
             continue
-        if keys is not None and (rng := st.get(kcol)) is not None:
-            i = bisect.bisect_left(kvals, rng[0])
-            if not (i < len(kvals) and kvals[i] <= rng[1]):
-                continue
+        if keys is not None and (rng := st.get(kcol)) is not None and misses(rng):
+            continue
         if bloom is not None:
             meta = (st.get("__bloom__") or {}).get(bcol)
             if meta is not None and not (
@@ -2794,6 +2785,27 @@ def read_snapshot_skipping_multi(
     return _read_snapshot(spark, snap, _candidates(snap, bounds=bounds))
 
 
+#: The columns of a checkpoint part, as scan_candidates_df serves them.
+_STATE_DDL = "n string, p string, stats string, dv string, rid bigint"
+
+
+def _pruned(path: str, v: int, bounds, partition_values):
+    """(head, {name: state} of the files _candidates keeps for
+    ``bounds`` and ``partition_values``) at version ``v``, planned over
+    the streamed state a batch at a time (see _stream_state)."""
+
+    def keep(head, batches):
+        return head, {
+            n: batch[n]
+            for batch in batches
+            for n in _candidates(
+                head, bounds=bounds, partitions=partition_values, live=batch
+            )
+        }
+
+    return _stream_state(path, v, keep)
+
+
 def scan_candidates_df(
     spark,
     path: str,
@@ -2801,62 +2813,20 @@ def scan_candidates_df(
     partition_values=None,
     version: int | None = None,
 ):
-    """PRUNED SCAN PLANNING over the checkpoint frames (the r9 verdict's
-    10⁶-file planning ceiling): the candidate-file computation of
-    read_snapshot_skipping_multi / read_snapshot_partitioned pushed into
-    ``snapshot_state_df`` — zone-map range predicates and partition-value
-    filters evaluate DISTRIBUTED over the multi-part checkpoint's parquet
-    parts, so planning a selective read never folds the live set on the
-    driver. Returns the surviving state rows (``n, p, stats, dv, rid``).
-    Conservative exactly like the driver-side forms: a file without
-    usable stats (or whose stats don't parse as the bound's type) is
-    KEPT; files recorded with zero rows drop; bounds speak LOGICAL
-    column names (zone stats are keyed physical)."""
-    state, _, props = _state(spark, path, _pinned_version(path, version))
-    return _prune_state(state, props, bounds, partition_values)
-
-
-def _prune_state(state, props: dict, bounds, partition_values):
-    """The rows of ``state`` (a snapshot_state_df) scan_candidates_df
-    keeps for ``bounds`` and ``partition_values`` under ``props``."""
-    from pyspark.sql import functions as F
-
-    rows0 = F.get_json_object("stats", "$.__rows__")
-    cond = rows0.isNull() | (rows0.cast("bigint") != 0)
-    for col, (lo, hi) in (bounds or {}).items():
-        phys = _phys_col(props, col)
-        # Compare in a type matched to the BOUND's Python type, so the
-        # cast can never round a recorded stat across the bound: exact
-        # bigint for int bounds, double for float, raw string otherwise —
-        # the same outcomes as the driver-side python comparisons. A
-        # stat that fails the cast comes back NULL and the file is kept.
-        t = (
-            "bigint"
-            if isinstance(lo, int)
-            and isinstance(hi, int)
-            and not isinstance(lo, bool)
-            else "double"
-            if isinstance(lo, (int, float))
-            else "string"
-        )
-        mn = F.get_json_object("stats", f"$.{phys}[0]")
-        mx = F.get_json_object("stats", f"$.{phys}[1]")
-        if t != "string":
-            # try_cast, not cast: under ANSI mode a stat that doesn't
-            # parse as the bound's type must become NULL (file kept),
-            # not throw mid-planning
-            mn, mx = mn.try_cast(t), mx.try_cast(t)
-        cond = cond & (
-            mn.isNull()
-            | mx.isNull()
-            | ((mx >= F.lit(lo)) & (mn <= F.lit(hi)))
-        )
-    if partition_values is not None:
-        wanted = [
-            json.dumps(_encode_partition_value(pv)) for pv in partition_values
-        ]
-        cond = cond & F.col("p").isin(wanted)
-    return state.filter(cond)
+    """PRUNED SCAN PLANNING for 10⁶-file tables: the candidate files of
+    read_snapshot_skipping_multi (``bounds``, LOGICAL column names) /
+    read_snapshot_partitioned (``partition_values``), planned on the
+    driver over the streamed state (_stream_state: the checkpoint's
+    parts a record batch at a time, plus the suffix) through the one
+    candidate rule (_candidates) — planning holds O(candidates + batch),
+    never the live set, and launches no Spark job. Returns the
+    survivors, in name order, as a local relation (frames.local_frame)
+    of the checkpoint columns ``n, p, stats, dv, rid`` (p/stats/dv
+    JSON-encoded)."""
+    _, live = _pruned(path, _pinned_version(path, version), bounds, partition_values)
+    return local_frame(
+        spark, [_ckpt_encode(n, live[n]) for n in sorted(live)], _STATE_DDL
+    )
 
 
 def read_snapshot_pruned(
@@ -2868,44 +2838,37 @@ def read_snapshot_pruned(
     version: int | None = None,
     candidates=None,
 ) -> DataFrame:
-    """The SCALE form of the pruned reads: candidates are planned with
-    ``scan_candidates_df`` (distributed over the checkpoint parts) and
-    only the SURVIVORS are materialized on the driver to build the scan
-    — planning memory is O(candidates), not O(live). At 10⁶–10⁷ live
-    files this is the read path Delta serves with its file-index scans;
-    ``read_snapshot`` / ``read_snapshot_skipping_multi`` remain the
-    driver-fold convenience forms (documented ceiling ~10⁵ files).
+    """The SCALE form of the pruned reads: candidates are planned as
+    ``scan_candidates_df`` plans them (the streamed state through
+    _candidates) and only the SURVIVORS are held on the driver to build
+    the scan — planning memory is O(candidates + batch), not O(live).
     The survivors form a Snapshot of the candidate files alone, read by
     the same reader as every other form, so results match
-    read_snapshot_skipping_multi (unpartitioned, same bounds) and
-    read_snapshot_partitioned (partitioned, same values) — pinned by
-    tests; the caller still applies the exact row predicate.
+    read_snapshot_skipping_multi (same bounds) and
+    read_snapshot_partitioned (partitioned, same values); the caller
+    still applies the exact row predicate.
 
-    ``candidates`` lets a caller that already ran the distributed
-    planning pass (``scan_candidates_df(...).select("n", "p", "dv")``
-    collected rows, SAME bounds/partition_values/version) hand the
-    survivors over instead of paying a second checkpoint-part scan —
-    plan once, read once."""
+    ``candidates`` lets a caller that already planned
+    (``scan_candidates_df(...).select("n", "p", "dv")`` collected rows,
+    SAME bounds/partition_values/version) hand the survivors over
+    instead of planning again — plan once, read once; only the suffix
+    then replays, for the partition type and properties."""
     v = _pinned_version(path, version)
-    state, ptype, props = _state(spark, path, v)
-    cand = (
-        candidates
-        if candidates is not None
-        else _prune_state(state, props, bounds, partition_values)
-        .select("n", "p", "dv")
-        .collect()
-    )
-    if not cand:
-        return _read_snapshot(spark, Snapshot.at(path, v), [])
-    if ptype is not None and partition_col is None:
+    if candidates is None:
+        head, live = _pruned(path, v, bounds, partition_values)
+    else:
+        head = _stream_state(path, v, lambda head, _batches: head)
+        live = {
+            r["n"]: _ckpt_decode({"p": r["p"], "dv": r["dv"]}) for r in candidates
+        }
+    if not live:
+        return _read_snapshot(spark, head, [])
+    if head.ptype is not None and partition_col is None:
         raise ValueError(
-            f"{path} is partitioned (type {ptype}): read_snapshot_pruned "
+            f"{path} is partitioned (type {head.ptype}): read_snapshot_pruned "
             "needs partition_col to re-attach the partition column"
         )
-    live = {r["n"]: _ckpt_decode({"p": r["p"], "dv": r["dv"]}) for r in cand}
-    return _read_snapshot(
-        spark, Snapshot(path, v, live, ptype, props), pcol=partition_col
-    )
+    return _read_snapshot(spark, replace(head, live=live), pcol=partition_col)
 
 
 def _readd_entry(n: str, d: dict, ptype: str | None) -> dict:
@@ -3690,9 +3653,7 @@ def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 
     whole-table key scan (probed at 5.11× a bare append vs 2.86× with
     stats; tools/probe_commit_overhead.py), a tax nobody opts into
     knowingly. Existing files simply carry no stats for the column
-    until rewritten (pruning is conservative there). Opt out with table
-    property ``unique.autoStats = false`` (stats collection itself is
-    the cost being declined: one footer min/max per staged file).
+    until rewritten (pruning is conservative there).
 
     The key ``schema`` is reserved: the table schema changes only
     through writes and txn_widen_column."""
@@ -3704,12 +3665,7 @@ def txn_set_property(path: str, key: str, value: str | None, max_retries: int = 
 
     def attempt(snap: Snapshot):
         props = {key: value}
-        if (
-            key.startswith("unique.")
-            and key != "unique.autoStats"
-            and value is not None
-            and snap.props.get("unique.autoStats", "").lower() != "false"
-        ):
+        if key.startswith("unique.") and value is not None:
             declared = _split_cols(snap.props.get("write.statsColumns") or "")
             if value not in declared:
                 props["write.statsColumns"] = ",".join(declared + [value])

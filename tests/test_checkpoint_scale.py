@@ -1,6 +1,8 @@
-"""Round-9 scale probe: multi-part checkpoints keep the DRIVER flat at
-large live-file counts — the r8 verdict's named ceiling (single-JSON
-checkpoint folded O(live files) on the driver per resolution).
+"""Scale probe: multi-part checkpoints keep the DRIVER flat at large
+live-file counts. The checkpoint writer streams the previous
+checkpoint's parts plus the suffix into the next checkpoint's parts, so
+its driver peak does not grow with the live set, while the dict fold
+(_fold_log3) does.
 
 The log is synthesized (file names only; no data bytes are needed for
 log resolution), so a 100k-live-file table costs milliseconds to build.
@@ -43,7 +45,7 @@ def _synth_table(tmp_path, name, n_live, parts=8, suffix_commits=5):
     return table, v
 
 
-def test_multipart_checkpoint_scale_probe(spark, tmp_path, monkeypatch):
+def test_multipart_checkpoint_scale_probe(tmp_path, monkeypatch):
     monkeypatch.setattr(txnlog, "CHECKPOINT_ROWS_PER_PART", 20_000)
     big, vb = _synth_table(tmp_path, "big", 100_000)
     small, vs = _synth_table(tmp_path, "small", 10_000)
@@ -52,8 +54,8 @@ def test_multipart_checkpoint_scale_probe(spark, tmp_path, monkeypatch):
     man = txnlog._checkpoint_manifest(big, vb - 5)
     assert len(man["parts"]) == 5 and man["n_live"] == 100_000
 
-    # the DataFrame state view agrees with the dict fold at both sizes
-    n_state = txnlog.snapshot_state_df(spark, big, vb).count()
+    # the streamed state holds every live file once
+    n_state = txnlog._stream_state(big, vb, lambda _h, bs: sum(map(len, bs)))
     assert n_state == 100_000 + 15 - 5
 
     def peak_of(fn):
@@ -63,27 +65,24 @@ def test_multipart_checkpoint_scale_probe(spark, tmp_path, monkeypatch):
         tracemalloc.stop()
         return peak
 
-    # distributed incremental checkpoint: python-driver peak stays flat
-    # (O(suffix)) while the live set grows 10x; the dict fold grows O(live)
-    peak_small = peak_of(
-        lambda: txnlog.write_checkpoint_incremental(spark, small, vs)
-    )
-    peak_big = peak_of(
-        lambda: txnlog.write_checkpoint_incremental(spark, big, vb)
-    )
+    # streamed checkpoint: python-driver peak stays flat (O(suffix +
+    # batch)) while the live set grows 10x; the dict fold grows O(live)
+    peak_small = peak_of(lambda: txnlog.write_checkpoint(small, vs))
+    peak_big = peak_of(lambda: txnlog.write_checkpoint(big, vb))
     peak_fold_big = peak_of(lambda: txnlog._fold_log3(big, vb))
     assert peak_big < 3 * max(peak_small, 1_000_000), (
-        f"incremental checkpoint driver peak grew with live count: "
+        f"streamed checkpoint driver peak grew with live count: "
         f"{peak_small} -> {peak_big}"
     )
     assert peak_big < peak_fold_big / 3, (
-        f"incremental path ({peak_big}) must stay well under the dict "
+        f"streamed checkpoint ({peak_big}) must stay well under the dict "
         f"fold ({peak_fold_big}) at 100k live files"
     )
 
-    # the incremental checkpoint is CORRECT: fold through it == bypass
+    # the streamed checkpoint is CORRECT: fold through it == bypass
     man2 = txnlog._checkpoint_manifest(big, vb)
     assert man2 is not None and man2["n_live"] == 100_000 + 15 - 5
+    assert len(man2["parts"]) == 6  # ceil(100_010 / 20_000)
     through = txnlog._fold_log3(big, vb)
     with monkeypatch.context() as m:
         m.setattr(txnlog, "_latest_checkpoint_at_or_below", lambda *_: -1)

@@ -136,6 +136,30 @@ def test_cli_utility_modes(spark, tmp_path, capsys):
     assert rc == 2 and not st["ok"] and "DATATYPE_MISMATCH" in st["error"]
 
 
+def test_cli_import_after_a_crash_between_the_renames(spark, tmp_path, capsys):
+    """A crash between the swap's two renames leaves the old table only
+    at ``<table>.__old__`` (and the finished shadow beside it). The next
+    import puts the old table back before reading the target, so an
+    UPSERT merges into it instead of creating the table afresh."""
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    f1 = tmp_path / "a.csv"
+    f1.write_text("id;v\n" + "".join(f"{i};{i * 10}\n" for i in range(1, 101)))
+    rc, st = _run(capsys, wh, "t", "-importfile", str(f1))
+    assert rc == 0 and st["inserted"] == 100
+    table = os.path.join(wh, "t")
+    os.rename(table, table + ".__old__")
+    os.makedirs(table + ".__import__")
+    f2 = tmp_path / "b.csv"
+    f2.write_text("id;v\n" + "".join(f"{i};{i}\n" for i in range(101, 111)))
+    rc, st = _run(
+        capsys, wh, "t", "-importfile", str(f2), "-import", "UPSERT", "-k", "id",
+    )
+    assert rc == 0 and st["created"] is False and st["inserted"] == 10
+    assert spark.read.parquet(table).count() == 110
+    assert sorted(os.listdir(wh)) == ["t"]
+
+
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 

@@ -161,7 +161,7 @@ def test_snapshot_state_suffix_after_multipart_checkpoint(spark, tmp_path, monke
     # suffix: an added file and a DV on a checkpointed file
     txnlog.txn_append(spark, spark.range(90, 95).selectExpr("id AS k").coalesce(1), path)
     txnlog.txn_delete_dv(spark, F.col("k") == 10, path)
-    state = txnlog.snapshot_state_df(spark, path)
+    state = txnlog.scan_candidates_df(spark, path)
     _no_python_rdd(state)
     snap = txnlog.Snapshot.at(path, txnlog.current_version(path))
     got = {r.n: r.dv for r in state.collect()}

@@ -93,15 +93,19 @@ def _build_every_action_log(table, monkeypatch):
 
 
 def test_every_fold_gives_one_state_at_every_version(spark, table, monkeypatch):
-    """Snapshot.at, snapshot_state_df, txn_fsck and the change-feed
-    planner all fold the same log to the same state at every version."""
+    """The streamed state (Snapshot.at through the checkpoint, a batch
+    of one row at a time, and scan_candidates_df's rows), txn_fsck and
+    the change-feed planner all fold the same log to the state a replay
+    of every entry gives, at every version."""
     cur = _build_every_action_log(table, monkeypatch)
     restore = txnlog._read_entry_body(table, 7)
     assert restore["op"] == "RESTORE"
     assert {"n": "c.parquet", "d": None, "k": 0} in restore["dv"]  # detach
     assert {d["n"] for d in restore["dv"]} == {"a.parquet", "c.parquet"}  # replace
 
-    truth = {v: txnlog.Snapshot.at(table, v) for v in range(cur + 1)}
+    with monkeypatch.context() as m:
+        m.setattr(txnlog, "_latest_checkpoint_at_or_below", lambda *_: -1)
+        truth = {v: txnlog.Snapshot.at(table, v) for v in range(cur + 1)}
     assert truth[3].props == {"x.y": "1"} and truth[6].props == {}
     assert truth[cur].ptype == "string"
     assert set(truth[cur].live) == {"a.parquet", "b.parquet", "c.parquet", "f.parquet"}
@@ -114,14 +118,16 @@ def test_every_fold_gives_one_state_at_every_version(spark, table, monkeypatch):
             n: (d["p"], d["stats"], d["dv"], d.get("rid")) for n, d in live.items()
         }
 
-    # the distributed state: checkpoint parts plus the replayed suffix
+    # the streamed state: checkpoint parts plus the replayed suffix
+    monkeypatch.setattr(txnlog, "_STATE_BATCH_ROWS", 1)
     for v in range(cur + 1):
-        rows = txnlog.snapshot_state_df(spark, table, v).collect()
+        snap = txnlog.Snapshot.at(table, v)
+        assert (snap.ptype, snap.props) == (truth[v].ptype, truth[v].props), v
+        assert strip(snap.live) == strip(truth[v].live), v
+        rows = txnlog.scan_candidates_df(spark, table, version=v).collect()
         got = {r["n"]: txnlog._ckpt_decode(r.asDict()) for r in rows}
         assert len(rows) == len(got)
-        assert {
-            n: (d["p"], d["stats"], d["dv"], d["rid"]) for n, d in got.items()
-        } == strip(truth[v].live), v
+        assert strip(got) == strip(truth[v].live), v
 
     # txn_fsck and the change-feed planner advance one state an entry at
     # a time: every state they step through is the snapshot's
@@ -146,9 +152,11 @@ def test_every_fold_gives_one_state_at_every_version(spark, table, monkeypatch):
         table, {"path": table, "readChangeFeed": "true", "partitionColumn": "p"}
     )
     parts = reader.partitions({"version": -1}, {"version": cur})
-    # the reader's own Snapshot.at folds first; the planner's steps come last
-    assert [v for v, _ in seen][-(cur + 1):] == list(range(cur + 1))
-    for v, live in [*fsck_seen.items(), *seen]:
+    # the reader's own Snapshot.at folds first (its suffix replays over
+    # stand-ins for checkpointed files); the planner's steps come last
+    planner_seen = seen[-(cur + 1):]
+    assert [v for v, _ in planner_seen] == list(range(cur + 1))
+    for v, live in [*fsck_seen.items(), *planner_seen]:
         assert strip(live) == strip(truth[v].live), v
     # and the plan is the one those states imply: v5 removes b for e,
     # v8 removes d for f — each one diff task; v0 and v1 add files
@@ -213,6 +221,40 @@ def test_fold_below_the_retained_floor_still_raises_value_error(table):
     assert txnlog.Snapshot.at(table, 4).names  # the floor itself resolves
     with pytest.raises(ValueError, match="missing log entry for version 3"):
         txnlog.Snapshot.at(table, 3)
+
+
+def test_planning_restarts_from_the_newer_checkpoint_after_a_vacuum(
+    spark, table, monkeypatch
+):
+    """A vacuum that reaps the checkpoint a planner is streaming (a newer
+    checkpoint superseded it) between two of its parts: the stream starts
+    again from the newer checkpoint and plans the same files."""
+    for v in range(6):
+        _file(table, f"f{v}.parquet", 1)
+        add = {"n": f"f{v}.parquet", "stats": {"__rows__": 1, "k": [v, v]}}
+        txnlog.commit(table, [add], [], v - 1)
+    monkeypatch.setattr(txnlog, "CHECKPOINT_ROWS_PER_PART", 1)
+    monkeypatch.setattr(txnlog, "_STATE_BATCH_ROWS", 1)
+    txnlog.write_checkpoint(table, 2)  # three parts of one row
+    want = txnlog._candidates(txnlog.Snapshot.at(table, 5), bounds={"k": (1, 4)})
+    assert want == [f"f{v}.parquet" for v in range(1, 5)]
+    real = txnlog._candidates
+    batches = []
+
+    def vacuum_after_the_first_batch(snap, **spec):
+        batches.append(sorted(spec["live"]))
+        if len(batches) == 1:
+            txnlog.write_checkpoint(table, 4)
+            txnlog.vacuum(table, retain_versions=2)  # horizon 4
+            assert txnlog._checkpoint_manifest(table, 2) is None
+        return real(snap, **spec)
+
+    monkeypatch.setattr(txnlog, "_candidates", vacuum_after_the_first_batch)
+    planned = txnlog.scan_candidates_df(spark, table, {"k": (1, 4)})
+    assert [r["n"] for r in planned.collect()] == want
+    # one batch from the reaped checkpoint, then the whole newer one
+    # (five parts of one row) and the suffix's add
+    assert batches == [["f0.parquet"]] + [[f"f{v}.parquet"] for v in range(6)]
 
 
 def test_change_feed_resumes_at_the_floor_and_refuses_below_it(table):

@@ -165,6 +165,52 @@ def _copy(base, tmp_path) -> str:
     return path
 
 
+@pytest.mark.parametrize(
+    "base, spec",
+    [
+        ("flat", {"bounds": {"key": (20, 30)}}),
+        ("parted", {"partition_col": "region", "partition_values": ["eu"]}),
+    ],
+)
+def test_pruned_planning_over_a_checkpoint_and_a_suffix(
+    spark, request, tmp_path, base, spec
+):
+    """Planned over a checkpoint plus a suffix that re-points the DV of a
+    checkpointed file, removes a checkpointed candidate and adds a file,
+    scan_candidates_df and read_snapshot_pruned keep the files the one
+    rule keeps on the folded Snapshot, and read their rows."""
+    path = _copy(request.getfixturevalue(base), tmp_path)
+    txnlog.write_checkpoint(path)
+    ckpt = txnlog.Snapshot.at(path)
+    rule = {"bounds": spec.get("bounds"), "partitions": spec.get("partition_values")}
+    txnlog.txn_delete_dv(spark, F.col("key") == 28, path)
+    entry = txnlog._read_entry_body(path, ckpt.version + 1)
+    (repointed,) = {d["n"] for d in entry["dv"]}
+    assert repointed in ckpt.dvs
+    victim = next(n for n in txnlog._candidates(ckpt, **rule) if n != repointed)
+    txnlog.commit(path, [], [victim], ckpt.version + 1, op="DELETE")
+    if base == "flat":
+        df = spark.createDataFrame([(27, "n")], "key long, v string")
+        txnlog.txn_append_stats(spark, df, path, ["key"])
+    else:
+        df = spark.createDataFrame(
+            [(26, "n", "eu")], "key long, val string, region string"
+        )
+        txnlog.txn_append_partitioned(spark, df, path, "region")
+    snap = txnlog.Snapshot.at(path)
+    assert txnlog._latest_checkpoint_at_or_below(path, snap.version) == ckpt.version
+    want = txnlog._candidates(snap, **rule)
+    assert repointed in want and victim not in want
+    assert len(set(want) - set(ckpt.names)) == 1
+    scan = {k: v for k, v in spec.items() if k != "partition_col"}
+    planned = txnlog.scan_candidates_df(spark, path, **scan)
+    assert [r["n"] for r in planned.collect()] == want
+    pred = F.col("key").between(20, 30) if base == "flat" else F.col("region") == "eu"
+    _reads_like_read_snapshot(
+        spark, path, txnlog.read_snapshot_pruned(spark, path, **spec), pred, want
+    )
+
+
 def _hit_scans(monkeypatch, path) -> list:
     """Record the files each DV writer's marked hit scan of ``path``
     opens (the merge-on-read core persists its matched rows, and a
@@ -300,3 +346,30 @@ def test_every_public_reader_refuses_a_vacuumed_version(spark, tmp_path):
     ]:
         with pytest.raises(ValueError, match="vacuumed"):
             read()
+
+
+def test_bounds_that_do_not_compare_keep_the_file(spark, tmp_path):
+    """A zone map whose values do not compare with the caller's (string
+    stats against int bounds or int source keys) cannot prune: every
+    pruned reader and DML keeps the file."""
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    txnlog.txn_append_stats(spark, df.coalesce(1), path, ["v"])
+    (one,) = txnlog.Snapshot.at(path).names
+    for read in [
+        txnlog.read_snapshot_skipping(spark, path, "v", 0, 10),
+        txnlog.read_snapshot_skipping_multi(spark, path, {"v": (0, 10)}),
+        txnlog.read_snapshot_pruned(spark, path, {"v": (0, 10)}),
+    ]:
+        assert _names(read.inputFiles()) == {one}
+    planned = txnlog.scan_candidates_df(spark, path, {"v": (0, 10)})
+    assert [r["n"] for r in planned.collect()] == [one]
+    # int source keys get past planning to the write, which refuses the
+    # type as any write does
+    src = spark.createDataFrame([(2, 7)], "k long, v long")
+    with pytest.raises(ValueError, match="not a widening"):
+        txnlog.txn_merge_cow(spark, src, path, ["k"], prune_key="v")
+    txnlog.txn_delete_cow(spark, F.col("k") == 2, path, zone=("v", 0, 10))
+    entry = txnlog._read_entry_body(path, txnlog.current_version(path))
+    assert entry["removed"] == [one]
+    assert _rows(txnlog.read_snapshot(spark, path)) == [(1, "a")]

@@ -69,16 +69,9 @@ def main():
         ("baseline", lambda p: None),
         ("cdf", lambda p: txnlog.txn_set_property(p, "cdf.enabled", "true")),
         ("rowids", lambda p: txnlog.txn_enable_row_ids(p)),
-        # r10: declaring unique.* auto-merges the key into
-        # write.statsColumns in the same commit, so "unique" now runs at
-        # the with-stats floor by default; "uniq-optout" measures the
-        # documented opt-out (unique.autoStats=false), which re-buys the
-        # unprunable whole-table key scan.
+        # declaring unique.* merges the key into write.statsColumns in
+        # the same commit, so "unique" runs at the with-stats floor
         ("unique", lambda p: txnlog.txn_set_property(p, "unique.pk", "k")),
-        ("uniq-optout", lambda p: (
-            txnlog.txn_set_property(p, "unique.autoStats", "false"),
-            txnlog.txn_set_property(p, "unique.pk", "k"),
-        )),
         ("uniq+stats", lambda p: (
             txnlog.txn_set_property(p, "unique.pk", "k"),
             txnlog.txn_set_property(p, "write.statsColumns", "k"),

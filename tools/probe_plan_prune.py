@@ -1,4 +1,4 @@
-"""Planning-memory probe for pruned scan planning (r9 verdict item 5).
+"""Planning-memory probe for pruned scan planning.
 
 Builds a table whose multi-part checkpoint holds N live entries with
 range-clustered zone maps (names + stats are synthetic — planning never
@@ -11,9 +11,11 @@ narrow key band:
 * ``fold_prune``  — read_snapshot_skipping_multi's candidate loop:
   still folds all live entries, prunes after;
 * ``frame_prune`` — scan_candidates_df + collect of survivors only:
-  the checkpoint-frame path, O(candidates) driver memory.
+  the checkpoint's parts stream through the candidate rule a record
+  batch at a time, O(candidates + batch) driver memory.
 
-Run:  python tools/probe_plan_prune.py [n_files] [band_files]
+tracemalloc sees Python allocations only (not Arrow's buffers, not the
+JVM). Run:  python tools/probe_plan_prune.py [n_files] [band_files]
 Prints one JSON line; the ratio frame/full is the claim being graded.
 """
 
