@@ -2083,9 +2083,9 @@ def stream_lake_cdc_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOG RETENTION × CDC, end to end (r9 verdict item 7): a stream
     checkpoints after consuming v0..v3; the table then checkpoints,
     vacuums (horizon→3) and runs txn_cleanup_log — entries 0..2 are
-    TRUNCATED (log_floor 3) with their names consolidated into the
-    sharded _ever parts. The resumed stream's offset (3) sits at the
-    floor, so resume SUCCEEDS and reads exactly the post-cleanup append
+    TRUNCATED (log_floor 3); the anchor checkpoint at v3 names every
+    file of theirs still on disk. The resumed stream's offset (3) sits
+    at the floor, so resume SUCCEEDS and reads exactly the post-cleanup append
     (v4) — no re-read, no missing-entry crash. A FRESH stream from
     startingVersion 0 (below the floor) must fail with the ACTIONABLE
     truncation error naming the retained floor

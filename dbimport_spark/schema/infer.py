@@ -26,6 +26,7 @@ from dbimport_spark.operators.coerce import (
     _FALSE_WORDS,
     _TRUE_WORDS,
 )
+from dbimport_spark.operators.order import SRC_ORDER_COL
 
 DATE_ONLY_PATTERNS = ["yyyy-MM-dd", "dd.MM.yyyy", "MM/dd/yyyy"]
 
@@ -120,7 +121,7 @@ def infer_schema(
 ) -> list[InferredColumn]:
     """One-pass lattice inference over a string-read DataFrame."""
     format_infos = format_infos or {}
-    cols = [c for c in df.columns if not c.startswith("_")]
+    cols = [c for c in df.columns if c != SRC_ORDER_COL]
     aggs = []
     for c in cols:
         for key, expr in _counts_for(c, format_infos.get(c)).items():

@@ -101,7 +101,11 @@ Time travel is free: resolve the snapshot at any historical version down
 to the VACUUM horizon; ``vacuum`` reclaims files no retained snapshot
 references (and only files the log proves dead — concurrent writers'
 staged output is never touched) and records the horizon so deeper time
-travel fails loudly up front.
+travel fails loudly up front. It takes its candidates from the retained
+log alone: the oldest checkpoint at or above ``log_floor`` plus the
+retained entries name every committed file that can still be on disk,
+so ``txn_cleanup_log`` truncates entries below a checkpoint at the
+horizon and keeps no other record of them.
 """
 
 from __future__ import annotations
@@ -1048,9 +1052,9 @@ class ObjectStoreCommitBackend(CommitBackend):
     entry PUT) and current_version LISTING route through this seam —
     the two calls whose atomicity/visibility semantics differ between
     POSIX and object stores and on which correctness rests. Checkpoint
-    and consolidation writes, vacuum/horizon markers, and data/sidecar
-    IO still use direct file APIs: they are all either idempotent,
-    create-only, or guarded by the claimed entry, so against a real
+    writes, vacuum/horizon markers, and data/sidecar IO still use
+    direct file APIs: they are all either idempotent, create-only, or
+    guarded by the claimed entry, so against a real
     store they need only eventual durability (any S3/GCS/Azure client
     or FUSE layer provides it) — but a real deployment does need a
     pathed filesystem view of the table directory (e.g. a mount) for
@@ -2117,87 +2121,61 @@ def vacuum(
     """Physically delete data files no kept snapshot references.
 
     Keeps every file needed by the newest ``retain_versions`` snapshots
-    (the retention horizon); files referenced only by older versions are
-    deleted and the horizon is recorded as a ``_txn_log/_vacuum.<cutoff>``
-    marker so a later time-travel read below it fails LOUDLY up front
-    instead of as a missing-file error mid-scan. Files the log has never
-    seen (a concurrent writer's staged-but-uncommitted output) are left
-    alone — vacuum only reclaims what the log proves dead. Returns the
-    deleted file names.
+    (the retention horizon, ``retain_versions`` ≥ 1); files referenced
+    only by older versions are deleted and the horizon is recorded as a
+    ``_txn_log/_vacuum.<cutoff>`` marker so a later time-travel read
+    below it fails LOUDLY up front instead of as a missing-file error
+    mid-scan. Files the log has never seen (a concurrent writer's
+    staged-but-uncommitted output) are left alone — vacuum only reclaims
+    what the log proves dead. Returns the deleted file names.
+
+    The candidates come from the retained log alone (Delta's VACUUM
+    decides from its log and checkpoint the same way): every committed
+    file or DV generation that can still be on disk is named by (a) the
+    state at the oldest checkpoint ``c`` with ``log_floor ≤ c ≤ cur``,
+    which exists whenever txn_cleanup_log has truncated the log, or (b)
+    an add or DV action of a retained entry in ``[log_floor, cur]``. A
+    cleanup truncates only below a checkpoint at or below the horizon,
+    and the horizon marker is written only after this function's
+    deletes have finished, so a file that only truncated entries name
+    and that is still on disk was live at a version ≥ the horizon —
+    live at that anchor checkpoint. The checkpoint reap runs after the
+    deletes too, so the oldest checkpoint surviving at or above the
+    floor keeps naming what is left. The doomed set is (a) ∪ (b) minus
+    the names some retained version keeps.
 
     ``dry_run=True`` (Delta's VACUUM ... DRY RUN) returns the would-be
     deleted list WITHOUT removing anything and WITHOUT advancing the
     horizon — the audit step before an irreversible retention cut."""
-    cur = current_version(path)
-    if cur < 0:
-        return []
-    # Clamp monotonically: a later vacuum with a LARGER retain_versions
-    # must not move the horizon backward below versions whose files were
-    # already deleted — the guard in read_snapshot would then pass and the
-    # read would die mid-scan on a missing file, exactly what the horizon
-    # exists to prevent.
-    cutoff = max(cur - retain_versions + 1, 0, vacuum_horizon(path))
-    # keep = every file/DV live at ANY retained version. Computed
-    # INCREMENTALLY: one fold to the cutoff seeds it, then each retained
-    # entry's adds / DV-attaches join it (removals shrink LIVE, never
-    # KEEP) — O(fold + suffix) instead of the per-version refold that
-    # made long-retention vacuums of large tables quadratic.
-    live, _, _ = _fold_log3(path, cutoff)
-    keep: set[str] = set(live)
-    keep_dv: set[str] = {
-        d["dv"]["d"] for d in live.values() if d.get("dv")
-    }
-    for v in range(cutoff + 1, cur + 1):
-        entry = _read_entry_body(path, v)
-        keep.update(a["n"] for a in entry["added"])
-        keep_dv.update(d["d"] for d in entry["dv"] if d.get("d") is not None)
-    # every file/DV the log has EVER named and that may still be on
-    # disk: the newest _ever consolidation (see txn_cleanup_log) covers
-    # entries the log no longer holds; remaining entries replay on top.
-    # The consolidation is STREAMED one parquet part at a time, so
-    # driver memory here is O(keep + part + doomed) — never the
-    # O(files-ever) set fold this path carried in round 9. A cleanup or
-    # vacuum racing this loop may truncate entries / reap the
-    # consolidation after we chose our start — re-read and resume.
+    if retain_versions < 1:
+        raise ValueError(
+            f"vacuum: retain_versions must be >= 1 (the current version is "
+            f"always kept), got {retain_versions}"
+        )
+    # A cleanup or vacuum racing this one may truncate the entries or
+    # reap the checkpoint chosen below; start again from a fresh floor,
+    # version and checkpoint.
+    err = None
     for _attempt in range(5):
-        best = _ever_best(path)
+        # the floor before cur: then floor ≤ cur, and a truncated log has
+        # a checkpoint in [floor, cur]
+        floor = log_floor(path)
+        cur = current_version(path)
+        if cur < 0:
+            return []
+        # Clamp monotonically: a later vacuum with a LARGER
+        # retain_versions must not move the horizon backward below
+        # versions whose files were already deleted — the guard in
+        # read_snapshot would then pass and the read would die mid-scan
+        # on a missing file, exactly what the horizon exists to prevent.
+        cutoff = max(cur - retain_versions + 1, 0, vacuum_horizon(path))
         try:
-            # A racing vacuum on a table with MORE commits than we saw
-            # may have written a consolidation through a version above
-            # our cur; its names above cur are live adds we must not
-            # doom — extend keep over those entries (conservative:
-            # anything dead among them is reaped by the next vacuum).
-            top = max(cur, best)
-            for v in range(cur + 1, top + 1):
-                entry = _read_entry_body(path, v)
-                keep.update(a["n"] for a in entry["added"])
-                keep_dv.update(
-                    d["d"] for d in entry["dv"] if d.get("d") is not None
-                )
-            doomed_set: set[str] = set()
-            doomed_dv: set[str] = set()
-            for v in range(best + 1, top + 1):
-                entry = _read_entry_body(path, v)
-                doomed_set.update(
-                    a["n"] for a in entry["added"] if a["n"] not in keep
-                )
-                # a restore's DETACH action carries "d": null — it names
-                # no generation (found by the hypothesis protocol
-                # machine: sorted() over a None crashed every vacuum
-                # after a DV-rollback restore)
-                doomed_dv.update(
-                    d["d"] for d in entry["dv"]
-                    if d.get("d") is not None and d["d"] not in keep_dv
-                )
-            if best >= 0:
-                for fs, ds in _iter_ever_chunks(path, best):
-                    doomed_set.update(n for n in fs if n not in keep)
-                    doomed_dv.update(n for n in ds if n not in keep_dv)
+            doomed_set, doomed_dv = _doomed(path, floor, cur, cutoff)
             break
-        except FileNotFoundError:
-            continue  # racing txn_cleanup_log / vacuum moved the log under us
+        except (FileNotFoundError, ValueError) as e:
+            err = e
     else:
-        raise RuntimeError(f"vacuum: log of {path} kept moving underfoot")
+        raise RuntimeError(f"vacuum: log of {path} kept moving underfoot") from err
     doomed = sorted(doomed_set)
     if dry_run:
         return doomed
@@ -2238,26 +2216,12 @@ def vacuum(
             os.remove(os.path.join(_data_dir(path), dv_name))
         except FileNotFoundError:
             pass
-    # PRUNE the dead-file accounting (the round-9 scale ceiling): the
-    # delete loops above completed, so every name the log proved dead is
-    # off disk — the exact consolidation going forward is just the KEEP
-    # set, O(live + retained suffix), not O(files-ever). Written AFTER
-    # the deletes (a crash mid-delete leaves the old consolidation
-    # standing and the next vacuum re-dooms the remainder), then
-    # superseded consolidations are reaped. Only done once a cleanup has
-    # activated ever-tracking (best >= 0): before that, the intact log
-    # entries ARE the exact accounting and need no sidecar.
-    if best >= 0 and top >= best:
-        _write_ever(path, top, keep, keep_dv)
-        _reap_ever_below(path, _ever_best(path))
-    # Reap SUPERSEDED checkpoints: a checkpoint is pure read-path
-    # acceleration (entries are never deleted, full replay always
-    # works), so any checkpoint with a NEWER checkpoint at or below the
-    # horizon is dead weight — multi-part checkpoints hold the full
-    # live list and would otherwise accumulate O(versions/interval ×
-    # live) storage. The newest one ≤ horizon stays (it accelerates
-    # every still-readable version), as does everything above the
-    # horizon.
+    # Reap SUPERSEDED checkpoints — only now, after the deletes (see the
+    # docstring): any checkpoint with a NEWER checkpoint at or below the
+    # horizon is dead weight — multi-part checkpoints hold the full live
+    # list and would otherwise accumulate O(versions/interval × live)
+    # storage. The newest one ≤ horizon stays (it accelerates every
+    # still-readable version), as does everything above the horizon.
     ckpt_vs = sorted(v for v in _checkpoint_versions(path) if v <= cutoff)
     for v in ckpt_vs[:-1]:  # all but the newest at/below the horizon
         import shutil
@@ -2315,156 +2279,59 @@ def log_floor(path: str) -> int:
     return min(vs, default=0)
 
 
-#: Names per ``_ever`` consolidation parquet part — same scale reasoning
-#: as CHECKPOINT_ROWS_PER_PART: driver-side consumers stream one part at
-#: a time, so vacuum's working set is O(part), never O(files-ever).
-EVER_ROWS_PER_PART = 200_000
+def _doomed(path: str, floor: int, cur: int, cutoff: int) -> tuple[set, set]:
+    """(files, DV generations) vacuum at ``cutoff`` deletes: the names
+    the retained log can still have on disk (see vacuum) that no version
+    in ``[cutoff, cur]`` keeps. FileNotFoundError or ValueError when a
+    racing cleanup or vacuum moved the log underfoot.
 
-
-def _ever_dir(path: str, v: int) -> str:
-    """Sharded consolidation directory: ``manifest.json`` + parquet
-    parts of (name, kind) rows, published by atomic rename (presence
-    implies completeness) — the multi-part checkpoint design applied to
-    the dead-file accounting."""
-    return os.path.join(_log_dir(path), f"_ever.{v:08d}")
-
-
-def _ever_versions(path: str) -> list[int]:
-    """Every consolidation version present (``_ever.<v>/`` part dirs),
-    ascending."""
-    d = _log_dir(path)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[len("_ever."):])
-        for f in os.listdir(d)
-        if f.startswith("_ever.") and f[len("_ever."):].isdigit()
-    )
-
-
-def _ever_best(path: str) -> int:
-    """Newest consolidation version, -1 when none exists."""
-    vs = _ever_versions(path)
-    return vs[-1] if vs else -1
-
-
-def _ever_manifest(path: str, v: int) -> dict | None:
-    """Manifest of the sharded consolidation at ``v`` (None when none
-    exists there)."""
-    mf = os.path.join(_ever_dir(path, v), "manifest.json")
-    if not os.path.exists(mf):
-        return None
-    with open(mf) as fh:
-        return json.load(fh)
-
-
-def _ever_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema([("n", pa.string()), ("k", pa.string())])
-
-
-def _iter_ever_chunks(path: str, v: int):
-    """Yield ``(file_names, dv_names)`` list chunks of the consolidation
-    at ``v``, ONE PARQUET PART AT A TIME — driver memory is O(part), not
-    O(files-ever). Raises FileNotFoundError when a racing vacuum reaps
-    the consolidation mid-iteration — callers re-read ``_ever_best`` and
-    retry."""
-    import pyarrow.parquet as pq
-
-    man = _ever_manifest(path, v)
-    if man is None:
-        raise FileNotFoundError(_ever_dir(path, v))
-    d = _ever_dir(path, v)
-    for part in man["parts"]:
-        tbl = pq.read_table(os.path.join(d, part), columns=["n", "k"])
-        ns = tbl.column("n").to_pylist()
-        ks = tbl.column("k").to_pylist()
-        yield (
-            [n for n, k in zip(ns, ks) if k == "f"],
-            [n for n, k in zip(ns, ks) if k == "d"],
-        )
-
-
-def _read_ever(path: str) -> tuple[set, set, int]:
-    """(files-ever, dv-gens-ever, through_version) as full driver sets —
-    compatibility shim over the chunked iterator for small-table callers
-    and tests; scale paths stream ``_iter_ever_chunks`` instead."""
-    best = _ever_best(path)
-    if best < 0:
-        return set(), set(), -1
+    KEEP is computed incrementally: one fold to the cutoff seeds it, then
+    each retained entry's adds / DV attaches join it (removals shrink
+    LIVE, never KEEP) — O(fold + suffix), not a refold per version. The
+    checkpoint's names stream a record batch at a time, so the driver
+    holds O(keep + retained entries + batch), never the live set at the
+    checkpoint or the names the log ever held."""
+    live, _, _ = _fold_log3(path, cutoff)
+    keep = set(live)
+    keep_dv = {d["dv"]["d"] for d in live.values() if d["dv"] is not None}
     files: set[str] = set()
     dvs: set[str] = set()
-    for fs, ds in _iter_ever_chunks(path, best):
-        files.update(fs)
-        dvs.update(ds)
-    return files, dvs, best
+    for v in range(floor, cur + 1):  # floor ≤ horizon ≤ cutoff
+        entry = _read_entry_body(path, v)
+        added = {a["n"] for a in entry["added"]}
+        # a restore's DETACH action carries "d": null — it names no
+        # generation
+        gens = {d["d"] for d in entry["dv"] if d.get("d") is not None}
+        files |= added
+        dvs |= gens
+        if v > cutoff:
+            keep |= added
+            keep_dv |= gens
+    files -= keep
+    dvs -= keep_dv
+    if floor > 0:
+        # never a checkpoint above cur: its names may be live adds that
+        # keep does not cover
+        c = min(
+            (v for v in _checkpoint_versions(path) if floor <= v <= cur), default=-1
+        )
+        if c < 0:
+            raise FileNotFoundError(_checkpoint_dir(path, floor))
 
+        def dead(head, batches):
+            fs, ds = set(), set()
+            for batch in batches:
+                for n, s in batch.items():
+                    if n not in keep:
+                        fs.add(n)
+                    if s["dv"] is not None and s["dv"]["d"] not in keep_dv:
+                        ds.add(s["dv"]["d"])
+            return fs, ds
 
-def _write_ever(path: str, through: int, files, dvs, carry=None) -> bool:
-    """Publish ``_ever.<through>/`` holding ``files``/``dvs`` plus, when
-    ``carry`` is ``(src_version, part_names)``, the prior consolidation's
-    parts carried forward by HARD LINK — O(delta) work, never an
-    O(files-ever) rewrite. Atomic create-only (dir rename): a racing
-    writer of the same version wins harmlessly; returns whether THIS
-    call published. Raises FileNotFoundError if a racing vacuum reaps
-    the carry source mid-link (callers retry)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = os.path.join(_log_dir(path), f".tmpev-{uuid.uuid4().hex}")
-    os.makedirs(tmp)
-    try:
-        parts: list[str] = []
-        if carry is not None:
-            src_v, src_parts = carry
-            src_d = _ever_dir(path, src_v)
-            for i, p in enumerate(src_parts):
-                name = f"part-c{i:05d}.parquet"
-                os.link(os.path.join(src_d, p), os.path.join(tmp, name))
-                parts.append(name)
-        rows = [{"n": n, "k": "f"} for n in sorted(files)]
-        rows += [{"n": n, "k": "d"} for n in sorted(dvs)]
-        if rows or not parts:
-            schema = _ever_arrow_schema()
-            step = EVER_ROWS_PER_PART
-            for i in range(0, max(len(rows), 1), step):
-                name = f"part-n{i // step:05d}.parquet"
-                pq.write_table(
-                    pa.Table.from_pylist(rows[i : i + step], schema=schema),
-                    os.path.join(tmp, name),
-                )
-                parts.append(name)
-        with open(os.path.join(tmp, "manifest.json"), "w") as fh:
-            fh.write(json.dumps({"through": through, "parts": parts}))
-    except BaseException:
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    out = _ever_dir(path, through)
-    try:
-        os.rename(tmp, out)
-        return True
-    except OSError:
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-        return False
-
-
-def _reap_ever_below(path: str, v_keep: int) -> None:
-    """Delete consolidations strictly below ``v_keep``. They are
-    superseded: readers only consume ``_ever_best``, and every
-    newer consolidation covers at least the same still-on-disk names
-    (a name is only ever dropped AFTER its file is physically deleted).
-    Racing readers of a reaped consolidation see FileNotFoundError and
-    retry from the surviving best."""
-    import shutil
-
-    for v in _ever_versions(path):
-        if v < v_keep:
-            shutil.rmtree(_ever_dir(path, v), ignore_errors=True)
+        fs, ds = _stream_state(path, c, dead)
+        files |= fs
+        dvs |= ds
+    return files, dvs
 
 
 def txn_cleanup_log(path: str) -> int:
@@ -2473,21 +2340,17 @@ def txn_cleanup_log(path: str) -> int:
     log directory stops growing O(all versions ever). Resolution is
     untouched — every readable version (≥ horizon) folds from a
     checkpoint ≥ the anchor and replays only retained entries — and
-    vacuum's only-log-proven-dead rule stays EXACT: before deleting, the
-    doomed entries' added-file and DV-generation names are consolidated
-    into the sharded create-only ``_ever.<anchor>/`` parquet parts,
-    which vacuum unions with the remaining entries. The accounting is
-    BOUNDED two ways (the round-9 scale ceiling): the prior
-    consolidation's parts carry forward by hard link (O(new entries)
-    work per cleanup, no cumulative rewrite), and delta names already
-    absent from the data directory are dropped up front — a name whose
-    file is gone can never need reaping again — so with a vacuum cadence
-    the consolidation tracks O(on-disk), not O(files-ever); vacuum
-    itself rewrites it down to the keep set after deleting (see vacuum).
-    TIMESTAMP AS OF and DESCRIBE HISTORY truncate at log_floor — both
-    already stop being meaningful below the horizon. The entry AT the
-    anchor checkpoint is kept (its ts anchors the monotone-timestamp
-    clamp and history). Returns the number of entries deleted."""
+    vacuum's only-log-proven-dead rule stays EXACT with no record of the
+    truncated entries: the horizon marker is written only after that
+    vacuum's deletes finished, so a file that only the truncated entries
+    name and that is still on disk was live at a version ≥ the horizon,
+    hence live at the anchor, and the anchor checkpoint (or the oldest
+    checkpoint a later vacuum leaves at or above the floor) names it
+    (see vacuum). TIMESTAMP AS OF and DESCRIBE HISTORY truncate at
+    log_floor — both already stop being meaningful below the horizon.
+    The entry AT the anchor checkpoint is kept (its ts anchors the
+    monotone-timestamp clamp and history). Returns the number of
+    entries deleted."""
     h = vacuum_horizon(path)
     anchor = _latest_checkpoint_at_or_below(path, h)
     if anchor <= 0:
@@ -2495,46 +2358,6 @@ def txn_cleanup_log(path: str) -> int:
     floor = log_floor(path)
     if floor >= anchor:
         return 0
-    # A cleanup or vacuum racing this one may truncate entries / reap
-    # the consolidation between our reads — re-read the (now newer)
-    # state and resume (the same retry contract vacuum's replay uses).
-    for _attempt in range(5):
-        best = _ever_best(path)
-        try:
-            if best >= anchor:
-                break  # a newer consolidation already subsumes the range
-            files: set[str] = set()
-            dvs: set[str] = set()
-            start = best + 1 if best >= 0 else 0
-            for v in range(start, anchor + 1):
-                entry = _read_entry_body(path, v)
-                files.update(a["n"] for a in entry["added"])
-                dvs.update(d["d"] for d in entry["dv"] if d.get("d") is not None)
-            carry = None
-            if best >= 0:
-                man = _ever_manifest(path, best)
-                if man is None:
-                    raise FileNotFoundError(_ever_dir(path, best))
-                carry = (best, man["parts"])
-            # Drop names whose file is already gone (vacuumed before this
-            # consolidation existed): they can never need reaping again,
-            # and keeping them is exactly the O(files-ever) growth this
-            # format removes. Only the DELTA is filtered — carried parts
-            # are pruned by the next vacuum's keep-set rewrite.
-            try:
-                on_disk = set(os.listdir(_data_dir(path)))
-            except FileNotFoundError:
-                on_disk = set()
-            files &= on_disk
-            dvs &= on_disk
-            _write_ever(path, anchor, files, dvs, carry=carry)
-            break
-        except FileNotFoundError:
-            continue  # racing cleanup truncated / racing vacuum reaped
-    else:
-        raise RuntimeError(
-            f"txn_cleanup_log: log of {path} kept moving underfoot"
-        )
     deleted = 0
     for v in range(floor, anchor):
         try:
@@ -2542,14 +2365,12 @@ def txn_cleanup_log(path: str) -> int:
             deleted += 1
         except FileNotFoundError:
             pass  # racing cleanup got it first
-    _reap_ever_below(path, _ever_best(path))
     # Reap _change_data/v<N> for truncated versions: a CDC stream can
     # only read versions whose log entry exists (≥ log_floor — resume
     # below it already fails with the actionable error), so change
     # files below the new floor are unreachable — without this a
     # cdf.enabled table under churn accumulates one change dir per
-    # rewrite commit forever (the same growth class the _ever sharding
-    # removed).
+    # rewrite commit forever.
     cdf_root = os.path.join(path, "_change_data")
     if os.path.isdir(cdf_root):
         import shutil

@@ -84,6 +84,24 @@ def test_cli_inline_data_and_flag_grammar(spark, tmp_path, capsys):
     assert rc == 2 and not st["ok"] and "required" in st["error"]
 
 
+def test_cli_create_keeps_underscore_columns(spark, tmp_path, capsys):
+    """A create-import infers a column for every source header, a
+    leading '_' included: only the internal source-order column stays
+    out of the created table."""
+    wh = str(tmp_path / "wh")
+    os.makedirs(wh)
+    f = tmp_path / "u.csv"
+    f.write_text("id;_note;name\n1;n1;alice\n2;n2;bob\n")
+    rc, st = _run(
+        capsys, wh, "u", "-importfile", str(f), "-import", "UPSERT", "-k", "id",
+    )
+    assert rc == 0 and st["ok"] and st["created"]
+    got = spark.read.parquet(os.path.join(wh, "u"))
+    assert got.columns == ["id", "_note", "name"]
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == [(1, "n1", "alice"), (2, "n2", "bob")]
+
+
 def test_cli_wildcard_multifile_table_per_file(spark, tmp_path, capsys):
     wh = str(tmp_path / "wh")
     os.makedirs(wh)

@@ -3301,6 +3301,20 @@ def test_vacuum_dry_run_reports_without_deleting(spark, table):
     assert deleted == would
 
 
+@pytest.mark.parametrize("retain", [0, -2])
+def test_vacuum_refuses_retaining_no_version(table, retain):
+    """retain_versions < 1 would keep no snapshot — not even the current
+    one — so it is refused up front, naming the argument, before any
+    file or horizon moves."""
+    os.makedirs(os.path.join(table, "data"), exist_ok=True)
+    open(os.path.join(table, "data", "a.parquet"), "wb").close()
+    txnlog.commit(table, ["a.parquet"], [], -1)
+    with pytest.raises(ValueError, match="retain_versions must be >= 1"):
+        txnlog.vacuum(table, retain_versions=retain)
+    assert os.listdir(os.path.join(table, "data")) == ["a.parquet"]
+    assert txnlog.vacuum_horizon(table) == 0
+
+
 def test_rename_racing_append_keeps_staged_files_valid(spark, table):
     """A rename landing between an append's staging and its commit must
     not invalidate the staged files: physical names are stable, so the
@@ -4477,10 +4491,10 @@ class TestLogCarriedSchema:
 
 
 class TestLogCleanup:
-    """Round-9 log retention: txn_cleanup_log deletes entries subsumed
-    by the newest checkpoint at/below the vacuum horizon, consolidating
-    their ever-named files into _ever.<anchor>.json so vacuum's
-    log-proven-dead rule stays exact."""
+    """Log retention: txn_cleanup_log deletes entries subsumed by the
+    newest checkpoint at/below the vacuum horizon and keeps no other
+    record of them — vacuum's log-proven-dead rule stays exact from the
+    anchor checkpoint and the retained entries."""
 
     def _grow(self, spark, table, monkeypatch, n=9):
         monkeypatch.setattr(txnlog, "CHECKPOINT_INTERVAL", 2)
@@ -4512,9 +4526,10 @@ class TestLogCleanup:
         assert txnlog.version_asof(table, ts8 + 1) == 8
 
     def test_vacuum_stays_exact_after_cleanup(self, spark, table, monkeypatch):
-        """The _ever consolidation must keep vacuum deleting EXACTLY the
-        log-proven-dead files: rewritten-away files from the truncated
-        era are still reaped; live and foreign files are untouched."""
+        """After a cleanup, vacuum must keep deleting EXACTLY the
+        log-proven-dead files from the retained log alone: rewritten-away
+        files from the truncated era are still reaped (the anchor
+        checkpoint names them); live and foreign files are untouched."""
         self._grow(spark, table, monkeypatch)
         txnlog.vacuum(table, retain_versions=3, dry_run=True)
         d = os.path.join(table, "data")

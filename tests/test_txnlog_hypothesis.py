@@ -8,11 +8,13 @@ step:
 * the snapshot's visible leaf set equals the model,
 * every version at or above the vacuum horizon still fully resolves
   (files AND dv sidecars present),
+* after every vacuum the data dir holds exactly the files and DV
+  sidecars some version at or above the horizon references,
 * versions are contiguous and current_version never regresses.
 
 This is the class of test that catches fold-order bugs (dv-after-add in
-one entry, restore re-attach), vacuum over-reaping, and restore drift —
-states no example-based test enumerates."""
+one entry, restore re-attach), vacuum over-reaping or leaking, and
+restore drift — states no example-based test enumerates."""
 
 import json
 import os
@@ -158,18 +160,47 @@ class LogProtocol(RuleBasedStateMachine):
         if v > cur:
             self.history[v] = set(self.model)
 
+    def _assert_vacuum_exact(self):
+        """After a vacuum the data dir holds exactly the files live at
+        some version in [horizon, cur] and their DV sidecars: nothing
+        kept is gone (over-reaping) and nothing dead is left (a leak —
+        a name the retained log stopped naming before its file was
+        deleted)."""
+        cur = txnlog.current_version(self.table)
+        kept: set = set()
+        for v in range(txnlog.vacuum_horizon(self.table), cur + 1):
+            for n, d in txnlog.Snapshot.at(self.table, v).live.items():
+                kept.add(n)
+                if d.get("dv"):
+                    kept.add(d["dv"]["d"])
+        assert set(os.listdir(os.path.join(self.table, "data"))) == kept
+
     @rule(retain=st.integers(min_value=1, max_value=3))
     def vacuum(self, retain):
         txnlog.vacuum(self.table, retain_versions=retain)
+        self._assert_vacuum_exact()
 
     @rule()
     def cleanup_log(self):
         """Log retention: entries below the horizon-anchored checkpoint
-        are consolidated + deleted; every kept-version invariant below
-        must keep holding afterwards (resolution, vacuum exactness,
-        props, visible set)."""
+        are deleted; every kept-version invariant below must keep
+        holding afterwards (resolution, props, visible set), and later
+        vacuums stay exact from the retained log alone."""
         if txnlog.current_version(self.table) >= 0:
             txnlog.txn_cleanup_log(self.table)
+
+    @rule(retain=st.integers(min_value=1, max_value=3))
+    def checkpoint_vacuum_cleanup(self, retain):
+        """Checkpoint, vacuum and clean up in one step, so that most
+        sequences truncate the log and the vacuums after it run on a
+        truncated log — the case where vacuum's candidates come from the
+        oldest retained checkpoint."""
+        if txnlog.current_version(self.table) < 0:
+            return
+        txnlog.write_checkpoint(self.table)
+        txnlog.vacuum(self.table, retain_versions=retain)
+        self._assert_vacuum_exact()
+        txnlog.txn_cleanup_log(self.table)
 
     @rule()
     def checkpoint(self):

@@ -11,6 +11,7 @@ expansion (a lost or doubly-removed file breaks the leaf-set equality).
 import json
 import multiprocessing as mp
 import os
+import time
 
 import pytest
 
@@ -212,7 +213,13 @@ def test_mp_concurrent_vacuums_keep_horizon_sound(tmp_path):
 def _reader(table, rounds, q):
     """Resolve + fully read the current snapshot in a loop; a missing
     file is only acceptable if the snapshot went stale (vacuum advanced
-    past it) — re-resolving at the NEW current version must succeed."""
+    past it) — re-resolving at the NEW current version must succeed.
+    A reader forked before the first commit waits for it: a round that
+    finds no table reads nothing."""
+    deadline = time.monotonic() + 60
+    while txnlog.current_version(table) < 0:
+        assert time.monotonic() < deadline, "no commit landed to read"
+        time.sleep(0.001)
     ok = 0
     for _ in range(rounds):
         for _attempt in range(50):

@@ -1,18 +1,20 @@
-"""Churn probe for the bounded dead-file accounting (r9 verdict item 1).
+"""Churn probe for vacuum and log retention on a long-lived table.
 
 Simulates a long-lived compaction-churned table: every round commits a
 batch of fresh data files and removes the previous batch, so files-EVER
-grows without bound while files-LIVE stays small — the regime where the
-round-9 cumulative ``_ever.<v>.json`` was O(files-ever) driver memory
-per vacuum and an unboundedly growing log dir. With the sharded +
-pruned accounting, both must stay FLAT:
+grows without bound while files-LIVE stays small. Vacuum (with
+``logRetention.cleanup=auto``) takes its candidates from the retained
+log alone, so both of these must stay FLAT:
 
 * vacuum's tracemalloc peak tracks O(live + retained suffix + one
-  part), not files-ever — measured early vs late;
-* the log directory's entry/marker/consolidation footprint stops
-  growing — counted early vs late;
-* correctness is re-asserted throughout: live files all on disk, every
-  version >= horizon resolves, foreign files survive.
+  record batch), not files-ever — measured early vs late;
+* the log directory's footprint (entries, checkpoints, horizon
+  markers: every byte under ``_txn_log``) stops growing — counted
+  early vs late;
+* correctness is re-asserted at the end: live files all on disk, every
+  version >= horizon resolves, foreign files survive, and
+  ``dead_on_disk`` counts the dead files vacuum left behind (0 when it
+  is exact).
 
 Data files are zero-byte placeholders (vacuum never reads data bytes;
 the accounting only tracks NAMES), which makes a 100k-files-ever run
@@ -62,35 +64,18 @@ def _vacuum_peak(table):
 
 
 def _log_footprint(table):
+    """Entry and horizon-marker counts of the log dir, and the bytes of
+    every file under it."""
     d = os.path.join(table, "_txn_log")
-    entries = markers = cons = 0
-    cons_rows = 0
-    nbytes = 0
+    entries = markers = nbytes = 0
     for fn in os.listdir(d):
-        fp = os.path.join(d, fn)
         if fn.endswith(".json") and fn[:-5].isdigit():
             entries += 1
         elif fn.startswith("_vacuum."):
             markers += 1
-        elif fn.startswith("_ever."):
-            cons += 1
-            if os.path.isdir(fp):
-                import pyarrow.parquet as pq
-
-                for part in os.listdir(fp):
-                    p = os.path.join(fp, part)
-                    nbytes += os.path.getsize(p)
-                    if part.endswith(".parquet"):
-                        cons_rows += pq.read_metadata(p).num_rows
-                continue
-        nbytes += os.path.getsize(fp) if os.path.isfile(fp) else 0
-    return {
-        "entries": entries,
-        "markers": markers,
-        "consolidations": cons,
-        "consolidation_rows": cons_rows,
-        "bytes": nbytes,
-    }
+    for root, _, files in os.walk(d):
+        nbytes += sum(os.path.getsize(os.path.join(root, fn)) for fn in files)
+    return {"entries": entries, "markers": markers, "bytes": nbytes}
 
 
 def run(files_ever_target=100_000, live=500, vacuum_every=5):
